@@ -140,18 +140,18 @@ def test_token_sketch_cache_never_hits_a_dead_owner(spark, tmp_path):
     ).to_parquet(tmp_path / "documents.parquet")
     sf_dir = str(tmp_path)
 
-    small, d = llm_dedup._token_sketch(spark, sf_dir)
-    owner_ref, _, cached = llm_dedup._TOKEN_SKETCH_CACHE[sf_dir]
+    d = llm_dedup._token_sketch(spark, sf_dir)
+    owner_ref, cached = llm_dedup._TOKEN_SKETCH_CACHE[sf_dir]
     assert owner_ref() is spark and cached is d  # live hit path
 
     # same sf_dir, dead owner: ref resolves to None -> must rebuild
-    llm_dedup._TOKEN_SKETCH_CACHE[sf_dir] = (lambda: None, small, d)
-    small2, d2 = llm_dedup._token_sketch(spark, sf_dir)
-    assert small2 == small
-    owner_ref2, _, _ = llm_dedup._TOKEN_SKETCH_CACHE[sf_dir]
+    llm_dedup._TOKEN_SKETCH_CACHE[sf_dir] = (lambda: None, d)
+    d2 = llm_dedup._token_sketch(spark, sf_dir)
+    assert d2.columns == d.columns
+    owner_ref2, _ = llm_dedup._TOKEN_SKETCH_CACHE[sf_dir]
     assert owner_ref2() is spark
     # and the rebuilt entry now hits
-    assert llm_dedup._token_sketch(spark, sf_dir)[1] is d2
+    assert llm_dedup._token_sketch(spark, sf_dir) is d2
     d2.unpersist()
     llm_dedup._TOKEN_SKETCH_CACHE.pop(sf_dir, None)
 

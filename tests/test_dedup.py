@@ -293,8 +293,8 @@ def test_prefix_filtered_blocked_pairs_large_vocab(spark, tmp_path):
     ).to_parquet(tmp_path / "documents.parquet")
 
     # the sketch is memoized per (session, sf_dir) -> fresh dir, fresh entry
-    small_vocab, _ = llm_dedup._token_sketch(spark, str(tmp_path))
-    assert not small_vocab, "corpus must exercise the large-vocab branch"
+    sketch = llm_dedup._token_sketch(spark, str(tmp_path))
+    assert "mask" not in sketch.columns, "corpus must exercise the prefix path"
     for name in (
         "dedup_jaccard_blocked_pairs",
         "dedup_containment_pairs",
@@ -309,3 +309,33 @@ def test_prefix_filtered_blocked_pairs_large_vocab(spark, tmp_path):
         res = compare_one(spark, name, e.fn, e.oracle, str(tmp_path))
         assert res.ok, f"{name}: {res.detail}"
         assert res.spark_rows > 0, f"{name}: vacuous (no qualifying pairs)"
+
+
+def test_bitmask_and_prefix_paths_agree(spark, sf_med):
+    """On the <=64-word fixture the sketch carries the dictionary mask,
+    so the operator's two candidate paths are both callable on the one
+    sketch frame: the flat bitmask block join and the prefix filter must
+    return identical pairs, for blocked Jaccard and for containment."""
+    from training_flink_sql_cc_src_spark.operators.ppjoin import (
+        bitmask_join,
+        prefix_join,
+    )
+    from training_flink_sql_cc_src_spark.queries import llm_dedup
+
+    d = llm_dedup._token_sketch(spark, sf_med)
+    assert "mask" in d.columns, "fixture must carry the dictionary mask"
+    band = F.col("len_band")
+    probe = d.withColumn(
+        "len_band", F.explode(F.array(band - 1, band, band + 1))
+    )
+    block = ["lang", "len_band"]
+    for measure, num, probe_rows in (
+        ("jaccard", 3, None),
+        ("containment", 4, probe),
+    ):
+        flat, prefix = (
+            {tuple(r) for r in join(d, measure, num, 5, block, probe_rows).collect()}
+            for join in (bitmask_join, prefix_join)
+        )
+        assert flat, f"{measure}: vacuous (no qualifying pairs)"
+        assert flat == prefix, measure

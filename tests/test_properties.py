@@ -87,32 +87,51 @@ def test_asof_join_property(spark, left, right):
     thr=st.sampled_from([(1, 2), (3, 5), (4, 5)]),
 )
 def test_ppjoin_matches_bruteforce(spark, docs, thr):
-    """ppjoin_pairs (prefix + positional + size filters) == quadratic
-    brute-force Jaccard, for every threshold — the filters must be
-    lossless and introduce no false positives, including on tiny dense
-    vocabularies where every prefix bucket collides."""
-    from training_flink_sql_cc_src_spark.operators.ppjoin import ppjoin_pairs
+    """The set-similarity operator (prefix + positional + size + mask
+    filters, and the bitmask path where it applies) == quadratic
+    brute force, for every threshold, for Jaccard and containment,
+    unblocked and blocked — the filters must be lossless and introduce
+    no false positives, including on tiny dense vocabularies where
+    every prefix bucket collides."""
+    from training_flink_sql_cc_src_spark.operators.ppjoin import (
+        bitmask_join,
+        prefix_join,
+        token_sketch,
+    )
 
     num, den = thr
-    rows = [(i, sorted(toks)) for i, toks in enumerate(docs)]
-    df = spark.createDataFrame(rows, "doc_id int, words array<int>")
-    got = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ppjoin_pairs(
-            df, "doc_id", "words", thr_num=num, thr_den=den
-        ).collect()
-    }
-    want = {}
-    for i, a in enumerate(docs):
-        for j, b in enumerate(docs):
-            if i < j:
+    rows = [(i, i % 2, sorted(toks)) for i, toks in enumerate(docs)]
+    sketch = token_sketch(
+        spark.createDataFrame(rows, "doc_id int, blk int, words array<int>")
+    ).persist()
+
+    def brute(measure, blocked):
+        want = {}
+        for i, a in enumerate(docs):
+            for j, b in enumerate(docs):
+                if blocked and i % 2 != j % 2:
+                    continue
                 inter = len(a & b)
-                jac = inter / (len(a) + len(b) - inter)
-                if inter * (num + den) >= (len(a) + len(b)) * num:
-                    want[(i, j)] = jac
-    assert set(got) == set(want)
-    for k, v in want.items():
-        assert abs(got[k] - v) < 1e-12
+                if measure == "jaccard":
+                    if i < j and inter * (num + den) >= (len(a) + len(b)) * num:
+                        want[(i, j)] = inter / (len(a) + len(b) - inter)
+                elif i != j and inter * den >= len(a) * num:
+                    want[(i, j)] = inter / len(a)
+        return want
+
+    for measure in ("jaccard", "containment"):
+        for block in ((), ("blk",)):
+            want = brute(measure, bool(block))
+            joins = (prefix_join, bitmask_join) if block else (prefix_join,)
+            for join in joins:
+                got = {
+                    (r.id_a, r.id_b): r[measure]
+                    for r in join(sketch, measure, num, den, block).collect()
+                }
+                assert set(got) == set(want), (measure, block, join.__name__)
+                for k, v in want.items():
+                    assert abs(got[k] - v) < 1e-12
+    sketch.unpersist()
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))

@@ -8,6 +8,7 @@ IDENTICAL with the store on, off, or stale.
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -40,27 +41,27 @@ def store(tmp_path, monkeypatch):
 
 def _sketch_rows(spark, sf_dir):
     llm_dedup.release_token_sketch_cache()
-    small, d = llm_dedup._token_sketch(spark, sf_dir)
+    d = llm_dedup._token_sketch(spark, sf_dir)
     out = sorted(tuple(r) for r in d.select("doc_id", "n_words").collect())
-    return small, out
+    return d.columns, out
 
 
 def test_artifact_lands_and_reloads_identically(spark, corpus_dir, store):
-    small1, rows1 = _sketch_rows(spark, corpus_dir)
+    cols1, rows1 = _sketch_rows(spark, corpus_dir)
     key = sketch_store.corpus_fingerprint(
         os.path.join(corpus_dir, "documents.parquet")
     )
     assert os.path.isdir(os.path.join(store, key)), "artifact must land"
     # second derivation must come from the store — poison the text column
     # readable only via a rebuild to prove no re-derivation happens
-    small2, rows2 = _sketch_rows(spark, corpus_dir)
-    assert (small1, rows1) == (small2, rows2)
+    cols2, rows2 = _sketch_rows(spark, corpus_dir)
+    assert (cols1, rows1) == (cols2, rows2)
 
 
 def test_store_disabled_matches_store_enabled(spark, corpus_dir, store, monkeypatch):
-    _small, with_store = _sketch_rows(spark, corpus_dir)
+    _cols, with_store = _sketch_rows(spark, corpus_dir)
     monkeypatch.setenv("SPARK_GRAFT_SKETCH_STORE", "0")
-    _small, without = _sketch_rows(spark, corpus_dir)
+    _cols, without = _sketch_rows(spark, corpus_dir)
     assert with_store == without
 
 
@@ -77,7 +78,7 @@ def test_corpus_rewrite_invalidates(spark, corpus_dir, store):
     assert sketch_store.load(spark, docs) is None or (
         sketch_store.corpus_fingerprint(docs) != old_key
     )
-    _small, rows = _sketch_rows(spark, corpus_dir)
+    _cols, rows = _sketch_rows(spark, corpus_dir)
     assert len(rows) == 1, "stale artifact served after corpus rewrite"
 
 
@@ -92,9 +93,9 @@ def _backdate_metas(store_root):
 
 def test_store_is_bounded(spark, corpus_dir, store):
     docs = os.path.join(corpus_dir, "documents.parquet")
-    small, d = llm_dedup._token_sketch(spark, corpus_dir)
+    d = llm_dedup._token_sketch(spark, corpus_dir)
     for i in range(sketch_store._MAX_ENTRIES + 3):
-        sketch_store.save(d, docs, small)
+        sketch_store.save(d, docs)
         # unique fingerprint per save: rewrite the meta key by bumping
         # the docs mtime so each save lands under a new artifact dir
         os.utime(docs, ns=(1_000_000_000 * i, 1_000_000_000 * i))
@@ -112,13 +113,13 @@ def test_eviction_spares_recently_read_artifacts(spark, corpus_dir, store):
     so a cross-process save cannot rmtree an artifact out from under a
     caller whose lazy scan has not materialized yet (ADVICE r12)."""
     docs = os.path.join(corpus_dir, "documents.parquet")
-    small, d = llm_dedup._token_sketch(spark, corpus_dir)
+    d = llm_dedup._token_sketch(spark, corpus_dir)
     live_key = sketch_store.corpus_fingerprint(docs)
     assert sketch_store.load(spark, docs) is not None  # touches meta
     # flood the store with aged artifacts so live_key is over quota
     for i in range(sketch_store._MAX_ENTRIES + 3):
         os.utime(docs, ns=(1_000_000_000 * i, 1_000_000_000 * i))
-        sketch_store.save(d, docs, small)
+        sketch_store.save(d, docs)
     for name in os.listdir(store):
         if name == live_key or name.startswith(".tmp-"):
             continue
@@ -151,6 +152,45 @@ def test_format_version_mismatch_invalidates(spark, corpus_dir, store):
     assert sketch_store.load(spark, docs) is None, (
         "stale-format artifact served after a derivation change"
     )
+
+
+def _truncate_one_part(data):
+    part = sorted(n for n in os.listdir(data) if n.startswith("part-"))[0]
+    path = os.path.join(data, part)
+    with open(path, "r+b") as fh:
+        fh.truncate(os.path.getsize(path) // 2)
+
+
+@pytest.mark.parametrize(
+    "corrupt",
+    [_truncate_one_part, lambda data: shutil.rmtree(data)],
+    ids=["truncated_part", "deleted_data"],
+)
+def test_corrupt_artifact_is_rederived(spark, corpus_dir, store, corrupt):
+    """A sketch artifact whose data/ lost or resized a part file is
+    rejected by load() (stat check, no Spark job), the query re-derives
+    the sketch with identical rows, and the re-derivation replaces the
+    corrupt artifact in its slot."""
+    cols, rows = _sketch_rows(spark, corpus_dir)
+    docs = os.path.join(corpus_dir, "documents.parquet")
+    art = os.path.join(store, sketch_store.corpus_fingerprint(docs))
+    corrupt(os.path.join(art, "data"))
+    assert sketch_store.load(spark, docs) is None
+    assert _sketch_rows(spark, corpus_dir) == (cols, rows)
+    back = sketch_store.load(spark, docs)
+    assert back is not None, "re-derived sketch must replace the corrupt one"
+    assert back.count() == len(rows)
+
+
+def test_corrupt_kind_artifact_is_rejected(spark, corpus_dir, store):
+    docs_path = os.path.join(corpus_dir, "documents.parquet")
+    df = spark.createDataFrame([(1, 2), (3, 4)], "a long, b long")
+    assert sketch_store.save_kind(df, docs_path, "winnow_fp", 1)
+    key = sketch_store.corpus_fingerprint(docs_path)
+    _truncate_one_part(os.path.join(store, f"winnow_fp-{key}", "data"))
+    assert sketch_store.load_kind(spark, docs_path, "winnow_fp", 1) is None
+    assert sketch_store.save_kind(df, docs_path, "winnow_fp", 1)
+    assert sketch_store.load_kind(spark, docs_path, "winnow_fp", 1).count() == 2
 
 
 def test_kind_artifacts_round_trip_and_isolate(spark, corpus_dir, store):

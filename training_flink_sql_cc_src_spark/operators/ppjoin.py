@@ -1,47 +1,55 @@
-"""PPJoin — exact all-pairs set-similarity join with prefix + positional
-filtering (the published SSJoin/PPJoin technique: Xiao et al.,
-"Efficient Similarity Joins for Near Duplicate Detection", WWW 2008).
+"""Set-similarity joins: one token sketch and one prefix-filter operator
+for every pairwise dedup measure (PPJoin: Xiao et al., "Efficient
+Similarity Joins for Near Duplicate Detection", WWW 2008).
 
-Finds every pair with Jaccard(tokens_a, tokens_b) >= t WITHOUT a blocking
-key and WITHOUT the quadratic pair space: tokens are ranked by global
-document frequency (rare first); any qualifying pair must share a token
-within each side's first |x| - ceil(t|x|) + 1 rare-ordered tokens, so
-candidate generation is an equi self-join on prefix tokens only. Three
-exact prunes run before verification:
+``token_sketch`` derives the per-document sketch every caller shares,
+one row per document:
 
-- size ratio: J >= t ⇒ den·min(|x|,|y|) >= num·max(|x|,|y|)
-- positional: a pair first meeting at prefix ranks (r_a, r_b) overlaps at
-  most 1 + min(|x|-r_a, |y|-r_b) tokens; below the required
-  alpha = ceil(num(|x|+|y|)/(num+den)) it can never reach t
-- mask bound (r16, operators/tokenmask): a per-doc 512-bit token-set
-  mask rides the posting rows and the lossless upper bound
-  Σ bit_count(ma&mb) + min-collision-correction prunes matched rows
-  before the pair-dedup exchange — at a Zipf corpus most prefix
-  collisions are one shared rare token with near-zero real overlap, and
-  this is the filter that sees it.
+- ``words``: the distinct tokens as xxhash64 longs, ordered RARE-FIRST
+  by global document frequency ((df, hash) is a total order), so a
+  document's PPJoin prefix is a plain ``slice``;
+- ``n_words``: |words|;
+- ``m0..m7``, ``cc``: the 512-bit token-set mask and its in-document
+  collision count (operators/tokenmask);
+- ``mask``, only when the corpus vocabulary fits in 64 tokens: an exact
+  dictionary bitmask, so |A ∩ B| = bit_count(mask_a & mask_b).
 
-Verification computes ONE array_intersect per surviving pair and filters
-in exact integer arithmetic, so the result is lossless — the
-dedup_jaccard_ppjoin registry query proves it against a full quadratic
-DuckDB oracle. At corpus scale rare-token postings bound the join;
-frequent tokens never enter candidate generation.
+A measure is an integer ratio t = num/den over the overlap i = |A ∩ B|:
 
-Plan shape (replanned r16): the rare-first rank used to come from a
-row_number window over every exploded token — a full shuffle + sort of
-~corpus-token rows keyed by doc. The rank IS the position in the doc's
-df-sorted token array, so the operator now builds that array with ONE
-grouped aggregate (collect_list + array_sort, the token-sketch pattern)
-whose output is |docs| rows, computes the mask in the same pass
-(codegen bit_or aggregates), persists it, and derives both posting
-sides as map-side posexplode slices of the cached arrays. Verification
-intersects the SAME sorted arrays (set semantics — order never affects
-the intersection size), so the raw input is read exactly twice
-(frequency pass + aggregate) and never re-tokenized.
+- ``jaccard``: i / (n_a + n_b - i) >= t  <=>  i(num+den) >= (n_a+n_b)num,
+  over unordered pairs id_a < id_b;
+- ``containment`` (Broder 1997): i / n_a >= t  <=>  i·den >= n_a·num,
+  over directed pairs id_a != id_b.
+
+Each prune is that same inequality with i replaced by an upper bound,
+so each is lossless:
+
+- size: i <= min(n_a, n_b);
+- positional: a pair first meeting at 0-based prefix positions
+  (p_a, p_b) shares at most min(n_a - p_a, n_b - p_b) tokens;
+- mask: ``tokenmask.mask_inter_bound``, evaluated before the pair-dedup
+  exchange (at a Zipf corpus most prefix collisions are one shared rare
+  token with near-zero real overlap, and this is the filter that sees
+  it).
+
+``prefix_join`` generates candidates with an equi join on (token, block
+columns) over prefix postings. Any qualifying pair needs overlap
+>= ceil(t·n_a), so A posts its first n_a - ceil(t·n_a) + 1 rarest
+tokens. For Jaccard the same holds for B by symmetry. Containment puts
+no lower bound on |A| given |B|, so B's posting length comes from the
+smallest probe document of its block instead. Surviving pairs are
+deduplicated once and verified with ONE array_intersect in exact integer
+arithmetic. ``bitmask_join`` is the flat block join over the dictionary
+``mask``; ``similarity_join`` picks it when the sketch has a mask and a
+block key bounds the join (without one it is a cartesian product).
+
+The bitmask branch stays because it measures faster than the prefix
+path on the 31-word driver corpus (SCALE.md §5 has the table).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .tokenmask import (
@@ -52,129 +60,173 @@ from .tokenmask import (
 )
 
 
-def ppjoin_pairs(
-    d: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "words",
-    thr_num: int = 3,
-    thr_den: int = 5,
-) -> DataFrame:
-    """All (id_a < id_b) pairs with Jaccard >= thr_num/thr_den.
-
-    ``d``: one row per document with a DISTINCT-token array column.
-    Returns (id_a, id_b, jaccard). The df-sorted per-doc frame is
-    persisted (it is read by both prefix posting sides and twice at
-    verification) and registered for explicit release at the caller's
-    query boundary (operators/transient.py; a bare persist pins it in
-    the session CacheManager forever, and a lazy localCheckpoint in its
-    place measured 5x the CPU — the planner loses the shared relation).
-    """
-    from .transient import register_transient
-
-    raw = d.select(
-        F.col(id_col).alias("__id"), F.col(tokens_col).alias("__toks")
-    )
-    freq = (
-        raw.select(F.explode("__toks").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    ds = register_transient(
-        raw.select("__id", F.explode("__toks").alias("tok"))
-        .join(freq, "tok")
-        .groupBy("__id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("df", "tok"))),
-                lambda s: s["tok"],
-            ).alias("__toks"),
-            F.count(F.lit(1)).alias("__n"),
-            *mask_bitor_agg_exprs("tok"),
+def token_sketch(docs: DataFrame) -> DataFrame:
+    """The sketch (module docstring) of ``docs``: one row per document
+    with ``doc_id``, a token array ``words`` and any block columns,
+    which are carried through. Launches one job: the vocabulary probe
+    that decides whether the dictionary ``mask`` fits in 64 bits."""
+    keys = [c for c in docs.columns if c != "words"]
+    tok = docs.select(
+        *keys, F.explode(F.array_distinct("words")).alias("w")
+    ).withColumn("w", F.xxhash64("w"))
+    freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
+    aggs = [
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("df", "w"))),
+            lambda s: s["w"],
+        ).alias("words"),
+        F.count(F.lit(1)).alias("n_words"),
+        *mask_bitor_agg_exprs("w"),
+    ]
+    if freq.limit(65).count() <= 64:
+        freq = F.broadcast(
+            freq.withColumn("bit", F.row_number().over(Window.orderBy("w")) - 1)
         )
-        .withColumn("cc", F.col("__n") - mask_popcount())
-        .persist()
-    )
-    plen = F.greatest(
-        F.col("__n")
-        - F.floor((F.col("__n") * thr_num + thr_den - 1) / thr_den).cast(
-            "int"
+        aggs.append(
+            F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), bit)")).alias("mask")
         )
-        + 1,
-        F.lit(1),
+    return (
+        tok.join(freq, "w")
+        .groupBy(*keys)
+        .agg(*aggs)
+        .withColumn("cc", F.col("n_words") - mask_popcount())
     )
-    pa = ds.select(
-        F.col("__id").alias("id_a"),
-        F.col("__n").alias("n_a"),
-        F.col("cc").alias("cc_a"),
-        *[F.col(f"m{i}").alias(f"ma{i}") for i in range(MASK_LONGS)],
-        F.posexplode(F.slice("__toks", F.lit(1), plen)).alias("r0", "tok"),
-    ).withColumn("r_a", F.col("r0") + 1)
-    pb = ds.select(
-        F.col("__id").alias("id_b"),
-        F.col("__n").alias("n_b"),
-        F.col("cc").alias("cc_b"),
-        *[F.col(f"m{i}").alias(f"mb{i}") for i in range(MASK_LONGS)],
-        F.posexplode(F.slice("__toks", F.lit(1), plen)).alias(
-            "rb0", "tokb"
+
+
+def _measure(measure: str, num: int, den: int):
+    """(qualifies, id order, score) of a measure over joined rows
+    carrying n_a, n_b: ``qualifies(bound)`` is the exact integer test
+    that an overlap of ``bound`` reaches the threshold."""
+    n_a, n_b = F.col("n_a"), F.col("n_b")
+    if measure == "jaccard":
+        return (
+            lambda i: i * (num + den) >= (n_a + n_b) * num,
+            F.col("id_a") < F.col("id_b"),
+            lambda i: i.cast("double") / (n_a + n_b - i),
+        )
+    if measure == "containment":
+        return (
+            lambda i: i * den >= n_a * num,
+            F.col("id_a") != F.col("id_b"),
+            lambda i: i.cast("double") / n_a,
+        )
+    raise ValueError(f"unknown set-similarity measure {measure!r}")
+
+
+def _postings(d: DataFrame, side: str, block, lo: Column) -> DataFrame:
+    """Posting rows of join side ``side``: each document's first
+    n_words - lo + 1 rare-first tokens, with their 0-based positions."""
+    plen = F.greatest(F.col("n_words") - lo + 1, F.lit(0))
+    return d.select(
+        F.col("doc_id").alias(f"id_{side}"),
+        *[F.col(c).alias(f"{c}_{side}") for c in block],
+        F.col("n_words").alias(f"n_{side}"),
+        F.col("cc").alias(f"cc_{side}"),
+        *[F.col(f"m{i}").alias(f"m{side}{i}") for i in range(MASK_LONGS)],
+        F.posexplode(F.slice("words", F.lit(1), plen)).alias(
+            f"p_{side}", f"w_{side}"
         ),
-    ).withColumn("r_b", F.col("rb0") + 1)
-    alpha = F.floor(
-        ((F.col("n_a") + F.col("n_b")) * thr_num + (thr_num + thr_den) - 1)
-        / (thr_num + thr_den)
     )
-    # merge hint: the persisted frame's stats would let Catalyst
-    # broadcast one posting side, but the broadcast frame explodes
-    # AFTER the broadcast, so every task would rebuild the posting hash
-    # table (the measured 5x pathology the containment branch pins
-    # against; SCALE.md §6). Pin SMJ.
+
+
+def _ceil_frac(n: Column, num: int, den: int) -> Column:
+    return F.floor((n * num + den - 1) / den)
+
+
+def _verify_side(d: DataFrame, side: str) -> DataFrame:
+    return d.select(
+        F.col("doc_id").alias(f"id_{side}"),
+        F.col("words").alias(f"words_{side}"),
+        F.col("n_words").alias(f"n_{side}"),
+    )
+
+
+def prefix_join(
+    d: DataFrame, measure: str, num: int, den: int, block=(), probe=None
+) -> DataFrame:
+    """Pairs of sketch ``d`` whose ``measure`` reaches num/den, within
+    equal ``block`` column values; (id_a, id_b, <measure>). ``probe``
+    (default ``d``) holds the A-side rows: documents of ``d``, each
+    repeated once per block it probes."""
+    qualifies, order, score = _measure(measure, num, den)
+    probe = d if probe is None else probe
+    own_floor = _ceil_frac(F.col("n_words"), num, den)
+    pa = _postings(probe, "a", block, own_floor)
+    if measure == "jaccard":
+        pb = _postings(d, "b", block, own_floor)
+    else:
+        # containment bounds no |A| from |B|: B's overlap floor comes
+        # from the smallest probing document of its block
+        lo = probe.groupBy(*block).agg(F.min("n_words").alias("min_n_a"))
+        pb = _postings(
+            d.join(F.broadcast(lo), list(block) or None),
+            "b",
+            block,
+            _ceil_frac(F.col("min_n_a"), num, den),
+        )
+    # merge hint: the persisted sketch's stats would let Catalyst
+    # broadcast one posting side, but the broadcast frame explodes AFTER
+    # the broadcast, so every task would rebuild the posting hash table
+    # (measured 5x slower; SCALE.md, round-10 sf1 curve). Pin SMJ.
     cand = (
-        pa.hint("merge").join(
-            pb.hint("merge"), F.col("tok") == F.col("tokb")
+        pa.hint("merge")
+        .join(
+            pb.hint("merge"),
+            [F.col(f"{c}_a") == F.col(f"{c}_b") for c in ["w", *block]],
         )
         .filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (
-                F.least("n_a", "n_b") * thr_den
-                >= F.greatest("n_a", "n_b") * thr_num
-            )
-            & (
-                1
-                + F.least(
-                    F.col("n_a") - F.col("r_a"), F.col("n_b") - F.col("r_b")
+            order
+            & qualifies(F.least("n_a", "n_b"))
+            & qualifies(
+                F.least(
+                    F.col("n_a") - F.col("p_a"), F.col("n_b") - F.col("p_b")
                 )
-                >= alpha
             )
-            & (mask_inter_bound() >= alpha)
+            & qualifies(mask_inter_bound())
         )
         .select("id_a", "id_b")
         .distinct()
     )
-    av = ds.select(
-        F.col("__id").alias("id_a"),
-        F.col("__toks").alias("toks_a"),
-        F.col("__n").alias("n_a"),
+    pairs = cand.join(_verify_side(d, "a"), "id_a").join(
+        _verify_side(d, "b"), "id_b"
     )
-    bv = ds.select(
-        F.col("__id").alias("id_b"),
-        F.col("__toks").alias("toks_b"),
-        F.col("__n").alias("n_b"),
+    inter = F.size(F.array_intersect("words_a", "words_b"))
+    return pairs.filter(qualifies(inter)).select(
+        "id_a", "id_b", score(inter).alias(measure)
     )
-    verified = cand.join(av, "id_a").join(bv, "id_b")
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jac = inter.cast("double") / (F.col("n_a") + F.col("n_b") - inter)
-    out = (
-        verified.filter(
-            inter * (thr_num + thr_den)
-            >= (F.col("n_a") + F.col("n_b")) * thr_num
+
+
+def bitmask_join(
+    d: DataFrame, measure: str, num: int, den: int, block, probe=None
+) -> DataFrame:
+    """``prefix_join``'s result from the flat block join over the
+    dictionary ``mask`` (sketches of a <= 64-token vocabulary only)."""
+    qualifies, order, score = _measure(measure, num, den)
+
+    def side(frame, s):
+        return frame.select(
+            F.col("doc_id").alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in block],
+            F.col("mask").alias(f"mask_{s}"),
+            F.col("n_words").alias(f"n_{s}"),
         )
-        .withColumn("jaccard", jac)
-        .select("id_a", "id_b", "jaccard")
-        # materialize BEFORE unpersisting the tokenized input: the result
-        # is a bounded above-threshold pair set, and eager checkpoint lets
-        # us release the persisted blocks immediately instead of leaking
-        # them into executor storage for the life of the session (the
-        # registry driver runs 100+ queries in one SparkSession).
-        .localCheckpoint(eager=True)
+
+    pairs = side(d if probe is None else probe, "a").join(
+        side(d, "b"),
+        [F.col(f"{c}_a") == F.col(f"{c}_b") for c in block]
+        + [order, qualifies(F.least("n_a", "n_b"))],
     )
-    ds.unpersist()
-    return out
+    inter = F.bit_count(F.col("mask_a").bitwiseAND(F.col("mask_b")))
+    return pairs.filter(qualifies(inter)).select(
+        "id_a", "id_b", score(inter).alias(measure)
+    )
+
+
+def similarity_join(
+    d: DataFrame, measure: str, num: int, den: int, block=(), probe=None
+) -> DataFrame:
+    """The set-similarity join of sketch ``d`` (see ``prefix_join``):
+    the bitmask path when ``d`` carries a dictionary mask and ``block``
+    bounds the flat join, else the prefix path."""
+    join = bitmask_join if block and "mask" in d.columns else prefix_join
+    return join(d, measure, num, den, block, probe)

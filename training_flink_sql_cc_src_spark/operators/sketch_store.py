@@ -1,9 +1,10 @@
 """On-disk token-sketch store: the dedup family's maintenance artifact.
 
 The Jaccard/containment/keep-best family all start from the same
-per-document word-set sketch (``queries/llm_dedup._token_sketch``):
-tokenize, global document-frequency sort, rare-first hashed arrays (or a
-64-bit bitmask when the corpus dictionary fits in 64 ids). Deriving that
+per-document word-set sketch (``operators/ppjoin.token_sketch``, called
+by ``queries/llm_dedup._token_sketch``): tokenize, global
+document-frequency sort, rare-first hashed arrays and token masks (plus
+a 64-bit dictionary bitmask when the vocabulary fits in 64 ids). Deriving that
 sketch from raw text costs several Spark jobs — vocabulary probe, df
 aggregation, sort — and round 11's bench cache hygiene (every query timed
 against a cold in-memory cache) made EVERY dedup query pay it again
@@ -21,6 +22,9 @@ refreshes it when the corpus changes (the same lifecycle as compaction in
   (realpath + per-file size + mtime_ns, hashed) — no Spark job needed to
   decide freshness, and any driver data regeneration changes the mtime
   and invalidates the artifact;
+- the meta records each part file's name and size; a missing, resized
+  or extra part makes ``load`` return None (``os.stat`` only, no Spark
+  job), so the caller re-derives instead of failing its scan;
 - writes are atomic (write to a temp dir, ``os.replace`` into place) and
   serialized per-store with a process-wide lock, mirroring the
   compaction-swap discipline in ``streaming/temporal.py``;
@@ -50,10 +54,10 @@ _META = "_sketch_meta.json"
 #: Sketch DERIVATION version, written into every artifact's meta and
 #: required to match on load. The corpus fingerprint only detects DATA
 #: changes; this detects CODE changes — bump it whenever
-#: ``queries/llm_dedup._token_sketch`` changes its tokenization,
+#: ``operators/ppjoin.token_sketch`` changes its tokenization,
 #: hashing, or small-vocab threshold, or stale-format artifacts would
 #: silently keep serving wrong sketches (ADVICE r12).
-FORMAT_VERSION = 2  # r16: large-vocab sketch carries m0..m7 + cc mask cols
+FORMAT_VERSION = 3  # one sketch shape; the <=64-word one adds `mask`
 
 #: Grace period before an over-quota artifact may be evicted: load()
 #: touches the meta mtime, so any artifact read within this window is
@@ -104,33 +108,88 @@ def corpus_fingerprint(docs_path: str) -> str | None:
     return hashlib.md5(blob).hexdigest()
 
 
-def load(
-    spark: SparkSession, docs_path: str
-) -> tuple[bool, DataFrame] | None:
-    """Return (small_vocab, sketch_df) from a FRESH artifact, else None."""
-    root = store_root()
-    key = corpus_fingerprint(docs_path)
-    if root is None or key is None:
-        return None
-    art = os.path.join(root, key)
-    meta_path = os.path.join(art, _META)
+def _parts(art: str) -> dict[str, int]:
+    """{part file name: size} of an artifact's ``data/`` directory."""
+    data = os.path.join(art, "data")
+    return {
+        n: os.stat(os.path.join(data, n)).st_size
+        for n in os.listdir(data)
+        if n.startswith("part-")
+    }
+
+
+def _valid(art: str, want: dict) -> bool:
+    """True when the artifact's meta holds every ``want`` item and its
+    part files are exactly the ones ``save`` recorded, at their recorded
+    sizes — a missing, truncated or foreign part fails the ``os.stat``
+    check here instead of failing the query's parquet scan later."""
     try:
-        with open(meta_path) as fh:
+        with open(os.path.join(art, _META)) as fh:
             meta = json.load(fh)
+        return all(meta.get(k) == v for k, v in want.items()) and (
+            meta.get("parts") == _parts(art)
+        )
     except (OSError, ValueError):
+        return False
+
+
+def _load(spark: SparkSession, art: str, want: dict) -> DataFrame | None:
+    if not _valid(art, want):
         return None
-    if meta.get("fingerprint") != key:
-        return None
-    if meta.get("format_version") != FORMAT_VERSION:
-        return None  # sketch derivation changed since this was written
-    # touch for LRU eviction order
     try:
-        os.utime(meta_path)
+        os.utime(os.path.join(art, _META))  # touch for LRU eviction order
     except OSError:
         pass
-    return bool(meta["small_vocab"]), spark.read.parquet(
-        os.path.join(art, "data")
-    )
+    return spark.read.parquet(os.path.join(art, "data"))
+
+
+def _save(df: DataFrame, root: str, art: str, meta: dict) -> bool:
+    """Write ``df`` to a temp dir and ``os.replace`` it into ``art``;
+    True when a valid artifact is in place (False: lost to an OS error —
+    fine, the caller keeps its in-memory frame either way)."""
+    tmp = os.path.join(root, f".tmp-{uuid.uuid4().hex[:16]}")
+    try:
+        os.makedirs(root, exist_ok=True)
+        df.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
+        with open(os.path.join(tmp, _META), "w") as fh:
+            json.dump({**meta, "parts": _parts(tmp)}, fh)
+        with _LOCK:
+            if os.path.exists(art):
+                if _valid(art, meta):
+                    # concurrent writer won the race with a GOOD artifact
+                    shutil.rmtree(tmp, ignore_errors=True)
+                    return True
+                # stale-format or corrupt artifact squatting on the slot:
+                # without this, a FORMAT_VERSION bump left the old
+                # artifact in place forever — load() rejected it and
+                # every query re-derived (round 13: jaccard/containment
+                # 0.4 -> 1.4 s until the slot was reclaimed)
+                shutil.rmtree(art, ignore_errors=True)
+            os.replace(tmp, art)
+            _evict(root)
+        return True
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        return False
+
+
+def load(spark: SparkSession, docs_path: str) -> DataFrame | None:
+    """The token sketch from a FRESH, intact artifact, else None."""
+    root, key = store_root(), corpus_fingerprint(docs_path)
+    if root is None or key is None:
+        return None
+    want = {"fingerprint": key, "format_version": FORMAT_VERSION}
+    return _load(spark, os.path.join(root, key), want)
+
+
+def save(sketch: DataFrame, docs_path: str) -> bool:
+    """Materialize the token sketch atomically; True when the artifact
+    landed (False: store disabled, unstatable corpus, or an OS error)."""
+    root, key = store_root(), corpus_fingerprint(docs_path)
+    if root is None or key is None:
+        return False
+    meta = {"fingerprint": key, "format_version": FORMAT_VERSION}
+    return _save(sketch, root, os.path.join(root, key), meta)
 
 
 def load_kind(
@@ -144,123 +203,22 @@ def load_kind(
     '<kind>-<fingerprint>'. ``version`` is the kind's derivation
     version — same contract as FORMAT_VERSION: bump it when the
     deriving code changes, or stale artifacts keep serving."""
-    root = store_root()
-    key = corpus_fingerprint(docs_path)
+    root, key = store_root(), corpus_fingerprint(docs_path)
     if root is None or key is None:
         return None
-    art = os.path.join(root, f"{kind}-{key}")
-    meta_path = os.path.join(art, _META)
-    try:
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-    except (OSError, ValueError):
-        return None
-    if (
-        meta.get("fingerprint") != key
-        or meta.get("kind") != kind
-        or meta.get("kind_version") != version
-    ):
-        return None
-    try:
-        os.utime(meta_path)  # LRU touch, same as load()
-    except OSError:
-        pass
-    return spark.read.parquet(os.path.join(art, "data"))
+    want = {"fingerprint": key, "kind": kind, "kind_version": version}
+    return _load(spark, os.path.join(root, f"{kind}-{key}"), want)
 
 
 def save_kind(
     df: DataFrame, docs_path: str, kind: str, version: int = 1
 ) -> bool:
     """Materialize a kind artifact atomically (see save())."""
-    root = store_root()
-    key = corpus_fingerprint(docs_path)
+    root, key = store_root(), corpus_fingerprint(docs_path)
     if root is None or key is None:
         return False
     meta = {"fingerprint": key, "kind": kind, "kind_version": version}
-    final = os.path.join(root, f"{kind}-{key}")
-    tmp = os.path.join(root, f".tmp-{key[:8]}-{uuid.uuid4().hex[:8]}")
-    try:
-        os.makedirs(root, exist_ok=True)
-        df.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
-        with open(os.path.join(tmp, _META), "w") as fh:
-            json.dump(meta, fh)
-        with _LOCK:
-            if os.path.exists(final):
-                if _kind_meta_valid(final, meta):
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    return True
-                shutil.rmtree(final, ignore_errors=True)
-            os.replace(tmp, final)
-            _evict(root)
-        return True
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        return False
-
-
-def _kind_meta_valid(art: str, want: dict) -> bool:
-    try:
-        with open(os.path.join(art, _META)) as fh:
-            meta = json.load(fh)
-    except (OSError, ValueError):
-        return False
-    return all(meta.get(k) == v for k, v in want.items())
-
-
-def save(sketch: DataFrame, docs_path: str, small_vocab: bool) -> bool:
-    """Materialize the sketch atomically; True when the artifact landed
-    (False: store disabled, unstatable corpus, or lost a write race —
-    all fine, the caller keeps its in-memory frame either way)."""
-    root = store_root()
-    key = corpus_fingerprint(docs_path)
-    if root is None or key is None:
-        return False
-    final = os.path.join(root, key)
-    tmp = os.path.join(root, f".tmp-{key[:8]}-{uuid.uuid4().hex[:8]}")
-    try:
-        os.makedirs(root, exist_ok=True)
-        sketch.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
-        with open(os.path.join(tmp, _META), "w") as fh:
-            json.dump(
-                {
-                    "fingerprint": key,
-                    "small_vocab": bool(small_vocab),
-                    "format_version": FORMAT_VERSION,
-                },
-                fh,
-            )
-        with _LOCK:
-            if os.path.exists(final):
-                if _meta_valid(final, key):
-                    # concurrent writer won the race with a GOOD artifact
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    return True
-                # stale-format/corrupt artifact squatting on the slot:
-                # without this, a FORMAT_VERSION bump left the old
-                # artifact in place forever — load() rejected it and
-                # every query re-derived (round 13: jaccard/containment
-                # 0.4 -> 1.4 s until the slot was reclaimed)
-                shutil.rmtree(final, ignore_errors=True)
-            os.replace(tmp, final)
-            _evict(root)
-        return True
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        return False
-
-
-def _meta_valid(art: str, key: str) -> bool:
-    """True when an on-disk artifact's meta matches the current corpus
-    fingerprint AND sketch format version (what load() will accept)."""
-    try:
-        with open(os.path.join(art, _META)) as fh:
-            meta = json.load(fh)
-    except (OSError, ValueError):
-        return False
-    return (
-        meta.get("fingerprint") == key
-        and meta.get("format_version") == FORMAT_VERSION
-    )
+    return _save(df, root, os.path.join(root, f"{kind}-{key}"), meta)
 
 
 def _evict(root: str) -> None:

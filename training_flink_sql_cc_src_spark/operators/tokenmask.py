@@ -21,8 +21,8 @@ Width: 8 longs measured best end-to-end on the sf3z containment query
 (k=4: 36 s, k=8: 22.7 s, k=16: 65.8 s — wider posting rows cost the
 sort-merge join more than the sharper bound saves).
 
-Consumers: queries/llm_dedup (token sketch + blocked jaccard /
-containment prefix joins) and operators/ppjoin (unblocked PPJoin).
+Consumer: operators/ppjoin (the token sketch builds the masks; the
+prefix join prunes on the bound).
 """
 
 from __future__ import annotations

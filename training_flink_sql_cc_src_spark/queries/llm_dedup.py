@@ -24,6 +24,7 @@ from ..operators.dedup import (
     simhash64,
     word_shingles,
 )
+from ..operators.ppjoin import similarity_join, token_sketch
 from ..registry import register
 from ._util import fan_out, t
 
@@ -52,7 +53,7 @@ def dedup_exact_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: sf_dir -> (owner session weakref, small_vocab, persisted sketch frame).
+#: sf_dir -> (owner session weakref, persisted sketch frame).
 #: The owner is held by WEAK reference and checked by identity against
 #: the requesting session: keying on id(spark) (pre-r11) could alias a
 #: NEW session allocated at a dead session's address (CPython reuses
@@ -60,18 +61,13 @@ def dedup_exact_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: failure the cache key exists to prevent (ADVICE r10). A weakref to a
 #: dead session returns None, which never compares identical to a live
 #: session, so dead entries can only be evicted, never hit.
-_TOKEN_SKETCH_CACHE: dict[str, tuple[object, bool, DataFrame]] = {}
+_TOKEN_SKETCH_CACHE: dict[str, tuple[object, DataFrame]] = {}
 
 
-def _token_sketch(
-    spark: SparkSession, sf_dir: str
-) -> tuple[bool, DataFrame]:
-    """The per-document word-set sketch the Jaccard family shares:
-    (small_vocab, d) where ``d`` is the PERSISTED per-doc frame —
-    (doc_id, lang, len_band, mask, n_words) on the <=64-word bitmask
-    fast path, (doc_id, lang, len_band, words, n_words, m0..m7, cc)
-    with xxhash64 token ids plus the 512-bit token-set mask and its
-    collision count on the unbounded-vocabulary path. Memoized per
+def _token_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The PERSISTED per-document word-set sketch the Jaccard family
+    shares: ``operators/ppjoin.token_sketch`` over (doc_id, lang,
+    len_band) and the space-split words of ``text``. Memoized per
     (session, sf_dir) — the parquet is immutable but a persisted frame
     belongs to ONE SparkSession: a hit keyed on sf_dir alone would hand
     a dead session's DataFrame to a new session and fail every
@@ -81,126 +77,46 @@ def _token_sketch(
     session is evicted and unpersisted (best-effort — the old session
     may already be stopped).
 
-    Round 12: the sketch is additionally MATERIALIZED on disk
-    (``operators/sketch_store``) keyed on a file fingerprint of the
-    corpus — the real 100 TB design, where the tokenized sketch is a
-    maintained table beside the corpus, not a per-job derivation. A
-    cold process/session pays one parquet scan instead of the
-    vocabulary-probe + df-sort pipeline below (VERDICT r11 Wrong #2:
-    that rebuild tripled every dedup query's cold cost).
+    The sketch is also MATERIALIZED on disk (``operators/sketch_store``)
+    keyed on a file fingerprint of the corpus — the real 100 TB design,
+    where the tokenized sketch is a maintained table beside the corpus,
+    not a per-job derivation. A cold process/session pays one parquet
+    scan instead of the vocabulary-probe + df-sort pipeline (VERDICT r11
+    Wrong #2: that rebuild tripled every dedup query's cold cost).
 
-    MAINTENANCE CONTRACT: any change to this function's derivation —
-    tokenization regex, hashing, the small-vocab threshold, output
-    columns — must bump ``sketch_store.FORMAT_VERSION``, or stored
-    artifacts written under the old derivation keep being served."""
+    MAINTENANCE CONTRACT: any change to the derivation — tokenization,
+    hashing, the small-vocab threshold, output columns — must bump
+    ``sketch_store.FORMAT_VERSION``, or stored artifacts written under
+    the old derivation keep being served."""
     entry = _TOKEN_SKETCH_CACHE.get(sf_dir)
     if entry is not None:
-        owner_ref, small_vocab, d = entry
+        owner_ref, d = entry
         if owner_ref() is spark:
-            return small_vocab, d
+            return d
         _TOKEN_SKETCH_CACHE.pop(sf_dir, None)
         try:
             d.unpersist()
         except Exception:
             pass  # owning session already stopped
     docs_path = _os.path.join(sf_dir, "documents.parquet")
-    # Materialized-artifact fast path (VERDICT r11 Next #2): a fresh
-    # on-disk sketch beside the store turns the whole derivation below
-    # into one parquet scan. Freshness is file-fingerprint-keyed, so a
-    # driver data regeneration invalidates it automatically.
-    stored = sketch_store.load(spark, docs_path)
-    if stored is not None:
-        small_vocab, d = stored
-        d = d.persist()
-        _TOKEN_SKETCH_CACHE[sf_dir] = (_owner_ref(spark), small_vocab, d)
-        return small_vocab, d
-    docs = fan_out(t(spark, sf_dir, "documents"))
-    words_col = F.array_distinct(F.split("text", " "))
-    # Dictionary-encode the vocabulary first (the columnar-engine move):
-    # when the corpus dictionary fits in 64 ids, a word SET is one LONG
-    # bitmask and |A∩B| is bit_count(a & b) — integer ops, ~50x cheaper
-    # than a per-pair hash-array intersect, and EXACT (no hashing). The
-    # 100 TB path (unbounded vocabulary) falls back to xxhash64 arrays +
-    # array_intersect; both paths share the block join and the integer
-    # J >= 0.6 filter, so results are identical by construction.
-    words_only = docs.select(F.explode(words_col).alias("word")).distinct()
-    small_vocab = words_only.limit(65).count() <= 64
-    if small_vocab:
-        vocab = words_only.withColumn(
-            "bit", F.row_number().over(Window.orderBy("word")) - 1
-        )
-        d = (
+    d = sketch_store.load(spark, docs_path)
+    if d is None:
+        docs = fan_out(t(spark, sf_dir, "documents"))
+        d = token_sketch(
             docs.select(
                 "doc_id",
                 "lang",
                 (F.col("n_chars") / 100).cast("long").alias("len_band"),
-                F.explode(words_col).alias("word"),
+                F.split("text", " ").alias("words"),
             )
-            .join(F.broadcast(vocab), "word")
-            .groupBy("doc_id", "lang", "len_band")
-            .agg(
-                F.bit_or(
-                    F.expr("shiftleft(CAST(1 AS BIGINT), bit)")
-                ).alias("mask"),
-                F.count("*").alias("n_words"),
-            )
-            .persist()
-        )
+        ).persist()
+        # Materialize for every later cold query/process (best-effort:
+        # the in-memory frame is authoritative for THIS call either way).
+        sketch_store.save(d, docs_path)
     else:
-        # Large-vocab path: hashed token arrays ordered RARE-FIRST by
-        # GLOBAL document frequency ((df, hash) is a total order). The
-        # order is free to consumers that intersect (order-insensitive)
-        # and makes the PPJoin prefix of a doc a plain slice(words, 1,
-        # plen) — which is what keeps the blocked pairwise queries
-        # sub-quadratic once blocks grow (see dedup_jaccard_blocked_pairs
-        # / dedup_containment_pairs prefix candidate generation).
-        tok = docs.select(
-            "doc_id",
-            "lang",
-            (F.col("n_chars") / 100).cast("long").alias("len_band"),
-            F.explode(
-                F.transform(words_col, lambda w: F.xxhash64(w))
-            ).alias("w"),
-        )
-        dfreq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
-        # r16: the per-doc 512-bit token-set mask (m0..m7 + collision
-        # count cc) is part of the sketch — computed here as codegen
-        # bit_or aggregates in the SAME grouped pass that builds the
-        # arrays (an in-query HOF rebuild measured +45% CPU on the
-        # jaccard query because both posting sides re-derived it), and
-        # materialized with the store so cold queries get it for one
-        # scan. Consumers: the _mask_inter_bound candidate prune in the
-        # blocked-jaccard / containment prefix joins.
-        d = (
-            tok.join(dfreq, "w")
-            .groupBy("doc_id", "lang", "len_band")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("df", "w"))),
-                    lambda s: s["w"],
-                ).alias("words"),
-                F.count(F.lit(1)).alias("n_words"),
-                *_mask_bitor_agg_exprs("w"),
-            )
-            .withColumn("cc", F.col("n_words") - _mask_popcount())
-            .persist()
-        )
-    # Materialize for every later cold query/process (best-effort: the
-    # in-memory frame is authoritative for THIS call either way).
-    sketch_store.save(d, docs_path, small_vocab)
-    _TOKEN_SKETCH_CACHE[sf_dir] = (_owner_ref(spark), small_vocab, d)
-    return small_vocab, d
-
-
-#: per-doc token-set mask for large-vocab candidate pruning — width
-#: choice, bound math and the lossless-ness argument live in
-#: operators/tokenmask (shared with operators/ppjoin).
-from ..operators.tokenmask import MASK_LONGS as _MASK_LONGS  # noqa: E402
-from ..operators.tokenmask import (  # noqa: E402
-    mask_bitor_agg_exprs as _mask_bitor_agg_exprs,
-)
-from ..operators.tokenmask import mask_inter_bound as _mask_inter_bound  # noqa: E402
-from ..operators.tokenmask import mask_popcount as _mask_popcount  # noqa: E402
+        d = d.persist()
+    _TOKEN_SKETCH_CACHE[sf_dir] = (_owner_ref(spark), d)
+    return d
 
 
 def _owner_ref(spark: SparkSession):
@@ -219,7 +135,7 @@ def release_token_sketch_cache() -> None:
     block so every query is timed against a cold cache, matching what
     an isolated run (and the driver's per-query oracle check) sees."""
     for sf_dir in list(_TOKEN_SKETCH_CACHE):
-        _, _, d = _TOKEN_SKETCH_CACHE.pop(sf_dir)
+        _, d = _TOKEN_SKETCH_CACHE.pop(sf_dir)
         try:
             d.unpersist()
         except Exception:
@@ -246,166 +162,23 @@ def release_token_sketch_cache() -> None:
          AND a.doc_id < b.doc_id
     ) WHERE jaccard >= 0.6
     """,
-    doc="Word-set Jaccard near-dup pairs with (lang, length-band) blocking "
-    "(SURVEY.md §2.9 n-gram Jaccard): candidates from an equi join on the "
-    "block key; |A∪B| computed as |A|+|B|-|A∩B| so only one array "
-    "intersection is evaluated per pair, and tokens are pre-hashed to "
-    "64-bit longs so the per-pair intersect compares fixed-width values, "
-    "not strings (both were bench hotspots; a 64-bit in-pair collision is "
-    "~1e-7 probable across the whole corpus). Integer counts → the score "
-    "divides identically in both engines. The tokenized side is persisted "
-    "once (sketch, not text) and pairs are pruned by the size-ratio bound "
-    "J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|) — 5·min ≥ 3·max in exact integer "
-    "arithmetic — before any array intersection is evaluated, which is "
-    "result-identical and skips the expensive compare for most candidates. "
-    "TWO candidate strategies, chosen by measured corpus shape (round 10, "
-    "sf1 scaling run): on a <=64-word vocabulary the flat block join + "
-    "bitmask wins (prefixes don't discriminate there — the round-7 "
-    "measurement showed the prefix self-join 8x worse on the dense 31-word "
-    "driver corpus); beyond 64 words, candidates come from a LOSSLESS "
-    "PPJoin prefix join INSIDE the block (rare-first global token order, "
-    "size-ratio + positional prunes, one array_intersect per surviving "
-    "pair) — the flat block join is quadratic in block size and measured "
-    "35x wall for 10x docs at sf1, the prefix path 8x (linear; SCALE.md "
-    "§6). Unblocked all-pairs variant: dedup_jaccard_ppjoin.",
+    doc="Word-set Jaccard >= 0.6 near-dup pairs within (lang, length-band) "
+    "blocks (SURVEY.md §2.9 n-gram Jaccard), from the shared set-similarity "
+    "operator (operators/ppjoin.similarity_join) over the memoized, stored "
+    "token sketch. Tokens are pre-hashed to 64-bit longs, so the per-pair "
+    "intersect compares fixed-width values (a 64-bit in-pair collision is "
+    "~1e-7 probable across the whole corpus). On a <=64-word vocabulary the "
+    "candidates are the flat block join with bitmask intersections; beyond "
+    "it they come from a LOSSLESS PPJoin prefix join keyed on (token, lang, "
+    "len_band) with size, positional and token-mask prunes (the flat block "
+    "join is quadratic in block size: 35x wall for 10x docs at sf1; SCALE.md "
+    "§5). J >= 0.6 is tested as 8|A∩B| >= 3(|A|+|B|) in exact integers with "
+    "one intersection per candidate, so the score divides identically in "
+    "both engines. Unblocked all-pairs variant: dedup_jaccard_ppjoin.",
 )
 def dedup_jaccard_blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    small_vocab, d = _token_sketch(spark, sf_dir)
-    if small_vocab:
-        a = d.select(
-            F.col("doc_id").alias("id_a"),
-            F.col("lang"),
-            F.col("len_band"),
-            F.col("mask").alias("mask_a"),
-            F.col("n_words").alias("n_a"),
-        )
-        b = d.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("lang").alias("lang_b"),
-            F.col("len_band").alias("len_band_b"),
-            F.col("mask").alias("mask_b"),
-            F.col("n_words").alias("n_b"),
-        )
-        size_ok = F.least(a.n_a, b.n_b) * 5 >= F.greatest(a.n_a, b.n_b) * 3
-        pairs = a.join(
-            b,
-            (a.lang == b.lang_b)
-            & (a.len_band == b.len_band_b)
-            & (a.id_a < b.id_b)
-            & size_ok,
-        )
-        inter = F.bit_count(F.col("mask_a").bitwiseAND(F.col("mask_b")))
-    else:
-        # Large-vocab path (sf1 scaling fix, SCALE.md §6): the full
-        # block cross-product is QUADRATIC in block size (measured 35x
-        # wall-time for 10x docs), so candidates come from a LOSSLESS
-        # PPJoin prefix join WITHIN the block instead — a J >= 3/5 pair
-        # must share a token inside each side's first
-        # n - ceil(3n/5) + 1 rare-first-ordered tokens (the sketch's
-        # arrays are globally df-ordered, so the prefix is a slice).
-        # Size-ratio and positional prunes run in the join condition;
-        # one array_intersect verifies each surviving distinct pair.
-        # On the <= 64-word dense corpus the bitmask path above stays —
-        # there prefixes don't discriminate and the flat block join
-        # measured 8x cheaper (round-7 note in the doc text).
-        plen = F.greatest(
-            F.col("n_words")
-            - F.floor((F.col("n_words") * 3 + 4) / 5).cast("int")
-            + 1,
-            F.lit(1),
-        )
-        # r16: the same per-doc 512-bit mask prune the containment
-        # branch uses (see _mask_inter_bound) — the lossless |A∩B|
-        # upper bound rides the prefix posting rows and prunes matched
-        # rows before the pair-dedup exchange and the verification
-        # joins (sf3z: candidate pairs 18.25M -> 4.59M, true pairs
-        # 4.20M — precision 23% -> 92%). The mask columns come from the
-        # persisted sketch itself (one codegen grouped pass at sketch
-        # build; an in-query HOF rebuild measured +45% CPU because both
-        # posting sides re-derived it).
-        pref = d.select(
-            "doc_id",
-            "lang",
-            "len_band",
-            F.col("n_words"),
-            "cc",
-            *[F.col(f"m{i}") for i in range(_MASK_LONGS)],
-            F.posexplode(F.slice("words", F.lit(1), plen)).alias(
-                "r0", "w"
-            ),
-        )
-        pa = pref.select(
-            F.col("doc_id").alias("id_a"),
-            "lang",
-            "len_band",
-            F.col("n_words").alias("n_a"),
-            F.col("cc").alias("cc_a"),
-            *[F.col(f"m{i}").alias(f"ma{i}") for i in range(_MASK_LONGS)],
-            (F.col("r0") + 1).alias("r_a"),
-            "w",
-        )
-        pb = pref.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("lang").alias("lang_b"),
-            F.col("len_band").alias("len_band_b"),
-            F.col("n_words").alias("n_b"),
-            F.col("cc").alias("cc_b"),
-            *[F.col(f"m{i}").alias(f"mb{i}") for i in range(_MASK_LONGS)],
-            (F.col("r0") + 1).alias("r_b"),
-            F.col("w").alias("wb"),
-        )
-        alpha = F.floor(
-            ((F.col("n_a") + F.col("n_b")) * 3 + 7) / 8
-        )  # ceil(3(n_a+n_b)/8): the minimum overlap J >= 3/5 requires
-        cand = (
-            pa.join(
-                pb,
-                (F.col("w") == F.col("wb"))
-                & (F.col("lang") == F.col("lang_b")),
-            )
-            .filter(
-                (F.col("id_a") < F.col("id_b"))
-                & (F.col("len_band") == F.col("len_band_b"))
-                & (
-                    F.least("n_a", "n_b") * 5
-                    >= F.greatest("n_a", "n_b") * 3
-                )
-                & (
-                    1
-                    + F.least(
-                        F.col("n_a") - F.col("r_a"),
-                        F.col("n_b") - F.col("r_b"),
-                    )
-                    >= alpha
-                )
-                & (_mask_inter_bound() >= alpha)
-            )
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        av = d.select(
-            F.col("doc_id").alias("id_a"),
-            F.col("words").alias("words_a"),
-            F.col("n_words").alias("n_a"),
-        )
-        bv = d.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("words").alias("words_b"),
-            F.col("n_words").alias("n_b"),
-        )
-        pairs = cand.join(av, "id_a").join(bv, "id_b")
-        inter = F.size(F.array_intersect("words_a", "words_b"))
-    jac = inter.cast("double") / (F.col("n_a") + F.col("n_b") - inter)
-    # Filter on the exact integer equivalent of J >= 0.6:
-    #   i/(n_a+n_b-i) >= 0.6  <=>  8*i >= 3*(n_a+n_b)   (i, n integers)
-    # The double-division form would be fused into the join condition with
-    # the intersection evaluated TWICE per candidate pair (numerator and
-    # denominator); this form evaluates it once, and the jaccard projection
-    # below runs only on surviving pairs.
-    return (
-        pairs.filter(inter * 8 >= (F.col("n_a") + F.col("n_b")) * 3)
-        .withColumn("jaccard", jac)
-        .select("id_a", "id_b", "jaccard")
+    return similarity_join(
+        _token_sketch(spark, sf_dir), "jaccard", 3, 5, ["lang", "len_band"]
     )
 
 
@@ -427,30 +200,21 @@ def dedup_jaccard_blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         INNER JOIN w b ON a.doc_id < b.doc_id
     ) WHERE jaccard >= 0.6
     """,
-    doc="ALL-pairs word-set Jaccard >= 0.6 via PPJoin prefix filtering "
-    "(SURVEY.md §2.9 n-gram Jaccard, the no-blocking-key scale path; "
-    "cf. the SSJoin/PPJoin literature): tokens ranked by global document "
-    "frequency (rare first); any pair with J >= t and the size-ratio "
-    "bound satisfied must share a token within each side's first "
-    "|x| - ceil(t*|x|) + 1 rare-ordered tokens, so candidate generation "
-    "is an equi self-join on PREFIX tokens only — rare tokens make tiny "
-    "buckets, which is what bounds the join at corpus scale where a "
-    "single blocking key would not. The oracle is the full quadratic "
-    "Jaccard (ground truth), so parity proves the filter is LOSSLESS. "
-    "Candidates are verified with one array_intersect in exact integer "
-    "arithmetic (8i >= 3(n_a+n_b) <=> J >= 0.6).",
+    doc="ALL-pairs word-set Jaccard >= 0.6 (SURVEY.md §2.9 n-gram Jaccard, "
+    "the no-blocking-key scale path): the shared set-similarity operator "
+    "with no block columns, so always its PPJoin prefix path over the "
+    "memoized, stored token sketch. Tokens are ranked rare-first by global "
+    "document frequency; any pair with J >= t shares a token within each "
+    "side's first |x| - ceil(t*|x|) + 1 tokens, so candidate generation is "
+    "an equi self-join on PREFIX tokens only — rare tokens make tiny "
+    "buckets, which bounds the join at corpus scale where a single blocking "
+    "key would not. Size, positional and token-mask prunes run in the join; "
+    "one array_intersect verifies each candidate in exact integer "
+    "arithmetic (8i >= 3(n_a+n_b) <=> J >= 0.6). The oracle is the full "
+    "quadratic Jaccard, so parity proves the filters LOSSLESS.",
 )
 def dedup_jaccard_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ppjoin import ppjoin_pairs
-
-    d = fan_out(t(spark, sf_dir, "documents")).select(
-        "doc_id",
-        F.transform(
-            F.array_distinct(F.split("text", " ")), lambda w: F.xxhash64(w)
-        ).alias("words"),
-    )
-    return ppjoin_pairs(d, id_col="doc_id", tokens_col="words",
-                        thr_num=3, thr_den=5)
+    return similarity_join(_token_sketch(spark, sf_dir), "jaccard", 3, 5)
 
 
 @register(
@@ -1397,186 +1161,36 @@ def dedup_duplicated_span_regions(
     "'A is a snippet of B' direction Jaccard misses when |B| >> |A|): "
     "directed pairs within (lang, ADJACENT length band) blocks, since "
     "a contained doc is typically shorter than its container. The "
-    "probe side explodes each doc to its three candidate bands so "
-    "candidate generation stays an EQUI join on (lang, band) — never "
-    "a lang-only join (4 langs = catastrophic skew at 100 TB) and "
-    "never all-pairs. Shares the memoized per-doc token sketch with "
-    "the Jaccard family; on a <=64-word vocabulary |A inter B| is "
-    "bit_count(a & b) over the flat block join, beyond that candidates "
-    "come from the LOSSLESS containment prefix filter over the rare-"
-    "first df-ordered arrays (probe side explodes only each A's first "
-    "n_a - ceil(4 n_a/5) + 1 rarest tokens; build side posts all "
-    "tokens with positions; size + positional prunes in the join) and "
-    "one array_intersect verifies each surviving pair — the round-10 "
-    "token co-occurrence plan was exact but Zipf-fragile: a stopword's "
-    "in-block posting list alone made it quadratic (VERDICT r10 #1); "
-    "prefixes keep stopwords out of the probe side entirely. The "
-    ">= 0.8 filter is the exact integer form 5*inter >= 4*|A|, and "
-    "the emitted score is an exact int/int division — hash-identical "
-    "in both engines.",
+    "probe side repeats each doc once per candidate band, so candidate "
+    "generation stays an EQUI join on (lang, band) — never a lang-only "
+    "join (4 langs = catastrophic skew at 100 TB) and never all-pairs. "
+    "Same set-similarity operator and token sketch as the Jaccard "
+    "family: on a <=64-word vocabulary the flat block join with bitmask "
+    "intersections; beyond it the LOSSLESS containment prefix filter — "
+    "A posts its first n_a - ceil(4 n_a/5) + 1 rarest tokens, B its "
+    "tokens up to the bound set by the block's smallest probing |A| — "
+    "with size, positional and token-mask prunes, and one "
+    "array_intersect per surviving pair. Prefixes keep stopwords out of "
+    "the probe side (the round-10 co-occurrence plan went quadratic on "
+    "a stopword's posting list, VERDICT r10 #1). The >= 0.8 filter is "
+    "the exact integer form 5*inter >= 4*|A|, and the emitted score is "
+    "an exact int/int division — hash-identical in both engines.",
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    small_vocab, d = _token_sketch(spark, sf_dir)
-    probe_band = F.explode(
-        F.array(
-            F.col("len_band") - 1, F.col("len_band"), F.col("len_band") + 1
-        )
-    ).alias("band")
-    if small_vocab:
-        a = d.select(
-            F.col("doc_id").alias("id_a"),
-            "lang",
-            probe_band,
-            F.col("mask").alias("mask_a"),
-            F.col("n_words").alias("n_a"),
-        )
-        b = d.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("lang").alias("lang_b"),
-            F.col("len_band").alias("band_b"),
-            F.col("mask").alias("mask_b"),
-        )
-        pairs = a.join(
-            b,
-            (a.lang == b.lang_b)
-            & (a.band == b.band_b)
-            & (a.id_a != b.id_b),
-        )
-        inter = F.bit_count(F.col("mask_a").bitwiseAND(F.col("mask_b")))
-    else:
-        # Large-vocab path (VERDICT r10 #1 — the round-10 token
-        # CO-OCCURRENCE plan was exact and volume-linear on the flat
-        # fixture but Zipf-fragile: one common token in a block of
-        # postings contributes |posting|² join rows, so a stopword-heavy
-        # corpus blows it up quadratically). Candidates now come from
-        # the containment PREFIX FILTER over the sketch's rare-first
-        # df-ordered arrays instead — the same lossless PPJoin move
-        # dedup_jaccard_blocked_pairs' branch uses, specialized to the
-        # asymmetric measure: C(A,B) = |A∩B|/|A| >= 4/5 needs overlap
-        # alpha = ceil(4·n_a/5), so A must share a token with B inside
-        # A's first n_a - alpha + 1 RAREST tokens (else all shared
-        # tokens sit among A's last alpha-1 tokens — contradiction).
-        # The probe side therefore explodes only A-prefixes (rare
-        # tokens, short posting lists — a stopword enters the join only
-        # through the rare docs whose prefix it reaches); the build
-        # side posts ALL tokens with positions, because any B token can
-        # be the shared rare one (containment puts no lower bound on
-        # B's token ranks). Positional prune per matched row:
-        # overlap <= 1 + min(n_a - r_a, n_b - r_b) must reach alpha —
-        # lossless because a qualifying pair's FIRST shared token (by
-        # the global order) always lands in A's prefix and always
-        # passes the prune. One array_intersect verifies each
-        # surviving distinct pair exactly.
-        alpha = F.floor((F.col("n_a") * 4 + 4) / 5)  # ceil(4·n_a/5)
-        plen = F.greatest(
-            F.col("n_words")
-            - F.floor((F.col("n_words") * 4 + 4) / 5).cast("int")
-            + 1,
-            F.lit(1),
-        )
-        # r16 (guide §3 candidate pruning): per-doc 512-bit token-set
-        # masks ride the posting rows; the lossless |A∩B| upper bound
-        # (_mask_inter_bound) then prunes matched rows BEFORE the
-        # pair-dedup exchange — at sf3z it cut the dedup aggregate's
-        # input 179.8M -> 48.5M rows and the verification joins' input
-        # 90.3M -> 12.8M candidate pairs (7x; true positives 10.7M, so
-        # precision rose 12% -> 83%), taking the query from 73 s to
-        # ~18 s with bit-identical output (OPTIMIZATION_r16.md). The
-        # mask columns (m0..m7, cc) come precomputed from the sketch.
-        pa = d.select(
-            F.col("doc_id").alias("id_a"),
-            "lang",
-            probe_band,
-            F.col("n_words").alias("n_a"),
-            F.col("cc").alias("cc_a"),
-            *[F.col(f"m{i}").alias(f"ma{i}") for i in range(_MASK_LONGS)],
-            F.posexplode(F.slice("words", F.lit(1), plen)).alias(
-                "r0", "w"
-            ),
-        ).withColumn("r_a", F.col("r0") + 1)
-        # build-side positional pre-prune (r16, guide §2.3 — shuffle
-        # fewer bytes): a B posting at r_b can only pass the positional
-        # filter when n_b - r_b >= alpha - 1, and alpha >=
-        # ceil(0.8 * min n_a over the block's probe docs) — so rows
-        # beyond that rank are dropped BEFORE the posting shuffle
-        # (halved the build side at sf3z with zero effect on matches,
-        # which the row filter would have discarded anyway).
-        blk_min = (
-            d.select("lang", probe_band, F.col("n_words").alias("n_a"))
-            .groupBy("lang", "band")
-            .agg(F.min("n_a").alias("min_n_a"))
-            .select(
-                F.col("lang").alias("lang_b"),
-                F.col("band").alias("band_b"),
-                "min_n_a",
+    d = _token_sketch(spark, sf_dir)
+    # each doc probes its own and both adjacent length bands
+    probe = d.withColumn(
+        "len_band",
+        F.explode(
+            F.array(
+                F.col("len_band") - 1,
+                F.col("len_band"),
+                F.col("len_band") + 1,
             )
-        )
-        pb = (
-            d.select(
-                F.col("doc_id").alias("id_b"),
-                F.col("lang").alias("lang_b"),
-                F.col("len_band").alias("band_b"),
-                F.col("n_words").alias("n_b"),
-                F.col("cc").alias("cc_b"),
-                *[
-                    F.col(f"m{i}").alias(f"mb{i}")
-                    for i in range(_MASK_LONGS)
-                ],
-                F.posexplode("words").alias("rb0", "wb"),
-            )
-            .withColumn("r_b", F.col("rb0") + 1)
-            .join(F.broadcast(blk_min), ["lang_b", "band_b"])
-            .filter(
-                F.col("r_b")
-                <= F.col("n_b")
-                - F.floor((F.col("min_n_a") * 4 + 4) / 5)
-                + 1
-            )
-        )
-        # merge hint: once the persisted sketch's (tiny) stats are
-        # known, Catalyst broadcasts one side — but the broadcast frame
-        # explodes AFTER the broadcast, so every task rebuilds a
-        # million-row hash table (measured 5x slower in-session than
-        # the stats-blind SMJ plan; SCALE.md §6). Pin SMJ.
-        cand = (
-            pa.hint("merge")
-            .join(
-                pb.hint("merge"),
-                (F.col("lang") == F.col("lang_b"))
-                & (F.col("band") == F.col("band_b"))
-                & (F.col("w") == F.col("wb")),
-            )
-            .filter(
-                (F.col("id_a") != F.col("id_b"))
-                & (F.col("n_b") * 5 >= F.col("n_a") * 4)
-                & (
-                    1
-                    + F.least(
-                        F.col("n_a") - F.col("r_a"),
-                        F.col("n_b") - F.col("r_b"),
-                    )
-                    >= alpha
-                )
-                & (_mask_inter_bound() >= alpha)
-            )
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        av = d.select(
-            F.col("doc_id").alias("id_a"),
-            F.col("words").alias("words_a"),
-            F.col("n_words").alias("n_a"),
-        )
-        bv = d.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("words").alias("words_b"),
-        )
-        pairs = cand.join(av, "id_a").join(bv, "id_b")
-        inter = F.size(F.array_intersect("words_a", "words_b"))
-    return (
-        pairs.filter(inter * 5 >= F.col("n_a") * 4)
-        .withColumn("containment", inter.cast("double") / F.col("n_a"))
-        .select("id_a", "id_b", "containment")
+        ),
+    )
+    return similarity_join(
+        d, "containment", 4, 5, ["lang", "len_band"], probe=probe
     )
 
 
