@@ -8,6 +8,7 @@ operator; non-SQL-expressible ops have no oracle → rows-only check).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -16,6 +17,7 @@ from training_flink_sql_cc_src_spark.registry import (
     driver_oracles,
     driver_queries,
 )
+from training_flink_sql_cc_src_spark.session import ensure_package_shipped
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -34,8 +36,21 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (fold-suite
     members are attested through their fold's row; see
-    registry.driver_queries for the rotation arithmetic)."""
-    return driver_queries()
+    registry.driver_queries for the rotation arithmetic).
+
+    Each callable first ships the package to the session's Python
+    workers (once per SparkContext), so pandas UDFs and streaming
+    matchers import it whatever the driver's working directory."""
+
+    def shipped(fn):
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            ensure_package_shipped(spark)
+            return fn(spark, sf_dir)
+
+        return run
+
+    return {name: shipped(fn) for name, fn in driver_queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:

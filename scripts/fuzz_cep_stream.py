@@ -12,6 +12,10 @@ MATCH_RECOGNIZE lowering on the same data. This adversarially checks
 the O(1)/O(L)-state matchers' overlap handling: leftmost-start
 priority, the greedy backtrack candidate (``pend``), break-row
 restarts, skip modes, WITHIN bounds, and cross-micro-batch state.
+A separate family draws provably disjoint DEFINEs (``v = k``, a
+distinct k per variable), the only case where the A B+ C funnel leg
+takes SKIP TO NEXT ROW and WITHIN itself, plus equal-valued respellings
+(``v = 1`` / ``v = 01``) that must not count as disjoint.
 
 The run matchers finalize an open run only at a break row (the
 longest-match-needs-a-terminator contract), so every generated key ends
@@ -286,15 +290,49 @@ def gen_timebound(rng):
     )
 
 
+def gen_disjoint(rng):
+    """Provably disjoint DEFINEs: ``v = k`` with a distinct k per
+    variable over sequences, A+ B runs and A B+ C funnels, both skip
+    modes, with or without WITHIN. Data for this family draws v from
+    0..2 (gen_data hi=2) so the equality atoms match often; TERM fails
+    every atom, and the pad rows flush the decision-window legs that
+    A+ B takes under SKIP TO NEXT ROW or WITHIN (rows step 3 s, so
+    pad = within/3 + 2). A quarter of the cases respell one variable's
+    literal as another's value (``01``, ``1.0``): distinct text, one
+    value, so those DEFINEs overlap and every leg must treat them so."""
+    pattern, used = rng.choice([
+        ("A B", ["A", "B"]),
+        ("A B C", ["A", "B", "C"]),
+        ("A+ B", ["A", "B"]),
+        ("A B+ C", ["A", "B", "C"]),
+    ])
+    lits = [str(k) for k in rng.sample(range(3), len(used))]
+    if rng.random() < 0.25:
+        i, j = rng.sample(range(len(used)), 2)
+        lits[i] = rng.choice([f"0{lits[j]}", f"{lits[j]}.0"])
+    defines = ", ".join(f"{v} AS {v}.v = {k}" for v, k in zip(used, lits))
+    skip = rng.choice(["PAST LAST ROW", "TO NEXT ROW"])
+    if rng.random() < 0.5:
+        within = rng.choice([6, 9, 12])
+        return (
+            pattern, defines, used, skip,
+            f"WITHIN INTERVAL '{within}' SECOND", within // 3 + 2,
+            "disjoint",
+        )
+    return pattern, defines, used, skip, "", 2, "disjoint"
+
+
 def gen_case(rng):
     """Return (pattern, defines_sql, vars, skip_sql, within_sql,
     n_pad_rows)."""
     shape = rng.random()
-    if shape < 0.26:
+    if shape < 0.24:
         return gen_bounded(rng)
-    if shape < 0.40:
+    if shape < 0.36:
         return gen_timebound(rng)
     if shape < 0.5:
+        return gen_disjoint(rng)
+    if shape < 0.58:
         length = rng.randint(2, 4)
         pvars = ["A", "B", "C", "D"][:length]
         pattern = " ".join(pvars)
@@ -330,7 +368,7 @@ def gen_case(rng):
             pattern, ", ".join(defines), pvars, skip, within,
             1 + max_next, "seq",
         )
-    if shape < 0.75:
+    if shape < 0.79:
         # A+ B run: A needs a required row-local atom (terminator)
         da = rand_local(rng, "A")
         if rng.random() < 0.35:
@@ -360,11 +398,11 @@ def gen_case(rng):
     )
 
 
-def gen_data(spark, rng, pad=1):
+def gen_data(spark, rng, pad=1, hi=7):
     rows = []
     for ki in range(3):
         n = rng.randint(8, 16)
-        vals = [rng.randint(0, 7) for _ in range(n)] + [TERM] * max(1, pad)
+        vals = [rng.randint(0, hi) for _ in range(n)] + [TERM] * max(1, pad)
         for i, v in enumerate(vals):
             # globally-unique interleaved event times, 3 s per key step
             rows.append((f"k{ki}", i * 3 + ki, v))
@@ -434,9 +472,10 @@ def main(n_cases, seed):
     router = StatementRouter(spark)
     eng = Engine(spark)
     failures = tried = 0
+    kinds = Counter()
     while tried < n_cases:
         pattern, defines, pvars, skip, within, pad, kind = gen_case(rng)
-        df = gen_data(spark, rng, pad)
+        df = gen_data(spark, rng, pad, hi=2 if kind == "disjoint" else 7)
         if tried % 25 == 0:
             # multi-key PARTITION BY (NULL keys included): batch and
             # stream must agree via the composite-key leg (round 8)
@@ -487,7 +526,9 @@ def main(n_cases, seed):
                 if with_payload:
                     meas.append(f"{v}.v AS p{i}")
                     outer.append(f"p{i}")
-            run_first_ok = kind in ("seq", "bounded", "timebound", "run")
+            run_first_ok = kind in (
+                "seq", "bounded", "timebound", "run", "disjoint"
+            )
             if run_first_ok and rng.random() < 0.3:
                 # FIRST() navigation: run legs bind it via the O(1)
                 # first-row slot (round 8, incl. the funnel middle
@@ -511,7 +552,7 @@ def main(n_cases, seed):
                 meas.append(f"{nnav}({nv}.v, {noffv}) AS noff_v")
                 outer.append("noff_v")
             if (
-                kind in ("bounded", "seq", "run", "timebound")
+                kind in ("bounded", "seq", "run", "timebound", "disjoint")
                 and "PREV" not in defines
                 and "NEXT" not in defines
                 and rng.random() < 0.5
@@ -557,6 +598,7 @@ def main(n_cases, seed):
             {f'WHERE v <> {TERM}' if unmatched else ''}
         """
         tried += 1
+        kinds[kind] += 1
         df.createOrReplaceTempView("__fuzz_stream")
         try:
             batch = Counter(
@@ -597,7 +639,11 @@ def main(n_cases, seed):
         if tried % 10 == 0:
             print(f"... {tried}/{n_cases}, {failures} failures", flush=True)
     spark.conf.set("spark.sql.shuffle.partitions", prior_parts)
-    print(f"DONE {tried} cases, {failures} failures", flush=True)
+    print(
+        f"DONE {tried} cases, {failures} failures, by family "
+        f"{dict(sorted(kinds.items()))}",
+        flush=True,
+    )
     return failures
 
 

@@ -108,6 +108,40 @@ def test_skip_past_last_nondisjoint_takes_selection_pass():
     assert spec_dj.skip_past_last and not spec_dj.skip_filter
 
 
+def test_equal_valued_literals_are_not_disjoint():
+    """Numeric DEFINE literals compare by value and never mix with
+    quoted ones: ``1`` / ``01`` / ``1.0`` are one value, so an A+ B run
+    over them takes the overlap matcher and a plain A B the selection
+    pass. Given the column types, the literals must also be of the
+    column's kind (Spark casts ``'01'`` to 1 on an int column)."""
+    from training_flink_sql_cc_src_spark.plans.match_recognize import (
+        _provably_disjoint,
+    )
+
+    def spec(pattern, a, b):
+        return parse_match_recognize(
+            _mr(
+                BASE.replace("PATTERN (A B)", f"PATTERN ({pattern})").replace(
+                    "DEFINE A AS A.event_type = 'view', "
+                    "B AS B.event_type = 'click'",
+                    f"DEFINE A AS A.value = {a}, B AS B.value = {b}",
+                )
+            )
+        )
+
+    for a, b in (("1", "01"), ("1", "1.0"), ("1", "'2'")):
+        assert spec("A+ B", a, b).plus_overlap, (a, b)
+        assert spec("A B", a, b).skip_filter, (a, b)
+    assert not spec("A+ B", "1", "2").plus_overlap
+    typed = spec("A B", "'1'", "'01'")
+    assert _provably_disjoint(typed)
+    assert _provably_disjoint(typed, {"value": "string"})
+    assert not _provably_disjoint(typed, {"value": "int"})
+    numeric = spec("A B", "1", "2.5")
+    assert _provably_disjoint(numeric, {"value": "decimal(10,2)"})
+    assert not _provably_disjoint(numeric, {"value": "string"})
+
+
 def test_cross_row_define_parses_and_run_shape_guards():
     # cross-variable refs parse for bounded patterns (B sees A's last
     # matched row — test_cross_variable_define_* exercise the semantics)

@@ -152,9 +152,7 @@ def test_frame_sample_bytes_are_stride_slices(spark):
     input payload at 64-byte strides (the contract a real keyframe
     sampler replaces)."""
     from training_flink_sql_cc_src_spark.queries.multimodal import frame_sample
-    from training_flink_sql_cc_src_spark.session import ensure_package_shipped
 
-    ensure_package_shipped(spark)
     payload = bytes(range(256)) * 2  # 512 bytes -> 4 frames of 64
     df = spark.createDataFrame([(1, bytearray(payload))], "doc_id long, payload binary")
     rows = {r.frame_idx: bytes(r.frame) for r in frame_sample(df).collect()}
@@ -165,9 +163,7 @@ def test_frame_sample_bytes_are_stride_slices(spark):
 
 def test_resize_raster_shape(spark):
     from training_flink_sql_cc_src_spark.queries.multimodal import resize_image
-    from training_flink_sql_cc_src_spark.session import ensure_package_shipped
 
-    ensure_package_shipped(spark)
     df = spark.createDataFrame([(1, bytearray(b"xyz"))], "doc_id long, payload binary")
     r = resize_image(df, out_w=8, out_h=4).collect()[0]
     assert (r.out_w, r.out_h, len(bytes(r.raster))) == (8, 4, 8 * 4 * 3)

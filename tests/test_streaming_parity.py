@@ -596,39 +596,19 @@ def test_stream_static_dim_join_parity(spark, sf_small):
     assert _rows(batch) == _rows(streamed)
 
 
-def test_sequence_pattern_stream_matches_batch_three_step(spark, sf_small):
-    """Generalized streaming CEP leg (state = last L-1 events per key):
-    a 3-step adjacent sequence over an in-order replay finds exactly the
-    batch MATCH_RECOGNIZE (A B C) matches, including sequences split
-    across micro-batch boundaries."""
+def test_three_step_sequence_statement_streams_matches_batch(spark, sf_small):
+    """A 3-step adjacent sequence MATCH_RECOGNIZE streamed through
+    Engine.sql_stream (general sequence leg, state = last L-1 rows per
+    key) over an in-order replay finds exactly the batch (A B C)
+    matches, including sequences split across micro-batch
+    boundaries."""
+    from training_flink_sql_cc_src_spark.engine import Engine
     from training_flink_sql_cc_src_spark.plans.router import StatementRouter
-    from training_flink_sql_cc_src_spark.streaming.stateful import (
-        sequence_pattern_stream,
-    )
 
     ev = t(spark, sf_small, "events").select(
         "user_id", "ts", "event_type", "event_id"
     )
-    streamed = run_stream_over_batch(
-        spark,
-        ev,
-        lambda s: sequence_pattern_stream(
-            s,
-            "user_id",
-            "ts",
-            "event_type",
-            ["view", "click", "purchase"],
-            within_seconds=7 * 86400,
-            tiebreak_col="event_id",
-        ),
-        output_mode="append",
-        n_files=8,
-        order_by="ts",
-    )
-    got = {(r.user_id, r.ts_1, r.ts_2, r.ts_3) for r in streamed.collect()}
-    ev.createOrReplaceTempView("__cep3_events")
-    batch = StatementRouter(spark).execute(
-        """
+    stmt = """
         SELECT user_id, a_ts, b_ts, c_ts FROM __cep3_events
         MATCH_RECOGNIZE (
             PARTITION BY user_id
@@ -642,17 +622,28 @@ def test_sequence_pattern_stream_matches_batch_three_step(spark, sf_small):
                    B AS B.event_type = 'click',
                    C AS C.event_type = 'purchase'
         )
-        """
+    """
+    eng = Engine(spark)
+    streamed = run_stream_over_batch(
+        spark,
+        ev,
+        lambda s: eng.sql_stream(stmt, {"__cep3_events": s}),
+        output_mode="append",
+        n_files=8,
+        order_by="ts",
     )
+    got = {(r.user_id, r.a_ts, r.b_ts, r.c_ts) for r in streamed.collect()}
+    ev.createOrReplaceTempView("__cep3_events")
+    batch = StatementRouter(spark).execute(stmt)
     want = {(r.user_id, r.a_ts, r.b_ts, r.c_ts) for r in batch.collect()}
     assert got == want and want
 
 
 def test_match_recognize_statement_streams_through_engine(spark, sf_small):
     """The SAME MATCH_RECOGNIZE statement runs in batch (LEAD-chain
-    lowering) and as a continuous query (sql_stream routes the canonical
-    eq-literal shape to the stateful sequence matcher) with identical
-    results — the reference's every-statement-is-a-streaming-job model."""
+    lowering) and as a continuous query (sql_stream routes it to the
+    stateful sequence matcher) with identical results — the reference's
+    every-statement-is-a-streaming-job model."""
     from training_flink_sql_cc_src_spark.engine import Engine
 
     ev = t(spark, sf_small, "events").select(
@@ -689,11 +680,11 @@ def test_match_recognize_statement_streams_through_engine(spark, sf_small):
 
 
 def test_stream_match_recognize_general_leg_guards(spark, sf_small):
-    """The general-predicate streaming leg accepts the shapes the old
-    eq-literal-only router rejected (numeric literals, non-string define
-    columns, non-bigint keys) and rejects — loudly — only what truly
-    needs the batch plan: cross-variable DEFINEs, PREV/NEXT navigation,
-    and WITHIN on a general-predicate A+ B run."""
+    """The general-predicate streaming leg accepts numeric literals,
+    non-string define columns and non-bigint keys; cross-variable
+    DEFINEs, PREV/NEXT navigation and WITHIN on an A+ B run stream via
+    the decision-window legs; only unknown functions inside a DEFINE
+    stay loud."""
     import pytest
 
     from training_flink_sql_cc_src_spark.engine import Engine
@@ -2460,8 +2451,8 @@ def test_general_run_stream_payload_measures_match_batch(spark):
 
 def test_eq_literal_statement_with_payload_measures_streams(spark, sf_small):
     """An eq-literal statement whose MEASURES read payload columns
-    (Var.event_id) reroutes from the specialized eq matchers to the
-    general leg — same SQL, batch-equal results."""
+    (Var.event_id) carries them through the general sequence leg's
+    keyed state — same SQL, batch-equal results."""
     from training_flink_sql_cc_src_spark.engine import Engine
     from training_flink_sql_cc_src_spark.plans.router import StatementRouter
 
@@ -2495,40 +2486,18 @@ def test_eq_literal_statement_with_payload_measures_streams(spark, sf_small):
     assert got == batch and batch
 
 
-def test_run_pattern_stream_matches_batch_plus(spark, sf_small):
-    """Streaming leg of PATTERN (A+ B) under SKIP PAST LAST ROW: the
-    O(1)-state run matcher over an in-order replay equals the batch
-    gaps-and-islands lowering, including runs split across micro-batch
-    boundaries."""
+def test_run_statement_streams_matches_batch_plus(spark, sf_small):
+    """PATTERN (A+ B) under SKIP PAST LAST ROW streamed through
+    Engine.sql_stream (the O(1)-state run leg) over an in-order replay
+    equals the batch gaps-and-islands lowering, including runs split
+    across micro-batch boundaries."""
+    from training_flink_sql_cc_src_spark.engine import Engine
     from training_flink_sql_cc_src_spark.plans.router import StatementRouter
-    from training_flink_sql_cc_src_spark.streaming.stateful import (
-        run_pattern_stream,
-    )
 
     ev = t(spark, sf_small, "events").select(
         "user_id", "ts", "event_type", "event_id"
     )
-    streamed = run_stream_over_batch(
-        spark,
-        ev,
-        lambda s: run_pattern_stream(
-            s,
-            "user_id",
-            "ts",
-            "event_type",
-            "click",
-            "purchase",
-            within_seconds=7 * 86400,
-            tiebreak_col="event_id",
-        ),
-        output_mode="append",
-        n_files=8,
-        order_by="ts",
-    )
-    got = {(r.user_id, r.last_ts, r.end_ts) for r in streamed.collect()}
-    ev.createOrReplaceTempView("__cep_plus_events")
-    batch = StatementRouter(spark).execute(
-        """
+    stmt = """
         SELECT user_id, last_a, b_ts FROM __cep_plus_events
         MATCH_RECOGNIZE (
             PARTITION BY user_id
@@ -2537,53 +2506,98 @@ def test_run_pattern_stream_matches_batch_plus(spark, sf_small):
             ONE ROW PER MATCH
             AFTER MATCH SKIP PAST LAST ROW
             PATTERN (A+ B)
-            WITHIN INTERVAL '7' DAY
             DEFINE A AS A.event_type = 'click',
                    B AS B.event_type = 'purchase'
         )
-        """
-    )
-    want = {(r.user_id, r.last_a, r.b_ts) for r in batch.collect()}
-    assert got == want and want
-
-
-def test_adjacent_pattern_stream_matches_batch_match_recognize(spark, sf_small):
-    """Streaming CEP leg: the per-key stateful adjacent-pattern matcher
-    (applyInPandasWithState, state = last event per key) over an in-order
-    replay finds EXACTLY the matches of the batch MATCH_RECOGNIZE
-    lowering — including pairs whose A and B land in different
-    micro-batches, which a per-batch LEAD would drop."""
-    from training_flink_sql_cc_src_spark.plans.router import StatementRouter
-    from training_flink_sql_cc_src_spark.streaming.stateful import (
-        adjacent_pattern_stream,
-    )
-
-    ev = t(spark, sf_small, "events").select(
-        "user_id", "ts", "event_type", "event_id"
-    )
+    """
+    eng = Engine(spark)
     streamed = run_stream_over_batch(
         spark,
         ev,
-        lambda s: adjacent_pattern_stream(
-            s,
-            "user_id",
-            "ts",
-            "event_type",
-            "view",
-            "click",
-            within_seconds=3600,
-            tiebreak_col="event_id",
-        ),
+        lambda s: eng.sql_stream(stmt, {"__cep_plus_events": s}),
         output_mode="append",
         n_files=8,
         order_by="ts",
     )
-    got = {
-        (r.user_id, r.first_ts, r.second_ts) for r in streamed.collect()
-    }
-    ev.createOrReplaceTempView("__cep_events")
-    batch = StatementRouter(spark).execute(
-        """
+    got = {(r.user_id, r.last_a, r.b_ts) for r in streamed.collect()}
+    ev.createOrReplaceTempView("__cep_plus_events")
+    batch = StatementRouter(spark).execute(stmt)
+    want = {(r.user_id, r.last_a, r.b_ts) for r in batch.collect()}
+    assert got == want and want
+
+
+def test_within_run_reanchors_past_too_old_run_head(spark):
+    """PATTERN (A+ B) WITHIN 10 s over one key's view@0s view@8s
+    view@9s click@12s: the run head at 0 s is too old, so batch
+    re-anchors the match to the run row at 8 s. The streamed statement
+    must return that match too (a run matcher that keeps only the run
+    head returns nothing). A terminator row past every start's WITHIN
+    horizon flushes the decision window."""
+    import datetime as dt
+
+    from training_flink_sql_cc_src_spark.engine import Engine
+    from training_flink_sql_cc_src_spark.plans.router import StatementRouter
+
+    base = dt.datetime(2024, 1, 1)
+    rows = [
+        (1, base + dt.timedelta(seconds=sec), et)
+        for sec, et in (
+            (0, "view"), (8, "view"), (9, "view"), (12, "click"),
+            (30, "purchase"),
+        )
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id bigint, ts timestamp, event_type string"
+    )
+    stmt = """
+        SELECT user_id, a_ts, b_ts FROM __cep_reanchor
+        MATCH_RECOGNIZE (
+            PARTITION BY user_id
+            ORDER BY ts
+            MEASURES A.ts AS a_ts, B.ts AS b_ts
+            ONE ROW PER MATCH
+            AFTER MATCH SKIP PAST LAST ROW
+            PATTERN (A+ B)
+            WITHIN INTERVAL '10' SECOND
+            DEFINE A AS A.event_type = 'view',
+                   B AS B.event_type = 'click'
+        )
+    """
+    df.createOrReplaceTempView("__cep_reanchor")
+    batch = sorted(
+        tuple(r) for r in StatementRouter(spark).execute(stmt).collect()
+    )
+    eng = Engine(spark)
+    streamed = run_stream_over_batch(
+        spark,
+        df,
+        lambda s: eng.sql_stream(stmt, {"__cep_reanchor": s}),
+        output_mode="append",
+        n_files=2,
+        order_by="ts",
+    )
+    got = sorted(tuple(r) for r in streamed.collect())
+    assert batch == [
+        (1, base + dt.timedelta(seconds=9), base + dt.timedelta(seconds=12))
+    ]
+    assert got == batch
+
+
+def test_adjacent_statement_streams_matches_batch_match_recognize(
+    spark, sf_small
+):
+    """PATTERN (A B) streamed through Engine.sql_stream (per-key state =
+    the last row) over an in-order replay finds EXACTLY the matches of
+    the batch MATCH_RECOGNIZE lowering — including pairs whose A and B
+    land in different micro-batches, which a per-batch LEAD would
+    drop."""
+    from training_flink_sql_cc_src_spark.engine import Engine
+    from training_flink_sql_cc_src_spark.plans.router import StatementRouter
+
+    ev = t(spark, sf_small, "events").select(
+        "user_id", "ts", "event_type", "event_id"
+    )
+    stmt = """
         SELECT user_id, first_ts, second_ts FROM __cep_events
         MATCH_RECOGNIZE (
             PARTITION BY user_id
@@ -2596,8 +2610,21 @@ def test_adjacent_pattern_stream_matches_batch_match_recognize(spark, sf_small):
             DEFINE A AS A.event_type = 'view',
                    B AS B.event_type = 'click'
         )
-        """
+    """
+    eng = Engine(spark)
+    streamed = run_stream_over_batch(
+        spark,
+        ev,
+        lambda s: eng.sql_stream(stmt, {"__cep_events": s}),
+        output_mode="append",
+        n_files=8,
+        order_by="ts",
     )
+    got = {
+        (r.user_id, r.first_ts, r.second_ts) for r in streamed.collect()
+    }
+    ev.createOrReplaceTempView("__cep_events")
+    batch = StatementRouter(spark).execute(stmt)
     want = {(r.user_id, r.first_ts, r.second_ts) for r in batch.collect()}
     assert got == want and want
 
@@ -2872,42 +2899,20 @@ def test_window_topn_sql_streams_with_extra_partition_key(spark, sf_small):
         assert sorted(got[k]) == sorted(batch[k])
 
 
-def test_mid_run_pattern_stream_matches_batch_nfa(spark, sf_small):
-    """Streaming leg of PATTERN (A B+ C) (unbounded run at a middle
-    position): the O(1)-state three-phase matcher over an in-order
-    replay equals the batch general-NFA lowering, including matches
-    split across micro-batch boundaries."""
+def test_mid_run_statement_streams_matches_batch_nfa(spark, sf_small):
+    """PATTERN (A B+ C) (unbounded run at a middle position) with
+    COUNT(B.*) under SKIP TO NEXT ROW streamed through Engine.sql_stream:
+    the DEFINEs are provably disjoint, so the O(1)-state funnel leg
+    takes the skip mode and equals the batch general-NFA lowering over
+    an in-order replay, including matches split across micro-batch
+    boundaries."""
+    from training_flink_sql_cc_src_spark.engine import Engine
     from training_flink_sql_cc_src_spark.plans.router import StatementRouter
-    from training_flink_sql_cc_src_spark.streaming.stateful import (
-        mid_run_pattern_stream,
-    )
 
     ev = t(spark, sf_small, "events").select(
         "user_id", "ts", "event_type", "event_id"
     )
-    streamed = run_stream_over_batch(
-        spark,
-        ev,
-        lambda s: mid_run_pattern_stream(
-            s,
-            "user_id",
-            "ts",
-            "event_type",
-            "view",
-            "click",
-            "purchase",
-            tiebreak_col="event_id",
-        ),
-        output_mode="append",
-        n_files=8,
-        order_by="ts",
-    )
-    got = {
-        (r.user_id, r.a_ts, r.run_len, r.end_ts) for r in streamed.collect()
-    }
-    ev.createOrReplaceTempView("__cep_midrun_events")
-    batch = StatementRouter(spark).execute(
-        """
+    stmt = """
         SELECT user_id, a_ts, n_b, c_ts FROM __cep_midrun_events
         MATCH_RECOGNIZE (
             PARTITION BY user_id
@@ -2920,17 +2925,29 @@ def test_mid_run_pattern_stream_matches_batch_nfa(spark, sf_small):
                    B AS B.event_type = 'click',
                    C AS C.event_type = 'purchase'
         )
-        """
+    """
+    eng = Engine(spark)
+    streamed = run_stream_over_batch(
+        spark,
+        ev,
+        lambda s: eng.sql_stream(stmt, {"__cep_midrun_events": s}),
+        output_mode="append",
+        n_files=8,
+        order_by="ts",
     )
+    got = {(r.user_id, r.a_ts, r.n_b, r.c_ts) for r in streamed.collect()}
+    ev.createOrReplaceTempView("__cep_midrun_events")
+    batch = StatementRouter(spark).execute(stmt)
     want = {(r.user_id, r.a_ts, r.n_b, r.c_ts) for r in batch.collect()}
     assert got == want and want
 
 
 def test_mid_run_statement_streams_through_engine(spark, sf_small):
     """The SAME A B+ C MATCH_RECOGNIZE statement runs in batch (general
-    NFA lowering) and continuously (sql_stream routes the eq-literal
-    middle-run funnel to mid_run_pattern_stream) with identical
-    results."""
+    NFA lowering) and continuously with identical results: the
+    DEFINEs are provably disjoint, so the O(1)-state funnel leg takes
+    SKIP TO NEXT ROW and emits each match at its C row (no later row
+    needed to decide it)."""
     from training_flink_sql_cc_src_spark.engine import Engine
 
     ev = t(spark, sf_small, "events").select(
@@ -2965,6 +2982,134 @@ def test_mid_run_statement_streams_through_engine(spark, sf_small):
     )
     got = {tuple(r) for r in streamed.collect()}
     assert got == batch and batch
+
+
+def test_disjoint_funnel_within_drops_too_old_match(spark):
+    """A B+ C over provably disjoint DEFINEs under WITHIN, in both skip
+    modes: the funnel leg drops the match whose C row is 12 s after its
+    A row and keeps the 6 s one, exactly like batch. No rows follow the
+    last C, so only a leg that decides each match at its C row can
+    return the kept match."""
+    import datetime as dt
+
+    from training_flink_sql_cc_src_spark.engine import Engine
+    from training_flink_sql_cc_src_spark.plans.router import StatementRouter
+
+    base = dt.datetime(2024, 1, 1)
+    rows = [
+        (7, base + dt.timedelta(seconds=sec), et)
+        for sec, et in (
+            (0, "view"), (3, "click"), (6, "purchase"),
+            (20, "view"), (25, "click"), (29, "click"), (32, "purchase"),
+            (40, "view"), (41, "click"), (44, "purchase"),
+        )
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id bigint, ts timestamp, event_type string"
+    )
+    eng = Engine(spark)
+    for skip in ("PAST LAST ROW", "TO NEXT ROW"):
+        stmt = f"""
+            SELECT user_id, CAST(a_ts AS LONG) AS a_e, n_b
+            FROM __cep_funnel_within
+            MATCH_RECOGNIZE (
+                PARTITION BY user_id
+                ORDER BY ts
+                MEASURES A.ts AS a_ts, COUNT(B.*) AS n_b
+                ONE ROW PER MATCH
+                AFTER MATCH SKIP {skip}
+                PATTERN (A B+ C)
+                WITHIN INTERVAL '10' SECOND
+                DEFINE A AS A.event_type = 'view',
+                       B AS B.event_type = 'click',
+                       C AS C.event_type = 'purchase'
+            )
+        """
+        df.createOrReplaceTempView("__cep_funnel_within")
+        batch = sorted(
+            tuple(r) for r in StatementRouter(spark).execute(stmt).collect()
+        )
+        streamed = run_stream_over_batch(
+            spark,
+            df,
+            lambda s, stmt=stmt: eng.sql_stream(
+                stmt, {"__cep_funnel_within": s}
+            ),
+            output_mode="append",
+            n_files=3,
+            order_by="ts",
+        )
+        got = sorted(tuple(r) for r in streamed.collect())
+        t0 = int(base.replace(tzinfo=dt.timezone.utc).timestamp())
+        assert batch == [(7, t0, 1), (7, t0 + 40, 1)], skip
+        assert got == batch, skip
+
+
+def test_funnel_equal_valued_literals_match_batch(spark):
+    """A B+ C whose DEFINE literals differ as text but not as values
+    (``1`` / ``01`` / ``1.0`` on an int column; ``'1'`` / ``'01'``, which
+    Spark casts to the int column's type) is NOT disjoint: one row
+    satisfies both A and B. Under SKIP TO NEXT ROW both overlapping
+    matches must stream, and under WITHIN the too-old match at 0 s must
+    re-anchor to the start at 8 s, exactly like batch. The final row
+    matches no variable and lies past the WITHIN horizon, so every
+    leg decides every start."""
+    import datetime as dt
+
+    from training_flink_sql_cc_src_spark.engine import Engine
+    from training_flink_sql_cc_src_spark.plans.router import StatementRouter
+
+    base = dt.datetime(2024, 1, 1)
+    rows = [
+        (7, base + dt.timedelta(seconds=sec), v)
+        for sec, v in ((0, 1), (8, 1), (9, 1), (12, 2), (100, -997))
+    ]
+    df = spark.createDataFrame(rows, "user_id bigint, ts timestamp, v int")
+    eng = Engine(spark)
+    cases = [
+        (lits, tail)
+        for lits in (("1", "01", "2"), ("1", "1.0", "2"), ("'1'", "'01'", "'2'"))
+        for tail in (
+            "AFTER MATCH SKIP TO NEXT ROW PATTERN (A B+ C)",
+            "PATTERN (A B+ C) WITHIN INTERVAL '10' SECOND",
+        )
+    ]
+    for (a, b, c), tail in cases:
+        stmt = f"""
+            SELECT user_id, CAST(a_ts AS LONG) AS a_e, n_b
+            FROM __cep_funnel_eqval
+            MATCH_RECOGNIZE (
+                PARTITION BY user_id
+                ORDER BY ts
+                MEASURES A.ts AS a_ts, COUNT(B.*) AS n_b
+                ONE ROW PER MATCH
+                {tail}
+                DEFINE A AS A.v = {a}, B AS B.v = {b}, C AS C.v = {c}
+            )
+        """
+        df.createOrReplaceTempView("__cep_funnel_eqval")
+        batch = sorted(
+            tuple(r) for r in StatementRouter(spark).execute(stmt).collect()
+        )
+        streamed = run_stream_over_batch(
+            spark,
+            df,
+            lambda s, stmt=stmt: eng.sql_stream(
+                stmt, {"__cep_funnel_eqval": s}
+            ),
+            output_mode="append",
+            n_files=3,
+            order_by="ts",
+        )
+        got = sorted(tuple(r) for r in streamed.collect())
+        t0 = int(base.replace(tzinfo=dt.timezone.utc).timestamp())
+        want = (
+            [(7, t0, 2), (7, t0 + 8, 1)]
+            if "NEXT ROW" in tail
+            else [(7, t0 + 8, 1)]
+        )
+        assert batch == want, (a, b, tail)
+        assert got == batch, (a, b, tail)
 
 
 def test_stream_match_recognize_unbounded_nested_groups(spark):

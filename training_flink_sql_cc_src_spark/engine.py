@@ -326,25 +326,20 @@ class Engine:
 
         The batch lowering uses LEAD window functions, which Structured
         Streaming rejects; the streaming leg instead keys per-partition
-        state (streaming/stateful.py — Flink CEP's model). Supported
-        continuously: plain adjacent sequences of any fixed length, the
-        A+ B run shape, AND the A B+ C middle-run funnel — all with
-        ARBITRARY row-local DEFINEs (any single-row boolean predicate,
-        compiled to a JVM flag column like the batch NFA's booleans —
-        predicates may overlap; physical PREV(col, n) comparisons
-        evaluate from the matcher's bounded row history; in-window
-        NEXT(col, n) lookahead streams on sequences); the eq-literal
-        specialized matchers additionally stream WITHIN on run shapes
-        via provable disjointness. Multi-column PARTITION BY keys every
-        matcher on a lossless to_json(struct(...)) composite, restored
-        on the registered view. MEASURES
-        may read
-        ``Var.<order column>`` positions on every leg, and on the
-        general leg any ``Var.<column>`` payload (carried through the
-        matcher's keyed state; eq-literal statements needing payload
-        measures reroute to the general leg automatically).
-        The matched stream is registered as a view and the outer
-        statement rewritten to read it. FIRST/LAST match-binding
+        state (streaming/stateful.py — Flink CEP's model). One leg per
+        shape: plain adjacent sequences of any fixed length, the A+ B
+        run shape and the A B+ C middle-run funnel stream on the
+        general-predicate matchers, whose DEFINEs may be ARBITRARY
+        row-local predicates (each compiled to a JVM flag column like
+        the batch NFA's booleans — predicates may overlap; physical
+        PREV(col, n) comparisons evaluate from the matcher's bounded row
+        history; in-window NEXT(col, n) lookahead streams on sequences).
+        Multi-column PARTITION BY keys every matcher on a lossless
+        to_json(struct(...)) composite, restored on the registered view.
+        MEASURES may read ``Var.<order column>`` positions and any
+        ``Var.<column>`` payload (carried through the matcher's keyed
+        state). The matched stream is registered as a view and the
+        outer statement rewritten to read it. FIRST/LAST match-binding
         navigation inside DEFINEs streams too, the defining variable's
         own rows included ({v}.col OP FIRST|LAST(X.col[, n]) — round
         8); only nav embedded in richer expressions stays batch-only.
@@ -361,18 +356,10 @@ class Engine:
         from pyspark.sql import functions as F
 
         from .plans.match_recognize import (
-            UnsupportedPatternError,
             _NAV_DEF_RE,
             _NEXT_RE,
             _PREV_RE,
-            _eq_literal,
-            _provably_disjoint,
             parse_match_recognize,
-        )
-        from .streaming.stateful import (
-            mid_run_pattern_stream,
-            run_pattern_stream,
-            sequence_pattern_stream,
         )
 
         spec = parse_match_recognize(stmt)
@@ -432,7 +419,6 @@ class Engine:
             sdf = sdf.withColumn(
                 key, F.to_json(F.struct(*spec.partition_by))
             )
-        dtypes = dict(sdf.dtypes)
 
         def _route() -> str:
             # BOUNDED patterns beyond plain sequences — quantifiers A{n,m} /
@@ -522,122 +508,14 @@ class Engine:
                     stmt, spec, sdf, key, ts_col, tiebreak, unsupported
                 )
 
-            # Two streaming lowerings. EQ mode (the original leg): every
-            # DEFINE an equality literal on ONE shared string column and a
-            # bigint key — the specialized matchers (incl. the A B+ C funnel
-            # and WITHIN on runs, which lean on provably-disjoint
-            # predicates). Everything else falls to the GENERAL leg: each
-            # row-local DEFINE compiles to a JVM boolean column (the batch
-            # NFA's precomputed flags) and keyed state matches over the flag
-            # bitmasks — predicates may overlap, any key type.
-            eqs = [_eq_literal(spec.defines[v]) for v in spec.pattern]
-            eq_mode = (
-                # _provably_disjoint: distinct literals on one column, so no
-                # row satisfies two variables — the specialized matchers'
-                # standing assumption (repeated literals would make skip-mode
-                # overlap matter; the general leg handles that correctly)
-                _provably_disjoint(spec)  # implies every eqs entry parsed
-                and all(
-                    lit.startswith("'") and lit.endswith("'") for _, lit in eqs
+            try:
+                return self._match_recognize_stream_general(
+                    stmt, spec, sdf, key, ts_col, tiebreak, unsupported
                 )
-                and dtypes.get(eqs[0][0]) == "string"
-                and dtypes.get(key) == "bigint"
-            )
-            if eq_mode and (
-                spec.measure_agg
-                or any(
-                    col != ts_col
-                    for var, col, _ in spec.measures
-                    if var in set(spec.pattern)
+            except _RerouteToBounded:
+                return self._match_recognize_stream_bounded(
+                    stmt, spec, sdf, key, ts_col, tiebreak, unsupported
                 )
-                # FIRST() navigation / FIRST-LAST logical offsets: the
-                # eq matchers' pos columns bind LAST rows — route to the
-                # general leg, which carries first-row slots and
-                # offset-aware payloads (or rejects loudly where it
-                # cannot)
-                or any(
-                    spec.measure_nav.get(alias, "LAST").upper()
-                    == "FIRST"
-                    or spec.measure_nav_offset.get(alias, 0) > 0
-                    for _, _, alias in spec.measures
-                )
-            ):
-                # non-position measures (Var.<payload col>) and aggregate
-                # measures ride the general leg's keyed state; eq-literal
-                # DEFINEs are row-local, so the general matchers reproduce
-                # the specialized ones exactly
-                eq_mode = False
-            if not eq_mode:
-                try:
-                    return self._match_recognize_stream_general(
-                        stmt, spec, sdf, key, ts_col, tiebreak,
-                        unsupported,
-                    )
-                except _RerouteToBounded:
-                    return self._match_recognize_stream_bounded(
-                        stmt, spec, sdf, key, ts_col, tiebreak,
-                        unsupported,
-                    )
-            type_col = eqs[0][0]
-            types = [lit.strip("'") for _, lit in eqs]
-
-            if (spec.unbounded or spec.pos_quants) and spec.plus is None:
-                # general NFA shapes: only the three-variable A B+ C funnel
-                # (run at the middle position, min 1) streams with O(1) state
-                if (
-                    len(spec.positions) != 3
-                    or list(spec.unbounded) != [spec.pattern[1]]
-                    or spec.unbounded[spec.pattern[1]] != 1
-                    or spec.quants
-                    or spec.pos_quants
-                    or spec.lazy_vars
-                ):
-                    raise unsupported(
-                        "general unbounded patterns (only the A B+ C middle-"
-                        "run funnel streams with O(1) state — use the batch "
-                        "path)"
-                    )
-                matched = mid_run_pattern_stream(
-                    sdf, key, ts_col, type_col, types[0], types[1], types[2],
-                    within_seconds=spec.within_seconds, tiebreak_col=tiebreak,
-                )
-                # A maps its single row; B's last mapped row; C the end row
-                pos_col = {
-                    spec.pattern[0]: "a_ts",
-                    spec.pattern[1]: "run_last_ts",
-                    spec.pattern[2]: "end_ts",
-                }
-            elif spec.plus is not None:
-                if spec.plus[2] != 1:
-                    raise unsupported(
-                        "A{n,} / A* run bounds (the streaming matcher tracks "
-                        "O(1) state assuming a plain A+ run — use the batch "
-                        "path)"
-                    )
-                if not spec.skip_past_last:
-                    raise unsupported(
-                        "A+ B with SKIP TO NEXT ROW (per-start emission needs "
-                        "unbounded per-key state; SKIP PAST LAST ROW streams "
-                        "with O(1) state)"
-                    )
-                matched = run_pattern_stream(
-                    sdf, key, ts_col, type_col, types[0], types[1],
-                    within_seconds=spec.within_seconds, tiebreak_col=tiebreak,
-                )
-                # last mapped A row = last_ts; B row = end_ts
-                pos_col = {spec.plus[0]: "last_ts", spec.plus[1]: "end_ts"}
-            else:
-                matched = sequence_pattern_stream(
-                    sdf, key, ts_col, type_col, types,
-                    within_seconds=spec.within_seconds, tiebreak_col=tiebreak,
-                )
-                pos_col = {
-                    var: f"ts_{i + 1}" for i, var in enumerate(spec.pattern)
-                }
-
-            return self._mr_register_view(
-                stmt, spec, matched, key, ts_col, pos_col, unsupported
-            )
 
         def _expand_composite(rewritten: str) -> str:
             """Multi-key PARTITION BY tail: the leg registered its view
@@ -1292,14 +1170,14 @@ class Engine:
 
     def _mr_register_view(
         self, stmt, spec, matched, key, ts_col, pos_col, unsupported,
-        pay_col=None, agg_col=None, nav_aware=False,
+        pay_col, agg_col=None, nav_aware=False,
         offset_aware=False, single_row_vars=None, col_types=None,
     ) -> str:
         """Shared tail of the streaming MATCH_RECOGNIZE legs: project
-        the MEASURES from the matcher's positional ts columns (and, on
-        the general legs, the per-variable payload columns and the
-        bounded leg's aggregate-measure columns), register the matched
-        stream as a view, and rewrite the outer statement to read it."""
+        the MEASURES from the matcher's positional ts columns, the
+        per-variable payload columns and the aggregate-measure columns,
+        register the matched stream as a view, and rewrite the outer
+        statement to read it."""
         from pyspark.sql import functions as F
 
         select = [F.col(key)]
@@ -1323,27 +1201,15 @@ class Engine:
                 and (nav == "LAST" or not nav_aware)
             ):
                 select.append(F.col(pos_col[var]).alias(alias))
-            elif (
-                offset_aware
-                and pay_col is not None
-                and (var, col, nav, noff) in pay_col
-            ):
+            elif offset_aware and (var, col, nav, noff) in pay_col:
                 select.append(
                     F.col(pay_col[(var, col, nav, noff)]).alias(alias)
                 )
             elif (
-                not offset_aware
-                and noff == 0
-                and pay_col is not None
-                and (var, col, nav) in pay_col
+                not offset_aware and noff == 0 and (var, col, nav) in pay_col
             ):
                 select.append(F.col(pay_col[(var, col, nav)]).alias(alias))
-            elif (
-                pay_col is not None
-                and not nav_aware
-                and noff == 0
-                and (var, col) in pay_col
-            ):
+            elif not nav_aware and noff == 0 and (var, col) in pay_col:
                 select.append(F.col(pay_col[(var, col)]).alias(alias))
             elif (
                 noff > 0
@@ -1370,13 +1236,8 @@ class Engine:
             else:
                 raise unsupported(
                     f"measure {var}.{col} (this streaming leg carries "
-                    f"Var.{ts_col} positions"
-                    + (
-                        " and per-variable payload columns"
-                        if pay_col is not None
-                        else ""
-                    )
-                    + " through its keyed state)"
+                    f"Var.{ts_col} positions and per-variable payload "
+                    "columns through its keyed state)"
                 )
         view = f"__mr_stream_{abs(hash(stmt)) % 10_000_000}"
         matched.select(*select).createOrReplaceTempView(view)
@@ -1395,9 +1256,9 @@ class Engine:
         (streaming/stateful.py) then run over flag bitmasks, so
         predicates may OVERLAP (a row satisfying several variables) and
         the key can be any type. Covers adjacent sequences of any fixed
-        length and the A+ B run shape. Physical PREV(X.col, n)
-        navigation streams too, as comparison conjuncts: a DEFINE splits
-        on top-level AND; conjuncts of the form
+        length, the A+ B run shape and the A B+ C funnel. Physical
+        PREV(X.col, n) navigation streams too, as comparison conjuncts:
+        a DEFINE splits on top-level AND; conjuncts of the form
         ``<operand> OP <operand>`` with a PREV reference are evaluated
         inside the matcher against a bounded value history held in the
         SAME keyed state (Spark forbids chaining two stateful operators,
@@ -1409,7 +1270,9 @@ class Engine:
         match-check time — no future-row buffering. Cross-variable
         references, NEXT past the window (or on a run shape),
         FIRST/LAST match bindings, non-comparison navigation conjuncts,
-        and WITHIN-on-a-run stay batch-only, rejected loudly."""
+        WITHIN on an A+ B run, and SKIP TO NEXT ROW or WITHIN on a funnel
+        whose DEFINEs are not provably disjoint are rejected loudly; the
+        caller retries those on the decision-window legs."""
         import re as _re
 
         from pyspark.sql import functions as F
@@ -1419,6 +1282,7 @@ class Engine:
             _NEXT_RE,
             _PREV_RE,
             _pred_at_offset,
+            _provably_disjoint,
             _split_top_and,
         )
         from .streaming.stateful import (
@@ -1598,19 +1462,23 @@ class Engine:
                     "streaming leg covers adjacent sequences, A+ B runs, "
                     "and the A B+ C middle-run funnel)"
                 )
-            if not spec.skip_past_last:
+            # provably disjoint DEFINEs (distinct literal values of the
+            # column's own type on one column): no A row can sit inside a
+            # match, so matches never overlap (SKIP TO NEXT ROW keeps the
+            # same ones) and a match dropped by WITHIN has no later start
+            # to re-anchor to
+            disjoint = _provably_disjoint(spec, field_types)
+            if not spec.skip_past_last and not disjoint:
                 raise unsupported(
-                    "A B+ C with SKIP TO NEXT ROW (per-start emission "
-                    "needs unbounded per-key state; SKIP PAST LAST ROW "
-                    "streams with O(1) state)"
+                    "A B+ C with SKIP TO NEXT ROW over overlapping "
+                    "DEFINEs (per-start emission needs unbounded per-key "
+                    "state; SKIP PAST LAST ROW streams with O(1) state)"
                 )
-            if spec.within_seconds is not None:
+            if spec.within_seconds is not None and not disjoint:
                 raise unsupported(
-                    "WITHIN on a general-predicate A B+ C funnel "
+                    "WITHIN on an A B+ C funnel with overlapping DEFINEs "
                     "(re-anchoring a too-old match start mid-run needs "
-                    "the run rows' timestamps — unbounded state; "
-                    "eq-literal disjoint DEFINEs or the batch path "
-                    "support WITHIN)"
+                    "the run rows' timestamps — unbounded state)"
                 )
             funnel = True
         # FIRST() navigation: every shape that reaches this leg binds it
@@ -1764,6 +1632,7 @@ class Engine:
             matched = mid_run_flags_stream(
                 flagged, key, ts_col,
                 flag_cols[0], flag_cols[1], flag_cols[2],
+                within_seconds=spec.within_seconds,
                 tiebreak_col=tiebreak, prev_spec=prev_spec,
                 payload_spec=(
                     (pay_pairs, pay_types)
@@ -1792,10 +1661,9 @@ class Engine:
                 )
             if spec.within_seconds is not None:
                 raise unsupported(
-                    "WITHIN on a general-predicate A+ B run (re-anchoring "
-                    "a too-old match start mid-run needs the run rows' "
-                    "timestamps — unbounded state; eq-literal disjoint "
-                    "DEFINEs or the batch path support WITHIN)"
+                    "WITHIN on an A+ B run (re-anchoring a too-old match "
+                    "start to a later run row needs the run rows' "
+                    "timestamps — unbounded state)"
                 )
             # nav-aware payload wiring: FIRST(A.col) reads the run's
             # first-row slot; FIRST(A.ts) is the emitted first_ts; B

@@ -168,6 +168,9 @@ _NAV_DEF_RE = re.compile(
 _EQ_LIT_RE = re.compile(
     r"^\s*\w+\.(?P<col>\w+)\s*=\s*(?P<lit>'[^']*'|[0-9.]+)\s*$"
 )
+# Spark simple types an unquoted _EQ_LIT_RE literal compares with by value
+# (decimal(p,s) besides)
+_NUMERIC_TYPES = {"tinyint", "smallint", "int", "bigint", "float", "double"}
 
 
 @dataclass
@@ -1488,17 +1491,43 @@ def _eq_literal(pred: str) -> tuple[str, str] | None:
     return (m.group("col"), m.group("lit")) if m else None
 
 
-def _provably_disjoint(spec: MatchRecognizeSpec) -> bool:
+def _provably_disjoint(
+    spec: MatchRecognizeSpec, col_types: dict[str, str] | None = None
+) -> bool:
     """True when every variable predicate is ``var.col = literal`` on the
-    SAME column with pairwise-distinct literals: no row can satisfy two
-    variables, so matches share no rows and SKIP PAST LAST ROW keeps
-    exactly the same matches as keep-everything."""
+    SAME column with pairwise-distinct literal VALUES: no row can satisfy
+    two variables, so matches share no rows and SKIP PAST LAST ROW keeps
+    exactly the same matches as keep-everything.
+
+    Numeric literals compare as numbers (``1``, ``01`` and ``1.0`` are one
+    value); quoted and numeric literals never mix. With ``col_types`` (the
+    source's column -> Spark simple type) the literals must also be of the
+    column's kind: Spark casts across kinds, so ``'1'``/``'01'`` on an int
+    column, or ``1``/``1.5`` on a string column (``'1.5'`` casts to int 1),
+    can both hold on one row."""
     eqs = [_eq_literal(spec.defines[v]) for v in spec.pattern]
-    if any(e is None for e in eqs):
+    if any(e is None for e in eqs) or len({c.lower() for c, _ in eqs}) != 1:
         return False
-    cols = {c for c, _ in eqs}
-    lits = [lit for _, lit in eqs]
-    return len(cols) == 1 and len(lits) == len(set(lits))
+    quoted = {lit.startswith("'") for _, lit in eqs}
+    if len(quoted) != 1:
+        return False
+    is_str = quoted.pop()
+    if col_types is not None:
+        ctype = {c.lower(): t for c, t in col_types.items()}.get(
+            eqs[0][0].lower(), ""
+        )
+        kind_ok = (
+            ctype == "string"
+            if is_str
+            else ctype in _NUMERIC_TYPES or ctype.startswith("decimal(")
+        )
+        if not kind_ok:
+            return False
+    try:
+        vals = [lit if is_str else float(lit) for _, lit in eqs]
+    except ValueError:
+        return False
+    return len(vals) == len(set(vals))
 
 
 def _qualify_bare_refs(pred: str, var: str, columns: list[str]) -> str:

@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import ensure_package_shipped
 from ._util import dot_col, dot_sql, fan_out, t
 
 
@@ -174,7 +173,6 @@ def decode_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     "that plumbing.",
 )
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     d = fan_out(t(spark, sf_dir, "documents")).select(
         "doc_id",
         F.encode(F.col("text"), "UTF-8").alias("payload"),
@@ -304,7 +302,6 @@ def resize_image(
     "tests/test_scalar_and_multimodal.py, not hashed here).",
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     videos = fan_out(
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 2)
@@ -341,7 +338,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sample decode (PIL/ffmpeg) remains stubbed in _decode_payload.",
 )
 def multimodal_header_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     d = fan_out(t(spark, sf_dir, "documents").select("doc_id"))
 
     def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -444,7 +440,6 @@ def multimodal_header_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the decode stage unchanged.",
 )
 def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     d = fan_out(
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 0)
@@ -558,7 +553,6 @@ def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bytes at 100 TB and the decode/resample stage is unchanged.",
 )
 def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     d = fan_out(
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 0)
@@ -665,7 +659,6 @@ def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Map-only per clip, <= 2 scalar rows out per clip.",
 )
 def multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     d = fan_out(
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 1)
@@ -790,7 +783,6 @@ def multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the decode stage unchanged.",
 )
 def multimodal_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     d = fan_out(
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 2)
@@ -937,7 +929,6 @@ def multimodal_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_jpeg420_pixel_stats(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ensure_package_shipped(spark)
     d = fan_out(
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 5 == 1)
@@ -1061,7 +1052,6 @@ def multimodal_jpeg420_pixel_stats(
     "work, one scalar row out per clip.",
 )
 def multimodal_mulaw_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     d = fan_out(
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 1)
@@ -1161,7 +1151,6 @@ def multimodal_mulaw_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "100 TB: map-only per-clip work, one row out per clip.",
 )
 def multimodal_video_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     d = fan_out(t(spark, sf_dir, "documents").select("doc_id"))
 
     def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1285,7 +1274,6 @@ def multimodal_video_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     "100 TB: map-only per-clip work, one scalar row out per clip.",
 )
 def multimodal_adpcm_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     d = fan_out(
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 0)
@@ -1402,7 +1390,6 @@ def multimodal_adpcm_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "100 TB: map-only per-image work, 3 scalar rows out per image.",
 )
 def multimodal_png_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     d = fan_out(
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 1)

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from ..functions.udfs import char_entropy, median_udaf, zscore_grouped
 from ..registry import register
-from ..session import ensure_package_shipped
 from ._util import fan_out, t
 
 
@@ -44,7 +43,6 @@ def udtf_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-row histogram, which built-in expressions cannot form.",
 )
 def pandas_udf_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     d = fan_out(t(spark, sf_dir, "documents").select("doc_id", "text"))
     return d.select("doc_id", char_entropy(F.col("text")).alias("entropy_bits"))
 
@@ -75,7 +73,6 @@ def pandas_udf_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pandas_udf_entropy_rounded(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ensure_package_shipped(spark)
     d = fan_out(t(spark, sf_dir, "documents").select("doc_id", "text"))
     return d.select(
         "doc_id",
@@ -93,7 +90,6 @@ def pandas_udf_entropy_rounded(
     "functions).",
 )
 def pandas_grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     d = t(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.col("n_chars").cast("double").alias("n_chars")
     )
@@ -120,7 +116,6 @@ def pandas_grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     "percentile_approx.",
 )
 def pandas_udaf_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_shipped(spark)
     li = t(spark, sf_dir, "lineitem")
     keys = [
         F.col("l_returnflag").alias("returnflag"),
@@ -159,7 +154,6 @@ def pandas_udaf_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pandas_grouped_zscore_rounded(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    ensure_package_shipped(spark)
     d = t(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.col("n_chars").cast("double").alias("n_chars")
     )

@@ -39,7 +39,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def get_spark(app_name: str = "spark-graft", cpus: int | None = None) -> SparkSession:
-    """Build (or reuse) the engine's SparkSession.
+    """Build (or reuse) the engine's SparkSession, with this package
+    shipped to its Python workers (``ensure_package_shipped``).
 
     UTC session timezone is load-bearing: the DuckDB oracle compares
     timestamp values and DuckDB timestamps are UTC-naive.
@@ -79,6 +80,7 @@ def get_spark(app_name: str = "spark-graft", cpus: int | None = None) -> SparkSe
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ensure_package_shipped(spark)
     return spark
 
 
@@ -90,7 +92,9 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     guaranteed neither in local mode with a different driver cwd nor on a
     real cluster. Zipping the package once per session and registering it
     with the SparkContext is the standard deployment mechanism — same code
-    path works unchanged on a 1000-executor cluster.
+    path works unchanged on a 1000-executor cluster. ``get_spark`` and every
+    ``__spark_entry__.queries()`` callable call it; a caller that builds
+    its own session and runs query functions directly calls it once.
     """
     sc = spark.sparkContext
     if getattr(sc, "_spark_graft_pkg_shipped", False):

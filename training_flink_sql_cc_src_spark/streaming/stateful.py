@@ -59,343 +59,6 @@ def running_totals(
     )
 
 
-def sequence_pattern_stream(
-    stream_df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    type_col: str,
-    types: list[str],
-    within_seconds: int | None = None,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """Streaming matcher for an adjacent sequence of ANY fixed length —
-    the continuous-query leg of the generalized MATCH_RECOGNIZE lowering
-    (plans/match_recognize.py): PATTERN (T1 T2 ... TL) where row i's
-    ``type_col`` equals ``types[i]``, all L events adjacent in the key's
-    sequence, optionally first→last within ``within_seconds``.
-
-    State per key is the last L-1 (type, ts) events — a fixed-width
-    sliding window (Flink CEP's partial-match state for a linear pattern),
-    O(distinct keys × (L-1)) total, spread across executors. Matches
-    spanning micro-batch boundaries are found; AFTER MATCH SKIP TO NEXT
-    ROW semantics (every start row can match, like the batch lowering
-    with overlapping patterns allowed).
-
-    Requires per-key event-time-ordered delivery (replay fixtures with
-    ``order_by=ts``); ``tiebreak_col`` aligns equal-ts ordering with the
-    batch lowering's ORDER BY. Emits (key, ts_1 .. ts_L) per match."""
-    length = len(types)
-    if length < 2:
-        raise ValueError("sequence pattern needs at least 2 steps")
-    hist = length - 1
-    out_schema = f"{key_col} long, " + ", ".join(
-        f"ts_{i + 1} timestamp" for i in range(length)
-    )
-    state_schema = ", ".join(
-        f"t{i} string, s{i} timestamp" for i in range(1, hist + 1)
-    )
-
-    def update(
-        key: tuple,
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        window: list[tuple] = []
-        if state.exists:
-            vals = state.get
-            window = [
-                (vals[2 * i], vals[2 * i + 1])
-                for i in range(hist)
-                if vals[2 * i] is not None
-            ]
-        matches: list[list] = []
-        for pdf in batches:
-            sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-            pdf = pdf.sort_values(sort_cols)
-            for row in pdf.itertuples(index=False):
-                cur = (getattr(row, type_col), getattr(row, ts_col))
-                seq = window + [cur]
-                if len(seq) == length and all(
-                    t == want for (t, _), want in zip(seq, types)
-                ):
-                    if (
-                        within_seconds is None
-                        or (seq[-1][1] - seq[0][1]).total_seconds()
-                        <= within_seconds
-                    ):
-                        matches.append([s for _, s in seq])
-                window = seq[-hist:]
-        flat: list = []
-        for tname, ts in window:
-            flat += [tname, ts]
-        while len(flat) < 2 * hist:  # pad oldest slots when history short
-            flat = [None, None] + flat
-        state.update(tuple(flat))
-        if matches:
-            data = {key_col: [key[0]] * len(matches)}
-            for i in range(length):
-                data[f"ts_{i + 1}"] = [m[i] for m in matches]
-            yield pd.DataFrame(data)
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_pattern_stream(
-    stream_df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    type_col: str,
-    run_type: str,
-    end_type: str,
-    within_seconds: int | None = None,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """Streaming matcher for PATTERN (A+ B) — the unbounded maximal-run
-    shape (continuous leg of plans/match_recognize._lower_plus) under
-    AFTER MATCH SKIP PAST LAST ROW semantics: one match per maximal
-    consecutive run of ``run_type`` rows immediately followed by an
-    ``end_type`` row, with the optional WITHIN bound measured from the
-    run's FIRST row (the match start).
-
-    State per key is O(1) — (in_run, run_start_ts, last_run_ts) — at ANY
-    run length, exactly Flink CEP's partial-match state for a linear
-    greedy pattern with disjoint predicates. Runs spanning micro-batch
-    boundaries are matched. Emits (key, first_ts, last_ts, end_ts)."""
-    out_schema = (
-        f"{key_col} long, first_ts timestamp, last_ts timestamp, "
-        "end_ts timestamp"
-    )
-    state_schema = "in_run boolean, run_start timestamp, run_last timestamp"
-
-    def update(
-        key: tuple,
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        in_run, run_start, run_last = (
-            state.get if state.exists else (False, None, None)
-        )
-        firsts, lasts, ends = [], [], []
-        for pdf in batches:
-            sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-            pdf = pdf.sort_values(sort_cols)
-            for row in pdf.itertuples(index=False):
-                cur_type = getattr(row, type_col)
-                cur_ts = getattr(row, ts_col)
-                if cur_type == run_type:
-                    if not in_run:
-                        in_run, run_start = True, cur_ts
-                    run_last = cur_ts
-                elif in_run and cur_type == end_type:
-                    if (
-                        within_seconds is None
-                        or (cur_ts - run_start).total_seconds()
-                        <= within_seconds
-                    ):
-                        firsts.append(run_start)
-                        lasts.append(run_last)
-                        ends.append(cur_ts)
-                    in_run = False
-                else:
-                    in_run = False
-        state.update((in_run, run_start, run_last))
-        if firsts:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(firsts),
-                    "first_ts": firsts,
-                    "last_ts": lasts,
-                    "end_ts": ends,
-                }
-            )
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def adjacent_pattern_stream(
-    stream_df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    type_col: str,
-    first_type: str,
-    second_type: str,
-    within_seconds: int | None = None,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """Streaming adjacent-pattern matcher — the continuous-query leg of
-    the MATCH_RECOGNIZE lowering (plans/match_recognize.py lowers the
-    batch side to LEAD chains; a LEAD over a stream is not expressible,
-    so the stream side keeps per-key state instead, exactly Flink CEP's
-    keyed NFA model).
-
-    PATTERN (A B) with A: type == first_type, B: type == second_type —
-    emits (key, first_ts, second_ts) whenever a B event IMMEDIATELY
-    follows an A event in the key's event sequence (any intervening event
-    of any type breaks adjacency), optionally within ``within_seconds``.
-    State per key is one tuple (last event's type + timestamp), so a
-    match whose A and B arrive in DIFFERENT micro-batches is still found
-    — the cross-batch case a per-batch LEAD would silently drop. State
-    volume is O(distinct keys), the floor for any CEP operator.
-
-    Requires per-key event-time-ordered delivery (replay fixtures with
-    ``order_by=ts``; a production source provides it per partition-key).
-    ``tiebreak_col`` breaks equal-timestamp ordering the same way the
-    batch lowering's ORDER BY does, keeping the two legs comparable.
-    """
-    out_schema = f"{key_col} long, first_ts timestamp, second_ts timestamp"
-    state_schema = "last_type string, last_ts timestamp"
-
-    def update(
-        key: tuple,
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        last_type, last_ts = state.get if state.exists else (None, None)
-        firsts, seconds = [], []
-        for pdf in batches:
-            sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-            pdf = pdf.sort_values(sort_cols)
-            for row in pdf.itertuples(index=False):
-                cur_type = getattr(row, type_col)
-                cur_ts = getattr(row, ts_col)
-                if (
-                    last_type == first_type
-                    and cur_type == second_type
-                    and (
-                        within_seconds is None
-                        or (cur_ts - last_ts).total_seconds() <= within_seconds
-                    )
-                ):
-                    firsts.append(last_ts)
-                    seconds.append(cur_ts)
-                last_type, last_ts = cur_type, cur_ts
-        state.update((last_type, last_ts))
-        if firsts:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(firsts),
-                    "first_ts": firsts,
-                    "second_ts": seconds,
-                }
-            )
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def mid_run_pattern_stream(
-    stream_df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    type_col: str,
-    start_type: str,
-    run_type: str,
-    end_type: str,
-    within_seconds: int | None = None,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """Streaming matcher for PATTERN (A B+ C) — an unbounded run at a
-    MIDDLE position (continuous leg of plans/match_recognize._lower_nfa
-    for the disjoint eq-type funnel): a ``start_type`` row, one-or-more
-    consecutive ``run_type`` rows, then an ``end_type`` row.
-
-    State per key is O(1) at any run length — (phase, a_ts, run_start,
-    run_last, run_len): phase 0 idle, 1 after the A row, 2 inside the
-    B-run. Any non-matching row resets; a new A row restarts the partial
-    match (with disjoint predicates no other start can succeed first, so
-    the single-candidate state machine equals the batch NFA). The WITHIN
-    bound is measured from the A row (the match start). Matches spanning
-    micro-batch boundaries are found. Emits (key, a_ts, run_len,
-    run_last_ts, end_ts)."""
-    out_schema = (
-        f"{key_col} long, a_ts timestamp, run_len long, "
-        "run_last_ts timestamp, end_ts timestamp"
-    )
-    state_schema = (
-        "phase int, a_ts timestamp, run_start timestamp, "
-        "run_last timestamp, run_len long"
-    )
-
-    def update(
-        key: tuple,
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        phase, a_ts, run_start, run_last, run_len = (
-            state.get if state.exists else (0, None, None, None, 0)
-        )
-        a_out, len_out, last_out, end_out = [], [], [], []
-        for pdf in batches:
-            sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-            pdf = pdf.sort_values(sort_cols)
-            for row in pdf.itertuples(index=False):
-                cur_type = getattr(row, type_col)
-                cur_ts = getattr(row, ts_col)
-                if cur_type == start_type:
-                    # a fresh A always restarts the partial match
-                    phase, a_ts = 1, cur_ts
-                    run_start = run_last = None
-                    run_len = 0
-                elif cur_type == run_type and phase in (1, 2):
-                    if phase == 1:
-                        run_start = cur_ts
-                        run_len = 0
-                    phase, run_last = 2, cur_ts
-                    run_len += 1
-                elif cur_type == end_type and phase == 2:
-                    if (
-                        within_seconds is None
-                        or (cur_ts - a_ts).total_seconds() <= within_seconds
-                    ):
-                        a_out.append(a_ts)
-                        len_out.append(run_len)
-                        last_out.append(run_last)
-                        end_out.append(cur_ts)
-                    phase, a_ts = 0, None
-                    run_start = run_last = None
-                    run_len = 0
-                else:
-                    phase, a_ts = 0, None
-                    run_start = run_last = None
-                    run_len = 0
-        state.update((phase, a_ts, run_start, run_last, run_len))
-        if a_out:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(a_out),
-                    "a_ts": a_out,
-                    "run_len": len_out,
-                    "run_last_ts": last_out,
-                    "end_ts": end_out,
-                }
-            )
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def sequence_flags_stream(
     stream_df: DataFrame,
     key_col: str,
@@ -410,19 +73,20 @@ def sequence_flags_stream(
 ) -> DataFrame:
     """Streaming matcher for an adjacent fixed-length sequence with
     ARBITRARY row-local predicates — the general-predicate continuous
-    leg of the MATCH_RECOGNIZE lowering (round-7: beyond equality
-    literals). ``flag_cols[i]`` is a BOOLEAN column (compiled JVM-side
-    from variable i's DEFINE, exactly like the batch NFA's precomputed
-    per-variable booleans) that row i of the window must satisfy.
+    leg of the MATCH_RECOGNIZE lowering. ``flag_cols[i]`` is a BOOLEAN
+    column (compiled JVM-side from variable i's DEFINE, exactly like the
+    batch NFA's precomputed per-variable booleans) that row i of the
+    window must satisfy.
 
     Because predicates may OVERLAP (one row can satisfy several
     variables), state keeps the last L-1 rows' flag BITMASKS + ts — a
-    fixed-width window, same O(distinct keys x (L-1)) cost as the
-    eq-literal matcher. With overlapping predicates the skip mode
-    MATTERS (matches can share rows): ``skip_past=False`` gives AFTER
-    MATCH SKIP TO NEXT ROW (every start may match); ``skip_past=True``
-    clears the window after each match — exactly the batch scan
-    resuming past the consumed rows. ``prev_spec`` adds physical
+    fixed-width window, O(distinct keys x (L-1)) total (Flink CEP's
+    partial-match state for a linear pattern). With overlapping
+    predicates the skip mode MATTERS (matches can share rows):
+    ``skip_past=False`` gives AFTER MATCH SKIP TO NEXT ROW (every start
+    may match); ``skip_past=True`` clears the window after each match —
+    exactly the batch scan resuming past the consumed rows.
+    ``prev_spec`` adds physical
     PREV(col, n) comparison conjuncts per flag, evaluated against the
     last max(n) rows kept in the same state (see module note above).
     ``payload_spec`` = ([(position, col), ...], {col: sql_type}) carries
@@ -1957,6 +1621,7 @@ def mid_run_flags_stream(
     start_flag_col: str,
     run_flag_col: str,
     end_flag_col: str,
+    within_seconds: int | None = None,
     tiebreak_col: str | None = None,
     prev_spec: tuple | None = None,
     payload_spec: tuple | None = None,
@@ -1987,9 +1652,11 @@ def mid_run_flags_stream(
     of the dead candidate's), so the O(1) single-candidate machine
     equals the batch NFA. A match is finalized only when a row fails B
     — the same longest-match-needs-a-terminator contract as
-    ``run_flags_stream``. WITHIN is not supported (a too-old A would
-    need re-anchoring to starts inside the run — unbounded state); the
-    router rejects it loudly. ``prev_spec`` adds physical PREV(col, n)
+    ``run_flags_stream``. ``within_seconds`` drops a match at emission
+    when its C row is more than that many seconds after its A row;
+    exact only for provably disjoint predicates (no other A row can sit
+    inside the run to re-anchor to), the only case the router passes
+    it. ``prev_spec`` adds physical PREV(col, n)
     comparison conjuncts per flag (start, run, end), evaluated against
     the last max(n) rows kept in the same state. ``payload_spec`` =
     ([(role, col), ...], {col: sql_type}) with role "start" (the A
@@ -2290,6 +1957,15 @@ def mid_run_flags_stream(
         if max_prev:
             st += _prev_flat(vhist, need_cols, max_prev)
         state.update(tuple(st))
+        if within_seconds is not None:
+            keep = [
+                (e - a).total_seconds() <= within_seconds
+                for a, e in zip(a_out, end_out)
+            ]
+            a_out, len_out, last_out, end_out, pays, agg_outs = (
+                [x for x, k in zip(xs, keep) if k]
+                for xs in (a_out, len_out, last_out, end_out, pays, agg_outs)
+            )
         if a_out:
             data = {
                 key_col: [key[0]] * len(a_out),
