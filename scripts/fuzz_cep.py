@@ -17,6 +17,15 @@ Because every DEFINE is an eq-literal on a per-variable DISTINCT char,
 the row->variable mapping of any match is recoverable from the input
 chars alone — which is what lets the reference model SKIP TO targets and
 exclusion sets without instrumenting the regex.
+
+Every fourth case also streams: the same statement runs through
+``Engine.sql_stream`` over a micro-batched replay
+(``streaming/parity.run_stream_over_batch``) and is checked against the
+same ``re`` reference — an oracle independent of the CEP core both the
+batch NFA and the stream's decision window share. Each key of a stream
+case is padded with non-matching ``x`` rows so every start is decided
+(Lmax rows for a bounded pattern, one row past the WITHIN horizon, or
+one break row); the reference sees the same padded string.
 """
 import itertools
 import random
@@ -25,11 +34,15 @@ import sys
 sys.path.insert(0, ".")
 import re as pyre
 
+from training_flink_sql_cc_src_spark.engine import Engine
 from training_flink_sql_cc_src_spark.plans.match_recognize import (
     UnsupportedPatternError,
 )
 from training_flink_sql_cc_src_spark.plans.router import StatementRouter
 from training_flink_sql_cc_src_spark.session import get_spark
+from training_flink_sql_cc_src_spark.streaming.parity import (
+    run_stream_over_batch,
+)
 
 VARS = ["A", "B", "C", "D"]
 CHARS = {"A": "a", "B": "b", "C": "c", "D": "d"}
@@ -166,13 +179,45 @@ def min_len_ok(py_regex):
     return pyre.match(py_regex, "") is None
 
 
+def decision_pad(py_regex, within):
+    """Trailing ``x`` rows that decide every start of a streamed key:
+    Lmax rows for a bounded pattern, one row past the WITHIN horizon
+    (rows are 1 s apart), and at least one break row."""
+    lmax = pyre._parser.parse(py_regex).getwidth()[1]
+    pad = lmax if lmax < 1000 else 1
+    return max(pad, within + 1 if within else 0)
+
+
+def match_spans(rows):
+    """Emitted row set per match, keyed (partition, match_number)."""
+    spans = {}
+    for r in rows:
+        spans.setdefault((r.user_id, r.mn), []).append(r.seq)
+    return sorted(tuple(sorted(v)) for v in spans.values())
+
+
+def run_or_error(fn):
+    """(rows, None), or ([], "loop") for the Flink loop-forever walk
+    error; any other exception propagates."""
+    try:
+        return fn(), None
+    except (NotImplementedError, UnsupportedPatternError):
+        raise
+    except Exception as e:
+        if "loop forever" in str(e):
+            return [], "loop"
+        raise
+
+
 def main(n_cases, seed):
     rng = random.Random(seed)
     spark = get_spark("fuzz")
     spark.sparkContext.setLogLevel("ERROR")
     router = StatementRouter(spark)
+    eng = Engine(spark)
     failures = 0
     tried = 0
+    streamed = 0
     while tried < n_cases:
         roll = rng.random()
         if roll < 0.12:
@@ -225,23 +270,24 @@ def main(n_cases, seed):
         # reachable from start s — the reference matches against the
         # TRUNCATED input (greedy behavior beyond the horizon included)
         within = rng.randint(1, 6) if rng.random() < 0.3 else None
+        stream_case = tried % 4 == 0
+        if stream_case:
+            pad = "x" * decision_pad(pat_r, within)
+            key_types = {k: t + pad for k, t in key_types.items()}
         rows, seq_off, off = [], {}, 0
         for k in keys:
             seq_off[k] = off
             for i, tch in enumerate(key_types[k]):
                 rows.append((k, off + i, tch))
             off += len(key_types[k])
-        spark.createDataFrame(
+        data = spark.createDataFrame(
             rows, "user_id int, seq int, et string"
         ).selectExpr(
             "user_id", "seq", "et",
             "timestamp_seconds(seq) AS ts"
-        ).createOrReplaceTempView("__fuzz")
-        engine_err = None
-        got_rows = []
-        try:
-            got_rows = router.execute(
-                f"""
+        )
+        data.createOrReplaceTempView("__fuzz")
+        stmt = f"""
                 SELECT user_id, seq, mn FROM __fuzz
                 MATCH_RECOGNIZE (
                     PARTITION BY user_id
@@ -254,27 +300,21 @@ def main(n_cases, seed):
                     DEFINE {defines}
                 )
                 """
-            ).collect()
+        try:
+            got_rows, engine_err = run_or_error(
+                lambda: router.execute(stmt).collect()
+            )
         except (NotImplementedError, UnsupportedPatternError) as e:
             print(f"SKIP unsupported: {pat_e!r}: {e}", flush=True)
             continue
-        except Exception as e:  # runtime loop-forever walk error
-            if "loop forever" in str(e):
-                engine_err = "loop"
-            else:
-                failures += 1
-                print(
-                    f"ENGINE ERROR pattern={pat_e!r} skip={skip_sql!r} "
-                    f"types={types!r}: {e}",
-                    flush=True,
-                )
-                continue
-        # got: exact emitted row set per match (exclusions suppress
-        # rows), keyed (partition, match_number)
-        spans = {}
-        for r in got_rows:
-            spans.setdefault((r.user_id, r.mn), []).append(r.seq)
-        got = sorted(tuple(sorted(v)) for v in spans.values())
+        except Exception as e:
+            failures += 1
+            print(
+                f"ENGINE ERROR pattern={pat_e!r} skip={skip_sql!r} "
+                f"types={key_types!r}: {e}",
+                flush=True,
+            )
+            continue
         rx = pyre.compile(pat_r)
         excl_chars = {PERM_CHARS[v] for v in excl}
 
@@ -333,28 +373,60 @@ def main(n_cases, seed):
                 )
                 if emitted:
                     want.append(emitted)
-        if engine_err or want_err:
-            if engine_err != want_err:
-                failures += 1
+        want.sort()
+
+        def check(leg, got_rows, engine_err):
+            """1 on a mismatch with the reference, else 0."""
+            if engine_err or want_err:
+                if engine_err == want_err:
+                    return 0
                 print(
-                    f"ERROR MISMATCH pattern={pat_e!r} skip={skip_sql!r} "
-                    f"types={key_types!r}: engine={engine_err} "
-                    f"want={want_err}",
+                    f"ERROR MISMATCH [{leg}] pattern={pat_e!r} "
+                    f"skip={skip_sql!r} types={key_types!r}: "
+                    f"engine={engine_err} want={want_err}",
                     flush=True,
                 )
-            tried_tick(tried, n_cases, failures)
-            continue
-        want.sort()
-        if got != want:
-            failures += 1
+                return 1
+            got = match_spans(got_rows)
+            if got == want:
+                return 0
             print(
-                f"MISMATCH pattern={pat_e!r} regex={pat_r!r} "
-                f"skip={skip_sql!r} types={key_types!r}\n"
+                f"MISMATCH [{leg}] pattern={pat_e!r} regex={pat_r!r} "
+                f"skip={skip_sql!r} within={within!r} types={key_types!r}\n"
                 f"  got ={got}\n  want={want}",
                 flush=True,
             )
+            return 1
+
+        failures += check("batch", got_rows, engine_err)
+        if stream_case:
+            try:
+                s_rows, s_err = run_or_error(
+                    lambda: run_stream_over_batch(
+                        spark,
+                        data,
+                        lambda s: eng.sql_stream(stmt, {"__fuzz": s}),
+                        output_mode="append",
+                        n_files=3,
+                        order_by="ts",
+                    ).collect()
+                )
+                streamed += 1
+                failures += check("stream", s_rows, s_err)
+            except (NotImplementedError, UnsupportedPatternError) as e:
+                print(f"SKIP stream unsupported: {pat_e!r}: {e}", flush=True)
+            except Exception as e:
+                failures += 1
+                print(
+                    f"STREAM ERROR pattern={pat_e!r} skip={skip_sql!r} "
+                    f"types={key_types!r}: {e}",
+                    flush=True,
+                )
         tried_tick(tried, n_cases, failures)
-    print(f"DONE: {tried} cases, {failures} failures", flush=True)
+    print(
+        f"DONE: {tried} cases ({streamed} streamed), {failures} failures",
+        flush=True,
+    )
     return 1 if failures else 0
 
 

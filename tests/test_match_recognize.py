@@ -116,10 +116,11 @@ def test_equal_valued_literals_are_not_disjoint():
     column's kind (Spark casts ``'01'`` to 1 on an int column)."""
     from training_flink_sql_cc_src_spark.plans.match_recognize import (
         _provably_disjoint,
+        _settle_skip_paths,
     )
 
-    def spec(pattern, a, b):
-        return parse_match_recognize(
+    def spec(pattern, a, b, col_types=None):
+        parsed = parse_match_recognize(
             _mr(
                 BASE.replace("PATTERN (A B)", f"PATTERN ({pattern})").replace(
                     "DEFINE A AS A.event_type = 'view', "
@@ -128,10 +129,20 @@ def test_equal_valued_literals_are_not_disjoint():
                 )
             )
         )
+        if col_types is not None:
+            # the lowering re-decides with the source schema
+            _settle_skip_paths(parsed, col_types)
+        return parsed
 
-    for a, b in (("1", "01"), ("1", "1.0"), ("1", "'2'")):
-        assert spec("A+ B", a, b).plus_overlap, (a, b)
-        assert spec("A B", a, b).skip_filter, (a, b)
+    for a, b, types in (
+        ("1", "01", None),
+        ("1", "1.0", None),
+        ("1", "'2'", None),
+        # Spark casts both quoted literals to the int 1
+        ("'1'", "'01'", {"value": "int"}),
+    ):
+        assert spec("A+ B", a, b, types).plus_overlap, (a, b)
+        assert spec("A B", a, b, types).skip_filter, (a, b)
     assert not spec("A+ B", "1", "2").plus_overlap
     typed = spec("A B", "'1'", "'01'")
     assert _provably_disjoint(typed)
@@ -140,6 +151,45 @@ def test_equal_valued_literals_are_not_disjoint():
     numeric = spec("A B", "1", "2.5")
     assert _provably_disjoint(numeric, {"value": "decimal(10,2)"})
     assert not _provably_disjoint(numeric, {"value": "string"})
+
+
+def test_typed_literal_spellings_match_batch(spark):
+    """On an int column Spark casts ``'01'`` to 1, so A.v = '1' and
+    B.v = '01' describe the same rows as the unquoted 1 / 1: both
+    spellings must lower to the same matches (the overlap matcher),
+    never to the disjoint gaps-and-islands path."""
+    spark.createDataFrame(
+        [(1, i, v) for i, v in enumerate([1, 1, 1, 2])],
+        "k int, ts int, v int",
+    ).createOrReplaceTempView("typed_lit")
+    router = StatementRouter(spark)
+
+    def rows(a, b, pattern, skip):
+        return sorted(
+            tuple(r)
+            for r in router.execute(
+                f"""
+                SELECT k, s, e FROM typed_lit
+                MATCH_RECOGNIZE (
+                    PARTITION BY k ORDER BY ts
+                    MEASURES FIRST(A.ts) AS s, LAST(B.ts) AS e
+                    ONE ROW PER MATCH
+                    AFTER MATCH {skip}
+                    PATTERN ({pattern})
+                    DEFINE A AS A.v = {a}, B AS B.v = {b}
+                )
+                """
+            ).collect()
+        )
+
+    for pattern, skip in (
+        ("A+ B", "SKIP TO NEXT ROW"),
+        ("A B", "SKIP PAST LAST ROW"),
+    ):
+        plain = rows("1", "1", pattern, skip)
+        assert plain, pattern
+        assert rows("'1'", "'01'", pattern, skip) == plain, pattern
+    assert rows("1", "1", "A+ B", "SKIP TO NEXT ROW") == [(1, 0, 2), (1, 1, 2)]
 
 
 def test_cross_row_define_parses_and_run_shape_guards():

@@ -1635,12 +1635,15 @@ def test_bounded_pattern_stream_matches_batch(spark):
          "TO NEXT ROW", ""),
     ]
     for pat, defines, skip, within in cases:
+        # MATCH_NUMBER() / CLASSIFIER() under ONE ROW: the window leg
+        # emits through the batch NFA's measure emitter
         stmt = f"""
-            SELECT k, CAST(a_ts AS LONG) AS ae FROM cep_bounded
+            SELECT k, CAST(a_ts AS LONG) AS ae, mn, cls FROM cep_bounded
             MATCH_RECOGNIZE (
                 PARTITION BY k
                 ORDER BY ts
-                MEASURES A.ts AS a_ts
+                MEASURES A.ts AS a_ts, MATCH_NUMBER() AS mn,
+                         CLASSIFIER() AS cls
                 ONE ROW PER MATCH
                 AFTER MATCH SKIP {skip}
                 PATTERN {pat}
@@ -1835,7 +1838,7 @@ def test_bounded_pattern_stream_cross_variable_defines(spark):
     """Cross-variable DEFINE comparisons stream on the bounded leg:
     the decision window holds the partial match's bindings, so
     SELF.col OP OTHER.col (and FIRST/LAST(OTHER.col)) evaluate exactly
-    as the batch NFA's cross_ok — including the alternative-labeling
+    as in the batch NFA — including the alternative-labeling
     backtracking case (a row passing several variables where only one
     labeling lets the cross check hold)."""
     from training_flink_sql_cc_src_spark.engine import Engine
@@ -3731,8 +3734,9 @@ def test_funnel_first_navigation_measures_match_batch(spark):
 def test_multi_key_partition_by_streams_all_legs(spark):
     """Multi-column PARTITION BY streams on every MATCH_RECOGNIZE leg
     via the lossless to_json(struct(...)) composite key (engine.py):
-    the general sequence matcher, the bounded-window ALL ROWS leg, and
-    the time-bounded WITHIN leg all group on the synthetic key and the
+    the general sequence matcher, the bounded-window leg in both PER
+    MATCH modes, and the time-bounded WITHIN leg all group on the
+    synthetic key and the
     registered view restores the original partition columns (types
     included — the int key must come back as int, the NULL key as
     NULL), so the outer statement reads them unchanged."""
@@ -3795,10 +3799,22 @@ def test_multi_key_partition_by_streams_all_legs(spark):
                    C AS C.v <= 1
         )
     """
+    bounded_stmt = """
+        SELECT g, ki, CAST(e AS LONG) AS e, nb FROM mkey_src
+        MATCH_RECOGNIZE (
+            PARTITION BY g, ki ORDER BY ts
+            MEASURES LAST(B.ts) AS e, COUNT(B.v) AS nb
+            ONE ROW PER MATCH
+            AFTER MATCH SKIP PAST LAST ROW
+            PATTERN (A B{1,2})
+            DEFINE A AS A.v >= 6, B AS B.v BETWEEN 0 AND 4
+        )
+    """
     for name, stmt in (
         ("seq", seq_stmt),
         ("all_rows", all_rows_stmt),
         ("within", within_stmt),
+        ("bounded", bounded_stmt),
     ):
         df.createOrReplaceTempView("mkey_src")  # streaming run rebinds it
         batch = Counter(tuple(r) for r in router.execute(stmt).collect())
@@ -3924,8 +3940,8 @@ def test_break_decided_leg_unbounded_no_within(spark):
                        C AS C.v BETWEEN 0 AND 2
             )""",
         # RICH cross expressions on an unbounded run (round 12): the
-        # break-decided leg's _match_bounded evaluates the compiled
-        # expression against the buffered window's partial match. C
+        # break-decided leg's matcher (cep_core.match_at) evaluates the
+        # compiled expression against the buffered window's partial match. C
         # keeps a row-local conjunct so break rows still exist (the
         # leg decides heads at all-flags-false rows).
         "rich_crossvar_run": """

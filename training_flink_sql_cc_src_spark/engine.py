@@ -80,7 +80,9 @@ class Engine:
         row-local DEFINEs plus physical PREV conjuncts, and in-window
         NEXT lookahead on sequences — and EVERY bounded pattern
         (quantifiers greedy/reluctant, alternation, nested groups,
-        PERMUTE) via the Lmax-window matcher, including cross-variable
+        PERMUTE) via the Lmax-window matcher, which shares its matcher,
+        skip walk and measure emitter with the batch NFA
+        (plans/cep_core), including cross-variable
         DEFINE comparisons, aggregate measures, FIRST/LAST measure
         navigation, both skip modes plus SKIP TO FIRST/LAST <var>,
         WITHIN, and ALL ROWS PER MATCH (WITH UNMATCHED ROWS,
@@ -325,34 +327,33 @@ class Engine:
         """Lower a MATCH_RECOGNIZE statement for CONTINUOUS execution.
 
         The batch lowering uses LEAD window functions, which Structured
-        Streaming rejects; the streaming leg instead keys per-partition
-        state (streaming/stateful.py — Flink CEP's model). One leg per
-        shape: plain adjacent sequences of any fixed length, the A+ B
-        run shape and the A B+ C middle-run funnel stream on the
-        general-predicate matchers, whose DEFINEs may be ARBITRARY
-        row-local predicates (each compiled to a JVM flag column like
-        the batch NFA's booleans — predicates may overlap; physical
-        PREV(col, n) comparisons evaluate from the matcher's bounded row
-        history; in-window NEXT(col, n) lookahead streams on sequences).
+        Streaming rejects; the streaming legs instead key per-partition
+        state (streaming/stateful.py — Flink CEP's model). Two kinds:
+
+        - the O(1)-state run matchers for the general-predicate shapes —
+          plain adjacent sequences (``sequence_flags_stream``), the A+ B
+          run (``run_flags_stream``) and the A B+ C funnel
+          (``mid_run_flags_stream``) — with ARBITRARY (possibly
+          overlapping) row-local DEFINEs compiled to JVM flag columns,
+          physical PREV conjuncts from a bounded row history, in-window
+          NEXT lookahead on sequences, payload, aggregate and
+          FIRST/LAST(V.col, n) measures;
+        - one decision-window driver (``bounded_nfa_stream``, see
+          ``_match_recognize_stream_bounded``) for everything else: every
+          bounded pattern, ALL ROWS PER MATCH, cross-variable DEFINEs,
+          SKIP TO FIRST/LAST <var>, CLASSIFIER()/MATCH_NUMBER(); and,
+          when a run matcher rejects a shape, ANY pattern — decided by
+          the WITHIN horizon with a WITHIN bound, by the first break row
+          without one. Its matcher, skip walk and measure emitter are
+          the batch NFA's (plans/cep_core).
+
         Multi-column PARTITION BY keys every matcher on a lossless
         to_json(struct(...)) composite, restored on the registered view.
-        MEASURES may read ``Var.<order column>`` positions and any
-        ``Var.<column>`` payload (carried through the matcher's keyed
-        state). The matched stream is registered as a view and the
-        outer statement rewritten to read it. FIRST/LAST match-binding
-        navigation inside DEFINEs streams too, the defining variable's
-        own rows included ({v}.col OP FIRST|LAST(X.col[, n]) — round
-        8); only nav embedded in richer expressions stays batch-only.
-        FIRST/LAST(V.col, n) logical offsets in MEASURES stream on
-        every leg (round 9): the decision-window legs index their
-        mapped rows, single-row variables emit typed NULLs on the O(1)
-        legs, and the A+ B and A B+ C run matchers carry bounded
-        last/first K+1 payload histories (K = largest offset, a
-        compile-time state bound, with pend-backtrack snapshots).
-        Returns None when the statement has no MATCH_RECOGNIZE;
-        otherwise every shape streams on one of the legs (O(1) run
-        matchers, Lmax window, WITHIN horizon, break-row decided),
-        with instructive errors naming the rare batch-only forms."""
+        The matched stream is registered as a view and the outer
+        statement rewritten to read it. Returns None when the statement
+        has no MATCH_RECOGNIZE; otherwise every shape streams on one of
+        the legs, with instructive errors naming the rare batch-only
+        forms."""
         from pyspark.sql import functions as F
 
         from .plans.match_recognize import (
@@ -452,19 +453,6 @@ class Engine:
                     "walks only; bounded patterns resume at the target row "
                     "from the decision window)"
                 )
-            if spec.all_rows:
-                # ALL ROWS PER MATCH: every matched input row emits — the
-                # bounded-window leg carries full source rows per match
-                if unbounded_shape:
-                    raise unsupported(
-                        "ALL ROWS PER MATCH over an unbounded pattern (the "
-                        "run matchers keep O(1) state, not the matched "
-                        "rows; bounded patterns stream ALL ROWS from the "
-                        "decision window)"
-                    )
-                return self._match_recognize_stream_all_rows(
-                    stmt, spec, sdf, key, ts_col, tiebreak, unsupported
-                )
             import re as _re_x
 
             has_cross_define = any(
@@ -481,7 +469,10 @@ class Engine:
                 for v in dict.fromkeys(spec.pattern)
             )
             bounded_extra = (
-                spec.permute
+                # ALL ROWS PER MATCH: the decision window holds the
+                # matched rows the run matchers' O(1) state does not
+                spec.all_rows
+                or spec.permute
                 or spec.quants
                 or spec.pos_quants
                 or spec.pattern_ast is not None
@@ -500,9 +491,10 @@ class Engine:
             if bounded_extra:
                 if unbounded_shape:
                     raise unsupported(
-                        "unbounded quantifiers mixed with groups/bounded "
-                        "quantifiers (the bounded-window streaming matcher "
-                        "needs a finite pattern length; use the batch path)"
+                        "an unbounded pattern with ALL ROWS PER MATCH, "
+                        "groups or bounded quantifiers (the Lmax-window "
+                        "matcher needs a finite pattern length; use the "
+                        "batch path)"
                     )
                 return self._match_recognize_stream_bounded(
                     stmt, spec, sdf, key, ts_col, tiebreak, unsupported
@@ -568,11 +560,6 @@ class Engine:
             # state is the rows between breaks (O(longest break-free
             # stretch), exactly Flink CEP's partial-match state for
             # an unbounded quantifier) with the same loud row cap.
-            leg = (
-                self._match_recognize_stream_all_rows
-                if spec.all_rows
-                else self._match_recognize_stream_bounded
-            )
             mode = (
                 {"time_bounded": True}
                 if spec.within_seconds is not None
@@ -580,7 +567,7 @@ class Engine:
             )
             try:
                 return _expand_composite(
-                    leg(
+                    self._match_recognize_stream_bounded(
                         stmt, spec, sdf, key, ts_col, tiebreak,
                         unsupported, **mode,
                     )
@@ -589,52 +576,48 @@ class Engine:
                 raise primary from None
 
 
-    def _bounded_stream_prep(
-        self, spec, sdf, ts_col, unsupported, time_bounded: bool = False
-    ) -> tuple:
-        """Shared front half of the bounded streaming legs: guard the
-        DEFINEs to row-local predicates, build the bounded pattern AST
-        (PERMUTE -> alternation of its variants in listed preference
-        order; flat position specs -> AST nodes), bound-check Lmax, and
-        compile each variable's DEFINE to a JVM flag column. Returns
-        (ast, uniq_vars, field_types, flagged_df, var_flags).
-
-        ``time_bounded=True`` (the WITHIN-horizon leg): unbounded
-        quantifiers (A+/A*/A{n,} and group analogs, the plus-run form
-        included) are allowed in the AST — hi=None nodes — and the Lmax
-        row-count caps are skipped (the decision window is bounded by
-        the WITHIN span instead)."""
+    def _match_recognize_stream_bounded(
+        self, stmt, spec, sdf, key, ts_col, tiebreak, unsupported,
+        time_bounded: bool = False, break_decided: bool = False,
+    ) -> str:
+        """Decision-window streaming leg (streaming/stateful.
+        bounded_nfa_stream), both PER MATCH modes: every BOUNDED pattern
+        — quantifiers, alternation groups, quantified and nested
+        groups, PERMUTE as the alternation of its orderings in listed
+        (lexicographic) preference order — decided on a window of the
+        last Lmax rows per key; ``time_bounded`` / ``break_decided``
+        stream UNBOUNDED patterns on the WITHIN-horizon or break-row
+        rule instead. Matching, the skip walk and the MEASURES are the
+        shared CEP core's (plans/cep_core), the batch NFA's decisions.
+        DEFINEs split on top-level AND: row-local parts compile to JVM
+        flag columns; cross-variable parts (cep_core.split_defines)
+        evaluate against the window's partial match; physical PREV
+        conjuncts evaluate at ARRIVAL against a bounded value history,
+        NEXT conjuncts at DECISION time against window successors (each
+        decision deferred by the largest NEXT offset). The matched
+        stream registers as a view — the key + measures under ONE ROW,
+        every source column + measures under ALL ROWS — and the outer
+        statement is rewritten over it."""
         import itertools
         import re as _re
 
         from pyspark.sql import functions as F
 
+        from .plans.cep_core import split_defines
         from .plans.match_recognize import (
-            _AGG_DEF_RE,
-            _CROSS_CMP_RE,
-            _NAV_DEF_RE,
             _NEXT_RE,
             _PREV_RE,
+            CLASSIFIER,
+            MATCH_NUMBER,
             _pos_spec_to_ast,
             _pred_at_offset,
-            _split_top_and,
         )
-        from .streaming.stateful import ast_max_len
+        from .streaming.stateful import ast_max_len, bounded_nfa_stream
 
         cols = sdf.columns
         field_types = {f.name: f.dataType.simpleString() for f in sdf.schema}
         uniq_vars = list(dict.fromkeys(spec.pattern))
-        # DEFINEs split on top-level AND: row-local conjuncts compile to
-        # the JVM flag; simple cross-variable comparisons (SELF.col OP
-        # [FIRST/LAST(]X.col[, n]) — X may be the defining variable,
-        # whose mapped-so-far rows include the current candidate)
-        # evaluate inside the matcher against the partial match's
-        # window bindings — the batch NFA's cross_ok, streamable
-        # because the decision window holds every candidate row.
-        # Physical PREV/NEXT compile to the value-history / decision-
-        # window conjunct specs below (prev_checks / next_checks).
-        cross_checks: dict[str, list[tuple]] = {}
-        cross_cols: set[str] = set()
+        local, checks, cross_cols = split_defines(spec, field_types)
         self_preds: dict[str, str] = {}
         # physical PREV(col, n) conjuncts: evaluated per arriving row
         # against a bounded value history in the matcher's keyed state
@@ -642,8 +625,7 @@ class Engine:
         prev_need: set[str] = set()
         max_prev = 0
         # physical NEXT(col, n) conjuncts: evaluated at DECISION time
-        # against the window's successor rows (the head start is only
-        # decided once max_next rows beyond every candidate row exist)
+        # against the window's successor rows
         next_checks: dict[str, list[tuple]] = {}
         next_need: set[str] = set()
         max_next = 0
@@ -658,17 +640,21 @@ class Engine:
             _re.IGNORECASE,
         )
 
-        def _prev_operand(tok: str, v: str):
-            pm = _PREV_RE.fullmatch(tok.strip())
-            if pm is not None:
-                col = pm.group("pcol")
-                if col not in field_types:
-                    raise unsupported(
-                        f"DEFINE for {v}: PREV over unknown column "
-                        f"{col!r}"
-                    )
-                prev_need.add(col)
-                return ("prev", col, int(pm.group("n") or 1))
+        def _operand(tok: str, v: str):
+            for regex, kind, need in (
+                (_PREV_RE, "prev", prev_need),
+                (_NEXT_RE, "next", next_need),
+            ):
+                pm = regex.fullmatch(tok.strip())
+                if pm is not None:
+                    col = pm.group("pcol")
+                    if col not in field_types:
+                        raise unsupported(
+                            f"DEFINE for {v}: {kind.upper()} over unknown "
+                            f"column {col!r}"
+                        )
+                    need.add(col)
+                    return (kind, col, int(pm.group("n") or 1))
             tok = tok.strip()
             if tok.startswith("'"):
                 return ("lit", tok[1:-1].replace("''", "'"))
@@ -691,169 +677,54 @@ class Engine:
             prev_need.add(tok)
             return ("col", tok)
 
-        def _nav_operand(tok: str, v: str):
-            nm = _NEXT_RE.fullmatch(tok.strip())
-            if nm is not None:
-                col = nm.group("pcol")
-                if col not in field_types:
-                    raise unsupported(
-                        f"DEFINE for {v}: NEXT over unknown column "
-                        f"{col!r}"
-                    )
-                next_need.add(col)
-                return ("next", col, int(nm.group("n") or 1))
-            return _prev_operand(tok, v)
-
         for v in uniq_vars:
             self_parts: list[str] = []
-            for part in _split_top_and(spec.defines[v]):
-                stripped = _NEXT_RE.sub("", _PREV_RE.sub("", part))
-                foreign = (
-                    set(_re.findall(r"\b([A-Za-z_]\w*)\s*\.", stripped)) - {v}
-                )
-                if foreign or _AGG_DEF_RE.search(part) or (
-                    _NAV_DEF_RE.search(part)
-                    and not _PREV_RE.search(part)
-                    and not _NEXT_RE.search(part)
-                ):
-                    # cross-variable comparison — or SELF-navigation
-                    # (B.v OP FIRST/LAST(B.v[, n])): same mechanism,
-                    # the defining variable's mapped-so-far rows
-                    # include the current candidate row
-                    cm = _CROSS_CMP_RE.match(part)
-                    simple = (
-                        cm is not None
-                        and cm.group("sv") == v
-                        and (cm.group("ov") or cm.group("ov2"))
-                        in uniq_vars
-                        and not (
-                            (cm.group("ov") or cm.group("ov2")) == v
-                            and cm.group("nav") is None
-                        )
-                    )
-                    if simple:
-                        ov = cm.group("ov") or cm.group("ov2")
-                        sc, oc = cm.group("sc"), (
-                            cm.group("oc") or cm.group("oc2")
-                        )
-                        for c in (sc, oc):
-                            if c not in field_types:
-                                raise unsupported(
-                                    f"DEFINE for {v}: unknown column "
-                                    f"{c!r} in a cross-variable "
-                                    "comparison"
-                                )
-                        cross_checks.setdefault(v, []).append(
-                            (
-                                sc,
-                                cm.group("op"),
-                                ov,
-                                oc,
-                                (cm.group("nav") or "LAST").upper(),
-                                int(cm.group("n") or 0),
-                            )
-                        )
-                        cross_cols |= {sc, oc}
-                        continue
-                    # rich expression part (round 12): compiled once,
-                    # evaluated by the decision-window matcher against
-                    # the partial match — same compile + semantics as
-                    # the batch NFA (plans.match_recognize); parts
-                    # outside the expression subset (aggregates,
-                    # PREV/NEXT mixed with bindings) stay loud
-                    from .plans.match_recognize import (
-                        compile_rich_cross,
-                    )
-
-                    compiled = compile_rich_cross(
-                        part, v, uniq_vars, field_types
-                    )
-                    if compiled is None:
-                        raise unsupported(
-                            f"DEFINE for {v}: cross-variable predicate "
-                            f"{part!r} over a stream — supported forms "
-                            "are the simple comparison (SELF.col OP "
-                            "[FIRST/LAST(]X.col[, n])) and arithmetic/"
-                            "boolean expressions over current-row refs, "
-                            "FIRST/LAST partial-match refs, and "
-                            "COUNT/SUM/AVG/MIN/MAX over mapped rows"
-                        )
-                    code, refs = compiled
-                    cross_checks.setdefault(v, []).append(
-                        ("__rich__", code, refs)
-                    )
-                    from .plans.match_recognize import rich_ref_columns
-
-                    cross_cols |= rich_ref_columns(refs)
+            for part in local[v]:
+                if not (_PREV_RE.search(part) or _NEXT_RE.search(part)):
+                    self_parts.append(part)
                     continue
-                if _PREV_RE.search(part) or _NEXT_RE.search(part):
-                    if _NAV_DEF_RE.search(part):
-                        raise unsupported(
-                            f"DEFINE for {v}: FIRST/LAST match "
-                            "bindings mixed with physical navigation "
-                            "need the batch window plan"
-                        )
-                    body = part.strip()
-                    while body.startswith("(") and body.endswith(")"):
-                        body = body[1:-1].strip()
-                    cm2 = prev_cmp_re.fullmatch(body)
-                    if cm2 is None:
-                        raise unsupported(
-                            f"DEFINE for {v}: navigation conjunct "
-                            f"{part!r} — over a stream PREV/NEXT "
-                            "support plain comparisons (<operand> OP "
-                            "<operand>, operands a column, literal, "
-                            "PREV(col, n) or NEXT(col, n)); richer "
-                            "navigation needs the batch window plan"
-                        )
-                    lhs = _nav_operand(cm2.group("l"), v)
-                    rhs = _nav_operand(cm2.group("r"), v)
-                    sides = (lhs, rhs)
-                    if any(x[0] == "prev" for x in sides) and any(
-                        x[0] == "next" for x in sides
-                    ):
-                        # PREV resolves at arrival, NEXT at decision —
-                        # one comparison cannot straddle both
-                        raise unsupported(
-                            f"DEFINE for {v}: PREV and NEXT in ONE "
-                            "comparison (evaluate at different times "
-                            "over a stream) — split the conjunct or "
-                            "use the batch window plan"
-                        )
-                    for side in sides:
-                        if side[0] == "prev":
-                            max_prev = max(max_prev, side[2])
-                        elif side[0] == "next":
-                            if side[2] > 8:
-                                raise unsupported(
-                                    f"DEFINE for {v}: NEXT offset "
-                                    f"{side[2]} (the decision-wait "
-                                    "bound caps lookahead at 8 rows)"
-                                )
-                            max_next = max(max_next, side[2])
-                    if any(x[0] == "next" for x in sides):
-                        next_checks.setdefault(v, []).append(
-                            (lhs, cm2.group("op"), rhs)
-                        )
-                    else:
-                        prev_checks.setdefault(v, []).append(
-                            (lhs, cm2.group("op"), rhs)
-                        )
-                    continue
-                if _NAV_DEF_RE.search(part):
+                body = part.strip()
+                while body.startswith("(") and body.endswith(")"):
+                    body = body[1:-1].strip()
+                cm2 = prev_cmp_re.fullmatch(body)
+                if cm2 is None:
                     raise unsupported(
-                        f"DEFINE for {v}: FIRST/LAST navigation "
-                        "in a quantified/alternation/nested pattern "
-                        "over a stream (match bindings need the batch "
-                        "window plan)"
-                    )  # unreachable for comparison forms (the cross
-                    # branch above intercepts every _NAV_DEF_RE part
-                    # without physical PREV/NEXT); kept for non-
-                    # comparison nav shapes arriving via future parses
-                self_parts.append(part)
-            self_preds[v] = (
-                " AND ".join(self_parts) if self_parts else "TRUE"
-            )
+                        f"DEFINE for {v}: navigation conjunct "
+                        f"{part!r} — over a stream PREV/NEXT "
+                        "support plain comparisons (<operand> OP "
+                        "<operand>, operands a column, literal, "
+                        "PREV(col, n) or NEXT(col, n)); richer "
+                        "navigation needs the batch window plan"
+                    )
+                sides = (_operand(cm2.group("l"), v), _operand(cm2.group("r"), v))
+                kinds = {x[0] for x in sides}
+                if {"prev", "next"} <= kinds:
+                    # PREV resolves at arrival, NEXT at decision —
+                    # one comparison cannot straddle both
+                    raise unsupported(
+                        f"DEFINE for {v}: PREV and NEXT in ONE "
+                        "comparison (evaluate at different times "
+                        "over a stream) — split the conjunct or "
+                        "use the batch window plan"
+                    )
+                if "next" in kinds:
+                    # the decision window carries what NEXT reads
+                    next_need |= {x[1] for x in sides if x[0] != "lit"}
+                for side in sides:
+                    if side[0] == "prev":
+                        max_prev = max(max_prev, side[2])
+                    elif side[0] == "next":
+                        if side[2] > 8:
+                            raise unsupported(
+                                f"DEFINE for {v}: NEXT offset "
+                                f"{side[2]} (the decision-wait "
+                                "bound caps lookahead at 8 rows)"
+                            )
+                        max_next = max(max_next, side[2])
+                (next_checks if "next" in kinds else prev_checks).setdefault(
+                    v, []
+                ).append((sides[0], cm2.group("op"), sides[1]))
+            self_preds[v] = " AND ".join(self_parts) if self_parts else "TRUE"
         if spec.within_seconds is not None and (
             field_types.get(ts_col) != "timestamp"
         ):
@@ -894,7 +765,7 @@ class Engine:
                     lo, hi, lazy = 1, 1, False
                 pos_spec.append((list(alts), lo, hi, lazy))
             ast = _pos_spec_to_ast(pos_spec)
-        if not time_bounded:
+        if not (time_bounded or break_decided):
             max_len = ast_max_len(ast)
             if max_len < 2:
                 raise unsupported(
@@ -909,127 +780,42 @@ class Engine:
         flagged = sdf
         var_flags: dict[str, str] = {}
         for i, v in enumerate(uniq_vars):
-            c = f"__mrb_{i}"
+            var_flags[v] = f"__mrb_{i}"
             flagged = flagged.withColumn(
-                c,
+                var_flags[v],
                 F.coalesce(
                     F.expr(_pred_at_offset(self_preds[v], v, 0, cols)),
                     F.lit(False),
                 ),
             )
-            var_flags[v] = c
-        prev_spec = (
-            (
-                prev_checks,
-                sorted(prev_need),
-                max_prev,
-                {c: field_types[c] for c in prev_need},
+        if spec.all_rows:
+            carried = list(cols)
+        else:
+            carried = sorted(
+                {ts_col}
+                | cross_cols
+                | next_need
+                | {
+                    col
+                    for var, col, _ in spec.measures
+                    if col != "*" and var not in (MATCH_NUMBER, CLASSIFIER)
+                }
             )
-            if max_prev
-            else None
-        )
-        next_spec = (
-            (
-                next_checks,
-                sorted(next_need),
-                max_next,
-                {c: field_types[c] for c in next_need},
-            )
-            if max_next
-            else None
-        )
-        return (
-            ast, uniq_vars, field_types, flagged, var_flags,
-            cross_checks or None, cross_cols, prev_spec, next_spec,
-        )
-
-    def _match_recognize_stream_all_rows(
-        self, stmt, spec, sdf, key, ts_col, tiebreak, unsupported,
-        time_bounded: bool = False, break_decided: bool = False,
-    ) -> str:
-        """ALL ROWS PER MATCH over a stream, for any BOUNDED pattern
-        (plain sequences included): the Lmax-window matcher carries
-        full source rows and emits one row per matched input row —
-        RUNNING/FINAL measures, CLASSIFIER()/MATCH_NUMBER(), aggregate
-        measures, FIRST/LAST measure navigation, {- X -} exclusions,
-        and WITH UNMATCHED ROWS — mirroring the batch NFA's ALL ROWS
-        emission exactly (streaming/stateful.
-        bounded_nfa_all_rows_stream). The matched stream registers as
-        a view exposing every source column plus the measure aliases,
-        and the outer statement is rewritten over it."""
-        from .plans.match_recognize import CLASSIFIER, MATCH_NUMBER
-        from .streaming.stateful import bounded_nfa_all_rows_stream
-
-        (
-            ast, uniq_vars, field_types, flagged, var_flags,
-            cross_checks, _cross_cols, prev_spec, next_spec,
-        ) = self._bounded_stream_prep(
-            spec, sdf, ts_col, unsupported,
-            time_bounded=time_bounded or break_decided,
-        )
-        patvars = set(uniq_vars)
-        integral = ("tinyint", "smallint", "int", "bigint")
-        out_types: dict[str, str] = {}
-        for var, col, alias in spec.measures:
-            if var == MATCH_NUMBER:
-                out_types[alias] = "bigint"
-            elif var == CLASSIFIER:
-                out_types[alias] = "string"
-            elif alias in spec.measure_agg:
-                if var not in patvars:
-                    raise unsupported(
-                        f"aggregate measure {alias} over {var!r} (not "
-                        "a pattern variable)"
-                    )
-                fn = spec.measure_agg[alias].lower()
-                if col != "*" and col not in field_types:
-                    raise unsupported(
-                        f"measure {alias}: unknown source column {col!r}"
-                    )
-                if fn == "count":
-                    out_types[alias] = "bigint"
-                elif fn == "avg":
-                    out_types[alias] = "double"
-                elif fn == "sum":
-                    out_types[alias] = (
-                        "bigint"
-                        if field_types[col] in integral
-                        else field_types[col]
-                    )
-                else:
-                    out_types[alias] = field_types[col]
-            else:
-                if var not in patvars:
-                    raise unsupported(
-                        f"measure {alias}: {var!r} is not a pattern "
-                        "variable"
-                    )
-                if col not in field_types:
-                    raise unsupported(
-                        f"measure {var}.{col}: unknown source column "
-                        f"{col!r}"
-                    )
-                out_types[alias] = field_types[col]
-        matched = bounded_nfa_all_rows_stream(
-            flagged, key, ts_col, var_flags, uniq_vars, ast,
-            src_cols=list(sdf.columns),
-            measures=list(spec.measures),
-            measure_spec={
-                "modes": dict(spec.measure_modes),
-                "agg": dict(spec.measure_agg),
-                "nav": dict(spec.measure_nav),
-                "nav_offset": dict(spec.measure_nav_offset),
-                "excluded": set(spec.excluded),
-                "with_unmatched": spec.with_unmatched,
-                "out_types": out_types,
-            },
-            skip_past=spec.skip_past_last,
-            within_seconds=spec.within_seconds,
+        matched = bounded_nfa_stream(
+            flagged, key, ts_col, var_flags, uniq_vars, ast, spec, carried,
             tiebreak_col=tiebreak,
-            skip_to=spec.skip_to,
-            cross_checks=cross_checks,
-            prev_spec=prev_spec,
-            next_spec=next_spec,
+            checks=checks,
+            prev_spec=(
+                (
+                    prev_checks,
+                    sorted(prev_need),
+                    max_prev,
+                    {c: field_types[c] for c in prev_need},
+                )
+                if max_prev
+                else None
+            ),
+            next_spec=(next_checks, max_next) if max_next else None,
             time_bounded=time_bounded,
             break_decided=break_decided,
         )
@@ -1038,135 +824,6 @@ class Engine:
         start, end = spec.span
         alias_sql = f" AS {spec.out_alias}" if spec.out_alias else ""
         return f"{stmt[:start]}FROM {view}{alias_sql}{stmt[end:]}"
-
-    def _match_recognize_stream_bounded(
-        self, stmt, spec, sdf, key, ts_col, tiebreak, unsupported,
-        time_bounded: bool = False, break_decided: bool = False,
-    ) -> str:
-        """Bounded-pattern streaming MATCH_RECOGNIZE leg: quantifiers,
-        alternation groups, quantified groups, nested groups, and
-        PERMUTE — any pattern with a FINITE maximum length Lmax —
-        stream with a window of the last Lmax rows per key
-        (streaming/stateful.bounded_nfa_stream). Row-local DEFINEs
-        compile to JVM flag columns like the other general legs;
-        PERMUTE lowers to the alternation of its variants in listed
-        (lexicographic) preference order — the SQL:2016 semantics the
-        batch lowering and the CEP fuzzer's reference both use.
-        Physical PREV conjuncts evaluate at ARRIVAL into the row's
-        flag mask; physical NEXT conjuncts evaluate at DECISION time
-        against window successors (each head decision deferred by the
-        max NEXT offset — under WITHIN the leg reroutes to the time-
-        bounded state, whose arrays can buffer the successor wait);
-        cross-variable comparisons evaluate against the window
-        bindings. FIRST/LAST match bindings inside DEFINEs stay
-        batch-only, rejected loudly."""
-        from .streaming.stateful import bounded_nfa_stream
-
-        (
-            ast, uniq_vars, field_types, flagged, var_flags,
-            cross_checks, cross_cols, prev_spec, next_spec,
-        ) = self._bounded_stream_prep(
-            spec, sdf, ts_col, unsupported,
-            time_bounded=time_bounded or break_decided,
-        )
-        # NEXT under WITHIN stays on this leg: the within-lim is capped
-        # at max_len - 1 inside the matcher, so every consultable NEXT
-        # target has arrived by the max_len + max_next decision point
-        # and the fixed-slot state never overflows (the wait cannot
-        # stall past the length-decided window)
-        patvars = set(uniq_vars)
-        # aggregate measures (COUNT/SUM/AVG/MIN/MAX over a variable's
-        # matched rows) compute exactly from the decision window
-        integral = ("tinyint", "smallint", "int", "bigint")
-        agg_spec: list[tuple] = []
-        for var, col, alias in spec.measures:
-            if alias not in spec.measure_agg:
-                continue
-            if var not in patvars:
-                raise unsupported(
-                    f"aggregate measure {alias} over {var!r} (not a "
-                    "pattern variable)"
-                )
-            fn = spec.measure_agg[alias].lower()
-            src_c = None if col == "*" else col
-            if src_c is not None and src_c not in field_types:
-                raise unsupported(
-                    f"measure {alias}: unknown source column {col!r}"
-                )
-            if fn == "count":
-                out_t = "bigint"
-            elif fn == "avg":
-                out_t = "double"
-            elif fn == "sum":
-                out_t = (
-                    "bigint"
-                    if field_types[src_c] in integral
-                    else field_types[src_c]
-                )
-            else:
-                out_t = field_types[src_c]
-            agg_spec.append((fn, var, src_c, alias, out_t))
-        agg_aliases = {a for _, _, _, a, _ in agg_spec}
-        # FIRST()/LAST() measure navigation binds from the decision
-        # window: payload entries carry (var, col, nav, offset); an A.ts
-        # with LAST nav and no offset rides the positional fast path
-        # (pos_col is the LAST binding), everything else — FIRST nav or
-        # any SQL:2016 logical offset — reads the decision window's
-        # mapped rows directly
-        pay_needs = sorted(
-            {
-                (
-                    var,
-                    col,
-                    spec.measure_nav.get(alias, "LAST").lower(),
-                    spec.measure_nav_offset.get(alias, 0),
-                )
-                for var, col, alias in spec.measures
-                if var in patvars
-                and alias not in agg_aliases
-                and not (
-                    col == ts_col
-                    and spec.measure_nav.get(alias, "LAST").upper()
-                    == "LAST"
-                    and spec.measure_nav_offset.get(alias, 0) == 0
-                )
-            }
-        )
-        for var, col, _, _ in pay_needs:
-            if col not in field_types:
-                raise unsupported(
-                    f"measure {var}.{col}: unknown source column {col!r}"
-                )
-        pay_types = {c: field_types[c] for _, c, _, _ in pay_needs}
-        matched = bounded_nfa_stream(
-            flagged, key, ts_col, var_flags, uniq_vars, ast,
-            skip_past=spec.skip_past_last,
-            within_seconds=spec.within_seconds,
-            tiebreak_col=tiebreak,
-            payload_spec=(pay_needs, pay_types) if pay_needs else None,
-            agg_spec=agg_spec or None,
-            skip_to=spec.skip_to,
-            cross_spec=(
-                (cross_checks, cross_cols)
-                if cross_checks is not None
-                else None
-            ),
-            prev_spec=prev_spec,
-            next_spec=next_spec,
-            time_bounded=time_bounded,
-            break_decided=break_decided,
-        )
-        pos_col = {v: f"{v}_last_ts" for v in uniq_vars}
-        pay_col = {
-            (var, col, nav.upper(), off): f"{var}_{col}_{nav}"
-            + (f"{off}" if off else "")
-            for var, col, nav, off in pay_needs
-        }
-        return self._mr_register_view(
-            stmt, spec, matched, key, ts_col, pos_col, unsupported,
-            pay_col=pay_col, agg_col={a: a for a in agg_aliases},
-            nav_aware=True, offset_aware=True,
-        )
 
     def _mr_register_view(
         self, stmt, spec, matched, key, ts_col, pos_col, unsupported,
@@ -1508,7 +1165,12 @@ class Engine:
         # backtrack candidate); single-row roles read that row's payload
         agg_spec: list[tuple] = []
         if spec.measure_agg and (spec.plus is not None or funnel):
-            integral = ("tinyint", "smallint", "int", "bigint")
+            from .plans.cep_core import measure_fields
+
+            out_types = {
+                f.name: f.dataType.simpleString()
+                for f in measure_fields(spec, sdf.schema)
+            }
             if spec.plus is not None:
                 agg_roles = {spec.plus[0]: "run", spec.plus[1]: "end"}
             else:
@@ -1520,31 +1182,10 @@ class Engine:
             for var, col, alias in spec.measures:
                 if alias not in spec.measure_agg:
                     continue
-                role = agg_roles.get(var)
-                if role is None:
-                    raise unsupported(
-                        f"aggregate measure {alias} over {var!r} (not "
-                        "a pattern variable)"
-                    )
+                role = agg_roles[var]
                 fn = spec.measure_agg[alias].lower()
                 src_c = None if col == "*" else col
-                if src_c is not None and src_c not in field_types:
-                    raise unsupported(
-                        f"measure {alias}: unknown source column "
-                        f"{col!r}"
-                    )
-                if fn == "count":
-                    out_t = "bigint"
-                elif fn == "avg":
-                    out_t = "double"
-                elif fn == "sum":
-                    out_t = (
-                        "bigint"
-                        if field_types[src_c] in integral
-                        else field_types[src_c]
-                    )
-                else:
-                    out_t = field_types[src_c]
+                out_t = out_types[alias]
                 agg_spec.append((fn, role, src_c, alias, out_t))
                 if role != "run" and src_c is not None:
                     pay_types.setdefault(src_c, field_types[src_c])

@@ -263,27 +263,13 @@ class MatchRecognizeSpec:
     measure_agg: dict[str, str] = dataclasses_field(default_factory=dict)
 
 
-#: simple cross-variable comparison inside an unbounded pattern's
-#: DEFINE: SELF.col OP X.col, optionally FIRST/LAST(X.col[, n]) — X may
-#: be the defining variable itself (self-navigation, round 8); the
-#: matchers evaluate it against the partial match's bindings, with the
-#: defining variable's mapped-so-far rows including the current row
-_CROSS_CMP_RE = re.compile(
-    r"^\s*(?P<sv>\w+)\.(?P<sc>\w+)\s*(?P<op><=|>=|<>|!=|<|>|=)\s*"
-    r"(?:(?P<nav>FIRST|LAST)\s*\(\s*(?P<ov>\w+)\.(?P<oc>\w+)\s*"
-    r"(?:,\s*(?P<n>\d+))?\s*\)"
-    r"|(?P<ov2>\w+)\.(?P<oc2>\w+))\s*$",
-    re.IGNORECASE,
-)
-
-
 #: rich cross-variable DEFINE parts (round 12, VERDICT r11 Next #6):
 #: any boolean expression over current-row refs (SELF.col), partial-
 #: match refs (X.col = LAST(X.col), FIRST/LAST(X.col[, n])), numeric /
 #: string literals, arithmetic (+ - * / %), comparisons and AND/OR/NOT
-#: — compiled once into a restricted Python expression the NFA
-#: matchers evaluate against the partial match's bindings. NULL or an
-#: unmatched reference makes the part FALSE (the cross_ok contract).
+#: — compiled once into a restricted Python expression the CEP core's
+#: matcher (plans/cep_core.match_at) evaluates against the partial
+#: match's bindings. NULL or an unmatched reference makes the part FALSE.
 _RICH_NAV_RE = re.compile(
     r"\b(?P<nav>FIRST|LAST)\s*\(\s*(?P<v>[A-Za-z_]\w*)\."
     r"(?P<c>[A-Za-z_]\w*)\s*(?:,\s*(?P<n>\d+))?\s*\)",
@@ -526,8 +512,7 @@ def eval_rich_cross(checks, var, j, acc, val_at) -> bool:
     """Evaluate a variable's compiled rich parts at candidate row ``j``
     against partial match ``acc`` (list of (var, row)). ``val_at(i,
     col)`` reads a value (None/NaN = SQL NULL). FALSE on any NULL,
-    unmatched reference, or runtime type/arithmetic error — matching
-    the simple-comparison cross_ok contract."""
+    unmatched reference, or runtime type/arithmetic error."""
     import pandas as _pd
 
     def _null(x) -> bool:
@@ -1389,12 +1374,13 @@ def parse_match_recognize(sql: str) -> MatchRecognizeSpec | None:
     if spec.unbounded or spec.pos_quants or spec.pattern_ast is not None:
         # general unbounded pattern -> the per-key NFA matcher. DEFINEs
         # must be self-contained (current row + physical PREV/NEXT),
-        # EXCEPT for top-level AND parts of the simple cross-variable
-        # comparison form SELF.col OP [FIRST|LAST(]X.col[, n]), which
-        # the matcher evaluates against the partial match's bindings —
-        # X may be the defining variable itself (its mapped-so-far rows
-        # INCLUDE the current candidate row, so LAST(B.v, 1) is the
-        # previous B row — the Flink ascending-run idiom).
+        # EXCEPT for top-level AND parts the matcher evaluates against
+        # the partial match's bindings: arithmetic/boolean expressions
+        # over current-row refs, FIRST/LAST(X.col[, n]) refs — X may be
+        # the defining variable itself, whose mapped-so-far rows
+        # INCLUDE the current candidate row (LAST(B.v, 1) is the
+        # previous B row, the Flink ascending-run idiom) — and
+        # aggregates over mapped rows (plans/cep_core.split_defines).
         for v, p in defines.items():
             for part in _split_top_and(p):
                 p_stripped = _NEXT_RE.sub("", _PREV_RE.sub("", part))
@@ -1402,88 +1388,74 @@ def parse_match_recognize(sql: str) -> MatchRecognizeSpec | None:
                     set(re.findall(r"\b([A-Za-z_]\w*)\s*\.", p_stripped)) - {v}
                 )
                 if (
-                    not foreign_d
-                    and not _NAV_DEF_RE.search(part)
-                    and not _AGG_DEF_RE.search(part)
-                ):
-                    continue
-                cm = _CROSS_CMP_RE.match(part)
-                if (
-                    cm is None
-                    or cm.group("sv") != v
-                    or (cm.group("ov") or cm.group("ov2")) not in pattern
-                    or (
-                        # a SELF reference is resolvable only through
-                        # the nav form (plain B.x OP B.y is row-local
-                        # and never reaches here)
-                        (cm.group("ov") or cm.group("ov2")) == v
-                        and cm.group("nav") is None
-                    )
+                    foreign_d
+                    or _NAV_DEF_RE.search(part)
+                    or _AGG_DEF_RE.search(part)
                 ) and compile_rich_cross(part, v, pattern) is None:
-                    # neither the simple-comparison fast path nor a
-                    # compilable rich expression (round 12) — reject
                     raise UnsupportedPatternError(
                         f"DEFINE for {v} inside a general unbounded "
                         f"pattern: the part {part!r} is neither "
                         "self-contained (current row + PREV/NEXT), nor "
-                        "a simple cross-variable comparison "
-                        f"({v}.col OP [FIRST|LAST(]X.col[, n]), nor an "
-                        "arithmetic/boolean expression over current-row "
-                        "refs, FIRST/LAST partial-match refs, and "
+                        "an arithmetic/boolean expression over current-"
+                        "row refs, FIRST/LAST partial-match refs, and "
                         "COUNT/SUM/AVG/MIN/MAX over mapped rows"
                     )
+    _settle_skip_paths(spec)
+    return spec
+
+
+def _settle_skip_paths(
+    spec: MatchRecognizeSpec, col_types: dict[str, str] | None = None
+) -> None:
+    """Decide, from DEFINE disjointness, which lowering the A+ B run
+    shape takes (``plus_overlap``) and whether a bounded SKIP PAST LAST
+    ROW needs the sequential selection pass (``skip_filter``) — the one
+    decision point for both. The parser calls it without column types;
+    the lowering calls it again with the source schema, so literals
+    Spark casts to one value (``'1'`` / ``'01'`` on an int column) are
+    never taken as disjoint."""
+    plus = spec.plus
     if plus is not None:
         # overlapping DEFINEs (a row may satisfy both variables) switch
         # the lowering from gaps-and-islands to the per-key greedy
         # matcher — same semantics, NFA-capable backtracking. A zero-min
         # run (A* / A{0,}) always takes the matcher: a match may contain
-        # no A row at all, which the islands rewrite cannot key.
+        # no A row at all, which the islands rewrite cannot key; ALL
+        # ROWS too (the islands rewrite summarizes runs, it cannot emit
+        # their rows). PREV/NEXT predicates are never eq-literals, so
+        # they always reach the matcher's precomputed lag/lead columns.
         spec.plus_overlap = (
             plus[2] == 0
-            or all_rows
-            or skip_to is not None  # skip-to walks live in the matcher
-            or not _provably_disjoint(spec)
+            or spec.all_rows
+            or spec.skip_to is not None  # skip-to walks live in the matcher
+            or not _provably_disjoint(spec, col_types)
         )
-        # ALL ROWS with an unbounded run always takes the per-key matcher
-        # (the islands rewrite summarizes runs, it cannot emit their rows)
-        if any(
-            _PREV_RE.search(p) or _NEXT_RE.search(p)
-            for p in spec.defines.values()
-        ):
-            # PREV/NEXT navigate PHYSICAL partition rows, so they lower
-            # as window lag/lead columns precomputed before the per-key
-            # matcher's booleans; such a predicate is never an
-            # eq-literal, so _provably_disjoint already routed to the
-            # matcher
-            assert spec.plus_overlap
-    if (
+    # Per-start greedy matches may overlap (a quantifier lets a match
+    # start inside another's run; non-disjoint DEFINEs let one row open
+    # two matches). The LEAD-chain lowering still computes every start's
+    # greedy match exactly; the NFA's skip-past semantics are then a
+    # sequential leftmost-non-overlapping selection, applied over the
+    # candidate set in lower_match_recognize. The NFA matcher does its
+    # own skip walk.
+    spec.skip_filter = (
         plus is None
-        # the NFA matcher does its own skip walk
         and not spec.unbounded
         and not spec.pos_quants
         and spec.pattern_ast is None
         and (
-            skip_to is not None  # skip-to always needs the walk
+            spec.skip_to is not None  # skip-to always needs the walk
             or (
-                skip_past_last
+                spec.skip_past_last
                 and (
                     bool(spec.quants)
                     # PERMUTE: even disjoint predicates overlap (two
                     # starts can cover the same rows in different orders)
                     or spec.permute
-                    or not _provably_disjoint(spec)
+                    or not _provably_disjoint(spec, col_types)
                 )
             )
         )
-    ):
-        # Per-start greedy matches may overlap (a quantifier lets a match
-        # start inside another's run; non-disjoint DEFINEs let one row
-        # open two matches). The LEAD-chain lowering still computes every
-        # start's greedy match exactly; the NFA's skip-past semantics are
-        # then a sequential leftmost-non-overlapping selection, applied
-        # over the candidate set in lower_match_recognize.
-        spec.skip_filter = True
-    return spec
+    )
 
 
 def _eq_literal(pred: str) -> tuple[str, str] | None:
@@ -1947,11 +1919,8 @@ def _lower_plus_overlap(
     spark: SparkSession, spec: MatchRecognizeSpec
 ) -> DataFrame:
     """PATTERN (A+ B) with OVERLAPPING DEFINEs — the NFA-requiring run
-    shape, lowered as an Arrow-batched ``applyInPandas`` greedy matcher
-    per PARTITION BY key (the same keyed-state model Flink's CEP operator
-    shuffles by; reference scope: Flink 1.19 MATCH_RECOGNIZE, which the
-    training course includes though the labs' attested statements don't
-    use it).
+    shape, lowered as an Arrow-batched greedy matcher per PARTITION BY
+    key (the same keyed-state model Flink's CEP operator shuffles by).
 
     Greedy backtracking collapses to a closed form: the match starting at
     row i extends A over the maximal A-satisfying run [i..m]; when the
@@ -1961,11 +1930,9 @@ def _lower_plus_overlap(
     WITHIN bound (rows i..k-1 all satisfy A because k-1 <= m). Each
     partition is decided in one vectorized pass: next-non-A and
     latest-B-so-far prefix arrays give every start's match end in O(1).
-
-    AFTER MATCH SKIP TO NEXT ROW emits every start's greedy match;
-    SKIP PAST LAST ROW walks starts sequentially, resuming after each
-    emitted match end — true greedy skipping, which the window lowerings
-    cannot express for overlapping predicates.
+    The skip walk and the measure emission are the shared CEP core's
+    (plans/cep_core), so every AFTER MATCH mode and ALL ROWS PER MATCH
+    behave exactly as on the NFA lowering.
 
     Predicate evaluation stays JVM-side: ``__a`` / ``__b`` are computed
     as Catalyst expressions before the single shuffle on the partition
@@ -1974,101 +1941,26 @@ def _lower_plus_overlap(
     memory contract as Flink CEP with an unbounded pattern.
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+
+    from . import cep_core
 
     a_var, b_var, min_run = spec.plus
     df = _narrow_src(spark.table(spec.table), spec)
     cols = df.columns
     a_text, need_a = _rewrite_nav_physical(spec.defines[a_var], a_var)
     b_text, need_b = _rewrite_nav_physical(spec.defines[b_var], b_var)
-    src0 = df
-    if need_a | need_b:
-        lag_w = Window.partitionBy(*spec.partition_by).orderBy(
-            *spec.order_by
-        )
-        for col, off in sorted(need_a | need_b):
-            name = (
-                f"__mr_prev_{col}_{-off}"
-                if off < 0
-                else f"__mr_next_{col}_{off}"
-            )
-            nav = F.lag(col, -off) if off < 0 else F.lead(col, off)
-            src0 = src0.withColumn(name, nav.over(lag_w))
+    src = _with_nav_columns(df, spec, need_a | need_b)
     a_pred = F.expr(_pred_at_offset(a_text, a_var, 0, cols))
     b_pred = F.expr(_pred_at_offset(b_text, b_var, 0, cols))
-    src = src0.withColumn("__a", F.coalesce(a_pred, F.lit(False))).withColumn(
+    src = src.withColumn("__a", F.coalesce(a_pred, F.lit(False))).withColumn(
         "__b", F.coalesce(b_pred, F.lit(False))
     )
-
     order_cols = list(spec.order_by)
     ts0 = order_cols[0]
-    within = spec.within_seconds
-    if within is not None and dict(df.dtypes).get(ts0) != "timestamp":
-        raise UnsupportedPatternError(
-            f"WITHIN requires a TIMESTAMP ORDER BY column ({ts0!r} is "
-            f"{dict(df.dtypes).get(ts0)!r})"
-        )
+    within = _within_checked(spec, df)
+    out_schema, emit, int_cols, val_cols = _nfa_output(spec, df)
 
-    # ---- output schema: partition keys + measure aliases (ONE ROW),
-    # or every input column + measure aliases (ALL ROWS) ----
-    src_fields = {f.name: f for f in df.schema.fields}
-    if spec.all_rows:
-        out_fields = [src_fields[c] for c in cols]
-    else:
-        out_fields = [src_fields[pc] for pc in spec.partition_by]
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    for var, col, alias in spec.measures:
-        if var == MATCH_NUMBER:
-            dt: T.DataType = T.LongType()
-        elif var == CLASSIFIER:
-            dt = T.StringType()
-        elif alias in spec.measure_agg:
-            fn = spec.measure_agg[alias]
-            if fn == "COUNT":
-                dt = T.LongType()
-            elif fn == "AVG":
-                dt = T.DoubleType()
-            elif fn == "SUM":
-                srct = src_fields[col].dataType
-                dt = T.LongType() if isinstance(srct, integral) else srct
-            else:
-                dt = src_fields[col].dataType
-        else:
-            dt = src_fields[col].dataType
-        out_fields.append(T.StructField(alias, dt, True))
-    out_schema = T.StructType(out_fields)
-
-    measures = list(spec.measures)
-    measure_agg = dict(spec.measure_agg)
-    measure_nav = dict(spec.measure_nav)
-    measure_nav_offset = dict(spec.measure_nav_offset)
-    measure_modes = dict(spec.measure_modes)
-    excl = set(spec.excluded)
-    pby = list(spec.partition_by)
-    skip_past = spec.skip_past_last
-    skip_to = spec.skip_to
-    all_rows = spec.all_rows
-    with_unmatched = spec.with_unmatched
-    src_cols = list(cols)
-    src_long = {
-        c
-        for c in src_cols
-        if isinstance(
-            src_fields[c].dataType,
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-        )
-    }
-    n_head = len(src_cols) if all_rows else len(pby)
-    # Arrow hands integer columns WITH nulls to pandas as float64; any
-    # integral measure field must be coerced back before the return trip
-    target_long = {
-        f.name
-        for f in out_fields[n_head:]
-        if isinstance(f.dataType, integral)
-    }
-
-    def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def match_group(pdf):
         pdf = pdf.sort_values(order_cols, kind="mergesort").reset_index(
             drop=True
         )
@@ -2102,245 +1994,96 @@ def _lower_plus_overlap(
                 return -1
             return k
 
-        def match_at(i: int) -> int:
+        def match_from(i: int):
             # greedy: prefer a run with >= 1 A row; a zero-min pattern
             # (A* / A{0,}) backtracks to the empty run — the start row
             # itself must then satisfy B
             k = greedy_end(i) if a[i] else -1
             if k < 0 and min_run == 0 and b[i]:
                 k = i
-            return k
+            if k < 0:
+                return None
+            return [(a_var, j) for j in range(i, k)] + [(b_var, k)]
 
-        starts: list[int] = []
-        ends: list[int] = []
-        if skip_past or skip_to is not None:
-            i = 0
-            while i < n:
-                k = match_at(i)
-                if k >= 0:
-                    starts.append(i)
-                    ends.append(k)
-                    if skip_to is None:
-                        i = k + 1
-                    else:
-                        # resume AT the first/last row mapped to the
-                        # target variable (inclusive); the run variable
-                        # maps rows i..k-1, the end variable row k
-                        nav, tvar = skip_to
-                        if tvar != a_var:
-                            t = k
-                        elif k == i:  # zero-run match: no mapped A row
-                            t = k + 1
-                        else:
-                            t = i if nav == "FIRST" else k - 1
-                        if t <= i:
-                            raise ValueError(
-                                f"AFTER MATCH SKIP TO {nav} {tvar}: the "
-                                "skip target IS the match start — "
-                                "resuming there would loop forever "
-                                "(Flink raises the same error)"
-                            )
-                        i = t
-                else:
-                    i += 1
-        else:
-            for i in range(n):
-                k = match_at(i)
-                if k >= 0:
-                    starts.append(i)
-                    ends.append(k)
-
-        def clean(v, alias):
-            try:
-                if v is not None and pd.isna(v):
-                    v = None
-            except (TypeError, ValueError):
-                pass  # non-scalar (never NaN-able) measure value
-            if v is not None and alias in target_long:
-                v = int(v)
-            return v
-
-        if all_rows:
-            # ALL ROWS PER MATCH: one output row per matched input row,
-            # RUNNING measure semantics (the Flink default) — rows i..k-1
-            # are the A-run, row k is B (a zero-run A* match is just row
-            # k). FINAL shows the finished match's value on every row.
-            # Source columns are emitted by SLICING pdf (dtypes survive —
-            # a list-built frame would default empty/NaN columns to
-            # float64 and break the Arrow return cast for timestamps).
-            idxs: list[int] = []
-            out_ar: dict[str, list] = {
-                alias: [] for _, _, alias in measures
-            }
-            covered = np.zeros(n, dtype=bool)
-            for mn, (i, k) in enumerate(zip(starts, ends), start=1):
-                covered[i : k + 1] = True
-                for j in range(i, k + 1):
-                    is_b = j == k
-                    if (b_var if is_b else a_var) in excl:
-                        continue  # {- X -}: matched but not emitted
-                    idxs.append(j)
-                    for var, col, alias in measures:
-                        final = (
-                            measure_modes.get(alias, "RUNNING") == "FINAL"
-                        )
-                        if var == MATCH_NUMBER:
-                            v = mn
-                        elif var == CLASSIFIER:
-                            v = b_var if is_b else a_var
-                        elif alias in measure_agg:
-                            fn = measure_agg[alias]
-                            if var == a_var:
-                                hi = k if final else min(j + 1, k)
-                                vals = (
-                                    pdf[col].iloc[i:hi]
-                                    if col != "*"
-                                    else None
-                                )
-                                cnt = hi - i
-                            else:
-                                seen = final or is_b
-                                vals = (
-                                    pdf[col].iloc[k : k + 1]
-                                    if col != "*" and seen
-                                    else (None if col == "*" else pdf[col].iloc[0:0])
-                                )
-                                cnt = 1 if seen else 0
-                            if col == "*":
-                                v = cnt
-                            elif fn == "COUNT":
-                                v = int(vals.count())
-                            elif fn == "SUM":
-                                v = vals.sum(min_count=1)
-                                v = None if pd.isna(v) else v
-                            elif fn == "AVG":
-                                v = vals.mean()
-                                v = None if pd.isna(v) else float(v)
-                            elif fn == "MIN":
-                                v = vals.min()
-                                v = None if pd.isna(v) else v
-                            else:
-                                v = vals.max()
-                                v = None if pd.isna(v) else v
-                        elif var == a_var:
-                            # last (or FIRST) A row at-or-before j with
-                            # the SQL:2016 logical offset stepping inward
-                            # (NULL while fewer than noff+1 rows are
-                            # mapped); the zero-run match has no A row
-                            last_a = k - 1 if (final or is_b) else j
-                            noff = measure_nav_offset.get(alias, 0)
-                            if last_a - i < noff:
-                                v = None
-                            elif measure_nav.get(alias) == "FIRST":
-                                v = pdf[col].iloc[i + noff]
-                            else:
-                                v = pdf[col].iloc[last_a - noff]
-                        else:  # B.col: NULL until the end row (RUNNING);
-                            # B maps one row, so any offset >= 1 is NULL
-                            v = (
-                                pdf[col].iloc[k]
-                                if (final or is_b)
-                                and measure_nav_offset.get(alias, 0) == 0
-                                else None
-                            )
-                        out_ar[alias].append(clean(v, alias))
-            if with_unmatched:
-                rest = [int(j) for j in np.nonzero(~covered)[0]]
-                idxs.extend(rest)
-                for _, _, alias in measures:
-                    out_ar[alias].extend([None] * len(rest))
-            base = pdf.iloc[idxs][src_cols].reset_index(drop=True)
-            # integral source columns round-trip Arrow as float64 when
-            # the group contains nulls — coerce back before returning
-            for c in src_long:
-                if base[c].dtype.kind == "f":
-                    base[c] = base[c].astype("Int64")
-            for _, _, alias in measures:
-                base[alias] = pd.Series(out_ar[alias], dtype=object)
-            return base
-
-        out: dict[str, list] = {pc: [] for pc in pby}
-        for _, _, alias in measures:
-            out[alias] = []
-        for mn, (i, k) in enumerate(zip(starts, ends), start=1):
-            for pc in pby:
-                out[pc].append(pdf[pc].iloc[0])
-            for var, col, alias in measures:
-                if var == MATCH_NUMBER:
-                    v = mn
-                elif var == CLASSIFIER:
-                    v = b_var  # ONE ROW PER MATCH: the last row's variable
-                elif alias in measure_agg:
-                    fn = measure_agg[alias]
-                    if var == a_var:
-                        vals = pdf[col].iloc[i:k] if col != "*" else None
-                    else:
-                        vals = pdf[col].iloc[k : k + 1] if col != "*" else None
-                    if col == "*":
-                        v = (k - i) if var == a_var else 1
-                    elif fn == "COUNT":
-                        v = int(vals.count())
-                    elif fn == "SUM":
-                        v = vals.sum(min_count=1)
-                        v = None if pd.isna(v) else v
-                    elif fn == "AVG":
-                        v = vals.mean()
-                        v = None if pd.isna(v) else float(v)
-                    elif fn == "MIN":
-                        v = vals.min()
-                        v = None if pd.isna(v) else v
-                    else:
-                        v = vals.max()
-                        v = None if pd.isna(v) else v
-                elif var == a_var:
-                    noff = measure_nav_offset.get(alias, 0)
-                    if k - i <= noff:  # offset past the mapped A count
-                        v = None  # (incl. the zero-A match) -> NULL
-                    elif measure_nav.get(alias) == "FIRST":
-                        v = pdf[col].iloc[i + noff]
-                    else:
-                        v = pdf[col].iloc[k - 1 - noff]
-                else:  # B maps exactly the end row; offset >= 1 -> NULL
-                    v = (
-                        pdf[col].iloc[k]
-                        if measure_nav_offset.get(alias, 0) == 0
-                        else None
-                    )
-                try:
-                    if v is not None and pd.isna(v):
-                        v = None
-                except (TypeError, ValueError):
-                    pass  # non-scalar (never NaN-able) measure value
-                if v is not None and alias in target_long:
-                    v = int(v)
-                out[alias].append(v)
-        names = pby + [alias for _, _, alias in measures]
-        # dtype=object per column: an EMPTY list defaults to float64,
-        # which Arrow cannot cast back to timestamp/long measure fields;
-        # object columns (incl. empty) convert losslessly
-        return pd.DataFrame(
-            {c: pd.Series(out[c], dtype=object) for c in names},
-            columns=names,
+        matches = cep_core.find_matches(
+            match_from, n, spec.skip_past_last, spec.skip_to
+        )
+        vals = {c: pdf[c].tolist() for c in val_cols}
+        return cep_core.emit_frame(
+            pdf, matches, spec, emit, lambda i, c: vals[c][i], int_cols
         )
 
-    if not all_rows:
+    if not spec.all_rows:
         # ONE ROW PER MATCH reads only the keys, the order columns, the
         # JVM-precomputed booleans, and the measured columns — prune the
         # rest (notably wide text/props columns) before the Arrow hop
-        need = list(
-            dict.fromkeys(
-                pby
-                + order_cols
-                + ["__a", "__b"]
-                + [
-                    col
-                    for var, col, _ in measures
-                    if col != "*" and var not in (MATCH_NUMBER, CLASSIFIER)
-                ]
+        src = src.select(
+            *dict.fromkeys(
+                list(spec.partition_by) + order_cols + ["__a", "__b"] + val_cols
             )
         )
-        src = src.select(*need)
-    return _grouped_apply(src, pby, match_group, out_schema)
+    return _grouped_apply(src, list(spec.partition_by), match_group, out_schema)
+
+
+def _with_nav_columns(df, spec, needs):
+    """Attach the window lag/lead columns ``_rewrite_nav_physical``
+    names: (col, offset) with offset < 0 a lag, > 0 a lead."""
+    if not needs:
+        return df
+    w = Window.partitionBy(*spec.partition_by).orderBy(*spec.order_by)
+    for col, off in sorted(needs):
+        name = (
+            f"__mr_prev_{col}_{-off}" if off < 0 else f"__mr_next_{col}_{off}"
+        )
+        nav = F.lag(col, -off) if off < 0 else F.lead(col, off)
+        df = df.withColumn(name, nav.over(w))
+    return df
+
+
+def _within_checked(spec, df):
+    """The WITHIN bound in seconds (None without one); WITHIN needs a
+    TIMESTAMP primary ORDER BY column."""
+    ts0 = spec.order_by[0]
+    if spec.within_seconds is not None and dict(df.dtypes).get(ts0) != "timestamp":
+        raise UnsupportedPatternError(
+            f"WITHIN requires a TIMESTAMP ORDER BY column ({ts0!r} is "
+            f"{dict(df.dtypes).get(ts0)!r})"
+        )
+    return spec.within_seconds
+
+
+def _nfa_output(spec, df, extra_cols=()):
+    """Output schema, measure emitter, integral source columns and the
+    columns the per-key matcher reads values from (measured columns
+    plus ``extra_cols``) for the batch matchers: partition keys +
+    measures under ONE ROW, every source column + measures under ALL
+    ROWS."""
+    from pyspark.sql import types as T
+
+    from . import cep_core
+
+    fields = cep_core.measure_fields(spec, df.schema)
+    src_fields = {f.name: f for f in df.schema.fields}
+    head = df.columns if spec.all_rows else spec.partition_by
+    out_schema = T.StructType([src_fields[c] for c in head] + fields)
+    int_cols = [
+        f.name
+        for f in df.schema.fields
+        if isinstance(
+            f.dataType, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+        )
+    ]
+    val_cols = list(
+        dict.fromkeys(
+            [
+                col
+                for var, col, _ in spec.measures
+                if col and col != "*" and var not in (MATCH_NUMBER, CLASSIFIER)
+            ]
+            + sorted(extra_cols)
+        )
+    )
+    return out_schema, cep_core.measure_emitter(spec, fields), int_cols, val_cols
 
 
 def _grouped_apply(src, pby, fn, schema):
@@ -2609,120 +2352,38 @@ def _pos_spec_to_ast(
 def _lower_nfa(spark: SparkSession, spec: MatchRecognizeSpec) -> DataFrame:
     """General adjacent pattern with UNBOUNDED quantifiers at arbitrary
     positions — PATTERN (A B+ C), (A* B C), (X{2,} Y Z) — with bounded
-    quantifiers and alternation groups freely mixed: a per-key
-    Arrow-batched backtracking NFA, ONE ROW PER MATCH.
+    quantifiers, alternation groups, nested groups and PERMUTE freely
+    mixed: a per-key Arrow-batched backtracking NFA, both PER MATCH
+    modes.
 
-    Predicates stay JVM-side: every variable's DEFINE (self-contained,
-    current row + physical PREV/NEXT as window lag/lead columns) becomes
-    one boolean column before the single shuffle on the PARTITION BY
-    key; Python sees the boolean matrix, the order columns, and the
-    measured columns. Greedy SQL semantics (longer counts first,
-    leftmost alternative first) via depth-first search with a failure
-    memo — O(positions x rows^2) worst case per key, the same
-    keyed-state contract as Flink's CEP operator. Both AFTER MATCH
-    modes; WITHIN bounds every matched row against the start row."""
+    Predicates stay JVM-side: every variable's row-local DEFINE parts
+    (current row + physical PREV/NEXT as window lag/lead columns)
+    become one boolean column before the single shuffle on the
+    PARTITION BY key; Python sees one bitmask per row, the order
+    columns, and the columns cross checks and measures read. Nested
+    patterns run the shared CEP core's AST matcher
+    (plans/cep_core.match_at); a flat position list keeps its own
+    finder — a depth-first search whose (position, row) memo is shared
+    across starts, O(positions x rows) per key. Cross-variable DEFINE
+    parts, the skip walk and the measure emission are the core's too.
+    WITHIN bounds every matched row against the start row."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+
+    from . import cep_core
 
     df = spark.table(spec.table)
     cols = df.columns
-    src0 = df
+    local, checks, cross_cols = cep_core.split_defines(spec, cols)
     needs: set[tuple[str, int]] = set()
-    texts: dict[str, str] = {}
-    # simple cross-variable comparison parts are pulled OUT of the JVM
-    # boolean and evaluated by the matcher against the partial match:
-    # var -> [(self_col, op, other_var, other_col, nav, offset)].
-    # SELF-navigation ({v}.col OP FIRST/LAST({v}.col[, n])) rides the
-    # same mechanism — the defining variable's mapped-so-far rows
-    # include the current candidate row (Flink: LAST(B.v, 1) inside
-    # B's DEFINE is the PREVIOUS B row, the ascending-run idiom).
-    cross_checks: dict[str, list[tuple[str, str, str, str, str, int]]] = {}
-    # richer cross-variable parts (arithmetic over partial-match refs,
-    # round 12): var -> [(code, refs)] for eval_rich_cross
-    rich_checks: dict[str, list[tuple]] = {}
+    src = df
+    flag_cols = []
+    texts = {}
     for v in spec.pattern:
-        self_parts: list[str] = []
-        for part in _split_top_and(spec.defines[v]):
-            stripped = _NEXT_RE.sub("", _PREV_RE.sub("", part))
-            foreign_p = set(re.findall(r"\b([A-Za-z_]\w*)\s*\.", stripped)) - {v}
-            if foreign_p or _NAV_DEF_RE.search(part) or _AGG_DEF_RE.search(part):
-                cm = _CROSS_CMP_RE.match(part)
-                if (
-                    cm is None
-                    or cm.group("sv") != v
-                    or (cm.group("ov") or cm.group("ov2"))
-                    not in spec.pattern
-                    or (
-                        (cm.group("ov") or cm.group("ov2")) == v
-                        and cm.group("nav") is None
-                    )
-                ):
-                    # beyond the simple-comparison fast path: compile
-                    # the part as a rich expression over the partial
-                    # match (VERDICT r11 Next #6) — e.g. DEFINE C AS
-                    # C.value < (A.value + LAST(B.value)) / 2. Parts
-                    # outside the expression subset (aggregates,
-                    # unknown functions) still reject loudly.
-                    compiled = compile_rich_cross(
-                        part, v, spec.pattern, cols
-                    )
-                    if compiled is None:
-                        raise UnsupportedPatternError(
-                            f"DEFINE for {v}: cross-variable predicate "
-                            f"{part!r} is outside the supported forms — "
-                            f"either {v}.col OP [FIRST|LAST(]X.col[, n]) "
-                            "or an arithmetic/boolean expression over "
-                            "current-row refs, FIRST/LAST partial-match "
-                            "refs, and COUNT/SUM/AVG/MIN/MAX aggregates "
-                            "over mapped rows"
-                        )
-                    rich_checks.setdefault(v, []).append(compiled)
-                else:
-                    cross_checks.setdefault(v, []).append(
-                        (
-                            cm.group("sc"),
-                            cm.group("op"),
-                            cm.group("ov") or cm.group("ov2"),
-                            cm.group("oc") or cm.group("oc2"),
-                            (cm.group("nav") or "LAST").upper(),
-                            int(cm.group("n") or 0),
-                        )
-                    )
-            else:
-                self_parts.append(part)
         texts[v], nv = _rewrite_nav_physical(
-            " AND ".join(self_parts) if self_parts else "TRUE", v
+            " AND ".join(local[v]) if local[v] else "TRUE", v
         )
         needs |= nv
-    has_cross = bool(cross_checks) or bool(rich_checks)
-    cross_cols = sorted(
-        {c for checks in cross_checks.values() for c, *_ in checks}
-        | {
-            ck[3]
-            for checks in cross_checks.values()
-            for ck in checks
-        }
-        | {
-            c
-            for checks in rich_checks.values()
-            for _code, refs in checks
-            for c in rich_ref_columns(refs)
-        }
-    )
-    if needs:
-        lag_w = Window.partitionBy(*spec.partition_by).orderBy(
-            *spec.order_by
-        )
-        for nav_col, off in sorted(needs):
-            name = (
-                f"__mr_prev_{nav_col}_{-off}"
-                if off < 0
-                else f"__mr_next_{nav_col}_{off}"
-            )
-            nav = F.lag(nav_col, -off) if off < 0 else F.lead(nav_col, off)
-            src0 = src0.withColumn(name, nav.over(lag_w))
-    src = src0
+    src = _with_nav_columns(src, spec, needs)
     for v in spec.pattern:
         src = src.withColumn(
             f"__mrp_{v}",
@@ -2730,22 +2391,16 @@ def _lower_nfa(spark: SparkSession, spec: MatchRecognizeSpec) -> DataFrame:
                 F.expr(_pred_at_offset(texts[v], v, 0, cols)), F.lit(False)
             ),
         )
-
+        flag_cols.append(f"__mrp_{v}")
+    bits = {v: i for i, v in enumerate(spec.pattern)}
     order_cols = list(spec.order_by)
     ts0 = order_cols[0]
-    within = spec.within_seconds
-    if within is not None and dict(df.dtypes).get(ts0) != "timestamp":
-        raise UnsupportedPatternError(
-            f"WITHIN requires a TIMESTAMP ORDER BY column ({ts0!r} is "
-            f"{dict(df.dtypes).get(ts0)!r})"
-        )
+    within = _within_checked(spec, df)
 
     # per sequence position: (alternatives, lo, hi, lazy) — hi None =
     # unbounded. Each repetition of the position matches ANY alternative
     # (leftmost-preferred row assignment); a single-variable position is
-    # the one-alternative special case, so plain vars, quantified vars,
-    # plain alternation groups, and QUANTIFIED alternation groups all
-    # share one node shape.
+    # the one-alternative special case.
     pos_spec: list[tuple[list[str], int, int | None, bool]] = []
     for gi, alts in enumerate(spec.positions):
         if gi in spec.pos_quants:
@@ -2759,314 +2414,89 @@ def _lower_nfa(spark: SparkSession, spec: MatchRecognizeSpec) -> DataFrame:
         else:
             lo, hi, lazy = 1, 1, False
         pos_spec.append((list(alts), lo, hi, lazy))
-
-    # ---- output schema: partition keys + measure aliases (ONE ROW),
-    # or every input column + measure aliases (ALL ROWS) ----
-    src_fields = {f.name: f for f in df.schema.fields}
-    if spec.all_rows:
-        out_fields = [src_fields[c] for c in cols]
-    else:
-        out_fields = [src_fields[pc] for pc in spec.partition_by]
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    for var, col, alias in spec.measures:
-        if var == MATCH_NUMBER:
-            dt: T.DataType = T.LongType()
-        elif var == CLASSIFIER:
-            dt = T.StringType()
-        elif alias in spec.measure_agg:
-            fn = spec.measure_agg[alias]
-            if fn == "COUNT":
-                dt = T.LongType()
-            elif fn == "AVG":
-                dt = T.DoubleType()
-            elif fn == "SUM":
-                srct = src_fields[col].dataType
-                dt = T.LongType() if isinstance(srct, integral) else srct
-            else:
-                dt = src_fields[col].dataType
-        else:
-            dt = src_fields[col].dataType
-        out_fields.append(T.StructField(alias, dt, True))
-    out_schema = T.StructType(out_fields)
-
-    measures = list(spec.measures)
-    measure_agg = dict(spec.measure_agg)
-    measure_nav = dict(spec.measure_nav)
-    measure_nav_offset = dict(spec.measure_nav_offset)
-    measure_modes = dict(spec.measure_modes)
-    all_rows = spec.all_rows
-    with_unmatched = spec.with_unmatched
-    excl = set(spec.excluded)
-    src_cols = list(cols)
-    pby = list(spec.partition_by)
-    pattern_vars = list(spec.pattern)
     pattern_ast = spec.pattern_ast
     # Cross-variable DEFINEs make matchability depend on WHICH
-    # alternative labels each row, but the flat dfs matcher fixes the
-    # leftmost passing alternative per row and backtracks only over
-    # repetition counts — so (A (B|C)+ D) with D AS D.x > LAST(B.x)
-    # could silently miss matches a true NFA finds. Route that
-    # combination through the AST generator backtracker, which
-    # enumerates per-repetition alternative choices (ADVICE r6).
+    # alternative labels each row, but the flat dfs fixes the leftmost
+    # passing alternative per row and backtracks only over repetition
+    # counts — so (A (B|C)+ D) with D AS D.x > LAST(B.x) could miss
+    # matches a true NFA finds. Route that combination through the AST
+    # matcher, which enumerates per-repetition alternative choices.
     if (
         pattern_ast is None
-        and has_cross
+        and checks
         and any(len(alts) > 1 for alts, _, _, _ in pos_spec)
     ):
         pattern_ast = _pos_spec_to_ast(pos_spec)
-    skip_past = spec.skip_past_last
-    skip_to = spec.skip_to
-    target_long = {
-        f.name
-        for f in out_fields[(len(src_cols) if all_rows else len(pby)):]
-        if isinstance(f.dataType, integral)
-    }
+    alt_bits = [[(v, 1 << bits[v]) for v in alts] for alts, _, _, _ in pos_spec]
+    out_schema, emit, int_cols, val_cols = _nfa_output(spec, df, cross_cols)
 
-    def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def match_group(pdf):
         pdf = pdf.sort_values(order_cols, kind="mergesort").reset_index(
             drop=True
         )
         n = len(pdf)
-        flags = {
-            v: pdf[f"__mrp_{v}"].to_numpy(dtype=bool) for v in pattern_vars
-        }
+        masks = sum(
+            pdf[c].to_numpy(dtype=np.int64) << i
+            for i, c in enumerate(flag_cols)
+        ).tolist()
+        vals = {c: pdf[c].tolist() for c in val_cols}
+
+        def val_at(i, c):
+            return vals[c][i]
+
         if within is not None:
             ts = pdf[ts0].to_numpy()
-        if has_cross:
-            import operator as _o
-
-            _OPS = {
-                "<": _o.lt, "<=": _o.le, ">": _o.gt, ">=": _o.ge,
-                "=": _o.eq, "<>": _o.ne, "!=": _o.ne,
-            }
-
-            def _val_at(i, c):
-                return pdf[c].iloc[i]
-
-            def cross_ok(v, j, acc):
-                # SELF.col OP [FIRST|LAST(]X.col[, n]) against the
-                # partial match's bindings; the defining variable's own
-                # rows INCLUDE the current candidate row (Flink:
-                # LAST(B.v, 1) in B's DEFINE = the previous B row); an
-                # unmatched / out-of-range reference is NULL -> false
-                for sc, op, ov, oc, nav, off in cross_checks.get(v, ()):
-                    rows_o = [r for w, r in acc if w == ov]
-                    if ov == v:
-                        rows_o = rows_o + [j]
-                    if len(rows_o) <= off:
-                        return False
-                    ref = rows_o[off] if nav == "FIRST" else rows_o[-1 - off]
-                    a = pdf[sc].iloc[j]
-                    b = pdf[oc].iloc[ref]
-                    try:
-                        if pd.isna(a) or pd.isna(b) or not _OPS[op](a, b):
-                            return False
-                    except TypeError:
-                        return False
-                # rich expression parts (round 12): compiled arithmetic
-                # over the same partial-match navigation
-                rich = rich_checks.get(v)
-                if rich and not eval_rich_cross(rich, v, j, acc, _val_at):
-                    return False
-                return True
-        else:
-
-            def cross_ok(v, j, acc):
-                return True
-
-        def _lim_for(s: int) -> int:
-            lim = n - 1
-            if within is not None:
-                lim = min(
-                    lim,
-                    int(
-                        np.searchsorted(
-                            ts,
-                            ts[s] + np.timedelta64(int(within), "s"),
-                            side="right",
-                        )
-                    )
-                    - 1,
-                )
-            return lim
-
-        def match_from_ast(s: int) -> list[tuple[str, int]] | None:
-            """Generator backtracker over the NESTED pattern AST —
-            preference order: alternation branches left-first,
-            quantifiers greedy (more repetitions first) unless lazy,
-            sequence backtracking left-to-right. Zero-width repetitions
-            are skipped (standard regex hygiene)."""
-            lim = _lim_for(s)
-
-            def gen(node, i, acc):
-                kind = node[0]
-                if kind == "var":
-                    v = node[1]
-                    if i <= lim and flags[v][i] and cross_ok(v, i, acc):
-                        yield [(v, i)]
-                    return
-                if kind == "seq":
-                    children = node[1]
-
-                    def seq_gen(idx, j, acc2):
-                        if idx == len(children):
-                            yield []
-                            return
-                        for head in gen(children[idx], j, acc2):
-                            for rest in seq_gen(
-                                idx + 1, j + len(head), acc2 + head
-                            ):
-                                yield head + rest
-
-                    yield from seq_gen(0, i, acc)
-                    return
-                if kind == "alt":
-                    for child in node[1]:
-                        yield from gen(child, i, acc)
-                    return
-                if kind == "permute":
-                    # matched-set automaton (VERDICT r10 #2): state =
-                    # (row, bitmask of matched variables); successors
-                    # expand in declaration order, so the FIRST complete
-                    # match is the lexicographically preferred ordering —
-                    # identical to the n!-way alternation's left-first
-                    # walk at O(2^n · n) instead of O(n!). The dead-state
-                    # memo is sound only without cross-variable checks
-                    # (those make matchability depend on WHERE earlier
-                    # variables landed, i.e. on the path, not the set).
-                    children = node[1]
-                    full = (1 << len(children)) - 1
-                    dead: set[tuple[int, int]] = set()
-                    use_memo = not has_cross
-
-                    def p_gen(j, mask, acc2):
-                        if mask == full:
-                            yield []
-                            return
-                        if use_memo and (j, mask) in dead:
-                            return
-                        produced = False
-                        for bi, ch in enumerate(children):
-                            if mask & (1 << bi):
-                                continue
-                            for head in gen(ch, j, acc2):
-                                for rest in p_gen(
-                                    j + len(head),
-                                    mask | (1 << bi),
-                                    acc2 + head,
-                                ):
-                                    produced = True
-                                    yield head + rest
-                        if use_memo and not produced:
-                            dead.add((j, mask))
-
-                    yield from p_gen(i, 0, acc)
-                    return
-                _, child, lo, hi, lazy = node
-
-                def q_gen(j, done, acc2):
-                    # Stop options follow the CHILD's preference order: a
-                    # zero-width child match IS the repetition the child
-                    # prefers at that point, and repeating empty fills
-                    # any remaining minimum without progress — so it
-                    # becomes a STOP yielded in sequence (the
-                    # (C*?){2,2} case: the lazy child prefers empty, so
-                    # the whole quantifier prefers to consume nothing —
-                    # Python re / SQL row-pattern semantics).
-                    can_more = hi is None or done < hi
-                    yielded_stop = False
-                    if lazy and done >= lo:
-                        yield []
-                        yielded_stop = True
-                    if can_more:
-                        for head in gen(child, j, acc2):
-                            if not head:
-                                if not yielded_stop:
-                                    yield []
-                                    yielded_stop = True
-                                continue
-                            for rest in q_gen(
-                                j + len(head), done + 1, acc2 + head
-                            ):
-                                yield head + rest
-                    if not yielded_stop and done >= lo:
-                        yield []
-
-                yield from q_gen(i, 0, acc)
-
-            for mp in gen(pattern_ast, s, []):
-                if mp:
-                    return mp
-            return None
-
+            horizon = np.searchsorted(
+                ts, ts + np.timedelta64(int(within), "s"), side="right"
+            ) - 1
         # Without WITHIN the (position, row) subproblem is start-
         # independent, so one memo (successes AND failures) is shared
-        # across every start: each (p, i) is solved once and the whole
-        # group costs O(positions x rows). A WITHIN bound makes `lim`
-        # start-relative, so the memo resets per start.
-        shared_memo: dict[tuple[int, int], list | None] | None = (
-            {} if within is None else None
-        )
+        # across every start: each (p, i) is solved once. A WITHIN bound
+        # makes `lim` start-relative, so the memo resets per start;
+        # cross checks depend on the partial match, so they disable it.
+        shared_memo: dict | None = {} if within is None else None
 
-        def match_from(s: int) -> list[tuple[str, int]] | None:
+        def match_from(s: int):
+            lim = n - 1 if within is None else int(horizon[s])
             if pattern_ast is not None:
-                return match_from_ast(s)
-            lim = n - 1
-            if within is not None:
-                lim = min(
-                    lim,
-                    int(
-                        np.searchsorted(
-                            ts,
-                            ts[s] + np.timedelta64(int(within), "s"),
-                            side="right",
-                        )
-                    )
-                    - 1,
+                return cep_core.match_at(
+                    pattern_ast, masks, bits, s, lim, checks, val_at
                 )
-            # memoization is sound only when matching is context-free;
-            # cross-variable checks depend on the partial match, so the
-            # memo is disabled entirely when any are present
             memo = (
                 None
-                if has_cross
+                if checks
                 else (shared_memo if shared_memo is not None else {})
             )
 
-            def dfs(
-                p: int, i: int, acc: list[tuple[str, int]]
-            ) -> list[tuple[str, int]] | None:
+            def dfs(p: int, i: int, acc: list) -> list | None:
                 if p == len(pos_spec):
                     return []
                 key = (p, i)
                 if memo is not None and key in memo:
                     return memo[key]
-                alts, lo, hi, lazy = pos_spec[p]
-
-                def row_ok(j: int, acc2) -> str | None:
-                    # leftmost-preferred alternative for this row
-                    for v in alts:
-                        if flags[v][j] and cross_ok(v, j, acc2):
-                            return v
-                    return None
-
+                _, lo, hi, lazy = pos_spec[p]
                 assigned: list[str] = []
                 j = i
                 run_acc = acc
                 while j <= lim and (hi is None or len(assigned) < hi):
-                    v = row_ok(j, run_acc)
-                    if v is None:
+                    # leftmost-preferred alternative for this row
+                    for v, bit in alt_bits[p]:
+                        if masks[j] & bit and (
+                            v not in checks
+                            or eval_rich_cross(checks[v], v, j, run_acc, val_at)
+                        ):
+                            break
+                    else:
                         break
                     assigned.append(v)
                     run_acc = run_acc + [(v, j)]
                     j += 1
-                c_max = len(assigned)
                 counts = (
-                    range(lo, c_max + 1)
+                    range(lo, len(assigned) + 1)
                     if lazy
-                    else range(c_max, lo - 1, -1)
+                    else range(len(assigned), lo - 1, -1)
                 )
-                res: list[tuple[str, int]] | None = None
+                res = None
                 for c in counts:
                     taken = [(assigned[t], i + t) for t in range(c)]
                     rest = dfs(p + 1, i + c, acc + taken)
@@ -3077,230 +2507,25 @@ def _lower_nfa(spark: SparkSession, spec: MatchRecognizeSpec) -> DataFrame:
                     memo[key] = res
                 return res
 
-            mp = dfs(0, s, [])
             # a match must CONSUME its start row (matching is attempted
             # AT s); min_len >= 1 guarantees a non-empty mapping
-            return mp if mp else None
+            return dfs(0, s, []) or None
 
-        matches: list[list[tuple[str, int]]] = []
-        if skip_past or skip_to is not None:
-            s = 0
-            while s < n:
-                mp = match_from(s)
-                if mp:
-                    matches.append(mp)
-                    if skip_to is None:
-                        s = mp[-1][1] + 1
-                    else:
-                        nav, tvar = skip_to
-                        rows_v = [i for v, i in mp if v == tvar]
-                        if not rows_v:
-                            # target unmatched in this match: past end
-                            s = mp[-1][1] + 1
-                        else:
-                            t = (
-                                rows_v[0] if nav == "FIRST" else rows_v[-1]
-                            )
-                            if t <= s:
-                                raise ValueError(
-                                    f"AFTER MATCH SKIP TO {nav} {tvar}: "
-                                    "the skip target IS the match start "
-                                    "— resuming there would loop "
-                                    "forever (Flink raises the same "
-                                    "error)"
-                                )
-                            s = t
-                else:
-                    s += 1
-        else:
-            for s in range(n):
-                mp = match_from(s)
-                if mp:
-                    matches.append(mp)
-
-        def clean(v, alias):
-            try:
-                if v is not None and pd.isna(v):
-                    v = None
-            except (TypeError, ValueError):
-                pass
-            if v is not None and alias in target_long:
-                v = int(v)
-            return v
-
-        if all_rows:
-            # ALL ROWS PER MATCH: one output row per matched input row,
-            # RUNNING measure semantics (the Flink default); excluded
-            # ({- X -}) rows match but do not emit. Source columns come
-            # from SLICING pdf (dtypes survive the Arrow return).
-            idxs: list[int] = []
-            out_ar: dict[str, list] = {
-                alias: [] for _, _, alias in measures
-            }
-            covered = np.zeros(n, dtype=bool)
-            for mn, mp in enumerate(matches, start=1):
-                for _, i in mp:
-                    covered[i] = True
-                for t, (row_var, i) in enumerate(mp):
-                    if row_var in excl:
-                        continue
-                    idxs.append(i)
-                    prefix = mp[: t + 1]
-                    for var, col, alias in measures:
-                        final = (
-                            measure_modes.get(alias, "RUNNING") == "FINAL"
-                        )
-                        scope = mp if final else prefix
-                        vrows = [j for w, j in scope if w == var]
-                        if var == MATCH_NUMBER:
-                            v = mn
-                        elif var == CLASSIFIER:
-                            v = row_var
-                        elif alias in measure_agg:
-                            fn = measure_agg[alias]
-                            if col == "*":
-                                v = (
-                                    len(vrows)
-                                    if fn == "COUNT"
-                                    else None
-                                )
-                            else:
-                                vals = pdf[col].iloc[vrows]
-                                if fn == "COUNT":
-                                    v = int(vals.count())
-                                elif fn == "SUM":
-                                    v = vals.sum(min_count=1)
-                                    v = None if pd.isna(v) else v
-                                elif fn == "AVG":
-                                    v = vals.mean()
-                                    v = (
-                                        None
-                                        if pd.isna(v)
-                                        else float(v)
-                                    )
-                                elif fn == "MIN":
-                                    v = vals.min()
-                                    v = None if pd.isna(v) else v
-                                else:
-                                    v = vals.max()
-                                    v = None if pd.isna(v) else v
-                        elif len(vrows) <= measure_nav_offset.get(
-                            alias, 0
-                        ):
-                            # variable not reached yet / logical offset
-                            # past the rows mapped so far (SQL:2016)
-                            v = None
-                        else:
-                            noff = measure_nav_offset.get(alias, 0)
-                            row = (
-                                vrows[noff]
-                                if measure_nav.get(alias) == "FIRST"
-                                else vrows[-1 - noff]
-                            )
-                            v = pdf[col].iloc[row]
-                        out_ar[alias].append(clean(v, alias))
-            if with_unmatched:
-                rest = [int(j) for j in np.nonzero(~covered)[0]]
-                idxs.extend(rest)
-                for _, _, alias in measures:
-                    out_ar[alias].extend([None] * len(rest))
-            base = pdf.iloc[idxs][src_cols].reset_index(drop=True)
-            for c in src_cols:
-                if (
-                    base[c].dtype.kind == "f"
-                    and isinstance(
-                        src_fields[c].dataType, integral
-                    )
-                ):
-                    base[c] = base[c].astype("Int64")
-            for _, _, alias in measures:
-                base[alias] = pd.Series(out_ar[alias], dtype=object)
-            return base
-
-        out: dict[str, list] = {pc: [] for pc in pby}
-        for _, _, alias in measures:
-            out[alias] = []
-        for mn, mp in enumerate(matches, start=1):
-            rows_of: dict[str, list[int]] = {}
-            for v, i in mp:
-                rows_of.setdefault(v, []).append(i)
-            for pc in pby:
-                out[pc].append(pdf[pc].iloc[0])
-            for var, col, alias in measures:
-                if var == MATCH_NUMBER:
-                    v = mn
-                elif var == CLASSIFIER:
-                    v = mp[-1][0]  # ONE ROW: the last row's variable
-                elif alias in measure_agg:
-                    fn = measure_agg[alias]
-                    idxs = rows_of.get(var, [])
-                    if col == "*":
-                        v = len(idxs) if fn == "COUNT" else None
-                    else:
-                        vals = pdf[col].iloc[idxs]
-                        if fn == "COUNT":
-                            v = int(vals.count())
-                        elif fn == "SUM":
-                            v = vals.sum(min_count=1)
-                            v = None if pd.isna(v) else v
-                        elif fn == "AVG":
-                            v = vals.mean()
-                            v = None if pd.isna(v) else float(v)
-                        elif fn == "MIN":
-                            v = vals.min()
-                            v = None if pd.isna(v) else v
-                        else:
-                            v = vals.max()
-                            v = None if pd.isna(v) else v
-                else:
-                    idxs = rows_of.get(var) or []
-                    noff = measure_nav_offset.get(alias, 0)
-                    if len(idxs) <= noff:
-                        # variable mapped no row / offset past the
-                        # mapped count (SQL:2016) -> NULL
-                        v = None
-                    else:
-                        row = (
-                            idxs[noff]
-                            if measure_nav.get(alias) == "FIRST"
-                            else idxs[-1 - noff]
-                        )
-                        v = pdf[col].iloc[row]
-                try:
-                    if v is not None and pd.isna(v):
-                        v = None
-                except (TypeError, ValueError):
-                    pass
-                if v is not None and alias in target_long:
-                    v = int(v)
-                out[alias].append(v)
-        names = pby + [alias for _, _, alias in measures]
-        # dtype=object per column: an EMPTY list defaults to float64,
-        # which Arrow cannot cast back to timestamp/long measure fields;
-        # object columns (incl. empty) convert losslessly
-        return pd.DataFrame(
-            {c: pd.Series(out[c], dtype=object) for c in names},
-            columns=names,
+        matches = cep_core.find_matches(
+            match_from, n, spec.skip_past_last, spec.skip_to
         )
+        return cep_core.emit_frame(pdf, matches, spec, emit, val_at, int_cols)
 
-    if not all_rows:
+    if not spec.all_rows:
         # ONE ROW PER MATCH: only keys, order columns, the per-variable
-        # booleans, and measured columns cross the Arrow hop
-        need = list(
-            dict.fromkeys(
-                pby
-                + order_cols
-                + [f"__mrp_{v}" for v in pattern_vars]
-                + cross_cols
-                + [
-                    col
-                    for var, col, _ in measures
-                    if col != "*" and var not in (MATCH_NUMBER, CLASSIFIER)
-                ]
+        # booleans, and the columns cross checks and measures read cross
+        # the Arrow hop
+        src = src.select(
+            *dict.fromkeys(
+                list(spec.partition_by) + order_cols + flag_cols + val_cols
             )
         )
-        src = src.select(*need)
-    return _grouped_apply(src, pby, match_group, out_schema)
+    return _grouped_apply(src, list(spec.partition_by), match_group, out_schema)
 
 
 def lower_match_recognize(spark: SparkSession, spec: MatchRecognizeSpec) -> DataFrame:
@@ -3315,6 +2540,8 @@ def lower_match_recognize(spark: SparkSession, spec: MatchRecognizeSpec) -> Data
     ``F.when`` chain over the shared LEAD columns — still a single
     window pass / one shuffle on the partition key. The unbounded run
     shape (``A+ B``) dispatches to the gaps-and-islands lowering."""
+    table = spark.table(spec.table)
+    _settle_skip_paths(spec, dict(table.dtypes))
     if (
         spec.unbounded or spec.pos_quants or spec.pattern_ast is not None
     ) and spec.plus is None:
@@ -3323,7 +2550,7 @@ def lower_match_recognize(spark: SparkSession, spec: MatchRecognizeSpec) -> Data
         if spec.plus_overlap:
             return _lower_plus_overlap(spark, spec)
         return _lower_plus(spark, spec)
-    df = _narrow_src(spark.table(spec.table), spec)
+    df = _narrow_src(table, spec)
     cols = df.columns
     w = Window.partitionBy(*spec.partition_by).orderBy(*spec.order_by)
 

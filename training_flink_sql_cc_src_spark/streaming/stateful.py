@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..plans.cep_core import _CMP_OPS, _next_ok, _scalar
+
 
 def running_totals(
     stream_df: DataFrame, key_col: str, value_col: str
@@ -189,7 +191,15 @@ def sequence_flags_stream(
                 if (
                     len(seq) == length
                     and all(s[0] & (1 << i) for i, s in enumerate(seq))
-                    and _next_ok(nxt_checks, seq, pcols)
+                    and all(
+                        _next_ok(
+                            checks,
+                            vi,
+                            length,
+                            lambda i, c: seq[i][2][pcols.index(c)],
+                        )
+                        for vi, checks in enumerate(nxt_checks)
+                    )
                 ):
                     if (
                         within_seconds is None
@@ -649,202 +659,6 @@ def _agg_finalize(aggs, pcols, run_len, accs, single_rows):
     return out
 
 
-def _skip_drop(mp, skip_past, skip_to):
-    """Rows to drop from the window head after a match at its head —
-    the AFTER MATCH walk: SKIP TO NEXT ROW slides one, SKIP PAST LAST
-    ROW consumes through the match, SKIP TO FIRST/LAST <var> resumes
-    AT the target row (inclusive — overlapping matches by design); a
-    target equal to the match start raises exactly as the batch scan
-    (and Flink) do."""
-    if skip_to is not None:
-        nav, tvar = skip_to
-        rows_v = [i for vv, i in mp if vv == tvar]
-        if not rows_v:
-            return mp[-1][1] + 1
-        t = rows_v[0] if nav == "FIRST" else rows_v[-1]
-        if t <= 0:
-            raise ValueError(
-                f"AFTER MATCH SKIP TO {nav} {tvar}: the skip target IS "
-                "the match start — resuming there would loop forever "
-                "(Flink raises the same error)"
-            )
-        return t
-    return mp[-1][1] + 1 if skip_past else 1
-
-
-def _match_bounded(
-    ast, window, var_bit, lim, cross_checks=None, val_at=None,
-    next_checks=None,
-):
-    """Preferred match anchored at window index 0 — the SAME preference
-    order as the batch NFA's AST generator backtracker
-    (plans/match_recognize._lower_nfa match_from_ast): alternation
-    branches left-first, quantifiers greedy (more repetitions first)
-    unless lazy, zero-width repetitions skipped. Returns the match as a
-    list of (var, window_index) or None. Row i satisfies variable v iff
-    bit var_bit[v] is set in window[i][0], i <= lim (the WITHIN
-    horizon), and its cross-variable conjuncts hold against the
-    partial match (``cross_checks``: var -> [(self_col, op, other_var,
-    other_col, nav)], values read through ``val_at(i, col)`` — the
-    batch cross_ok, verbatim semantics: an unmatched reference or NULL
-    operand is FALSE)."""
-
-    def next_ok(v, i):
-        """Physical NEXT(col, n) conjuncts of variable v at window row
-        i — the decision wait guarantees i + n exists for every
-        candidate row; a NULL operand (or one past the buffered
-        window) compares FALSE, the batch NULL semantics."""
-        if not next_checks:
-            return True
-        for lhs, op, rhs in next_checks.get(v, ()):
-
-            def _side(sd):
-                if sd[0] == "lit":
-                    return sd[1]
-                if sd[0] == "col":
-                    return val_at(i, sd[1])
-                j = i + sd[2]
-                if j >= len(window):
-                    return None
-                return val_at(j, sd[1])
-
-            a, b = _side(lhs), _side(rhs)
-            if a is None or b is None:
-                return False
-            try:
-                if not _CMP_OPS[op](a, b):
-                    return False
-            except TypeError:
-                return False
-        return True
-
-    def cross_ok(v, i, acc):
-        # the batch cross_ok, verbatim semantics: SELF refs include
-        # the current candidate row (LAST(B.v, 1) in B's own DEFINE =
-        # the previous B row); out-of-range / NULL operand -> FALSE
-        if not cross_checks:
-            return True
-        for chk in cross_checks.get(v, ()):
-            if chk[0] == "__rich__":
-                # rich expression part (round 12): compiled by
-                # plans.match_recognize.compile_rich_cross, evaluated
-                # against the decision window's partial match exactly
-                # like the batch NFA
-                from ..plans.match_recognize import eval_rich_cross
-
-                if not eval_rich_cross(
-                    [(chk[1], chk[2])], v, i, acc, val_at
-                ):
-                    return False
-                continue
-            sc, op, ov, oc, nav, off = chk
-            rows_o = [r for w, r in acc if w == ov]
-            if ov == v:
-                rows_o = rows_o + [i]
-            if len(rows_o) <= off:
-                return False
-            ref = rows_o[off] if nav == "FIRST" else rows_o[-1 - off]
-            a, b = val_at(i, sc), val_at(ref, oc)
-            if a is None or b is None:
-                return False
-            try:
-                if not _CMP_OPS[op](a, b):
-                    return False
-            except TypeError:
-                return False
-        return True
-
-    def gen(node, i, acc):
-        kind = node[0]
-        if kind == "var":
-            v = node[1]
-            if (
-                i <= lim
-                and window[i][0] & (1 << var_bit[v])
-                and next_ok(v, i)
-                and cross_ok(v, i, acc)
-            ):
-                yield [(v, i)]
-            return
-        if kind == "seq":
-            children = node[1]
-
-            def seq_gen(idx, j, acc2):
-                if idx == len(children):
-                    yield []
-                    return
-                for head in gen(children[idx], j, acc2):
-                    for rest in seq_gen(idx + 1, j + len(head), acc2 + head):
-                        yield head + rest
-
-            yield from seq_gen(0, i, acc)
-            return
-        if kind == "alt":
-            for child in node[1]:
-                yield from gen(child, i, acc)
-            return
-        if kind == "permute":
-            # matched-set automaton — the batch generator's permute
-            # branch, kept identical (plans/match_recognize
-            # match_from_ast): declaration-order successor expansion =
-            # lexicographic preference; dead-(row, mask) memo sound
-            # only without cross-variable checks
-            children = node[1]
-            full = (1 << len(children)) - 1
-            dead = set()
-            use_memo = not cross_checks
-
-            def p_gen(j, mask, acc2):
-                if mask == full:
-                    yield []
-                    return
-                if use_memo and (j, mask) in dead:
-                    return
-                produced = False
-                for bi, ch in enumerate(children):
-                    if mask & (1 << bi):
-                        continue
-                    for head in gen(ch, j, acc2):
-                        for rest in p_gen(
-                            j + len(head), mask | (1 << bi), acc2 + head
-                        ):
-                            produced = True
-                            yield head + rest
-                if use_memo and not produced:
-                    dead.add((j, mask))
-
-            yield from p_gen(i, 0, acc)
-            return
-        _, child, lo, hi, lazy = node
-
-        def q_gen(j, done, acc2):
-            # stop options follow the child's preference order — the
-            # batch generator's zero-width hygiene, kept identical
-            can_more = hi is None or done < hi
-            yielded_stop = False
-            if lazy and done >= lo:
-                yield []
-                yielded_stop = True
-            if can_more:
-                for head in gen(child, j, acc2):
-                    if not head:
-                        if not yielded_stop:
-                            yield []
-                            yielded_stop = True
-                        continue
-                    for rest in q_gen(j + len(head), done + 1, acc2 + head):
-                        yield head + rest
-            if not yielded_stop and done >= lo:
-                yield []
-
-        yield from q_gen(i, 0, acc)
-
-    for mp in gen(ast, 0, []):
-        if mp:
-            return mp
-    return None
-
-
 #: time-bounded window safety valve: a key whose undecided window
 #: exceeds this many rows raises loudly instead of growing state
 #: silently (the analog of Flink's state-size alerts for a WITHIN
@@ -862,613 +676,187 @@ def bounded_nfa_stream(
     var_flags: dict[str, str],
     pattern_vars: list[str],
     ast,
-    skip_past: bool = False,
-    within_seconds: int | None = None,
+    spec,
+    cols: list[str],
     tiebreak_col: str | None = None,
-    payload_spec: tuple | None = None,
-    agg_spec: list | None = None,
-    skip_to: tuple | None = None,
-    cross_spec: tuple | None = None,
+    checks: dict | None = None,
     prev_spec: tuple | None = None,
     next_spec: tuple | None = None,
     time_bounded: bool = False,
     break_decided: bool = False,
 ) -> DataFrame:
-    """Streaming matcher for ANY BOUNDED pattern — quantifiers A{n,m} /
-    A? / A{n}, alternation groups (A|B), quantified groups (A|B){n,m},
-    NESTED groups, and PERMUTE (as an alternation of its variants) —
-    with arbitrary, possibly overlapping row-local predicates.
+    """The decision-window streaming matcher: per key, a window of the
+    rows that may still start or join a match, in keyed state. The
+    start at the window head is DECIDED once no later row can change
+    its outcome; then the shared CEP core (plans/cep_core) matches it,
+    walks the skip and emits the measures — the batch NFA's decisions,
+    run per key. Three decision rules, one state layout:
 
-    The pattern's maximum length Lmax is finite, so a window of the
-    last Lmax rows per key decides every match start exactly: when the
-    window is full, the start at its head either matches (the batch
-    AST generator's preference order, run on the full window) or
-    provably never will — later rows cannot join a match anchored
-    there. SKIP TO NEXT ROW slides the window by one either way; SKIP
-    PAST LAST ROW drops through the match's last row. State is
-    O(distinct keys x (Lmax - 1)), the same contract as the
-    fixed-sequence matcher; a start is decided once Lmax rows from it
-    have arrived (at stream end, trailing starts with fewer rows stay
-    undecided — the bounded analog of the run matchers' terminator
-    contract). ``var_flags`` maps each pattern variable to its
-    precompiled BOOLEAN flag column; ``payload_spec`` =
-    ([(var, col), ...], {col: sql_type}) carries measure columns — a
-    match emits each requested (var, col, nav) as
-    ``{var}_{col}_{nav}`` from the variable's LAST (the Flink
-    bare-Var.col binding) or FIRST matched row, NULL when the variable
-    mapped no row. ``agg_spec`` =
-    [(fn, var, col_or_None, alias, sql_type), ...] adds AGGREGATE
-    measures (COUNT/SUM/AVG/MIN/MAX over the variable's matched rows —
-    the full window is present, so they compute exactly; col None =
-    COUNT(Var.*)). Emits (key, {var}_last_ts... [, {var}_{col}...,
-    {agg aliases}...]).
+    - length (default): a BOUNDED pattern (quantifiers A{n,m} / A?,
+      alternation, quantified and nested groups, PERMUTE as the
+      alternation of its orderings) spans at most Lmax rows, so the
+      head decides once Lmax rows (plus the largest NEXT offset) have
+      arrived — state O(keys x Lmax);
+    - ``time_bounded=True``: an UNBOUNDED pattern under WITHIN W decides
+      the head once a row later than head_ts + W arrives (arrival
+      order: every row that could still join has been seen) — state
+      O(per-key rate x W), the state Flink's CEP operator keeps;
+    - ``break_decided=True``: an UNBOUNDED pattern without WITHIN
+      decides the head once a BREAK row (one matching no variable)
+      sits in the window — no match can span it — so state is the
+      longest break-free stretch, Flink CEP's partial-match state.
 
-    ``time_bounded=True``: the TIME-bounded variant for patterns with
-    UNBOUNDED quantifiers under a WITHIN bound — no finite Lmax exists,
-    but WITHIN W means a start at the window head is decided the moment
-    a row with ts > head_ts + W arrives (in arrival order, every row
-    that could still join a match anchored there has been seen — the
-    same horizon rule as the batch lim). The window holds a VARIABLE
-    number of rows in array-typed state: O(per-key rate x W), exactly
-    the state Flink's CEP operator keeps for a WITHIN pattern, with a
-    loud row cap (TIME_WINDOW_ROW_CAP) instead of silent growth.
-    Trailing starts whose horizon never passes stay undecided at stream
-    end — the same terminator contract as the row-bounded leg.
+    The unbounded rules cap the window at TIME_WINDOW_ROW_CAP rows and
+    raise loudly past it. Trailing starts whose decision never comes
+    stay undecided at stream end (the terminator contract).
 
-    ``break_decided=True``: the BREAK-ROW variant for UNBOUNDED
-    patterns with NO WITHIN bound. Every matched row maps to some
-    pattern variable, so no match can span a row whose flag mask is 0
-    (a BREAK row — exclusions still map their rows): the head start is
-    decided as soon as a break row sits in the window (matches anchored
-    at the head are confined to the rows before it). State is the rows
-    between breaks — O(longest break-free stretch) per key, exactly the
-    partial-match state Flink CEP keeps for an unbounded quantifier,
-    with the same loud row cap. A key whose predicates never all fail
-    hits the cap instead of growing silently."""
-    nchecks, ncols, max_next, ntypes = {}, [], 0, {}
-    if next_spec is not None:
-        nchecks, ncols, max_next, ntypes = next_spec
-    var_state = time_bounded or break_decided
+    ``spec`` (the parsed MatchRecognizeSpec) supplies MEASURES, the
+    PER MATCH mode, skip mode and WITHIN; ``cols`` are the source
+    columns each window row carries (every source column under ALL
+    ROWS PER MATCH, else the order column plus what measures and
+    checks read). ONE ROW emits (key, measures...), ALL ROWS the
+    source row + measures per matched row — with WITH UNMATCHED ROWS,
+    a row no match covers emits once with NULL measures when it leaves
+    the window. ``checks``: compiled cross-variable DEFINE parts
+    (cep_core.split_defines); ``prev_spec`` / ``next_spec``: physical
+    PREV conjuncts evaluated at arrival against a bounded value
+    history, and NEXT conjuncts evaluated at decision time against
+    window successors (each decision deferred by the largest offset).
+    State: ``mn`` (the MATCH_NUMBER() counter), per window row its
+    variable bitmask, covered flag and carried values — Lmax - 1 (+ the
+    largest NEXT offset) fixed slots under the length rule, arrays
+    (``ms``, ``cs``, ``w_<col>``) under the unbounded rules — then the
+    PREV history."""
+    from pyspark.sql import types as T
+
+    from ..plans.cep_core import (
+        match_at,
+        measure_emitter,
+        measure_fields,
+        next_start,
+    )
+
+    nchecks, max_next = ({}, 0) if next_spec is None else next_spec
     if time_bounded and break_decided:
         raise ValueError("time_bounded and break_decided are exclusive")
-    if time_bounded:
-        if within_seconds is None:
-            raise ValueError("time_bounded needs within_seconds")
-        max_len, hist = 2, None
-    elif break_decided:
-        max_len, hist = 2, None
-    else:
-        max_len = ast_max_len(ast)
-        if max_len < 2:
-            raise ValueError("bounded pattern must span at least 2 rows")
-        # NEXT lookahead defers each head decision by max_next rows,
-        # so the retained window grows by the same amount
-        hist = max_len - 1 + max_next
+    within = spec.within_seconds
+    if time_bounded and within is None:
+        raise ValueError("time_bounded needs within_seconds")
+    max_len = 2 if time_bounded or break_decided else ast_max_len(ast)
+    if max_len < 2:
+        raise ValueError("bounded pattern must span at least 2 rows")
     var_bit = {v: i for i, v in enumerate(pattern_vars)}
-    pay_pairs, pay_types = [], {}
-    if payload_spec is not None:
-        pay_pairs, pay_types = payload_spec
-    aggs = list(agg_spec or [])
-    # window rows store the union of payload and agg SOURCE columns;
-    # source types come from the stream schema (agg out types differ)
-    field_types = {
-        f.name: f.dataType.simpleString() for f in stream_df.schema
-    }
-    agg_srcs = {c for _, _, c, _, _ in aggs if c is not None}
-    cross_checks, cross_cols = (
-        cross_spec if cross_spec is not None else (None, set())
+    src = {f.name: f for f in stream_df.schema.fields}
+    m_fields = measure_fields(spec, stream_df.schema)
+    emit = measure_emitter(spec, m_fields)
+    all_rows = spec.all_rows
+    out_schema = T.StructType(
+        ([src[c] for c in cols] if all_rows else [src[key_col]]) + m_fields
     )
-    wtypes = {
-        **{c: field_types[c] for c in set(agg_srcs) | set(cross_cols)},
-        **pay_types,
-        **ntypes,
-    }
-    pcols = sorted(
-        {c for _, c, _, _ in pay_pairs}
-        | agg_srcs
-        | set(cross_cols)
-        | set(ncols)
-    )
-    key_type = stream_df.schema[key_col].dataType.simpleString()
-    out_schema = f"{key_col} {key_type}, " + ", ".join(
-        [f"{v}_last_ts timestamp" for v in pattern_vars]
-        + [
-            f"{var}_{c}_{nav}{off or ''} {pay_types[c]}"
-            for var, c, nav, off in pay_pairs
-        ]
-        + [f"{alias} {out_t}" for _, _, _, alias, out_t in aggs]
-    )
-    if var_state:
-        state_schema = "ms array<long>, ss array<timestamp>" + "".join(
-            f", w_{c} array<{wtypes[c]}>" for c in pcols
+    out_names = [f.name for f in out_schema.fields]
+    types = [src[c].dataType.simpleString() for c in cols]
+    # the length rule holds at most hist rows after each arrival: FIXED
+    # slots (measured faster than arrays on an Lmax statement); the
+    # unbounded rules keep a variable number of rows in ARRAYS
+    hist = None if time_bounded or break_decided else max_len - 1 + max_next
+    stride = 2 + len(cols)
+    if hist is None:
+        state_schema = "mn long, ms array<long>, cs array<boolean>" + "".join(
+            f", w_{c} array<{t}>" for c, t in zip(cols, types)
         )
-    else:
-        state_schema = ", ".join(
-            f"m{i} long, s{i} timestamp"
-            + "".join(f", w{i}_{c} {wtypes[c]}" for c in pcols)
-            for i in range(1, hist + 1)
-        )
-    stride = 2 + len(pcols)
-    flag_cols = [var_flags[v] for v in pattern_vars]
-    pchecks, need_cols, max_prev = {}, [], 0
-    if prev_spec is not None:
-        pchecks, need_cols, max_prev, prev_col_types = prev_spec
-        state_schema += ", " + _prev_schema_suffix(
-            need_cols, max_prev, prev_col_types
-        )
-
-    def _decidable(window) -> bool:
-        if time_bounded:
-            # the head start is decided once a strictly LATER-than-
-            # horizon row exists: every row with ts <= head + W has
-            # arrived (arrival order)
-            return (
-                len(window) >= 2
-                and (window[-1][1] - window[0][1]).total_seconds()
-                > within_seconds
-            )
-        if break_decided:
-            # the head start is decided once a BREAK row (flag mask 0)
-            # sits in the window — no match can span it, so matches
-            # anchored at the head are confined to the rows before the
-            # first break; NEXT conjuncts additionally wait for their
-            # targets (up to max_next rows past the last matchable row)
-            if window and window[0][0] == 0:
-                return True  # break at the head: no match anchors here
-            for j in range(1, len(window)):
-                if window[j][0] == 0:
-                    return len(window) >= j + max_next
-            return False
-        return len(window) >= max_len + max_next
-
-    def update(
-        key: tuple,
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        window: list[tuple] = []
-        vhist: list[dict] = []
-        if state.exists:
-            vals = state.get
-            if var_state:
-                ms = list(vals[0] or [])
-                ss = list(vals[1] or [])
-                pv_arrays = [
-                    list(vals[2 + ci] or []) for ci in range(len(pcols))
-                ]
-                window = [
-                    (
-                        ms[j],
-                        ss[j],
-                        tuple(arr[j] for arr in pv_arrays),
-                    )
-                    for j in range(len(ms))
-                ]
-                if max_prev:
-                    vhist = _prev_load(
-                        vals, stride, need_cols, max_prev
-                    )
-            else:
-                window = [
-                    (
-                        vals[stride * i],
-                        vals[stride * i + 1],
-                        tuple(vals[stride * i + 2 : stride * (i + 1)]),
-                    )
-                    for i in range(hist)
-                    if vals[stride * i] is not None
-                ]
-                if max_prev:
-                    vhist = _prev_load(
-                        vals, stride * hist, need_cols, max_prev
-                    )
-        out_rows: list[list] = []
-        for pdf in batches:
-            sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-            pdf = pdf.sort_values(sort_cols)
-            flags = [
-                pdf[c].fillna(False).to_numpy(dtype=bool)
-                for c in flag_cols
-            ]
-            ts_vals = list(pdf[ts_col])
-            pay_vals = {c: list(pdf[c]) for c in pcols}
-            need_vals = {c: list(pdf[c]) for c in need_cols}
-            for r in range(len(pdf)):
-                cur_vals = None
-                if max_prev:
-                    cur_vals = {
-                        c: _scalar(need_vals[c][r]) for c in need_cols
-                    }
-                mask = 0
-                for b in range(len(pattern_vars)):
-                    pv = pattern_vars[b]
-                    if flags[b][r] and (
-                        not pchecks.get(pv)
-                        or _prev_ok(pchecks[pv], cur_vals, vhist)
-                    ):
-                        mask |= 1 << b
-                if max_prev:
-                    vhist.append(cur_vals)
-                    vhist = vhist[-max_prev:]
-                window.append(
-                    (
-                        mask,
-                        ts_vals[r],
-                        tuple(_scalar(pay_vals[c][r]) for c in pcols),
-                    )
-                )
-                while _decidable(window):
-                    if break_decided and window[0][0] == 0:
-                        # break row at the head: no match anchors here
-                        window = window[1:]
-                        continue
-                    if within_seconds is None:
-                        lim = len(window) - 1 - max_next
-                    else:
-                        t0 = window[0][1]
-                        lim = 0
-                        while (
-                            lim + 1 < len(window)
-                            and (
-                                window[lim + 1][1] - t0
-                            ).total_seconds()
-                            <= within_seconds
-                        ):
-                            lim += 1
-                        if not time_bounded:
-                            # bounded pattern: a head-anchored match
-                            # uses at most max_len rows, so NEXT
-                            # targets past that are never consulted —
-                            # without this cap a WITHIN span reaching
-                            # the window end stalls the decision
-                            # forever at stream end
-                            lim = min(lim, max_len - 1)
-                    if max_next and len(window) - 1 - lim < max_next:
-                        # NEXT targets for rows near the horizon have
-                        # not arrived yet — wait for more successors
-                        break
-                    mp = _match_bounded(
-                        ast, window, var_bit, lim,
-                        cross_checks=cross_checks,
-                        val_at=lambda i, c: window[i][2][pcols.index(c)],
-                        next_checks=nchecks or None,
-                    )
-                    if mp:
-                        rows_of: dict[str, list[int]] = {}
-                        for v, i in mp:
-                            rows_of.setdefault(v, []).append(i)
-                        row: list = []
-                        for v in pattern_vars:
-                            idxs = rows_of.get(v)
-                            row.append(
-                                window[idxs[-1]][1] if idxs else None
-                            )
-                        for var, c, nav, noff in pay_pairs:
-                            idxs = rows_of.get(var) or []
-                            row.append(
-                                window[
-                                    idxs[noff]
-                                    if nav == "first"
-                                    else idxs[-1 - noff]
-                                ][2][pcols.index(c)]
-                                if len(idxs) > noff
-                                else None
-                            )
-                        for fn, var, c, _, _ in aggs:
-                            idxs = rows_of.get(var, [])
-                            if c is None:
-                                row.append(
-                                    len(idxs) if fn == "count" else None
-                                )
-                                continue
-                            ci = pcols.index(c)
-                            nn = [
-                                window[i][2][ci]
-                                for i in idxs
-                                if window[i][2][ci] is not None
-                            ]
-                            if fn == "count":
-                                row.append(len(nn))
-                            elif not nn:
-                                row.append(None)
-                            elif fn == "sum":
-                                row.append(sum(nn))
-                            elif fn == "avg":
-                                row.append(float(sum(nn)) / len(nn))
-                            elif fn == "min":
-                                row.append(min(nn))
-                            else:
-                                row.append(max(nn))
-                        out_rows.append(row)
-                        window = window[_skip_drop(mp, skip_past, skip_to):]
-                    else:
-                        window = window[1:]
-        if var_state:
-            if len(window) > TIME_WINDOW_ROW_CAP:
-                raise ValueError(
-                    f"WITHIN window for key {key[0]!r} holds "
-                    f"{len(window)} undecided rows (> "
-                    f"{TIME_WINDOW_ROW_CAP}): "
-                    + (
-                        "no BREAK row (a row matching no pattern "
-                        "variable) arrived to bound the partial-match "
-                        "state — add a WITHIN bound, raise "
-                        "SPARK_GRAFT_CEP_ROW_CAP, or run the "
-                        "statement in batch"
-                        if break_decided
-                        else "the per-key rate x WITHIN span outgrows "
-                        "the streaming state bound — shorten WITHIN, "
-                        "raise SPARK_GRAFT_CEP_ROW_CAP, or run the "
-                        "statement in batch"
-                    )
-                )
-            flat = [
-                [m for m, _, _ in window],
-                [ts for _, ts, _ in window],
-                *[
-                    [pv[ci] for _, _, pv in window]
-                    for ci in range(len(pcols))
-                ],
-            ]
-        else:
-            flat = []
-            for mask, ts, pv in window:
-                flat += [mask, ts, *pv]
-            while len(flat) < stride * hist:
-                flat = [None] * stride + flat
-        if max_prev:
-            flat += _prev_flat(vhist, need_cols, max_prev)
-        state.update(tuple(flat))
-        if out_rows:
-            data: dict = {key_col: [key[0]] * len(out_rows)}
-            for ci, v in enumerate(pattern_vars):
-                data[f"{v}_last_ts"] = [row[ci] for row in out_rows]
-            off = len(pattern_vars)
-            for j, (var, c, nav, noff) in enumerate(pay_pairs):
-                data[f"{var}_{c}_{nav}{noff or ''}"] = [
-                    row[off + j] for row in out_rows
-                ]
-            off += len(pay_pairs)
-            for j, (_, _, _, alias, _) in enumerate(aggs):
-                data[alias] = pd.Series(
-                    [row[off + j] for row in out_rows], dtype=object
-                )
-            yield pd.DataFrame(data)
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def bounded_nfa_all_rows_stream(
-    stream_df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    var_flags: dict[str, str],
-    pattern_vars: list[str],
-    ast,
-    src_cols: list[str],
-    measures: list[tuple],
-    measure_spec: dict,
-    skip_past: bool = False,
-    within_seconds: int | None = None,
-    tiebreak_col: str | None = None,
-    skip_to: tuple | None = None,
-    cross_checks: dict | None = None,
-    prev_spec: tuple | None = None,
-    next_spec: tuple | None = None,
-    time_bounded: bool = False,
-    break_decided: bool = False,
-) -> DataFrame:
-    """ALL ROWS PER MATCH for bounded patterns over a stream: the same
-    Lmax-window decision procedure as ``bounded_nfa_stream``, but the
-    window carries FULL source rows and a match emits one output row
-    per matched input row — RUNNING measures by default (prefix scope,
-    the Flink ALL ROWS default), FINAL on request, CLASSIFIER() /
-    MATCH_NUMBER() (per-key counter held in the same state),
-    aggregate measures, {- X -} exclusions, and WITH UNMATCHED ROWS
-    (a row emits with NULL measures once its last possible covering
-    start is decided). ``measures`` = [(var, col, alias), ...] with
-    the sentinels from plans.match_recognize; ``measure_spec`` carries
-    {"modes", "agg", "nav", "excluded", "with_unmatched", "out_types"}
-    mirroring the batch NFA's emission exactly. State is
-    O(keys x (Lmax - 1) x row width) plus one match counter — the
-    Flink CEP ALL ROWS contract."""
-    from ..plans.match_recognize import CLASSIFIER, MATCH_NUMBER
-
-    nchecks, max_next = {}, 0
-    if next_spec is not None:
-        nchecks, _ncols, max_next, _ntypes = next_spec
-    var_state = time_bounded or break_decided
-    if time_bounded and break_decided:
-        raise ValueError("time_bounded and break_decided are exclusive")
-    if time_bounded:
-        # WITHIN-horizon variant (see bounded_nfa_stream): unbounded
-        # quantifiers allowed, variable-length array state bounded by
-        # the WITHIN span x per-key rate with the loud row cap
-        if within_seconds is None:
-            raise ValueError("time_bounded needs within_seconds")
-        max_len, hist = 2, None
-    elif break_decided:
-        # BREAK-ROW variant (see bounded_nfa_stream): unbounded
-        # quantifiers with NO WITHIN — the head decides at the first
-        # flag-mask-0 row; state = rows between breaks, loud cap
-        max_len, hist = 2, None
-    else:
-        # NEXT under WITHIN is fine here: the within-lim caps at
-        # max_len - 1, so decisions fire at max_len + max_next rows
-        # and the fixed-slot state never overflows
-        max_len = ast_max_len(ast)
-        if max_len < 2:
-            raise ValueError("bounded pattern must span at least 2 rows")
-        hist = max_len - 1 + max_next
-    var_bit = {v: i for i, v in enumerate(pattern_vars)}
-    field_types = {
-        f.name: f.dataType.simpleString() for f in stream_df.schema
-    }
-    modes = measure_spec.get("modes", {})
-    agg = measure_spec.get("agg", {})
-    nav = measure_spec.get("nav", {})
-    nav_offset = measure_spec.get("nav_offset", {})
-    excluded = set(measure_spec.get("excluded", ()))
-    with_unmatched = bool(measure_spec.get("with_unmatched", False))
-    out_types = measure_spec["out_types"]  # alias -> sql type
-    out_schema = ", ".join(
-        [f"{c} {field_types[c]}" for c in src_cols]
-        + [f"{alias} {out_types[alias]}" for _, _, alias in measures]
-    )
-    # per window row: mask, covered flag, then the full source row
-    stride = 2 + len(src_cols)
-    if var_state:
-        state_schema = (
-            "mn long, ms array<long>, cs array<boolean>"
-            + "".join(
-                f", w_{c} array<{field_types[c]}>" for c in src_cols
-            )
-        )
+        prev_at = 3 + len(cols)
     else:
         state_schema = "mn long, " + ", ".join(
             f"m{i} long, c{i} boolean"
-            + "".join(f", w{i}_{c} {field_types[c]}" for c in src_cols)
-            for i in range(1, hist + 1)
+            + "".join(f", w{i}_{c} {t}" for c, t in zip(cols, types))
+            for i in range(hist)
         )
+        prev_at = 1 + stride * hist
+    col_at = {c: i for i, c in enumerate(cols)}
+    ts_idx = col_at[ts_col]
     flag_cols = [var_flags[v] for v in pattern_vars]
-    ts_idx = src_cols.index(ts_col)
     pchecks, need_cols, max_prev = {}, [], 0
     if prev_spec is not None:
         pchecks, need_cols, max_prev, prev_col_types = prev_spec
         state_schema += ", " + _prev_schema_suffix(
             need_cols, max_prev, prev_col_types
         )
+    skip_past, skip_to = spec.skip_past_last, spec.skip_to
+    excluded, with_unmatched = set(spec.excluded), spec.with_unmatched
+
+    def _decidable(masks, rows) -> bool:
+        if time_bounded:
+            return (
+                len(rows) >= 2
+                and (rows[-1][ts_idx] - rows[0][ts_idx]).total_seconds()
+                > within
+            )
+        if break_decided:
+            if masks and masks[0] == 0:
+                return True  # break at the head: no match anchors here
+            for j in range(1, len(masks)):
+                if masks[j] == 0:
+                    # NEXT conjuncts also wait for their targets
+                    return len(masks) >= j + max_next
+            return False
+        return len(masks) >= max_len + max_next
 
     def update(
         key: tuple,
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        # window rows: [mask, covered, (src values...)]
-        window: list[list] = []
+        # the window as parallel lists: variable bitmask, covered flag
+        # and carried values per row
+        masks: list[int] = []
+        covered: list[bool] = []
+        rows: list[tuple] = []
         vhist: list[dict] = []
         mn = 0
         if state.exists:
             vals = state.get
             mn = vals[0] or 0
-            if var_state:
-                ms = list(vals[1] or [])
-                cs = list(vals[2] or [])
-                col_arrays = [
-                    list(vals[3 + ci] or [])
-                    for ci in range(len(src_cols))
-                ]
-                window = [
-                    [
-                        ms[j],
-                        bool(cs[j]),
-                        tuple(arr[j] for arr in col_arrays),
-                    ]
-                    for j in range(len(ms))
-                ]
-                if max_prev:
-                    vhist = _prev_load(
-                        vals, 3 + len(src_cols), need_cols, max_prev
-                    )
+            if hist is None:
+                masks = list(vals[1] or [])
+                covered = [bool(c) for c in vals[2] or []]
+                rows = list(zip(*[vals[3 + ci] or [] for ci in range(len(cols))]))
             else:
-                for i in range(hist):
-                    off = 1 + stride * i
+                for off in range(1, 1 + stride * hist, stride):
                     if vals[off] is not None:
-                        window.append(
-                            [
-                                vals[off],
-                                bool(vals[off + 1]),
-                                tuple(vals[off + 2 : off + stride]),
-                            ]
-                        )
-                if max_prev:
-                    vhist = _prev_load(
-                        vals, 1 + stride * hist, need_cols, max_prev
-                    )
+                        masks.append(vals[off])
+                        covered.append(bool(vals[off + 1]))
+                        rows.append(tuple(vals[off + 2 : off + stride]))
+            if max_prev:
+                vhist = _prev_load(vals, prev_at, need_cols, max_prev)
         out_rows: list[list] = []
 
-        def measure_row(mp, t, row_var):
-            """Measure values for matched-row index t of match mp —
-            the batch NFA's ALL ROWS emission, verbatim semantics."""
-            vals_out = []
-            for var, col, alias in measures:
-                final = modes.get(alias, "RUNNING") == "FINAL"
-                scope = mp if final else mp[: t + 1]
-                vrows = [j for w, j in scope if w == var]
-                if var == MATCH_NUMBER:
-                    v = mn
-                elif var == CLASSIFIER:
-                    v = row_var
-                elif alias in agg:
-                    fn = agg[alias].lower()
-                    if col == "*":
-                        v = len(vrows) if fn == "count" else None
-                    else:
-                        ci = src_cols.index(col)
-                        nn = [
-                            window[j][2][ci]
-                            for j in vrows
-                            if window[j][2][ci] is not None
-                        ]
-                        if fn == "count":
-                            v = len(nn)
-                        elif not nn:
-                            v = None
-                        elif fn == "sum":
-                            v = sum(nn)
-                        elif fn == "avg":
-                            v = float(sum(nn)) / len(nn)
-                        elif fn == "min":
-                            v = min(nn)
-                        else:
-                            v = max(nn)
-                elif len(vrows) <= nav_offset.get(alias, 0):
-                    # not reached yet / SQL:2016 offset past the mapped
-                    # count -> NULL
-                    v = None
-                else:
-                    noff = nav_offset.get(alias, 0)
-                    j = (
-                        vrows[noff]
-                        if nav.get(alias) == "FIRST"
-                        else vrows[-1 - noff]
-                    )
-                    v = window[j][2][src_cols.index(col)]
-                vals_out.append(v)
-            return vals_out
+        def val_at(i, c):
+            return rows[i][col_at[c]]
 
         def drop_head(k_rows: int):
-            nonlocal window
-            for row in window[:k_rows]:
-                if with_unmatched and not row[1]:
-                    out_rows.append(
-                        list(row[2]) + [None] * len(measures)
-                    )
-            window = window[k_rows:]
+            nonlocal masks, covered, rows
+            if with_unmatched:
+                for row, cov in zip(rows[:k_rows], covered):
+                    if not cov:
+                        out_rows.append(list(row) + [None] * len(m_fields))
+            masks, covered, rows = (
+                masks[k_rows:], covered[k_rows:], rows[k_rows:]
+            )
 
         for pdf in batches:
-            sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-            pdf = pdf.sort_values(sort_cols)
+            pdf = pdf.sort_values(
+                [ts_col] + ([tiebreak_col] if tiebreak_col else [])
+            )
             flags = [
-                pdf[c].fillna(False).to_numpy(dtype=bool)
-                for c in flag_cols
+                pdf[c].fillna(False).to_numpy(dtype=bool) for c in flag_cols
             ]
-            src_vals = {c: list(pdf[c]) for c in src_cols}
+            col_vals = {c: list(pdf[c]) for c in dict.fromkeys(cols + need_cols)}
             for r in range(len(pdf)):
                 cur_vals = None
                 if max_prev:
-                    cur_vals = {
-                        c: _scalar(src_vals[c][r]) for c in need_cols
-                    }
+                    cur_vals = {c: _scalar(col_vals[c][r]) for c in need_cols}
                 mask = 0
-                for b in range(len(pattern_vars)):
-                    pv = pattern_vars[b]
+                for b, pv in enumerate(pattern_vars):
                     if flags[b][r] and (
                         not pchecks.get(pv)
                         or _prev_ok(pchecks[pv], cur_vals, vhist)
@@ -1477,133 +865,85 @@ def bounded_nfa_all_rows_stream(
                 if max_prev:
                     vhist.append(cur_vals)
                     vhist = vhist[-max_prev:]
-                window.append(
-                    [
-                        mask,
-                        False,
-                        tuple(_scalar(src_vals[c][r]) for c in src_cols),
-                    ]
-                )
-                def _dec() -> bool:
-                    if time_bounded:
-                        return (
-                            len(window) >= 2
-                            and (
-                                window[-1][2][ts_idx]
-                                - window[0][2][ts_idx]
-                            ).total_seconds()
-                            > within_seconds
-                        )
-                    if break_decided:
-                        if window and window[0][0] == 0:
-                            return True
-                        for j in range(1, len(window)):
-                            if window[j][0] == 0:
-                                return len(window) >= j + max_next
-                        return False
-                    return len(window) >= max_len + max_next
-
-                while _dec():
-                    if break_decided and window[0][0] == 0:
-                        # break row at the head: no match anchors here
-                        # (drop_head still emits it as unmatched when
-                        # WITH UNMATCHED ROWS asks)
-                        drop_head(1)
+                masks.append(mask)
+                covered.append(False)
+                rows.append(tuple(_scalar(col_vals[c][r]) for c in cols))
+                while _decidable(masks, rows):
+                    if break_decided and masks[0] == 0:
+                        drop_head(1)  # break row at the head
                         continue
-                    if within_seconds is None:
-                        lim = len(window) - 1 - max_next
+                    if within is None:
+                        lim = len(rows) - 1 - max_next
                     else:
-                        t0 = window[0][2][ts_idx]
+                        t0 = rows[0][ts_idx]
                         lim = 0
                         while (
-                            lim + 1 < len(window)
-                            and (
-                                window[lim + 1][2][ts_idx] - t0
-                            ).total_seconds()
-                            <= within_seconds
+                            lim + 1 < len(rows)
+                            and (rows[lim + 1][ts_idx] - t0).total_seconds()
+                            <= within
                         ):
                             lim += 1
                         if not time_bounded:
-                            # bounded pattern: cap at max_len rows so
-                            # a WITHIN span reaching the window end
-                            # cannot stall the max_next wait forever
-                            # at stream end (see bounded_nfa_stream)
+                            # bounded pattern: a head-anchored match uses
+                            # at most max_len rows, so NEXT targets past
+                            # that are never consulted — without this cap
+                            # a WITHIN span reaching the window end stalls
+                            # the decision forever at stream end
                             lim = min(lim, max_len - 1)
-                    if max_next and len(window) - 1 - lim < max_next:
-                        break  # successors not yet arrived
-                    mp = _match_bounded(
-                        ast,
-                        [(row[0], None, None) for row in window],
-                        var_bit,
-                        lim,
-                        cross_checks=cross_checks,
-                        val_at=lambda i, c: window[i][2][
-                            src_cols.index(c)
-                        ],
-                        next_checks=nchecks or None,
+                    if max_next and len(rows) - 1 - lim < max_next:
+                        break  # NEXT targets have not arrived yet
+                    mp = match_at(
+                        ast, masks, var_bit, 0, lim, checks, val_at, nchecks
                     )
-                    if mp:
-                        mn += 1
-                        for j_var, j in mp:
-                            window[j][1] = True
-                        for t, (row_var, j) in enumerate(mp):
-                            if row_var in excluded:
-                                continue
-                            out_rows.append(
-                                list(window[j][2])
-                                + measure_row(mp, t, row_var)
-                            )
-                        drop_head(_skip_drop(mp, skip_past, skip_to))
-                    else:
+                    if not mp:
                         drop_head(1)
-        if var_state:
-            if len(window) > TIME_WINDOW_ROW_CAP:
-                raise ValueError(
-                    f"WITHIN window for key {key[0]!r} holds "
-                    f"{len(window)} undecided rows (> "
-                    f"{TIME_WINDOW_ROW_CAP}): "
-                    + (
-                        "no BREAK row (a row matching no pattern "
-                        "variable) arrived to bound the partial-match "
-                        "state — add a WITHIN bound, raise "
-                        "SPARK_GRAFT_CEP_ROW_CAP, or run the "
-                        "statement in batch"
-                        if break_decided
-                        else "the per-key rate x WITHIN span outgrows "
-                        "the streaming state bound — shorten WITHIN, "
-                        "raise SPARK_GRAFT_CEP_ROW_CAP, or run the "
-                        "statement in batch"
-                    )
+                        continue
+                    mn += 1
+                    if all_rows:
+                        for _, j in mp:
+                            covered[j] = True
+                        for t, (row_var, j) in enumerate(mp):
+                            if row_var not in excluded:
+                                out_rows.append(
+                                    list(rows[j]) + emit(mp, t, val_at, mn)
+                                )
+                    else:
+                        out_rows.append(
+                            [key[0]] + emit(mp, len(mp) - 1, val_at, mn)
+                        )
+                    drop_head(next_start(mp, 0, skip_past, skip_to))
+        if (time_bounded or break_decided) and len(rows) > TIME_WINDOW_ROW_CAP:
+            raise ValueError(
+                f"WITHIN window for key {key[0]!r} holds "
+                f"{len(rows)} undecided rows (> "
+                f"{TIME_WINDOW_ROW_CAP}): "
+                + (
+                    "no BREAK row (a row matching no pattern "
+                    "variable) arrived to bound the partial-match "
+                    "state — add a WITHIN bound, raise "
+                    "SPARK_GRAFT_CEP_ROW_CAP, or run the "
+                    "statement in batch"
+                    if break_decided
+                    else "the per-key rate x WITHIN span outgrows "
+                    "the streaming state bound — shorten WITHIN, "
+                    "raise SPARK_GRAFT_CEP_ROW_CAP, or run the "
+                    "statement in batch"
                 )
-            flat = [
-                mn,
-                [row[0] for row in window],
-                [row[1] for row in window],
-                *[
-                    [row[2][ci] for row in window]
-                    for ci in range(len(src_cols))
-                ],
-            ]
+            )
+        if hist is None:
+            flat = [mn, masks, covered, *[list(c) for c in zip(*rows)]]
+            if not rows:
+                flat += [[] for _ in cols]
         else:
             flat = [mn]
-            for mask, covered, vals_t in window:
-                flat += [mask, covered, *vals_t]
-            flat += [None] * (1 + stride * hist - len(flat))
+            for mask, cov, row in zip(masks, covered, rows):
+                flat += [mask, cov, *row]
+            flat += [None] * (prev_at - len(flat))
         if max_prev:
             flat += _prev_flat(vhist, need_cols, max_prev)
         state.update(tuple(flat))
         if out_rows:
-            data: dict = {}
-            for ci, c in enumerate(src_cols):
-                data[c] = pd.Series(
-                    [row[ci] for row in out_rows], dtype=object
-                )
-            off = len(src_cols)
-            for j, (_, _, alias) in enumerate(measures):
-                data[alias] = pd.Series(
-                    [row[off + j] for row in out_rows], dtype=object
-                )
-            yield pd.DataFrame(data)
+            yield pd.DataFrame(out_rows, columns=out_names, dtype=object)
 
     return stream_df.groupBy(key_col).applyInPandasWithState(
         update,
@@ -2134,35 +1474,6 @@ def topn_stream(
 # checks_per_flag[i] is a list of (lhs, op, rhs) and each operand is
 # ("col", name) | ("prev", name, n) | ("lit", value).
 
-_CMP_OPS = {
-    ">": lambda a, b: a > b,
-    ">=": lambda a, b: a >= b,
-    "<": lambda a, b: a < b,
-    "<=": lambda a, b: a <= b,
-    "=": lambda a, b: a == b,
-    "!=": lambda a, b: a != b,
-    "<>": lambda a, b: a != b,
-}
-
-
-def _scalar(v):
-    """numpy/pandas scalar -> plain python (None for NaN/NaT) for the
-    GroupState tuple and for type-stable comparisons."""
-    if v is None:
-        return None
-    try:
-        if pd.isna(v):
-            return None
-    except (TypeError, ValueError):
-        pass
-    item = getattr(v, "item", None)
-    if item is not None and not isinstance(v, pd.Timestamp):
-        try:
-            return item()
-        except (TypeError, ValueError):
-            return v
-    return v
-
 
 def _prev_schema_suffix(need_cols, max_prev, col_types):
     """State fields appended after a matcher's own: a valid-row count
@@ -2198,34 +1509,6 @@ def _prev_flat(hist, need_cols, max_prev):
     for row in hist:
         flat += [row[c] for c in need_cols]
     return flat
-
-
-def _next_ok(nxt_checks, seq, pcols):
-    """Evaluate a candidate window's NEXT conjuncts. ``nxt_checks[vi]``
-    holds variable vi's (lhs, op, rhs) comparisons; a ("next", col, n)
-    operand reads window row vi+n (the engine guarantees vi+n stays
-    inside the window), a ("col", name) operand reads row vi itself.
-    NULL operands make the comparison false — the batch semantics."""
-    if not nxt_checks:
-        return True
-    for vi, checks in enumerate(nxt_checks):
-        for lhs, op, rhs in checks:
-
-            def operand(spec):
-                if spec[0] == "lit":
-                    return spec[1]
-                pos = vi if spec[0] == "col" else vi + spec[2]
-                return seq[pos][2][pcols.index(spec[1])]
-
-            a, b = operand(lhs), operand(rhs)
-            if a is None or b is None:
-                return False
-            try:
-                if not _CMP_OPS[op](a, b):
-                    return False
-            except TypeError:
-                return False
-    return True
 
 
 def _prev_ok(checks, cur, hist):
