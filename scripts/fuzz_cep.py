@@ -18,8 +18,19 @@ the row->variable mapping of any match is recoverable from the input
 chars alone — which is what lets the reference model SKIP TO targets and
 exclusion sets without instrumenting the regex.
 
-Every fourth case also streams: the same statement runs through
-``Engine.sql_stream`` over a micro-batched replay
+The OVERLAP family (~40% of the sequential-grammar cases) breaks that
+on purpose: each variable accepts a char SET (``A AS A.et IN ('a',
+'b')``, ``B AS B.et IN ('b', 'c')``) and the reference uses the
+matching character classes, so the alternatives of an ``(X|Y)`` group
+can match the same row and only the SQL:2016 preference order (left
+alternative first) decides which one maps it. Each variable becomes a
+named group; for a variable outside every quantifier the group's
+capture is the one row it maps, and the engine's CLASSIFIER() at that
+row must name it. The family compares spans + those classifiers under
+SKIP TO NEXT ROW / SKIP PAST LAST ROW, without exclusions.
+
+Every fourth case, and every overlap case, also streams: the same
+statement runs through ``Engine.sql_stream`` over a micro-batched replay
 (``streaming/parity.run_stream_over_batch``) and is checked against the
 same ``re`` reference — an oracle independent of the CEP core both the
 batch NFA and the stream's decision window share. Each key of a stream
@@ -188,12 +199,81 @@ def decision_pad(py_regex, within):
     return max(pad, within + 1 if within else 0)
 
 
-def match_spans(rows):
-    """Emitted row set per match, keyed (partition, match_number)."""
-    spans = {}
+def overlap_defines(rng, used, pat_e):
+    """Char-set DEFINEs for the overlap family: each variable accepts its
+    own char and, 60% of the time, another used variable's; the two
+    alternatives of an ``(X|Y)`` group share a char 80% of the time, so
+    one row can match either. Returns (defines SQL, var -> sorted char
+    set)."""
+    sets = {v: {CHARS[v]} for v in used}
+    for v in used:
+        others = [o for o in used if o != v]
+        if others and rng.random() < 0.6:
+            sets[v].add(CHARS[rng.choice(others)])
+    for pair in pyre.findall(r"\((\w)\|(\w)\)", pat_e):
+        if rng.random() < 0.8:
+            x, y = rng.sample(pair, 2)
+            sets[y].add(CHARS[x])
+    sets = {v: sorted(c) for v, c in sets.items()}
+    defines = ", ".join(
+        f"{v} AS {v}.et IN ({', '.join(repr(c) for c in sets[v])})"
+        for v in sorted(sets)
+    )
+    return defines, sets
+
+
+def class_regex(py_regex, sets):
+    """The reference regex with each variable's char replaced by a named
+    group over its char class: ``a`` -> ``(?P<A>[ab])``."""
+    var_of = {c: v for v, c in CHARS.items()}
+    return pyre.sub(
+        "[a-d]",
+        lambda m: f"(?P<{var_of[m[0]]}>[{''.join(sets[var_of[m[0]]])}])",
+        py_regex,
+    )
+
+
+def pinned_vars(py_regex):
+    """Named groups outside every quantifier: in a match each maps at
+    most one row, the row its group captured (inside a repeat the
+    capture is only the last iteration's, so those are not compared)."""
+    tree = pyre._parser.parse(py_regex)
+    names = {gid: v for v, gid in tree.state.groupdict.items()}
+    out = set()
+
+    def walk(items):
+        for op, av in items:
+            if op is pyre._constants.SUBPATTERN:
+                if av[0] in names:
+                    out.add(names[av[0]])
+                walk(av[-1])
+            elif op is pyre._constants.BRANCH:
+                for branch in av[1]:
+                    walk(branch)
+
+    walk(tree)
+    return out
+
+
+def match_spans(rows, pins=None):
+    """Emitted row set per match, keyed (partition, match_number). With
+    ``pins`` (span -> ((seq, var), ...)) each span also carries the
+    engine's CLASSIFIER() at the pinned rows."""
+    spans, cls = {}, {}
     for r in rows:
         spans.setdefault((r.user_id, r.mn), []).append(r.seq)
-    return sorted(tuple(sorted(v)) for v in spans.values())
+        if pins is not None:
+            cls[r.user_id, r.mn, r.seq] = r.cls
+    out = []
+    for km, seqs in spans.items():
+        span = tuple(sorted(seqs))
+        if pins is None:
+            out.append(span)
+        else:
+            out.append(
+                (span, tuple((q, cls[(*km, q)]) for q, _ in pins.get(span, ())))
+            )
+    return sorted(out)
 
 
 def run_or_error(fn):
@@ -218,6 +298,7 @@ def main(n_cases, seed):
     failures = 0
     tried = 0
     streamed = 0
+    n_overlap = 0
     while tried < n_cases:
         roll = rng.random()
         if roll < 0.12:
@@ -226,11 +307,24 @@ def main(n_cases, seed):
             pat_e, pat_r, used, excl = wide_pattern(rng)
         else:
             pat_e, pat_r, used, excl = rand_pattern(rng)
-        if len(set(used)) != len(used) or not min_len_ok(pat_r):
+        overlap = roll >= 0.22 and rng.random() < 0.4
+        if (
+            len(set(used)) != len(used)
+            or not min_len_ok(pat_r)
+            or (overlap and excl)
+        ):
             continue
-        defines = ", ".join(
-            f"{v} AS {v}.et = '{PERM_CHARS[v]}'" for v in sorted(set(used))
-        )
+        pinned = set()
+        if overlap:
+            defines, sets = overlap_defines(rng, used, pat_e)
+            pat_r = class_regex(pat_r, sets)
+            pinned = pinned_vars(pat_r)
+            n_overlap += 1
+        else:
+            defines = ", ".join(
+                f"{v} AS {v}.et = '{PERM_CHARS[v]}'"
+                for v in sorted(set(used))
+            )
         alphabet = [PERM_CHARS[v] for v in used] + ["x"]
         # ~30% of cases: THREE partitions incl. a NULL key (a NULL
         # partition key is its own group — the round-8 null-safe
@@ -253,7 +347,9 @@ def main(n_cases, seed):
         key_types = {k: _key_string() for k in keys}
         tried += 1
         # skip mode: NEXT ROW / PAST LAST ROW / TO FIRST|LAST <var>
-        sk = rng.random()
+        # (the overlap family draws NEXT / PAST only: a SKIP TO target
+        # row is not recoverable from the chars there)
+        sk = rng.random() * (0.7 if overlap else 1)
         if sk < 0.35:
             skip_mode = ("NEXT",)
         elif sk < 0.7:
@@ -270,7 +366,9 @@ def main(n_cases, seed):
         # reachable from start s — the reference matches against the
         # TRUNCATED input (greedy behavior beyond the horizon included)
         within = rng.randint(1, 6) if rng.random() < 0.3 else None
-        stream_case = tried % 4 == 0
+        # every overlap case streams too: the decision window is the
+        # leg that runs plain sequences and alternation groups
+        stream_case = tried % 4 == 0 or overlap
         if stream_case:
             pad = "x" * decision_pad(pat_r, within)
             key_types = {k: t + pad for k, t in key_types.items()}
@@ -288,11 +386,13 @@ def main(n_cases, seed):
         )
         data.createOrReplaceTempView("__fuzz")
         stmt = f"""
-                SELECT user_id, seq, mn FROM __fuzz
+                SELECT user_id, seq, mn{', cls' if overlap else ''}
+                FROM __fuzz
                 MATCH_RECOGNIZE (
                     PARTITION BY user_id
                     ORDER BY ts, seq
                     MEASURES MATCH_NUMBER() AS mn
+                        {', CLASSIFIER() AS cls' if overlap else ''}
                     ALL ROWS PER MATCH
                     AFTER MATCH {skip_sql}
                     PATTERN ({pat_e})
@@ -319,8 +419,9 @@ def main(n_cases, seed):
         excl_chars = {PERM_CHARS[v] for v in excl}
 
         def expected_for(ktypes: str):
-            """Per-partition reference: (kept spans, want_err)."""
-            per_start = {}
+            """Per-partition reference: (kept spans, want_err, per
+            start the (row, var) pairs of its pinned variables)."""
+            per_start, row_pins = {}, {}
             for st in range(len(ktypes)):
                 hay = (
                     ktypes if within is None else ktypes[: st + within + 1]
@@ -328,8 +429,15 @@ def main(n_cases, seed):
                 m = rx.match(hay, st)
                 if m and m.end() > st:
                     per_start[st] = m.end() - 1
+                    row_pins[st] = tuple(
+                        sorted(
+                            (m.start(v), v)
+                            for v in pinned
+                            if m.group(v) is not None
+                        )
+                    )
             if skip_mode[0] == "NEXT":
-                return sorted(per_start.items()), None
+                return sorted(per_start.items()), None, row_pins
             # shared walk: keep a match when it starts at/after the
             # resume cursor; the skip mode decides the next cursor
             kept, cur = [], 0
@@ -355,13 +463,13 @@ def main(n_cases, seed):
                     if t <= st:
                         # resume target IS the match start: the engine
                         # raises Flink's loop-forever error
-                        return kept, "loop"
+                        return kept, "loop", row_pins
                     cur = t
-            return kept, None
+            return kept, None, row_pins
 
-        want, want_err = [], None
+        want, want_err, pins = [], None, {}
         for k in keys:
-            kept, err = expected_for(key_types[k])
+            kept, err, row_pins = expected_for(key_types[k])
             if err:
                 want_err = err
                 break
@@ -371,8 +479,12 @@ def main(n_cases, seed):
                     for j in range(st, e + 1)
                     if key_types[k][j] not in excl_chars
                 )
-                if emitted:
-                    want.append(emitted)
+                if not emitted:
+                    continue
+                pins[emitted] = tuple(
+                    (seq_off[k] + j, v) for j, v in row_pins[st]
+                )
+                want.append((emitted, pins[emitted]) if overlap else emitted)
         want.sort()
 
         def check(leg, got_rows, engine_err):
@@ -387,7 +499,7 @@ def main(n_cases, seed):
                     flush=True,
                 )
                 return 1
-            got = match_spans(got_rows)
+            got = match_spans(got_rows, pins if overlap else None)
             if got == want:
                 return 0
             print(
@@ -424,7 +536,8 @@ def main(n_cases, seed):
                 )
         tried_tick(tried, n_cases, failures)
     print(
-        f"DONE: {tried} cases ({streamed} streamed), {failures} failures",
+        f"DONE: {tried} cases ({streamed} streamed, {n_overlap} "
+        f"overlap), {failures} failures",
         flush=True,
     )
     return 1 if failures else 0

@@ -9,9 +9,11 @@ conjuncts on sequences — are replayed as micro-batched file streams
 through ``Engine.sql_stream`` and compared row-for-row (Counter of
 output tuples, payload measures included) against the batch
 MATCH_RECOGNIZE lowering on the same data. This adversarially checks
-the O(1)/O(L)-state matchers' overlap handling: leftmost-start
-priority, the greedy backtrack candidate (``pend``), break-row
-restarts, skip modes, WITHIN bounds, and cross-micro-batch state.
+the O(1)-state run matchers' overlap handling (leftmost-start
+priority, the greedy backtrack candidate ``pend``, break-row
+restarts), the decision window's gate (the sequence and bounded
+families carry exactly the TERM padding it needs), skip modes, WITHIN
+bounds, and cross-micro-batch state.
 A separate family draws provably disjoint DEFINEs (``v = k``, a
 distinct k per variable), the only case where the A B+ C funnel leg
 takes SKIP TO NEXT ROW and WITHIN itself, plus equal-valued respellings
@@ -101,10 +103,14 @@ def rand_selfnav_conjunct(rng, v):
 
 
 def gen_bounded(rng):
-    """Bounded shapes for the Lmax-window matcher: optionals, bounded
-    quantifiers (greedy and reluctant), alternation groups, PERMUTE.
-    Returns (pattern, defines, vars, skip, within, pad) where pad =
-    Lmax - 1 trailing TERM rows flush every pending decision window."""
+    """Bounded shapes for the decision-window matcher: optionals,
+    bounded quantifiers (greedy and reluctant), alternation groups,
+    PERMUTE. Returns (pattern, defines, vars, skip, within, pad) where
+    pad = G - 1 trailing TERM rows decide the start at every real row:
+    the matcher decides a start once G = max(Lmax, R + 1) rows exist,
+    R the furthest row a match from it can read (each variable's
+    latest position plus its NEXT offset). A gate that waits longer
+    leaves a real start undecided, which shows as a MISMATCH."""
     if rng.random() < 0.18:
         k = rng.randint(2, 3)
         vs = ["A", "B", "C"][:k]
@@ -118,6 +124,7 @@ def gen_bounded(rng):
     n_pos = rng.randint(2, 3)
     terms, used = [], []
     lmax = 0
+    latest = {}  # var -> the latest row it can map in a match
     for pi in range(n_pos):
         if rng.random() < 0.3 and len(avail) >= n_pos - pi + 1:
             vs = [avail.pop(0), avail.pop(0)]
@@ -140,6 +147,8 @@ def gen_bounded(rng):
         if quant.startswith("{") and rng.random() < 0.3:
             quant += "?"  # reluctant ({n,m}? only — A?? not in grammar)
         terms.append(term + quant)
+        for v in term.strip("()").split("|"):
+            latest[v] = lmax + hi - 1
         lmax += hi
         if pi == 0:
             first_vars = set(used)
@@ -150,18 +159,18 @@ def gen_bounded(rng):
     # in ONE statement — the corners VERDICT r7 asked the fuzzer to
     # compose rather than sample independently
     hard = bool(later) and rng.random() < 0.2
-    max_next = 0
+    reach = lmax - 1
     if rng.random() < 0.25:
         # physical PREV conjunct (arrival-history evaluation)
         v = rng.choice(used)
         defs[v] += f" AND {rand_prev_conjunct(rng, v)}"
     elif rng.random() < 0.3:
-        # physical NEXT conjunct (decision-window lookahead, round 8);
-        # the decision defers by the max offset, so the TERM padding
-        # grows by the same amount (below)
+        # physical NEXT conjunct (decision-window lookahead, round 8):
+        # its target may lie past the match, and the decision waits
+        # for it (reach, below)
         v = rng.choice(used)
         nc = rand_next_conjunct(rng, v, 2)
-        max_next = 2 if ", 2" in nc else 1
+        reach = max(reach, latest[v] + (2 if ", 2" in nc else 1))
         defs[v] += f" AND {nc}"
     if later and (hard or rng.random() < 0.3):
         # cross-variable conjunct on a later variable, referencing an
@@ -211,10 +220,7 @@ def gen_bounded(rng):
         else ""
     )
     kind = "bounded_ar" if (excl_var is not None or hard) else "bounded"
-    return (
-        " ".join(terms), defines, used, skip, within,
-        lmax - 1 + max_next, kind,
-    )
+    return " ".join(terms), defines, used, skip, within, reach, kind
 
 
 def gen_timebound(rng):
@@ -337,13 +343,14 @@ def gen_case(rng):
         pvars = ["A", "B", "C", "D"][:length]
         pattern = " ".join(pvars)
         defines = []
-        max_next = 0  # the matchers' decision gate is
-        # max_len + max_next ROWS with max_next the RAW largest NEXT
-        # offset (stateful.py _decidable — a conservative per-head
-        # wait, in-window lookahead included), so the TERM padding
-        # must grow by the raw offset, not just the past-window
-        # overshoot (round-9 fix: the overshoot model under-padded
-        # and a tail match could stay undecided, a false MISMATCH)
+        # the decision window decides a start once G = max(L, R + 1)
+        # rows exist, R the furthest row a match from it reads (the
+        # last position, or a variable's position plus its NEXT
+        # offset). TERM rows fail every atom, so the latest start that
+        # can match is L rows before the end: pad G - L rows (gen_data
+        # adds at least one), and a gate that waits past the padding
+        # leaves that start undecided (a MISMATCH)
+        reach = length - 1
         for vi, v in enumerate(pvars):
             d = rand_local(rng, v)
             if rng.random() < 0.3:
@@ -354,8 +361,7 @@ def gen_case(rng):
                     nc = rand_next_conjunct(rng, v, max_n)
                     import re as _re
                     m = _re.search(r"NEXT\(\w+\.\w+(?:, (\d+))?\)", nc)
-                    n = int(m.group(1) or 1)
-                    max_next = max(max_next, n)
+                    reach = max(reach, vi + int(m.group(1) or 1))
                     d += f" AND {nc}"
             defines.append(f"{v} AS {d}")
         skip = rng.choice(["PAST LAST ROW", "TO NEXT ROW"])
@@ -366,7 +372,7 @@ def gen_case(rng):
         )
         return (
             pattern, ", ".join(defines), pvars, skip, within,
-            1 + max_next, "seq",
+            reach + 1 - length, "seq",
         )
     if shape < 0.79:
         # A+ B run: A needs a required row-local atom (terminator)

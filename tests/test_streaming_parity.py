@@ -598,7 +598,7 @@ def test_stream_static_dim_join_parity(spark, sf_small):
 
 def test_three_step_sequence_statement_streams_matches_batch(spark, sf_small):
     """A 3-step adjacent sequence MATCH_RECOGNIZE streamed through
-    Engine.sql_stream (general sequence leg, state = last L-1 rows per
+    Engine.sql_stream (decision-window leg, state = last L-1 rows per
     key) over an in-order replay finds exactly the batch (A B C)
     matches, including sequences split across micro-batch
     boundaries."""
@@ -722,8 +722,8 @@ def test_stream_match_recognize_general_leg_guards(spark, sf_small):
         ),
         {"events_mr_guard": keyed},
     ) is not None
-    # cross-variable DEFINE on a BOUNDED sequence: streams (reroutes
-    # to the decision-window leg, round 7)
+    # cross-variable DEFINE on a BOUNDED sequence: streams on the
+    # decision-window leg (round 7)
     assert eng.sql_stream(
         tmpl.format(
             key="user_id",
@@ -772,8 +772,8 @@ def test_stream_match_recognize_general_leg_guards(spark, sf_small):
         {"events_mr_guard": ev},
     ) is not None
     # NEXT past the match window (lookahead from the LAST variable):
-    # streams since round 8 — reroutes to the bounded-window leg,
-    # whose decision-wait buffers the successors
+    # streams since round 8 — the decision window waits for the
+    # successors it reads
     assert eng.sql_stream(
         tmpl.format(
             key="user_id",
@@ -1911,7 +1911,7 @@ def test_bounded_pattern_stream_cross_variable_defines(spark):
 def test_bounded_pattern_stream_prev_navigation(spark):
     """Physical PREV conjuncts stream on the bounded legs: evaluated
     per arriving row against the bounded arrival history in the same
-    keyed state (exactly the sequence leg's mechanism), composing with
+    keyed state (exactly the run legs' mechanism), composing with
     quantifiers/optionals — ONE ROW and ALL ROWS both equal the batch
     lowering's lag-column semantics, including NULL lags at partition
     heads and predecessors in earlier micro-batches."""
@@ -2454,7 +2454,7 @@ def test_general_run_stream_payload_measures_match_batch(spark):
 
 def test_eq_literal_statement_with_payload_measures_streams(spark, sf_small):
     """An eq-literal statement whose MEASURES read payload columns
-    (Var.event_id) carries them through the general sequence leg's
+    (Var.event_id) carries them through the decision window's
     keyed state — same SQL, batch-equal results."""
     from training_flink_sql_cc_src_spark.engine import Engine
     from training_flink_sql_cc_src_spark.plans.router import StatementRouter
@@ -3626,9 +3626,10 @@ def test_next_lookahead_bounded_and_timebound_legs(spark):
     """Physical NEXT(col, n) conjuncts stream on the bounded AND
     time-bounded window legs (round 8): evaluated at DECISION time
     against window successors, with each head decision deferred until
-    max_next successors exist. Exact batch parity, including NEXT on
-    quantified vars, alternation branches, and an unbounded run under
-    WITHIN (where NEXT targets may lie past the horizon)."""
+    every row a head-anchored match can read exists. Exact batch
+    parity, including NEXT on quantified vars, alternation branches,
+    an unbounded run under WITHIN (where NEXT targets may lie past the
+    horizon), and a NEXT inside the match with no terminator rows."""
     from collections import Counter
 
     from training_flink_sql_cc_src_spark.engine import Engine
@@ -3645,12 +3646,23 @@ def test_next_lookahead_bounded_and_timebound_legs(spark):
          "", "PAST LAST ROW"),
         ("A+ B", "A AS A.v >= 3 AND A.v <> NEXT(A.v), B AS B.v <= 2",
          "WITHIN INTERVAL '9' SECOND", "PAST LAST ROW"),
-        # bounded pattern + WITHIN + NEXT reroutes to the time-bounded
-        # state (fixed slots cannot buffer the successor wait)
+        # bounded pattern + WITHIN + NEXT: still the length rule (its
+        # rows hold every NEXT target; WITHIN only caps the match rows)
         ("A{1,2} B", "A AS A.v >= 2 AND A.v <= NEXT(A.v), B AS B.v <= 4",
          "WITHIN INTERVAL '6' SECOND", "PAST LAST ROW"),
     ]
-    for pattern, defines, within, skip in cases:
+    inputs = [(df, *case) for case in cases] + [
+        # NO terminator rows, NEXT inside the match (A reads the first B
+        # row): the head decides once the match's last row can have
+        # arrived (3 rows here), so a key's trailing A B B match emits
+        # as its last row arrives, as batch finds it
+        (
+            _time_bounded_df(spark, seed=17, pad=0),
+            "A B{1,2}", "A AS NEXT(A.v) > A.v, B AS B.v <= 4", "",
+            "PAST LAST ROW",
+        ),
+    ]
+    for df, pattern, defines, within, skip in inputs:
         stmt = f"""
             SELECT k, CAST(m1 AS LONG) AS m1 FROM nx_parity
             MATCH_RECOGNIZE (
@@ -3734,7 +3746,7 @@ def test_funnel_first_navigation_measures_match_batch(spark):
 def test_multi_key_partition_by_streams_all_legs(spark):
     """Multi-column PARTITION BY streams on every MATCH_RECOGNIZE leg
     via the lossless to_json(struct(...)) composite key (engine.py):
-    the general sequence matcher, the bounded-window leg in both PER
+    a plain sequence, the bounded-window leg in both PER
     MATCH modes, and the time-bounded WITHIN leg all group on the
     synthetic key and the
     registered view restores the original partition columns (types
@@ -4317,8 +4329,8 @@ def test_stream_measure_nav_offsets_funnel_native(spark):
 
 def test_stream_measure_nav_offsets_sequence_null(spark):
     """On a plain sequence every variable maps exactly ONE row, so an
-    offset >= 1 measures NULL — emitted as a typed NULL literal on the
-    O(1) sequence leg, equal to batch."""
+    offset >= 1 measures NULL — on the decision-window leg, equal to
+    batch."""
     _cep_navoff_parity(
         spark,
         _cep_navoff_df(spark),

@@ -32,12 +32,6 @@ from .session import get_spark, register_views
 from .streaming.pipeline import PipelineRunner
 
 
-class _RerouteToBounded(Exception):
-    """Internal control flow: a sequence shape hit a capability only the
-    bounded-window leg has (e.g. NEXT past the match window, whose
-    decision-wait buffers the successors) — the caller re-dispatches."""
-
-
 class Engine:
     def __init__(
         self,
@@ -330,22 +324,22 @@ class Engine:
         Streaming rejects; the streaming legs instead key per-partition
         state (streaming/stateful.py — Flink CEP's model). Two kinds:
 
-        - the O(1)-state run matchers for the general-predicate shapes —
-          plain adjacent sequences (``sequence_flags_stream``), the A+ B
-          run (``run_flags_stream``) and the A B+ C funnel
+        - one decision-window driver (``bounded_nfa_stream``, see
+          ``_match_recognize_stream_bounded``) for every BOUNDED pattern
+          — plain sequences, quantifiers, groups, PERMUTE — in both PER
+          MATCH modes, with cross-variable DEFINEs, physical PREV/NEXT
+          navigation, SKIP TO FIRST/LAST <var>, aggregate, FIRST/LAST
+          and CLASSIFIER()/MATCH_NUMBER() measures; and, when a run
+          matcher rejects a shape, ANY pattern — decided by the WITHIN
+          horizon with a WITHIN bound, by the first break row without
+          one. Its matcher, skip walk and measure emitter are the batch
+          NFA's (plans/cep_core);
+        - the two O(1)-state run matchers for the unbounded shapes — the
+          A+ B run (``run_flags_stream``) and the A B+ C funnel
           (``mid_run_flags_stream``) — with ARBITRARY (possibly
           overlapping) row-local DEFINEs compiled to JVM flag columns,
-          physical PREV conjuncts from a bounded row history, in-window
-          NEXT lookahead on sequences, payload, aggregate and
-          FIRST/LAST(V.col, n) measures;
-        - one decision-window driver (``bounded_nfa_stream``, see
-          ``_match_recognize_stream_bounded``) for everything else: every
-          bounded pattern, ALL ROWS PER MATCH, cross-variable DEFINEs,
-          SKIP TO FIRST/LAST <var>, CLASSIFIER()/MATCH_NUMBER(); and,
-          when a run matcher rejects a shape, ANY pattern — decided by
-          the WITHIN horizon with a WITHIN bound, by the first break row
-          without one. Its matcher, skip walk and measure emitter are
-          the batch NFA's (plans/cep_core).
+          physical PREV conjuncts from a bounded row history, payload,
+          aggregate and FIRST/LAST(V.col, n) measures.
 
         Multi-column PARTITION BY keys every matcher on a lossless
         to_json(struct(...)) composite, restored on the registered view.
@@ -356,12 +350,7 @@ class Engine:
         forms."""
         from pyspark.sql import functions as F
 
-        from .plans.match_recognize import (
-            _NAV_DEF_RE,
-            _NEXT_RE,
-            _PREV_RE,
-            parse_match_recognize,
-        )
+        from .plans.match_recognize import parse_match_recognize
 
         spec = parse_match_recognize(stmt)
         if spec is None:
@@ -369,11 +358,11 @@ class Engine:
 
         def unsupported(why: str):
             return NotImplementedError(
-                f"MATCH_RECOGNIZE over a stream: {why} — the streaming leg "
-                "supports plain adjacent sequences, A+ B runs, and the "
-                "A B+ C funnel with row-local DEFINEs (arbitrary "
-                "single-row predicates), single- or multi-column "
-                "PARTITION BY, and "
+                f"MATCH_RECOGNIZE over a stream: {why} — the streaming "
+                "legs support every bounded pattern (decided on a window "
+                "of its maximum length), A+ B runs and the A B+ C funnel "
+                "with row-local DEFINEs (arbitrary single-row "
+                "predicates), single- or multi-column PARTITION BY, and "
                 "MEASURES of Var.<columns>; a WITHIN bound streams ANY "
                 "pattern via the time-bounded window leg, and without "
                 "WITHIN the break-row-decided leg streams any pattern "
@@ -422,13 +411,12 @@ class Engine:
             )
 
         def _route() -> str:
-            # BOUNDED patterns beyond plain sequences — quantifiers A{n,m} /
-            # A?, alternation groups, quantified groups, nested groups,
-            # PERMUTE — stream through the bounded-window matcher: a finite
-            # max length means a window of the last Lmax rows decides every
-            # start exactly (the batch AST generator's preference order run
-            # per key). Unbounded quantifiers mixed into such shapes stay
-            # batch-only (no finite window bound).
+            # BOUNDED patterns — plain sequences, quantifiers A{n,m} / A?,
+            # alternation groups, quantified and nested groups, PERMUTE —
+            # stream through the decision window: a finite max length
+            # means a window of the last rows decides every start exactly
+            # (the batch NFA's matcher, run per key). Unbounded shapes go
+            # to the O(1)-state run matchers.
             def _ast_all_bounded(node) -> bool:
                 kind = node[0]
                 if kind == "var":
@@ -446,29 +434,18 @@ class Engine:
                     and not _ast_all_bounded(spec.pattern_ast)
                 )
             )
-            if spec.skip_to is not None and unbounded_shape:
+            if not unbounded_shape:
+                return self._match_recognize_stream_bounded(
+                    stmt, spec, sdf, key, ts_col, tiebreak, unsupported
+                )
+            if spec.skip_to is not None:
                 raise unsupported(
                     "AFTER MATCH SKIP TO FIRST/LAST <var> over an unbounded "
                     "shape (the run matchers implement SKIP PAST LAST ROW "
                     "walks only; bounded patterns resume at the target row "
                     "from the decision window)"
                 )
-            import re as _re_x
-
-            has_cross_define = any(
-                set(
-                    _re_x.findall(
-                        r"\b(\w+)\s*\.",
-                        _NEXT_RE.sub("", _PREV_RE.sub("", spec.defines[v])),
-                    )
-                )
-                - {v}
-                # SELF FIRST/LAST bindings ride the same cross-check
-                # mechanism in the decision-window legs (round 8)
-                or _NAV_DEF_RE.search(spec.defines[v]) is not None
-                for v in dict.fromkeys(spec.pattern)
-            )
-            bounded_extra = (
+            if (
                 # ALL ROWS PER MATCH: the decision window holds the
                 # matched rows the run matchers' O(1) state does not
                 spec.all_rows
@@ -477,37 +454,16 @@ class Engine:
                 or spec.pos_quants
                 or spec.pattern_ast is not None
                 or any(len(p) > 1 for p in spec.positions)
-                # aggregate measures need the matched rows — plain bounded
-                # sequences reroute to the window leg that holds them
-                or (spec.measure_agg and not unbounded_shape)
-                # SKIP TO FIRST/LAST resumes at a window index — plain
-                # sequences reroute for it too
-                or (spec.skip_to is not None and not unbounded_shape)
-                # cross-variable DEFINEs (incl. FIRST/LAST(other.col))
-                # evaluate from the decision window — reroute bounded
-                # sequences; unbounded shapes keep the run legs' loud reject
-                or (has_cross_define and not unbounded_shape)
+            ):
+                raise unsupported(
+                    "an unbounded pattern with ALL ROWS PER MATCH, "
+                    "groups or bounded quantifiers (the Lmax-window "
+                    "matcher needs a finite pattern length; use the "
+                    "batch path)"
+                )
+            return self._match_recognize_stream_general(
+                stmt, spec, sdf, key, ts_col, tiebreak, unsupported
             )
-            if bounded_extra:
-                if unbounded_shape:
-                    raise unsupported(
-                        "an unbounded pattern with ALL ROWS PER MATCH, "
-                        "groups or bounded quantifiers (the Lmax-window "
-                        "matcher needs a finite pattern length; use the "
-                        "batch path)"
-                    )
-                return self._match_recognize_stream_bounded(
-                    stmt, spec, sdf, key, ts_col, tiebreak, unsupported
-                )
-
-            try:
-                return self._match_recognize_stream_general(
-                    stmt, spec, sdf, key, ts_col, tiebreak, unsupported
-                )
-            except _RerouteToBounded:
-                return self._match_recognize_stream_bounded(
-                    stmt, spec, sdf, key, ts_col, tiebreak, unsupported
-                )
 
         def _expand_composite(rewritten: str) -> str:
             """Multi-key PARTITION BY tail: the leg registered its view
@@ -582,149 +538,39 @@ class Engine:
     ) -> str:
         """Decision-window streaming leg (streaming/stateful.
         bounded_nfa_stream), both PER MATCH modes: every BOUNDED pattern
-        — quantifiers, alternation groups, quantified and nested
-        groups, PERMUTE as the alternation of its orderings in listed
-        (lexicographic) preference order — decided on a window of the
-        last Lmax rows per key; ``time_bounded`` / ``break_decided``
+        — plain sequences, quantifiers, alternation groups, quantified
+        and nested groups, PERMUTE as the alternation of its orderings
+        in listed (lexicographic) preference order — decided once the
+        furthest row a head-anchored match can read has arrived (at
+        least Lmax rows per key); ``time_bounded`` / ``break_decided``
         stream UNBOUNDED patterns on the WITHIN-horizon or break-row
         rule instead. Matching, the skip walk and the MEASURES are the
         shared CEP core's (plans/cep_core), the batch NFA's decisions.
-        DEFINEs split on top-level AND: row-local parts compile to JVM
-        flag columns; cross-variable parts (cep_core.split_defines)
-        evaluate against the window's partial match; physical PREV
-        conjuncts evaluate at ARRIVAL against a bounded value history,
-        NEXT conjuncts at DECISION time against window successors (each
-        decision deferred by the largest NEXT offset). The matched
-        stream registers as a view — the key + measures under ONE ROW,
-        every source column + measures under ALL ROWS — and the outer
+        DEFINEs split on top-level AND: cross-variable parts
+        (cep_core.split_defines) evaluate against the window's partial
+        match; row-local parts compile (cep_core.compile_navigation) to
+        JVM flag columns, physical PREV conjuncts evaluated at ARRIVAL
+        against a bounded value history, and NEXT conjuncts evaluated at
+        DECISION time against window successors. The matched stream
+        registers as a view — the key + measures under ONE ROW, every
+        source column + measures under ALL ROWS — and the outer
         statement is rewritten over it."""
         import itertools
-        import re as _re
 
         from pyspark.sql import functions as F
 
-        from .plans.cep_core import split_defines
+        from .plans.cep_core import compile_navigation, split_defines
         from .plans.match_recognize import (
-            _NEXT_RE,
-            _PREV_RE,
             CLASSIFIER,
             MATCH_NUMBER,
             _pos_spec_to_ast,
-            _pred_at_offset,
         )
         from .streaming.stateful import ast_max_len, bounded_nfa_stream
 
-        cols = sdf.columns
         field_types = {f.name: f.dataType.simpleString() for f in sdf.schema}
         uniq_vars = list(dict.fromkeys(spec.pattern))
         local, checks, cross_cols = split_defines(spec, field_types)
-        self_preds: dict[str, str] = {}
-        # physical PREV(col, n) conjuncts: evaluated per arriving row
-        # against a bounded value history in the matcher's keyed state
-        prev_checks: dict[str, list[tuple]] = {}
-        prev_need: set[str] = set()
-        max_prev = 0
-        # physical NEXT(col, n) conjuncts: evaluated at DECISION time
-        # against the window's successor rows
-        next_checks: dict[str, list[tuple]] = {}
-        next_need: set[str] = set()
-        max_next = 0
-        opnd = (
-            r"(?:PREV\s*\(\s*\w+\.\w+\s*(?:,\s*\d+)?\s*\)"
-            r"|NEXT\s*\(\s*\w+\.\w+\s*(?:,\s*\d+)?\s*\)"
-            r"|\w+(?:\.\w+)?|'(?:[^']|'')*'|-?\d+(?:\.\d+)?)"
-        )
-        prev_cmp_re = _re.compile(
-            rf"^\s*(?P<l>{opnd})\s*(?P<op><>|!=|>=|<=|=|>|<)\s*"
-            rf"(?P<r>{opnd})\s*$",
-            _re.IGNORECASE,
-        )
-
-        def _operand(tok: str, v: str):
-            for regex, kind, need in (
-                (_PREV_RE, "prev", prev_need),
-                (_NEXT_RE, "next", next_need),
-            ):
-                pm = regex.fullmatch(tok.strip())
-                if pm is not None:
-                    col = pm.group("pcol")
-                    if col not in field_types:
-                        raise unsupported(
-                            f"DEFINE for {v}: {kind.upper()} over unknown "
-                            f"column {col!r}"
-                        )
-                    need.add(col)
-                    return (kind, col, int(pm.group("n") or 1))
-            tok = tok.strip()
-            if tok.startswith("'"):
-                return ("lit", tok[1:-1].replace("''", "'"))
-            if _re.fullmatch(r"-?\d+", tok):
-                return ("lit", int(tok))
-            if _re.fullmatch(r"-?\d+\.\d+", tok):
-                return ("lit", float(tok))
-            if tok.upper() in ("TRUE", "FALSE"):
-                return ("lit", tok.upper() == "TRUE")
-            if tok.upper() == "NULL":
-                return ("lit", None)
-            ref = tok.split(".")
-            if len(ref) == 2:
-                tok = ref[1]
-            if tok not in field_types:
-                raise unsupported(
-                    f"DEFINE for {v}: unknown column {tok!r} in a PREV "
-                    "conjunct"
-                )
-            prev_need.add(tok)
-            return ("col", tok)
-
-        for v in uniq_vars:
-            self_parts: list[str] = []
-            for part in local[v]:
-                if not (_PREV_RE.search(part) or _NEXT_RE.search(part)):
-                    self_parts.append(part)
-                    continue
-                body = part.strip()
-                while body.startswith("(") and body.endswith(")"):
-                    body = body[1:-1].strip()
-                cm2 = prev_cmp_re.fullmatch(body)
-                if cm2 is None:
-                    raise unsupported(
-                        f"DEFINE for {v}: navigation conjunct "
-                        f"{part!r} — over a stream PREV/NEXT "
-                        "support plain comparisons (<operand> OP "
-                        "<operand>, operands a column, literal, "
-                        "PREV(col, n) or NEXT(col, n)); richer "
-                        "navigation needs the batch window plan"
-                    )
-                sides = (_operand(cm2.group("l"), v), _operand(cm2.group("r"), v))
-                kinds = {x[0] for x in sides}
-                if {"prev", "next"} <= kinds:
-                    # PREV resolves at arrival, NEXT at decision —
-                    # one comparison cannot straddle both
-                    raise unsupported(
-                        f"DEFINE for {v}: PREV and NEXT in ONE "
-                        "comparison (evaluate at different times "
-                        "over a stream) — split the conjunct or "
-                        "use the batch window plan"
-                    )
-                if "next" in kinds:
-                    # the decision window carries what NEXT reads
-                    next_need |= {x[1] for x in sides if x[0] != "lit"}
-                for side in sides:
-                    if side[0] == "prev":
-                        max_prev = max(max_prev, side[2])
-                    elif side[0] == "next":
-                        if side[2] > 8:
-                            raise unsupported(
-                                f"DEFINE for {v}: NEXT offset "
-                                f"{side[2]} (the decision-wait "
-                                "bound caps lookahead at 8 rows)"
-                            )
-                        max_next = max(max_next, side[2])
-                (next_checks if "next" in kinds else prev_checks).setdefault(
-                    v, []
-                ).append((sides[0], cm2.group("op"), sides[1]))
-            self_preds[v] = " AND ".join(self_parts) if self_parts else "TRUE"
+        nav = compile_navigation(spec, local, sdf.columns)
         if spec.within_seconds is not None and (
             field_types.get(ts_col) != "timestamp"
         ):
@@ -782,19 +628,15 @@ class Engine:
         for i, v in enumerate(uniq_vars):
             var_flags[v] = f"__mrb_{i}"
             flagged = flagged.withColumn(
-                var_flags[v],
-                F.coalesce(
-                    F.expr(_pred_at_offset(self_preds[v], v, 0, cols)),
-                    F.lit(False),
-                ),
+                var_flags[v], F.coalesce(F.expr(nav.flags[v]), F.lit(False))
             )
         if spec.all_rows:
-            carried = list(cols)
+            carried = list(sdf.columns)
         else:
             carried = sorted(
                 {ts_col}
                 | cross_cols
-                | next_need
+                | nav.next_cols
                 | {
                     col
                     for var, col, _ in spec.measures
@@ -805,99 +647,19 @@ class Engine:
             flagged, key, ts_col, var_flags, uniq_vars, ast, spec, carried,
             tiebreak_col=tiebreak,
             checks=checks,
-            prev_spec=(
-                (
-                    prev_checks,
-                    sorted(prev_need),
-                    max_prev,
-                    {c: field_types[c] for c in prev_need},
-                )
-                if max_prev
-                else None
-            ),
-            next_spec=(next_checks, max_next) if max_next else None,
+            prev_spec=nav.prev_spec(field_types),
+            next_spec=(nav.nxt, nav.next_off) if nav.nxt else None,
             time_bounded=time_bounded,
             break_decided=break_decided,
         )
+        return self._mr_register_view(stmt, spec, matched)
+
+    def _mr_register_view(self, stmt, spec, matched) -> str:
+        """Shared tail of the streaming MATCH_RECOGNIZE legs: register
+        the matched stream as a view and rewrite the outer statement to
+        read it."""
         view = f"__mr_stream_{abs(hash(stmt)) % 10_000_000}"
         matched.createOrReplaceTempView(view)
-        start, end = spec.span
-        alias_sql = f" AS {spec.out_alias}" if spec.out_alias else ""
-        return f"{stmt[:start]}FROM {view}{alias_sql}{stmt[end:]}"
-
-    def _mr_register_view(
-        self, stmt, spec, matched, key, ts_col, pos_col, unsupported,
-        pay_col, agg_col=None, nav_aware=False,
-        offset_aware=False, single_row_vars=None, col_types=None,
-    ) -> str:
-        """Shared tail of the streaming MATCH_RECOGNIZE legs: project
-        the MEASURES from the matcher's positional ts columns, the
-        per-variable payload columns and the aggregate-measure columns,
-        register the matched stream as a view, and rewrite the outer
-        statement to read it."""
-        from pyspark.sql import functions as F
-
-        select = [F.col(key)]
-        for var, col, alias in spec.measures:
-            if alias in spec.measure_agg:
-                if agg_col is not None and alias in agg_col:
-                    select.append(F.col(agg_col[alias]).alias(alias))
-                    continue
-                raise unsupported(
-                    f"aggregate measure {alias} (per-match aggregates "
-                    "over unbounded run rows need unbounded state; "
-                    "bounded patterns compute them from the decision "
-                    "window)"
-                )
-            nav = spec.measure_nav.get(alias, "LAST").upper()
-            noff = spec.measure_nav_offset.get(alias, 0)
-            if (
-                var in pos_col
-                and col == ts_col
-                and noff == 0
-                and (nav == "LAST" or not nav_aware)
-            ):
-                select.append(F.col(pos_col[var]).alias(alias))
-            elif offset_aware and (var, col, nav, noff) in pay_col:
-                select.append(
-                    F.col(pay_col[(var, col, nav, noff)]).alias(alias)
-                )
-            elif (
-                not offset_aware and noff == 0 and (var, col, nav) in pay_col
-            ):
-                select.append(F.col(pay_col[(var, col, nav)]).alias(alias))
-            elif not nav_aware and noff == 0 and (var, col) in pay_col:
-                select.append(F.col(pay_col[(var, col)]).alias(alias))
-            elif (
-                noff > 0
-                and single_row_vars is not None
-                and var in single_row_vars
-            ):
-                # SQL:2016: a variable that maps exactly ONE row measures
-                # NULL at any offset >= 1 — exact, emitted as a typed
-                # literal (no payload needed)
-                cast_t = (col_types or {}).get(col, "string")
-                select.append(
-                    F.expr(f"CAST(NULL AS {cast_t})").alias(alias)
-                )
-            elif noff > 0:
-                # a run-variable offset on a leg whose state does not
-                # carry per-offset histories — reject loudly; the
-                # break-decided / WITHIN-horizon retry evaluates it
-                raise unsupported(
-                    f"measure {alias}: FIRST/LAST(Var.col, {noff}) on a "
-                    "run variable (this leg's O(1) state keeps only the "
-                    "run's first/last rows; the decision-window legs and "
-                    "the batch path evaluate logical offsets exactly)"
-                )
-            else:
-                raise unsupported(
-                    f"measure {var}.{col} (this streaming leg carries "
-                    f"Var.{ts_col} positions and per-variable payload "
-                    "columns through its keyed state)"
-                )
-        view = f"__mr_stream_{abs(hash(stmt)) % 10_000_000}"
-        matched.select(*select).createOrReplaceTempView(view)
         start, end = spec.span
         alias_sql = f" AS {spec.out_alias}" if spec.out_alias else ""
         return f"{stmt[:start]}FROM {view}{alias_sql}{stmt[end:]}"
@@ -905,207 +667,54 @@ class Engine:
     def _match_recognize_stream_general(
         self, stmt, spec, sdf, key, ts_col, tiebreak, unsupported
     ) -> str:
-        """General-predicate streaming MATCH_RECOGNIZE leg: each
-        row-local DEFINE (arbitrary single-row boolean predicate — any
-        comparison, conjunction, function of the row's own columns)
-        compiles to a JVM boolean column exactly like the batch NFA's
-        precomputed per-variable flags; the keyed-state matchers
-        (streaming/stateful.py) then run over flag bitmasks, so
-        predicates may OVERLAP (a row satisfying several variables) and
-        the key can be any type. Covers adjacent sequences of any fixed
-        length, the A+ B run shape and the A B+ C funnel. Physical
-        PREV(X.col, n) navigation streams too, as comparison conjuncts:
-        a DEFINE splits on top-level AND; conjuncts of the form
-        ``<operand> OP <operand>`` with a PREV reference are evaluated
+        """O(1)-state run legs for the two streamable unbounded shapes:
+        the A+ B run (``run_flags_stream``) and the A B+ C funnel
+        (``mid_run_flags_stream``). Each row-local DEFINE (arbitrary
+        single-row boolean predicate — any comparison, conjunction,
+        function of the row's own columns) compiles to a JVM boolean
+        column exactly like the batch NFA's precomputed per-variable
+        flags, so predicates may OVERLAP (a row satisfying several
+        variables) and the key can be any type. Physical PREV(X.col, n)
+        comparison conjuncts (cep_core.compile_navigation) evaluate
         inside the matcher against a bounded value history held in the
         SAME keyed state (Spark forbids chaining two stateful operators,
-        so the lag cannot be a separate pre-pass), while the row-local
-        remainder still compiles to a JVM flag. NEXT(X.col, n) lookahead
-        streams on SEQUENCE shapes when it stays INSIDE the match
-        window (variable position + n <= last position): the candidate
-        window holds all referenced rows, so the conjunct evaluates at
-        match-check time — no future-row buffering. Cross-variable
-        references, NEXT past the window (or on a run shape),
-        FIRST/LAST match bindings, non-comparison navigation conjuncts,
-        WITHIN on an A+ B run, and SKIP TO NEXT ROW or WITHIN on a funnel
-        whose DEFINEs are not provably disjoint are rejected loudly; the
-        caller retries those on the decision-window legs."""
-        import re as _re
-
+        so the lag cannot be a separate pre-pass). Measures wire through
+        one table per leg: each single-row variable's payload role, the
+        run variable's first/last{n} history role, and the emitted ts
+        column per (var, nav). Cross-variable DEFINE parts (FIRST/LAST
+        bindings included), NEXT lookahead, A{n,} / A* bounds, SKIP TO
+        NEXT ROW or WITHIN on an A+ B run, and SKIP TO NEXT ROW or
+        WITHIN on a funnel whose DEFINEs are not provably disjoint are
+        rejected loudly; the caller retries those on the time-bounded
+        or break-decided window legs."""
         from pyspark.sql import functions as F
 
-        from .plans.match_recognize import (
-            _NAV_DEF_RE,
-            _NEXT_RE,
-            _PREV_RE,
-            _pred_at_offset,
-            _provably_disjoint,
-            _split_top_and,
+        from .plans.cep_core import (
+            compile_navigation,
+            measure_fields,
+            split_defines,
         )
-        from .streaming.stateful import (
-            mid_run_flags_stream,
-            run_flags_stream,
-            sequence_flags_stream,
-        )
+        from .plans.match_recognize import _provably_disjoint
+        from .streaming.stateful import mid_run_flags_stream, run_flags_stream
 
-        cols = sdf.columns
         field_types = {f.name: f.dataType.simpleString() for f in sdf.schema}
-        opnd = (
-            r"(?:(?:PREV|NEXT)\s*\(\s*\w+\.\w+\s*(?:,\s*\d+)?\s*\)"
-            r"|\w+(?:\.\w+)?|'(?:[^']|'')*'|-?\d+(?:\.\d+)?)"
-        )
-        cmp_re = _re.compile(
-            rf"^\s*(?P<l>{opnd})\s*(?P<op><>|!=|>=|<=|=|>|<)\s*"
-            rf"(?P<r>{opnd})\s*$",
-            _re.IGNORECASE,
-        )
-
-        def _operand_spec(tok: str, v: str, need: set):
-            for regex, kind in ((_PREV_RE, "prev"), (_NEXT_RE, "next")):
-                pm = regex.fullmatch(tok.strip())
-                if pm is not None:
-                    col = pm.group("pcol")
-                    if col not in cols:
-                        raise unsupported(
-                            f"DEFINE for {v}: {kind.upper()} over unknown "
-                            f"column {col!r}"
-                        )
-                    n = int(pm.group("n") or 1)
-                    need.add(col)
-                    return (kind, col, n)
-            tok = tok.strip()
-            if tok.startswith("'"):
-                return ("lit", tok[1:-1].replace("''", "'"))
-            if _re.fullmatch(r"-?\d+", tok):
-                return ("lit", int(tok))
-            if _re.fullmatch(r"-?\d+\.\d+", tok):
-                return ("lit", float(tok))
-            if tok.upper() in ("TRUE", "FALSE"):
-                return ("lit", tok.upper() == "TRUE")
-            if tok.upper() == "NULL":
-                return ("lit", None)
-            ref = tok.split(".")
-            if len(ref) == 2:
-                if ref[0] != v:
-                    raise unsupported(
-                        f"DEFINE for {v}: cross-variable reference "
-                        f"{tok!r} in a PREV conjunct over a stream"
-                    )
-                tok = ref[1]
-            if tok not in cols:
-                raise unsupported(
-                    f"DEFINE for {v}: unknown column {tok!r} in a PREV "
-                    "conjunct"
-                )
-            need.add(tok)
-            return ("col", tok)
-
-        # PREV(X.col, n) is PHYSICAL navigation (the n-th preceding
-        # partition row, regardless of X). Per DEFINE: top-level-AND
-        # conjuncts WITHOUT navigation recombine into the JVM flag;
-        # conjuncts WITH a PREV reference must be a plain comparison and
-        # are evaluated inside the matcher from its bounded row history.
-        preds: dict[str, str] = {}
-        prev_checks: list[list[tuple]] = []
-        next_checks: list[list[tuple]] = []
-        need_cols: set[str] = set()
-        next_need: set[str] = set()
-        max_prev = 0
-        length = len(spec.pattern)
-        for vi, v in enumerate(spec.pattern):
-            pred = spec.defines[v]
-            if _NAV_DEF_RE.search(pred):
-                raise unsupported(
-                    f"DEFINE for {v}: FIRST/LAST navigation over a "
-                    "stream (match bindings need the batch window plan; "
-                    "physical PREV/NEXT stream as comparison conjuncts)"
-                )
-            local_parts: list[str] = []
-            checks: list[tuple] = []
-            nchecks: list[tuple] = []
-            for conj in _split_top_and(pred):
-                if not (_PREV_RE.search(conj) or _NEXT_RE.search(conj)):
-                    local_parts.append(conj)
-                    continue
-                body = conj.strip()
-                while body.startswith("(") and body.endswith(")"):
-                    body = body[1:-1].strip()
-                cm = cmp_re.fullmatch(body)
-                if cm is None:
-                    raise unsupported(
-                        f"DEFINE for {v}: navigation conjunct {conj!r} — "
-                        "over a stream PREV/NEXT support plain "
-                        "comparisons (<operand> OP <operand>, operands a "
-                        "column, literal, or PREV/NEXT(col, n)); richer "
-                        "navigation needs the batch window plan"
-                    )
-                nd: set[str] = set()
-                lhs = _operand_spec(cm.group("l"), v, nd)
-                rhs = _operand_spec(cm.group("r"), v, nd)
-                kinds = {lhs[0], rhs[0]}
-                if "next" in kinds:
-                    if "prev" in kinds:
-                        raise unsupported(
-                            f"DEFINE for {v}: conjunct {conj!r} mixes "
-                            "PREV and NEXT (window-time lookahead and "
-                            "arrival-time lookback evaluate at different "
-                            "points — split into two conjuncts or use "
-                            "the batch path)"
-                        )
-                    if (
-                        spec.plus is not None
-                        or spec.unbounded
-                        or spec.pos_quants
-                    ):
-                        raise unsupported(
-                            f"DEFINE for {v}: NEXT on an unbounded run "
-                            "shape (the run matchers see rows one at a "
-                            "time; lookahead needs the batch window plan)"
-                        )
-                    for side in (lhs, rhs):
-                        if side[0] == "next" and vi + side[2] > length - 1:
-                            # past-window lookahead: the bounded-window
-                            # leg defers each head decision by the NEXT
-                            # offset, so it CAN evaluate it (round 8);
-                            # the sequence matcher's fixed window
-                            # cannot — reroute loudly via the
-                            # bounded_extra exception path
-                            raise _RerouteToBounded()
-                    next_need |= nd
-                    nchecks.append((lhs, cm.group("op"), rhs))
-                    continue
-                need_cols |= nd
-                for side in (lhs, rhs):
-                    if side[0] == "prev":
-                        max_prev = max(max_prev, side[2])
-                checks.append((lhs, cm.group("op"), rhs))
-            local = " AND ".join(local_parts) if local_parts else "TRUE"
-            foreign = sorted(
-                set(_re.findall(r"\b([A-Za-z_]\w*)\s*\.", local)) - {v}
+        local, cross, _ = split_defines(spec, field_types)
+        if cross:
+            raise unsupported(
+                f"cross-variable DEFINE parts of {sorted(cross)} on a run "
+                "shape (the O(1) run state keeps no partial-match "
+                "bindings; the decision-window legs evaluate them)"
             )
-            if foreign:
-                raise unsupported(
-                    f"DEFINE for {v}: cross-variable references "
-                    f"{foreign} over a stream (the partial-match "
-                    "bindings live only in the batch NFA)"
-                )
-            preds[v] = local
-            prev_checks.append(checks)
-            next_checks.append(nchecks)
-        prev_spec = (
-            (
-                prev_checks,
-                sorted(need_cols),
-                max_prev,
-                {c: field_types[c] for c in need_cols},
+        nav = compile_navigation(spec, local, sdf.columns)
+        if nav.nxt:
+            raise unsupported(
+                "NEXT on an unbounded run shape (the run matchers see "
+                "rows one at a time; lookahead needs a decision window)"
             )
-            if max_prev
-            else None
-        )
-        funnel = False
-        if (spec.unbounded or spec.pos_quants) and spec.plus is None:
-            # the only streamable general unbounded shape: the A B+ C
-            # funnel (run at the middle position, min 1) — O(1) state
+        funnel = spec.plus is None
+        if funnel:
+            # the only streamable general unbounded shape besides A+ B:
+            # the A B+ C funnel (run at the middle position, min 1)
             if (
                 len(spec.positions) != 3
                 or list(spec.unbounded) != [spec.pattern[1]]
@@ -1115,9 +724,8 @@ class Engine:
                 or spec.lazy_vars
             ):
                 raise unsupported(
-                    "general unbounded patterns (the general-predicate "
-                    "streaming leg covers adjacent sequences, A+ B runs, "
-                    "and the A B+ C middle-run funnel)"
+                    "general unbounded patterns (the run matchers cover "
+                    "A+ B runs and the A B+ C middle-run funnel)"
                 )
             # provably disjoint DEFINEs (distinct literal values of the
             # column's own type on one column): no A row can sit inside a
@@ -1137,157 +745,14 @@ class Engine:
                     "(re-anchoring a too-old match start mid-run needs "
                     "the run rows' timestamps — unbounded state)"
                 )
-            funnel = True
-        # FIRST() navigation: every shape that reaches this leg binds it
-        # exactly — the parser rejects repeated pattern variables, so a
-        # sequence variable maps ONE row (FIRST == LAST), and the A+ B
-        # and funnel run legs carry O(1) first-of-run slots (rounds 7-8)
-        # measures beyond Var.<order col>: carry the matched rows'
-        # payload columns through the matcher's keyed state
-        patvars = set(spec.pattern)
-        pay_needs = sorted(
-            {
-                (var, col)
-                for var, col, alias in spec.measures
-                if var in patvars
-                and col != ts_col
-                and alias not in spec.measure_agg
+            fa, run_var, fc = spec.pattern
+            roles = {fa: "start", fc: "end"}
+            ts_out = {
+                (fa, "FIRST"): "a_ts", (fa, "LAST"): "a_ts",
+                (run_var, "LAST"): "run_last_ts",
+                (fc, "FIRST"): "end_ts", (fc, "LAST"): "end_ts",
             }
-        )
-        for var, col in pay_needs:
-            if col not in field_types:
-                raise unsupported(
-                    f"measure {var}.{col}: unknown source column {col!r}"
-                )
-        pay_types = {c: field_types[c] for _, c in pay_needs}
-        # aggregate measures on the run shapes: role "run" folds into
-        # the matcher's O(1) accumulators (with a pend snapshot for the
-        # backtrack candidate); single-row roles read that row's payload
-        agg_spec: list[tuple] = []
-        if spec.measure_agg and (spec.plus is not None or funnel):
-            from .plans.cep_core import measure_fields
-
-            out_types = {
-                f.name: f.dataType.simpleString()
-                for f in measure_fields(spec, sdf.schema)
-            }
-            if spec.plus is not None:
-                agg_roles = {spec.plus[0]: "run", spec.plus[1]: "end"}
-            else:
-                agg_roles = {
-                    spec.pattern[0]: "start",
-                    spec.pattern[1]: "run",
-                    spec.pattern[2]: "end",
-                }
-            for var, col, alias in spec.measures:
-                if alias not in spec.measure_agg:
-                    continue
-                role = agg_roles[var]
-                fn = spec.measure_agg[alias].lower()
-                src_c = None if col == "*" else col
-                out_t = out_types[alias]
-                agg_spec.append((fn, role, src_c, alias, out_t))
-                if role != "run" and src_c is not None:
-                    pay_types.setdefault(src_c, field_types[src_c])
-        flagged = sdf
-        flag_cols: list[str] = []
-        for i, v in enumerate(spec.pattern):
-            c = f"__mrs_{i}"
-            flagged = flagged.withColumn(
-                c,
-                F.coalesce(
-                    F.expr(_pred_at_offset(preds[v], v, 0, cols)),
-                    F.lit(False),
-                ),
-            )
-            flag_cols.append(c)
-        nav_aware = False
-        offset_aware = False
-        # SQL:2016 logical offsets: variables mapping exactly ONE row
-        # measure NULL at any offset >= 1 (handled in _mr_register_view);
-        # offsets on the RUN variable would need per-offset state slots —
-        # the register-view tail rejects those loudly for these O(1) legs
-        if funnel:
-            single_vars = {spec.pattern[0], spec.pattern[2]}
-        elif spec.plus is not None:
-            single_vars = {spec.plus[1]}
         else:
-            single_vars = set(spec.pattern)  # plain sequence: all single
-        if funnel:
-            # nav-aware payload wiring: FIRST(B.col) reads the run's
-            # first-row slot (FIRST(B.ts) rides the payload path — the
-            # matcher emits only the LAST run ts as a position); A / C
-            # map one row each, so FIRST == LAST there
-            nav_aware = True
-            offset_aware = True
-            fa_var, fb_var, fc_var = spec.pattern
-
-            def _role_of_f(var: str, nav: str, off: int = 0) -> str:
-                if var == fa_var:
-                    return "start"
-                if var == fc_var:
-                    return "end"
-                base = "first" if nav == "FIRST" else "last"
-                return f"{base}{off}" if off else base
-
-            pay_sources = {
-                (
-                    var,
-                    col,
-                    spec.measure_nav.get(alias, "LAST").upper(),
-                    spec.measure_nav_offset.get(alias, 0),
-                )
-                for var, col, alias in spec.measures
-                if var in patvars and alias not in spec.measure_agg
-            }
-            pay_pairs = sorted(
-                {
-                    (_role_of_f(var, nav, off), col)
-                    for var, col, nav, off in pay_sources
-                    if not (var != fb_var and off > 0)
-                    and (
-                        col != ts_col
-                        or (var == fb_var and (nav == "FIRST" or off > 0))
-                    )
-                }
-            )
-            pay_col = {}
-            for var, col, nav, off in pay_sources:
-                if var != fb_var and off > 0:
-                    continue  # A / C map one row: typed NULL literal
-                if col == ts_col and not (
-                    var == fb_var and (nav == "FIRST" or off > 0)
-                ):
-                    pay_col[(var, col, nav, 0)] = (
-                        "a_ts"
-                        if var == fa_var
-                        else (
-                            "run_last_ts" if var == fb_var else "end_ts"
-                        )
-                    )
-                else:
-                    pay_col[(var, col, nav, off)] = (
-                        f"{_role_of_f(var, nav, off)}_{col}"
-                    )
-                    pay_types.setdefault(col, field_types[col])
-            matched = mid_run_flags_stream(
-                flagged, key, ts_col,
-                flag_cols[0], flag_cols[1], flag_cols[2],
-                within_seconds=spec.within_seconds,
-                tiebreak_col=tiebreak, prev_spec=prev_spec,
-                payload_spec=(
-                    (pay_pairs, pay_types)
-                    if (pay_pairs or agg_spec)
-                    else None
-                ),
-                agg_spec=agg_spec or None,
-            )
-            pos_col = {
-                spec.pattern[0]: "a_ts",
-                spec.pattern[1]: "run_last_ts",
-                spec.pattern[2]: "end_ts",
-            }
-        elif spec.plus is not None:
             if spec.plus[2] != 1:
                 raise unsupported(
                     "A{n,} / A* run bounds (the streaming matcher tracks "
@@ -1306,100 +771,92 @@ class Engine:
                     "start to a later run row needs the run rows' "
                     "timestamps — unbounded state)"
                 )
-            # nav-aware payload wiring: FIRST(A.col) reads the run's
-            # first-row slot; FIRST(A.ts) is the emitted first_ts; B
-            # maps one row so FIRST == LAST == the end row.
-            # FIRST/LAST(A.col, n) offsets (round 9) ride the matcher's
-            # bounded payload HISTORIES (last/first K+1 run rows, K the
-            # largest offset — compile-time state bound) as roles
-            # last{n}/first{n}; any offset on B is NULL by definition
-            # and emits as a typed literal (no payload).
-            nav_aware = True
-            offset_aware = True
-            plus_a, plus_b = spec.plus[0], spec.plus[1]
-
-            def _role_of(var: str, nav: str, off: int = 0) -> str:
-                if var == plus_b:
-                    return "end"
-                base = "first" if nav == "FIRST" else "last"
-                return f"{base}{off}" if off else base
-
-            pay_sources = {
-                (
-                    var,
-                    col,
-                    spec.measure_nav.get(alias, "LAST").upper(),
-                    spec.measure_nav_offset.get(alias, 0),
+            run_var, fb = spec.plus[0], spec.plus[1]
+            roles = {fb: "end"}
+            ts_out = {
+                (run_var, "FIRST"): "first_ts", (run_var, "LAST"): "last_ts",
+                (fb, "FIRST"): "end_ts", (fb, "LAST"): "end_ts",
+            }
+        # the measure wiring: a single-row variable reads its row's
+        # payload (role start/end); the run variable reads the matcher's
+        # bounded first/last K+1 run-row histories (role first{n} /
+        # last{n}, K the largest offset); aggregates fold the run rows
+        # into O(1) accumulators (role "run", with a pend snapshot for
+        # the backtrack candidate)
+        out_types = {
+            f.name: f.dataType.simpleString()
+            for f in measure_fields(spec, sdf.schema)
+        }
+        pay_pairs: set[tuple[str, str]] = set()
+        pay_types: dict[str, str] = {}
+        agg_spec: list[tuple] = []
+        select = [F.col(key)]
+        for var, col, alias in spec.measures:
+            if var not in roles and var != run_var:
+                raise unsupported(
+                    f"measure {alias} (the run matchers carry Var.<col> "
+                    "positions and payloads; CLASSIFIER() and "
+                    "MATCH_NUMBER() need a decision window)"
                 )
-                for var, col, alias in spec.measures
-                if var in patvars and alias not in spec.measure_agg
-            }
-            pay_pairs = sorted(
-                {
-                    (_role_of(var, nav, off), col)
-                    for var, col, nav, off in pay_sources
-                    if not (var == plus_b and off > 0)
-                    and (col != ts_col or off > 0)
-                }
+            if col != "*" and col not in field_types:
+                raise unsupported(
+                    f"measure {var}.{col}: unknown source column {col!r}"
+                )
+            nav_fn = spec.measure_nav.get(alias, "LAST")
+            off = spec.measure_nav_offset.get(alias, 0)
+            if alias in spec.measure_agg:
+                role = roles.get(var, "run")
+                src = None if col == "*" else col
+                agg_spec.append(
+                    (spec.measure_agg[alias].lower(), role, src, alias,
+                     out_types[alias])
+                )
+                if role != "run" and src is not None:
+                    pay_types[src] = field_types[src]
+                select.append(F.col(alias))
+            elif off and var in roles:
+                # SQL:2016: a variable that maps exactly ONE row measures
+                # NULL at any offset >= 1 — a typed literal, no payload
+                select.append(
+                    F.expr(f"CAST(NULL AS {field_types[col]})").alias(alias)
+                )
+            elif not off and col == ts_col and (var, nav_fn) in ts_out:
+                select.append(F.col(ts_out[var, nav_fn]).alias(alias))
+            else:
+                role = roles.get(var) or (
+                    ("first" if nav_fn == "FIRST" else "last")
+                    + (str(off) if off else "")
+                )
+                pay_pairs.add((role, col))
+                pay_types[col] = field_types[col]
+                select.append(F.col(f"{role}_{col}").alias(alias))
+        flagged = sdf
+        flag_cols: list[str] = []
+        for i, v in enumerate(spec.pattern):
+            flag_cols.append(f"__mrs_{i}")
+            flagged = flagged.withColumn(
+                flag_cols[-1], F.coalesce(F.expr(nav.flags[v]), F.lit(False))
             )
-            pay_col = {}
-            for var, col, nav, off in pay_sources:
-                if var == plus_b and off > 0:
-                    continue  # typed NULL literal via single_row_vars
-                if col == ts_col and off == 0:
-                    pay_col[(var, col, nav, 0)] = (
-                        "first_ts"
-                        if (var == plus_a and nav == "FIRST")
-                        else ("last_ts" if var == plus_a else "end_ts")
-                    )
-                else:
-                    pay_col[(var, col, nav, off)] = (
-                        f"{_role_of(var, nav, off)}_{col}"
-                    )
-                    pay_types.setdefault(col, field_types[col])
-            matched = run_flags_stream(
-                flagged, key, ts_col, flag_cols[0], flag_cols[1],
-                tiebreak_col=tiebreak, prev_spec=prev_spec,
-                payload_spec=(
-                    (pay_pairs, pay_types)
-                    if (pay_pairs or agg_spec)
-                    else None
-                ),
-                agg_spec=agg_spec or None,
-            )
-            pos_col = {spec.plus[0]: "last_ts", spec.plus[1]: "end_ts"}
-        else:
-            idx = {v: i for i, v in enumerate(spec.pattern)}
-            pay_pairs = [(idx[var], col) for var, col in pay_needs]
-            pay_col = {
-                (var, col): f"v{idx[var] + 1}_{col}"
-                for var, col in pay_needs
-            }
-            matched = sequence_flags_stream(
-                flagged, key, ts_col, flag_cols,
-                within_seconds=spec.within_seconds, tiebreak_col=tiebreak,
-                skip_past=spec.skip_past_last, prev_spec=prev_spec,
-                payload_spec=(pay_pairs, pay_types) if pay_pairs else None,
-                next_spec=(
-                    (next_checks, {c: field_types[c] for c in next_need})
-                    if any(next_checks)
-                    else None
-                ),
-            )
-            pos_col = {
-                var: f"ts_{i + 1}" for i, var in enumerate(spec.pattern)
-            }
-        return self._mr_register_view(
-            stmt, spec, matched, key, ts_col, pos_col, unsupported,
-            pay_col=pay_col,
-            agg_col=(
-                {a: a for _, _, _, a, _ in agg_spec} if agg_spec else None
+        leg_args = dict(
+            tiebreak_col=tiebreak,
+            prev_spec=nav.prev_spec(field_types, spec.pattern),
+            payload_spec=(
+                (sorted(pay_pairs), pay_types)
+                if (pay_pairs or agg_spec)
+                else None
             ),
-            nav_aware=nav_aware,
-            offset_aware=offset_aware,
-            single_row_vars=single_vars,
-            col_types=field_types,
+            agg_spec=agg_spec or None,
         )
+        if funnel:
+            matched = mid_run_flags_stream(
+                flagged, key, ts_col, *flag_cols,
+                within_seconds=spec.within_seconds, **leg_args,
+            )
+        else:
+            matched = run_flags_stream(
+                flagged, key, ts_col, *flag_cols, **leg_args
+            )
+        return self._mr_register_view(stmt, spec, matched.select(*select))
 
     def _over_agg_stream(
         self, stmt: str, sources: dict

@@ -12,6 +12,9 @@ is decided here, once:
   top-level AND into row-local parts (compiled by the caller to a JVM
   flag column) and cross-variable parts, compiled once by
   ``compile_rich_cross`` and evaluated against the partial match;
+- :func:`compile_navigation` — the row-local parts of every DEFINE
+  for the streaming matchers: flag SQL plus the physical PREV/NEXT
+  comparisons, parsed once for every stream leg;
 - :func:`match_at` — the AST matcher over per-row variable bitmasks
   (SQL:2016 preference order, cross-variable and NEXT checks);
 - :func:`next_start` / :func:`find_matches` — the AFTER MATCH skip walk;
@@ -27,6 +30,7 @@ automaton runtime and one match buffer serve every pattern.
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
 import pandas as pd
 
@@ -38,6 +42,7 @@ from .match_recognize import (
     CLASSIFIER,
     MATCH_NUMBER,
     UnsupportedPatternError,
+    _pred_at_offset,
     _split_top_and,
     compile_rich_cross,
     eval_rich_cross,
@@ -121,6 +126,139 @@ def split_defines(spec, columns=None):
             checks.setdefault(v, []).append(compiled)
             cols |= rich_ref_columns(compiled[1])
     return local, checks, cols
+
+
+_NAV_OPND = (
+    r"(?:(?:PREV|NEXT)\s*\(\s*\w+\.\w+\s*(?:,\s*\d+)?\s*\)"
+    r"|\w+(?:\.\w+)?|'(?:[^']|'')*'|-?\d+(?:\.\d+)?)"
+)
+_NAV_CMP_RE = re.compile(
+    rf"^\s*(?P<l>{_NAV_OPND})\s*(?P<op><>|!=|>=|<=|=|>|<)\s*"
+    rf"(?P<r>{_NAV_OPND})\s*$",
+    re.IGNORECASE,
+)
+
+
+class Navigation(NamedTuple):
+    """Row-local DEFINE parts compiled for a streaming matcher."""
+
+    flags: dict  # var -> flag SQL (the navigation-free parts)
+    prev: dict  # var -> [(lhs, op, rhs)], evaluated at row arrival
+    nxt: dict  # var -> [(lhs, op, rhs)], evaluated at decision time
+    prev_cols: list  # columns the PREV value history keeps
+    next_cols: set  # columns NEXT comparisons read
+    max_prev: int  # the PREV history depth
+    next_off: dict  # var -> its largest NEXT offset
+
+    def prev_spec(self, col_types, order=None):
+        """A stream matcher's ``prev_spec`` (None without PREV): the
+        checks per variable — a list in ``order`` when given —, the
+        history columns, its depth and their SQL types."""
+        if not self.max_prev:
+            return None
+        checks = self.prev
+        if order is not None:
+            checks = [self.prev.get(v, []) for v in order]
+        types = {c: col_types[c] for c in self.prev_cols}
+        return checks, self.prev_cols, self.max_prev, types
+
+
+def compile_navigation(spec, local, columns) -> Navigation:
+    """Compile the row-local parts ``local`` (from :func:`split_defines`)
+    of every DEFINE for a streaming matcher. Parts without physical
+    PREV/NEXT navigation recombine into one flag SQL per variable; each
+    navigation part must be one comparison ``<operand> OP <operand>``
+    whose operands are a column (a ``V.col`` qualifier is the defining
+    variable's own: split_defines made every foreign one a cross check),
+    a literal, ``PREV(V.col, n)`` or ``NEXT(V.col, n)``. Operands parse
+    to ("prev"|"next", col, n), ("col", col) or ("lit", value) — the
+    forms ``_next_ok`` and the stream PREV history read. Raises
+    UnsupportedPatternError on any other navigation part, on PREV and
+    NEXT in one comparison (they resolve at different times) and on a
+    NEXT offset above 8 (the decision-wait bound)."""
+
+    def operand(tok: str, v: str):
+        tok = tok.strip()
+        for regex, kind in ((_PREV_RE, "prev"), (_NEXT_RE, "next")):
+            pm = regex.fullmatch(tok)
+            if pm is not None:
+                col, n = pm.group("pcol"), int(pm.group("n") or 1)
+                break
+        else:
+            if tok.startswith("'"):
+                return ("lit", tok[1:-1].replace("''", "'"))
+            if re.fullmatch(r"-?\d+", tok):
+                return ("lit", int(tok))
+            if re.fullmatch(r"-?\d+\.\d+", tok):
+                return ("lit", float(tok))
+            if tok.upper() in ("TRUE", "FALSE", "NULL"):
+                return ("lit", {"TRUE": True, "FALSE": False}.get(tok.upper()))
+            kind, col, n = "col", tok.split(".")[-1], None
+        if col not in columns:
+            raise UnsupportedPatternError(
+                f"DEFINE for {v}: unknown column {col!r} in a navigation "
+                "comparison"
+            )
+        return (kind, col) if n is None else (kind, col, n)
+
+    flags: dict[str, str] = {}
+    prev: dict[str, list] = {}
+    nxt: dict[str, list] = {}
+    next_off: dict[str, int] = {}
+    prev_cols: set[str] = set()
+    next_cols: set[str] = set()
+    max_prev = 0
+    for v in dict.fromkeys(spec.pattern):
+        plain: list[str] = []
+        for part in local[v]:
+            if not (_PREV_RE.search(part) or _NEXT_RE.search(part)):
+                plain.append(part)
+                continue
+            body = part.strip()
+            while body.startswith("(") and body.endswith(")"):
+                body = body[1:-1].strip()
+            cm = _NAV_CMP_RE.fullmatch(body)
+            if cm is None:
+                raise UnsupportedPatternError(
+                    f"DEFINE for {v}: navigation conjunct {part!r} — over "
+                    "a stream PREV/NEXT support plain comparisons "
+                    "(<operand> OP <operand>, operands a column, literal, "
+                    "PREV(col, n) or NEXT(col, n)); richer navigation "
+                    "needs the batch window plan"
+                )
+            sides = (operand(cm.group("l"), v), operand(cm.group("r"), v))
+            kinds = {sd[0] for sd in sides}
+            if {"prev", "next"} <= kinds:
+                raise UnsupportedPatternError(
+                    f"DEFINE for {v}: conjunct {part!r} mixes PREV and NEXT "
+                    "(arrival-time lookback and decision-time lookahead "
+                    "cannot share one comparison over a stream) — split "
+                    "it or use the batch window plan"
+                )
+            refs = {sd[1] for sd in sides if sd[0] != "lit"}
+            check = (sides[0], cm.group("op"), sides[1])
+            if "next" in kinds:
+                n = max(sd[2] for sd in sides if sd[0] == "next")
+                if n > 8:
+                    raise UnsupportedPatternError(
+                        f"DEFINE for {v}: NEXT offset {n} (the "
+                        "decision-wait bound caps lookahead at 8 rows)"
+                    )
+                next_off[v] = max(next_off.get(v, 0), n)
+                next_cols |= refs
+                nxt.setdefault(v, []).append(check)
+            else:
+                max_prev = max(
+                    [max_prev] + [sd[2] for sd in sides if sd[0] == "prev"]
+                )
+                prev_cols |= refs
+                prev.setdefault(v, []).append(check)
+        flags[v] = _pred_at_offset(
+            " AND ".join(plain) if plain else "TRUE", v, 0, list(columns)
+        )
+    return Navigation(
+        flags, prev, nxt, sorted(prev_cols), next_cols, max_prev, next_off
+    )
 
 
 def _next_ok(next_checks, i, n_rows, val_at) -> bool:

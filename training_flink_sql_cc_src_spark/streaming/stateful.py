@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..plans.cep_core import _CMP_OPS, _next_ok, _scalar
+from ..plans.cep_core import _CMP_OPS, _scalar
 
 
 def running_totals(
@@ -57,185 +57,6 @@ def running_totals(
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def sequence_flags_stream(
-    stream_df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    flag_cols: list[str],
-    within_seconds: int | None = None,
-    tiebreak_col: str | None = None,
-    skip_past: bool = False,
-    prev_spec: tuple | None = None,
-    payload_spec: tuple | None = None,
-    next_spec: tuple | None = None,
-) -> DataFrame:
-    """Streaming matcher for an adjacent fixed-length sequence with
-    ARBITRARY row-local predicates — the general-predicate continuous
-    leg of the MATCH_RECOGNIZE lowering. ``flag_cols[i]`` is a BOOLEAN
-    column (compiled JVM-side from variable i's DEFINE, exactly like the
-    batch NFA's precomputed per-variable booleans) that row i of the
-    window must satisfy.
-
-    Because predicates may OVERLAP (one row can satisfy several
-    variables), state keeps the last L-1 rows' flag BITMASKS + ts — a
-    fixed-width window, O(distinct keys x (L-1)) total (Flink CEP's
-    partial-match state for a linear pattern). With overlapping
-    predicates the skip mode MATTERS (matches can share rows):
-    ``skip_past=False`` gives AFTER MATCH SKIP TO NEXT ROW (every start
-    may match); ``skip_past=True`` clears the window after each match —
-    exactly the batch scan resuming past the consumed rows.
-    ``prev_spec`` adds physical
-    PREV(col, n) comparison conjuncts per flag, evaluated against the
-    last max(n) rows kept in the same state (see module note above).
-    ``payload_spec`` = ([(position, col), ...], {col: sql_type}) carries
-    MEASURE columns of matched rows through the window state: the
-    window keeps the union of needed source columns per row and a match
-    emits each requested (position, col) as ``v{position+1}_{col}`` —
-    Flink CEP's per-variable measure payloads, still O(L) state.
-    ``next_spec`` = (checks_per_position, {col: sql_type}) adds
-    NEXT(col, n) comparison conjuncts that resolve INSIDE the candidate
-    window (position + n <= L-1), evaluated once the full window is
-    assembled — bounded lookahead without future-row buffering.
-    Emits (key, ts_1 .. ts_L [, v*_*...])."""
-    length = len(flag_cols)
-    if length < 2:
-        raise ValueError("sequence pattern needs at least 2 steps")
-    hist = length - 1
-    pay_pairs, pay_types = [], {}
-    if payload_spec is not None:
-        pay_pairs, pay_types = payload_spec
-    nxt_checks, nxt_types = [], {}
-    if next_spec is not None:
-        nxt_checks, nxt_types = next_spec
-    # window rows carry the union of measure-payload and NEXT-conjunct
-    # columns; both index into the same per-row value tuple
-    pcols = sorted({c for _, c in pay_pairs} | set(nxt_types))
-    wtypes = {**pay_types, **nxt_types}
-    key_type = stream_df.schema[key_col].dataType.simpleString()
-    out_schema = f"{key_col} {key_type}, " + ", ".join(
-        [f"ts_{i + 1} timestamp" for i in range(length)]
-        + [f"v{pos + 1}_{c} {pay_types[c]}" for pos, c in pay_pairs]
-    )
-    state_schema = ", ".join(
-        f"m{i} long, s{i} timestamp"
-        + "".join(f", w{i}_{c} {wtypes[c]}" for c in pcols)
-        for i in range(1, hist + 1)
-    )
-    stride = 2 + len(pcols)
-    checks_per_flag, need_cols, max_prev = [], [], 0
-    if prev_spec is not None:
-        checks_per_flag, need_cols, max_prev, col_types = prev_spec
-        state_schema += ", " + _prev_schema_suffix(
-            need_cols, max_prev, col_types
-        )
-
-    def update(
-        key: tuple,
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        # window rows oldest-first: (mask, ts, (payload vals in pcols order))
-        window: list[tuple] = []
-        vhist: list[dict] = []  # needed cols of the last max_prev rows
-        if state.exists:
-            vals = state.get
-            window = [
-                (
-                    vals[stride * i],
-                    vals[stride * i + 1],
-                    tuple(vals[stride * i + 2 : stride * (i + 1)]),
-                )
-                for i in range(hist)
-                if vals[stride * i] is not None
-            ]
-            if max_prev:
-                vhist = _prev_load(vals, stride * hist, need_cols, max_prev)
-        matches: list[list] = []
-        for pdf in batches:
-            sort_cols = [ts_col] + ([tiebreak_col] if tiebreak_col else [])
-            pdf = pdf.sort_values(sort_cols)
-            flags = [
-                pdf[c].fillna(False).to_numpy(dtype=bool) for c in flag_cols
-            ]
-            ts_vals = list(pdf[ts_col])
-            need_vals = {c: list(pdf[c]) for c in need_cols}
-            pay_vals = {c: list(pdf[c]) for c in pcols}
-            for r in range(len(pdf)):
-                cur_vals = None
-                if max_prev:
-                    cur_vals = {
-                        c: _scalar(need_vals[c][r]) for c in need_cols
-                    }
-                mask = 0
-                for i in range(length):
-                    if flags[i][r] and (
-                        not checks_per_flag
-                        or not checks_per_flag[i]
-                        or _prev_ok(checks_per_flag[i], cur_vals, vhist)
-                    ):
-                        mask |= 1 << i
-                if max_prev:
-                    vhist.append(cur_vals)
-                    vhist = vhist[-max_prev:]
-                cur = (
-                    mask,
-                    ts_vals[r],
-                    tuple(_scalar(pay_vals[c][r]) for c in pcols),
-                )
-                seq = window + [cur]
-                matched_here = False
-                if (
-                    len(seq) == length
-                    and all(s[0] & (1 << i) for i, s in enumerate(seq))
-                    and all(
-                        _next_ok(
-                            checks,
-                            vi,
-                            length,
-                            lambda i, c: seq[i][2][pcols.index(c)],
-                        )
-                        for vi, checks in enumerate(nxt_checks)
-                    )
-                ):
-                    if (
-                        within_seconds is None
-                        or (seq[-1][1] - seq[0][1]).total_seconds()
-                        <= within_seconds
-                    ):
-                        matches.append(
-                            [s[1] for s in seq]
-                            + [
-                                seq[pos][2][pcols.index(c)]
-                                for pos, c in pay_pairs
-                            ]
-                        )
-                        matched_here = True
-                window = [] if (skip_past and matched_here) else seq[-hist:]
-        flat: list = []
-        for mask, ts, pv in window:
-            flat += [mask, ts, *pv]
-        while len(flat) < stride * hist:
-            flat = [None] * stride + flat
-        if max_prev:
-            flat += _prev_flat(vhist, need_cols, max_prev)
-        state.update(tuple(flat))
-        if matches:
-            data = {key_col: [key[0]] * len(matches)}
-            for i in range(length):
-                data[f"ts_{i + 1}"] = [m[i] for m in matches]
-            for j, (pos, c) in enumerate(pay_pairs):
-                data[f"v{pos + 1}_{c}"] = [m[length + j] for m in matches]
-            yield pd.DataFrame(data)
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
@@ -617,6 +438,33 @@ def ast_max_len(node) -> int:
     return hi * ast_max_len(child)
 
 
+def ast_reach(node, next_off, at=0) -> int:
+    """Furthest row (0-based from the match start) a head-anchored match
+    of a bounded pattern can read: over the variables, the latest
+    position each can map plus its largest NEXT offset ``next_off[var]``.
+    ``at`` is the latest row the node can start at."""
+    kind = node[0]
+    if kind == "var":
+        return at + next_off.get(node[1], 0)
+    if kind == "alt":
+        return max(ast_reach(c, next_off, at) for c in node[1])
+    if kind == "permute":
+        total = ast_max_len(node)
+        return max(
+            ast_reach(c, next_off, at + total - ast_max_len(c))
+            for c in node[1]
+        )
+    if kind == "seq":
+        reach = at
+        for c in node[1]:
+            reach = max(reach, ast_reach(c, next_off, at))
+            at += ast_max_len(c)
+        return reach
+    _, child, _, hi, _ = node
+    last = at + (max(hi, 1) - 1) * ast_max_len(child)
+    return ast_reach(child, next_off, last)
+
+
 def _agg_finalize(aggs, pcols, run_len, accs, single_rows):
     """Aggregate-measure values at match emission for the O(1)-state
     run matchers. ``aggs`` = [(fn, role, col_or_None, alias, out_type)];
@@ -692,11 +540,14 @@ def bounded_nfa_stream(
     walks the skip and emits the measures — the batch NFA's decisions,
     run per key. Three decision rules, one state layout:
 
-    - length (default): a BOUNDED pattern (quantifiers A{n,m} / A?,
-      alternation, quantified and nested groups, PERMUTE as the
-      alternation of its orderings) spans at most Lmax rows, so the
-      head decides once Lmax rows (plus the largest NEXT offset) have
-      arrived — state O(keys x Lmax);
+    - length (default): a BOUNDED pattern (plain sequences,
+      quantifiers A{n,m} / A?, alternation, quantified and nested
+      groups, PERMUTE as the alternation of its orderings) spans at
+      most Lmax rows, so the head decides once G rows have arrived,
+      G = max(Lmax, R + 1) with R the furthest row a head-anchored
+      match can read (``ast_reach``: each variable's latest position
+      plus its NEXT offset) — a NEXT that stays inside the match
+      decides with the match's last row; state O(keys x G);
     - ``time_bounded=True``: an UNBOUNDED pattern under WITHIN W decides
       the head once a row later than head_ts + W arrives (arrival
       order: every row that could still join has been seen) — state
@@ -721,10 +572,10 @@ def bounded_nfa_stream(
     (cep_core.split_defines); ``prev_spec`` / ``next_spec``: physical
     PREV conjuncts evaluated at arrival against a bounded value
     history, and NEXT conjuncts evaluated at decision time against
-    window successors (each decision deferred by the largest offset).
-    State: ``mn`` (the MATCH_NUMBER() counter), per window row its
-    variable bitmask, covered flag and carried values — Lmax - 1 (+ the
-    largest NEXT offset) fixed slots under the length rule, arrays
+    window successors (``next_spec`` = (checks per variable, largest
+    NEXT offset per variable)). State: ``mn`` (the MATCH_NUMBER()
+    counter), per window row its variable bitmask, covered flag and
+    carried values — G - 1 fixed slots under the length rule, arrays
     (``ms``, ``cs``, ``w_<col>``) under the unbounded rules — then the
     PREV history."""
     from pyspark.sql import types as T
@@ -736,7 +587,8 @@ def bounded_nfa_stream(
         next_start,
     )
 
-    nchecks, max_next = ({}, 0) if next_spec is None else next_spec
+    nchecks, next_off = ({}, {}) if next_spec is None else next_spec
+    max_next = max(next_off.values(), default=0)
     if time_bounded and break_decided:
         raise ValueError("time_bounded and break_decided are exclusive")
     within = spec.within_seconds
@@ -758,7 +610,9 @@ def bounded_nfa_stream(
     # the length rule holds at most hist rows after each arrival: FIXED
     # slots (measured faster than arrays on an Lmax statement); the
     # unbounded rules keep a variable number of rows in ARRAYS
-    hist = None if time_bounded or break_decided else max_len - 1 + max_next
+    hist = None
+    if not (time_bounded or break_decided):
+        hist = max(max_len, ast_reach(ast, next_off) + 1) - 1
     stride = 2 + len(cols)
     if hist is None:
         state_schema = "mn long, ms array<long>, cs array<boolean>" + "".join(
@@ -799,7 +653,7 @@ def bounded_nfa_stream(
                     # NEXT conjuncts also wait for their targets
                     return len(masks) >= j + max_next
             return False
-        return len(masks) >= max_len + max_next
+        return len(masks) > hist
 
     def update(
         key: tuple,
@@ -872,9 +726,11 @@ def bounded_nfa_stream(
                     if break_decided and masks[0] == 0:
                         drop_head(1)  # break row at the head
                         continue
-                    if within is None:
-                        lim = len(rows) - 1 - max_next
-                    else:
+                    # lim: the last row a head-anchored match may use
+                    # (a break row ends every match before it, so the
+                    # break rule needs no bound of its own)
+                    lim = len(rows) - 1
+                    if within is not None:
                         t0 = rows[0][ts_idx]
                         lim = 0
                         while (
@@ -883,14 +739,11 @@ def bounded_nfa_stream(
                             <= within
                         ):
                             lim += 1
-                        if not time_bounded:
-                            # bounded pattern: a head-anchored match uses
-                            # at most max_len rows, so NEXT targets past
-                            # that are never consulted — without this cap
-                            # a WITHIN span reaching the window end stalls
-                            # the decision forever at stream end
-                            lim = min(lim, max_len - 1)
-                    if max_next and len(rows) - 1 - lim < max_next:
+                    if hist is not None:
+                        # G rows hold every row and NEXT target a match
+                        # of at most max_len rows can read
+                        lim = min(lim, max_len - 1)
+                    elif time_bounded and len(rows) - 1 - lim < max_next:
                         break  # NEXT targets have not arrived yet
                     mp = match_at(
                         ast, masks, var_bit, 0, lim, checks, val_at, nchecks
