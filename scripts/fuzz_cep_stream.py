@@ -13,7 +13,9 @@ the O(1)-state run matchers' overlap handling (leftmost-start
 priority, the greedy backtrack candidate ``pend``, break-row
 restarts), the decision window's gate (the sequence and bounded
 families carry exactly the TERM padding it needs), skip modes, WITHIN
-bounds, and cross-micro-batch state.
+bounds, and cross-micro-batch state. Every sequence case carries a
+NEXT conjunct, and half its keys end on a match's last real row (the
+start the gate decides last).
 A separate family draws provably disjoint DEFINEs (``v = k``, a
 distinct k per variable), the only case where the A B+ C funnel leg
 takes SKIP TO NEXT ROW and WITHIN itself, plus equal-valued respellings
@@ -32,7 +34,9 @@ no truncation bookkeeping.
 
 Usage: python scripts/fuzz_cep_stream.py [n_cases] [seed]
 """
+import math
 import random
+import re
 import sys
 from collections import Counter
 
@@ -330,7 +334,8 @@ def gen_disjoint(rng):
 
 def gen_case(rng):
     """Return (pattern, defines_sql, vars, skip_sql, within_sql,
-    n_pad_rows)."""
+    n_pad_rows, family); the seq family appends its per-position
+    DEFINEs (for ``key_values``)."""
     shape = rng.random()
     if shape < 0.24:
         return gen_bounded(rng)
@@ -338,7 +343,7 @@ def gen_case(rng):
         return gen_timebound(rng)
     if shape < 0.5:
         return gen_disjoint(rng)
-    if shape < 0.58:
+    if shape < 0.66:
         length = rng.randint(2, 4)
         pvars = ["A", "B", "C", "D"][:length]
         pattern = " ".join(pvars)
@@ -349,21 +354,25 @@ def gen_case(rng):
         # offset). TERM rows fail every atom, so the latest start that
         # can match is L rows before the end: pad G - L rows (gen_data
         # adds at least one), and a gate that waits past the padding
-        # leaves that start undecided (a MISMATCH)
+        # leaves that start undecided (a MISMATCH). Every case carries
+        # a NEXT conjunct (on ``nv``, never the last variable, offset
+        # up to at least 2), so the gate is always in play
         reach = length - 1
+        nv = rng.randrange(length - 1)
         for vi, v in enumerate(pvars):
             d = rand_local(rng, v)
-            if rng.random() < 0.3:
+            if vi != nv and rng.random() < 0.3:
                 d += f" AND {rand_prev_conjunct(rng, v)}"
-            elif rng.random() < 0.35:
+            elif vi == nv or rng.random() < 0.35:
                 max_n = length - 1 - vi + rng.choice([0, 0, 1, 2])
+                if vi == nv:
+                    max_n = max(max_n, 2)
                 if max_n >= 1:
                     nc = rand_next_conjunct(rng, v, max_n)
-                    import re as _re
-                    m = _re.search(r"NEXT\(\w+\.\w+(?:, (\d+))?\)", nc)
+                    m = re.search(r"NEXT\(\w+\.\w+(?:, (\d+))?\)", nc)
                     reach = max(reach, vi + int(m.group(1) or 1))
                     d += f" AND {nc}"
-            defines.append(f"{v} AS {d}")
+            defines.append((v, d))
         skip = rng.choice(["PAST LAST ROW", "TO NEXT ROW"])
         within = (
             f"WITHIN INTERVAL '{rng.choice([3, 6, 9, 12])}' SECOND"
@@ -371,10 +380,11 @@ def gen_case(rng):
             else ""
         )
         return (
-            pattern, ", ".join(defines), pvars, skip, within,
-            reach + 1 - length, "seq",
+            pattern, ", ".join(f"{v} AS {d}" for v, d in defines), pvars,
+            skip, within, reach + 1 - length, "seq",
+            [d for _, d in defines],
         )
-    if shape < 0.79:
+    if shape < 0.83:
         # A+ B run: A needs a required row-local atom (terminator)
         da = rand_local(rng, "A")
         if rng.random() < 0.35:
@@ -404,11 +414,66 @@ def gen_case(rng):
     )
 
 
-def gen_data(spark, rng, pad=1, hi=7):
+_OPERAND = r"(?:(PREV|NEXT)\(\w\.v(?:, (\d+))?\)|\w\.v(?: % (\d+))?|(-?\d+))"
+_CONJUNCT_RE = re.compile(
+    rf"{_OPERAND} (>=|<=|<>|>|<|=) {_OPERAND}"
+)
+_CMP = {
+    ">=": lambda a, b: a >= b, "<=": lambda a, b: a <= b,
+    "<>": lambda a, b: a != b, ">": lambda a, b: a > b,
+    "<": lambda a, b: a < b, "=": lambda a, b: a == b,
+}
+
+
+def _operand(groups, vals, i):
+    nav, off, mod, lit = groups
+    if lit is not None:
+        return int(lit)
+    j = i + {"PREV": -1, "NEXT": 1}.get(nav, 0) * int(off or 1)
+    if not 0 <= j < len(vals):
+        return None  # navigation past the partition: NULL
+    # Spark's % keeps the dividend's sign (fmod), unlike Python's
+    return vals[j] if mod is None else int(math.fmod(vals[j], int(mod)))
+
+
+def holds(define, vals, i):
+    """Evaluate a seq-family DEFINE (row-local atoms, PREV/NEXT
+    comparisons, AND) at row i of one key's values; NULL is false."""
+    for conj in define.split(" AND "):
+        m = _CONJUNCT_RE.fullmatch(conj.strip())
+        a = _operand(m.groups()[:4], vals, i)
+        b = _operand(m.groups()[5:], vals, i)
+        if a is None or b is None or not _CMP[m.group(5)](a, b):
+            return False
+    return True
+
+
+def key_values(rng, pad=1, hi=7, seq_defines=None):
+    """One key's values: 8-16 random values in [0, hi] plus TERM pads.
+    With ``seq_defines`` (one DEFINE per sequence position) the key ends
+    on a match's last real row half of the time, when one of 2000 draws
+    of the last L + 2 real values (PREV reads up to 2 rows back) makes
+    the last L rows match: the start the decision gate decides last."""
+    n = rng.randint(8, 16)
+    vals = [rng.randint(0, hi) for _ in range(n)] + [TERM] * max(1, pad)
+    if seq_defines and rng.random() < 0.5:
+        length = len(seq_defines)
+        lo = max(0, n - length - 2)
+        for _ in range(2000):
+            cand = list(vals)
+            cand[lo:n] = [rng.randint(0, hi) for _ in range(n - lo)]
+            if all(
+                holds(d, cand, n - length + j)
+                for j, d in enumerate(seq_defines)
+            ):
+                return cand
+    return vals
+
+
+def gen_data(spark, rng, pad=1, hi=7, seq_defines=None):
     rows = []
     for ki in range(3):
-        n = rng.randint(8, 16)
-        vals = [rng.randint(0, hi) for _ in range(n)] + [TERM] * max(1, pad)
+        vals = key_values(rng, pad, hi, seq_defines)
         for i, v in enumerate(vals):
             # globally-unique interleaved event times, 3 s per key step
             rows.append((f"k{ki}", i * 3 + ki, v))
@@ -480,8 +545,11 @@ def main(n_cases, seed):
     failures = tried = 0
     kinds = Counter()
     while tried < n_cases:
-        pattern, defines, pvars, skip, within, pad, kind = gen_case(rng)
-        df = gen_data(spark, rng, pad, hi=2 if kind == "disjoint" else 7)
+        pattern, defines, pvars, skip, within, pad, kind, *seq = gen_case(rng)
+        df = gen_data(
+            spark, rng, pad, hi=2 if kind == "disjoint" else 7,
+            seq_defines=seq[0] if seq else None,
+        )
         if tried % 25 == 0:
             # multi-key PARTITION BY (NULL keys included): batch and
             # stream must agree via the composite-key leg (round 8)

@@ -742,6 +742,35 @@ def test_plus_run_pattern(spark):
     ]
 
 
+def test_lower_nfa_rejects_plus_spec(spark):
+    """The NFA lowering reads the pattern from spec.unbounded; a spec
+    still carrying the A+ B fast-path ``spec.plus`` would lower the run
+    as a single row and return too few matches, so it must raise."""
+    from training_flink_sql_cc_src_spark.plans.match_recognize import _lower_nfa
+
+    spark.createDataFrame(
+        [(1, 1, "click"), (1, 2, "click"), (1, 3, "purchase")],
+        "user_id int, seq int, event_type string",
+    ).createOrReplaceTempView("__mr_nfa_plus")
+    spec = parse_match_recognize(
+        """
+        SELECT * FROM __mr_nfa_plus MATCH_RECOGNIZE (
+            PARTITION BY user_id
+            ORDER BY seq
+            MEASURES B.seq AS b_seq
+            ONE ROW PER MATCH
+            AFTER MATCH SKIP PAST LAST ROW
+            PATTERN (A+ B)
+            DEFINE A AS A.event_type = 'click',
+                   B AS B.event_type = 'purchase'
+        ) AS m
+        """
+    )
+    assert spec.plus is not None
+    with pytest.raises(ValueError, match="spec.unbounded"):
+        _lower_nfa(spark, spec)
+
+
 def test_plus_skip_past_within_prunes_timed_out_head(spark):
     """A+ B with SKIP PAST LAST ROW + WITHIN: when the maximal run's HEAD
     start violates the WITHIN bound, Flink prunes that timed-out partial

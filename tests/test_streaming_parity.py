@@ -4,6 +4,7 @@ rows; datagen streams replay deterministically."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from training_flink_sql_cc_src_spark.queries._util import t
@@ -2272,6 +2273,56 @@ def test_unwindowed_topn_null_ordering_matches_batch(spark):
         assert set(store.values()) == batch and batch, direction
 
 
+@pytest.mark.parametrize("direction", ["DESC", "ASC"])
+@pytest.mark.parametrize("filt", ["= 1", "<= 2"], ids=["eq1", "le2"])
+def test_windowed_rank_null_ordering_matches_batch(spark, direction, filt):
+    """NULL order values through the windowed rank aggregate (min/max
+    of the order struct for rn = 1, the sorted collected structs for
+    rn <= N) must rank exactly as the batch ROW_NUMBER plan: a NULL
+    struct field orders first, i.e. ASC NULLS FIRST / DESC NULLS LAST.
+    The last row opens a far-later window, so every window holding the
+    other rows closes and the comparison is exact."""
+    from training_flink_sql_cc_src_spark.engine import Engine
+    from training_flink_sql_cc_src_spark.plans.router import StatementRouter
+
+    rows = [
+        ("u1", 1, None, 300), ("u1", 2, 50, 600), ("u1", 3, None, 1200),
+        ("u1", 4, 80, 1800), ("u2", 5, None, 900), ("u2", 6, None, 1500),
+        ("u2", 7, 10, 2100), ("u1", 8, 5, 3900), ("u1", 9, None, 4200),
+        ("u2", 10, 7, 4800), ("u9", 11, 0, 36000),
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id string, event_id int, value int, s long"
+    ).selectExpr("user_id", "event_id", "value", "timestamp_seconds(s) AS ts")
+    eng = Engine(spark)
+    eng.sql("ALTER TABLE ev_wrank_nulls MODIFY WATERMARK FOR `ts` AS `ts`")
+    stmt = f"""
+        SELECT window_start, user_id, event_id, value, rn FROM (
+          SELECT *, ROW_NUMBER() OVER (
+              PARTITION BY window_start, window_end, user_id
+              ORDER BY value {direction}, event_id {direction}) AS rn
+          FROM TABLE(TUMBLE(TABLE ev_wrank_nulls, DESCRIPTOR(ts),
+                            INTERVAL '1' HOUR))
+        ) WHERE rn {filt}
+    """
+    df.createOrReplaceTempView("ev_wrank_nulls")
+    batch = {
+        tuple(r)
+        for r in StatementRouter(spark).execute(stmt).collect()
+        if r.user_id != "u9"
+    }
+    streamed = run_stream_over_batch(
+        spark,
+        df,
+        lambda s: eng.sql_stream(stmt, {"ev_wrank_nulls": s}),
+        output_mode="append",
+        n_files=3,
+        order_by="ts",
+    )
+    got = {tuple(r) for r in streamed.collect() if r.user_id != "u9"}
+    assert got == batch and batch
+
+
 def test_stream_fuzz_smoke_vs_batch_nfa(spark):
     """A fixed-seed slice of scripts/fuzz_cep_stream.py runs in-suite
     so random streamable shapes (sequences / A+ B / A B+ C with
@@ -2666,58 +2717,94 @@ def test_tumble_tvf_statement_streams_append_mode(spark, sf_small):
 
 
 def test_window_topn_streaming_parity(spark, sf_small):
-    """Continuous Window Top-N (chained event-time aggregations, append
-    mode) == the batch window_topn registry query on the closed windows:
-    an in-order replay closes every window except the tail, and each
-    closed window's top-3 rows match the batch ROW_NUMBER result exactly
-    (same count-DESC/key-ASC ordering)."""
+    """Continuous Window Top-N through ``Engine.sql_stream`` (nested
+    ROW_NUMBER over a TUMBLE TVF aggregate, append mode) == the batch
+    window_topn registry query on the closed windows: an in-order replay
+    closes every window except the tail, and each closed window's top-3
+    carries the batch count multiset with ranks 1..k (ROW_NUMBER breaks
+    count ties arbitrarily, so the tied event types may differ)."""
+    from training_flink_sql_cc_src_spark.engine import Engine
     from training_flink_sql_cc_src_spark.queries.time_windows import window_topn
-    from training_flink_sql_cc_src_spark.streaming.window_rank import (
-        window_topn_stream,
-    )
 
     ev = t(spark, sf_small, "events").select("ts", "event_type")
+    eng = Engine(spark)
+    eng.sql("ALTER TABLE ev_wtopn_port MODIFY WATERMARK FOR `ts` AS `ts`")
+    stmt = """
+        SELECT CAST(window_start AS LONG) AS window_start, event_type,
+               n_events, CAST(rnk AS LONG) AS rnk
+        FROM (
+          SELECT *, ROW_NUMBER() OVER (
+              PARTITION BY window_start, window_end
+              ORDER BY n_events DESC) AS rnk
+          FROM (
+            SELECT window_start, window_end, event_type,
+                   COUNT(*) AS n_events
+            FROM TABLE(TUMBLE(TABLE ev_wtopn_port, DESCRIPTOR(ts),
+                              INTERVAL '1' HOUR))
+            GROUP BY window_start, window_end, event_type
+          )
+        ) WHERE rnk <= 3
+    """
+    ev.createOrReplaceTempView("ev_wtopn_port")
     batch = {}
     for r in window_topn(spark, sf_small).collect():
-        batch.setdefault(r.window_start, []).append(
-            (r.event_type, r.n_events, r.rnk)
-        )
+        batch.setdefault(r.window_start, []).append((r.n_events, r.rnk))
     streamed = run_stream_over_batch(
-        spark, ev, window_topn_stream, output_mode="append",
-        n_files=4, order_by="ts",
+        spark,
+        ev,
+        lambda s: eng.sql_stream(stmt, {"ev_wtopn_port": s}),
+        output_mode="append",
+        n_files=4,
+        order_by="ts",
     )
     got = {}
     for r in streamed.collect():
-        got.setdefault(r.window_start, []).append(
-            (r.event_type, r.n_events, r.rnk)
-        )
+        got.setdefault(r.window_start, []).append((r.n_events, r.rnk))
     assert set(got) <= set(batch)
     assert len(got) >= len(batch) - 2  # only the open tail may be missing
     assert len(got) > 0
-    for w in got:  # per closed window: exact top-3, exact ranks
+    for w in got:  # per closed window: the top-3 counts, ranks 1..k
         assert sorted(got[w]) == sorted(batch[w])
 
 
 def test_window_dedup_streaming_parity(spark, sf_small):
-    """Continuous Window Deduplication (min_by aggregation, append mode)
-    == the batch window_dedup_first registry query on closed windows —
-    the first (ts, event_id) row per (hour, user) survives incremental
+    """Continuous Window Deduplication through ``Engine.sql_stream``
+    (ROW_NUMBER rn = 1 over a TUMBLE TVF, append mode) == the batch
+    window_dedup_first registry query on closed windows — the first
+    (ts, event_id) row per (hour, user) survives incremental
     micro-batch merging."""
+    from training_flink_sql_cc_src_spark.engine import Engine
     from training_flink_sql_cc_src_spark.queries.time_windows import (
         window_dedup_first,
     )
-    from training_flink_sql_cc_src_spark.streaming.window_rank import (
-        window_dedup_stream,
-    )
 
     ev = t(spark, sf_small, "events").select("ts", "user_id", "event_id")
+    eng = Engine(spark)
+    eng.sql("ALTER TABLE ev_wdedup_port MODIFY WATERMARK FOR `ts` AS `ts`")
+    stmt = """
+        SELECT CAST(window_start AS LONG) AS window_start, user_id,
+               CAST(ts AS LONG) AS first_ts_epoch,
+               event_id AS first_event_id
+        FROM (
+          SELECT *, ROW_NUMBER() OVER (
+              PARTITION BY window_start, window_end, user_id
+              ORDER BY ts, event_id) AS rn
+          FROM TABLE(TUMBLE(TABLE ev_wdedup_port, DESCRIPTOR(ts),
+                            INTERVAL '1' HOUR))
+        ) WHERE rn = 1
+    """
+    ev.createOrReplaceTempView("ev_wdedup_port")
     batch = {
         (r.window_start, r.user_id): (r.first_ts_epoch, r.first_event_id)
         for r in window_dedup_first(spark, sf_small).collect()
     }
     streamed = run_stream_over_batch(
-        spark, ev, window_dedup_stream, output_mode="append",
-        n_files=4, order_by="ts",
+        spark,
+        ev,
+        lambda s: eng.sql_stream(stmt, {"ev_wdedup_port": s}),
+        output_mode="append",
+        n_files=4,
+        order_by="ts",
     )
     got = {
         (r.window_start, r.user_id): (r.first_ts_epoch, r.first_event_id)
@@ -2731,31 +2818,54 @@ def test_window_dedup_streaming_parity(spark, sf_small):
     assert len(closed) >= len(full) - 2
 
 
-def test_window_topn_sql_statement_streams(spark, sf_small):
-    """Flink's Window Top-N SQL statement (nested ROW_NUMBER over a
-    TUMBLE TVF aggregate) runs CONTINUOUSLY through sql_stream: the
-    rank layer is lowered to a chained windowed aggregation +
-    array_sort rank filter in append mode, and each closed window's
-    top-3 matches the batch front-door answer exactly."""
-    from training_flink_sql_cc_src_spark.engine import Engine
+_TOPN_OVER_AGG = """
+    SELECT window_start, event_type, n_events, rn FROM (
+      SELECT *, ROW_NUMBER() OVER (
+          PARTITION BY window_start, window_end
+          ORDER BY n_events {direction}) AS rn
+      FROM (
+        SELECT window_start, window_end, event_type,
+               COUNT(*) AS n_events
+        FROM TABLE(TUMBLE(TABLE ev_topn_stream, DESCRIPTOR(ts),
+                          INTERVAL '1' HOUR))
+        GROUP BY window_start, window_end, event_type
+      )
+    ) WHERE rn {filter}
+"""
 
-    ev = t(spark, sf_small, "events").select("ts", "event_type")
-    eng = Engine(spark)
-    eng.sql("ALTER TABLE ev_topn_stream MODIFY WATERMARK FOR `ts` AS `ts`")
-    stmt = """
-        SELECT window_start, event_type, n_events, rn FROM (
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        _TOPN_OVER_AGG.format(direction="DESC", filter="<= 3"),
+        # rn = 1 over the TVF aggregate (Window Top-1)
+        _TOPN_OVER_AGG.format(direction="DESC", filter="= 1"),
+        # ascending Window Top-N: the bottom 3 counts
+        _TOPN_OVER_AGG.format(direction="ASC", filter="<= 3"),
+        # Window Top-N over the TVF's rows (no inner aggregate)
+        """
+        SELECT window_start, event_type, value AS n_events, rn FROM (
           SELECT *, ROW_NUMBER() OVER (
               PARTITION BY window_start, window_end
-              ORDER BY n_events DESC) AS rn
-          FROM (
-            SELECT window_start, window_end, event_type,
-                   COUNT(*) AS n_events
-            FROM TABLE(TUMBLE(TABLE ev_topn_stream, DESCRIPTOR(ts),
-                              INTERVAL '1' HOUR))
-            GROUP BY window_start, window_end, event_type
-          )
-        ) WHERE rn <= 3
-    """
+              ORDER BY value DESC) AS rn
+          FROM TABLE(TUMBLE(TABLE ev_topn_stream, DESCRIPTOR(ts),
+                            INTERVAL '1' HOUR))
+        ) WHERE rn <= 2
+        """,
+    ],
+    ids=["desc_top3", "top1_eq", "asc_top3", "tvf_rows_top2"],
+)
+def test_window_topn_sql_statement_streams(spark, sf_small, stmt):
+    """Flink's Window Top-N SQL statement (nested ROW_NUMBER over a
+    TUMBLE TVF aggregate, or over the TVF's rows) runs CONTINUOUSLY
+    through sql_stream: the rank layer is lowered to a windowed rank
+    aggregate in append mode, and each closed window's top-N matches
+    the batch front-door answer exactly."""
+    from training_flink_sql_cc_src_spark.engine import Engine
+
+    ev = t(spark, sf_small, "events").select("ts", "event_type", "value")
+    eng = Engine(spark)
+    eng.sql("ALTER TABLE ev_topn_stream MODIFY WATERMARK FOR `ts` AS `ts`")
     ev.createOrReplaceTempView("ev_topn_stream")
     batch = {}
     for r in eng.sql(stmt).collect():
@@ -2782,23 +2892,40 @@ def test_window_topn_sql_statement_streams(spark, sf_small):
         assert sorted(ranks[w]) == list(range(1, len(ranks[w]) + 1))
 
 
-def test_window_dedup_sql_statement_streams(spark, sf_small):
+_TUMBLE_1H = "TUMBLE(TABLE ev_dd_stream, DESCRIPTOR(ts), INTERVAL '1' HOUR)"
+
+
+@pytest.mark.parametrize(
+    "tvf, order",
+    [
+        (_TUMBLE_1H, "ts, event_id"),
+        # keep-last Window Deduplication
+        (_TUMBLE_1H, "ts DESC, event_id DESC"),
+        (
+            "HOP(TABLE ev_dd_stream, DESCRIPTOR(ts), INTERVAL '30' MINUTE, "
+            "INTERVAL '1' HOUR)",
+            "ts, event_id",
+        ),
+    ],
+    ids=["tumble_first", "tumble_last", "hop_first"],
+)
+def test_window_dedup_sql_statement_streams(spark, sf_small, tvf, order):
     """Flink's Window Deduplication SQL statement (nested ROW_NUMBER
-    ORDER BY ts ASC over a TUMBLE TVF, rn = 1) runs CONTINUOUSLY: the
-    rank layer lowers to one windowed min_by keyed by the order struct,
-    append mode, matching the batch front door on closed windows."""
+    over a TUMBLE/HOP TVF, rn = 1; ORDER BY ASC keeps the first row,
+    DESC the last) runs CONTINUOUSLY: the rank layer lowers to one
+    windowed min/max over the order struct, append mode, matching the
+    batch front door on closed windows."""
     from training_flink_sql_cc_src_spark.engine import Engine
 
     ev = t(spark, sf_small, "events").select("ts", "user_id", "event_id")
     eng = Engine(spark)
     eng.sql("ALTER TABLE ev_dd_stream MODIFY WATERMARK FOR `ts` AS `ts`")
-    stmt = """
+    stmt = f"""
         SELECT window_start, user_id, event_id FROM (
           SELECT *, ROW_NUMBER() OVER (
               PARTITION BY window_start, window_end, user_id
-              ORDER BY ts, event_id) AS rn
-          FROM TABLE(TUMBLE(TABLE ev_dd_stream, DESCRIPTOR(ts),
-                            INTERVAL '1' HOUR))
+              ORDER BY {order}) AS rn
+          FROM TABLE({tvf})
         ) WHERE rn = 1
     """
     ev.createOrReplaceTempView("ev_dd_stream")

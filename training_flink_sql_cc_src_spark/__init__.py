@@ -7,6 +7,7 @@ built-in (MinHash, SimHash). Batch-first with a streaming-parity layer
 (see streaming/).
 """
 
-from .session import get_spark, load_tables, register_views
+from .session import get_spark
+from .sources.fixtures import load_fixture, register_fixture_views
 
-__all__ = ["get_spark", "load_tables", "register_views"]
+__all__ = ["get_spark", "load_fixture", "register_fixture_views"]

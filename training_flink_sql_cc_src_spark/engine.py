@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .plans.router import StatementRouter
 from .registry import all_queries
-from .session import get_spark, register_views
+from .session import get_spark
+from .sources.fixtures import register_fixture_views
 from .streaming.pipeline import PipelineRunner
 
 
@@ -41,7 +42,7 @@ class Engine:
     ):
         self.spark = spark or get_spark(app_name)
         if sf_dir is not None:
-            register_views(self.spark, sf_dir)
+            register_fixture_views(self.spark, sf_dir)
         self.sf_dir = sf_dir
         self.router = StatementRouter(self.spark)
         self.catalog = self.router.catalog
@@ -91,21 +92,17 @@ class Engine:
         via the BREAK-ROW-decided matcher (no match can span a row
         matching no pattern variable, so the head decides at the
         first such row; state = the break-free stretch — Flink CEP's
-        partial-match state — same loud cap). Flink's Window Top-N
-        statement (nested ROW_NUMBER over a TUMBLE/HOP TVF aggregate,
-        WHERE rn <= N) streams through ``_window_topn_stream`` — a
-        chained windowed aggregation with an array_sort rank filter,
-        append mode. Flink's Over Aggregation statement (agg OVER
-        PARTITION BY/ORDER BY with a RANGE time frame or ROWS count
-        frame) streams through ``_over_agg_stream`` — the frame buffer
-        in keyed state, one emitted row per input row. Flink's plain
-        Deduplication statement (ROW_NUMBER rn=1 over a non-windowed
-        partition, first row on ASC / last row on DESC) streams
-        through ``_dedup_stream`` — one min_by/max_by upsert
-        aggregate, O(1) state per key — and the plain Top-N statement
-        (rn <= N) through the stateful top-N operator: O(N) rows per
-        key, update changelog re-emitting a key's top-N on change
-        (drain into an upsert sink keyed by (keys, rn)). Temporal
+        partial-match state — same loud cap). Flink's four ROW_NUMBER
+        filter statements — Top-N, Deduplication, Window Top-N and
+        Window Deduplication (``WHERE rn = 1`` / ``rn <= N`` over a
+        table, a TUMBLE/HOP TVF or a TVF aggregate, ASC or DESC) —
+        stream through ``_rank_stream``: one parse, one rank aggregate
+        (min/max of the order struct for rn = 1), append on window
+        close when windowed, an update-mode upsert stream keyed by
+        (keys, rn) otherwise. Flink's Over Aggregation statement (agg
+        OVER PARTITION BY/ORDER BY with a RANGE time frame or ROWS
+        count frame) streams through ``_over_agg_stream`` — the frame
+        buffer in keyed state, one emitted row per input row. Temporal
         joins (``FOR SYSTEM_TIME AS OF``) stream when the PROBE side
         streams and the versioned dim is a batch view/snapshot: the
         router's validity-interval rewrite plans a per-microbatch
@@ -126,18 +123,12 @@ class Engine:
         mr = self._match_recognize_stream(stmt, watermarked)
         if mr is not None:
             stmt = mr
-        topn = self._window_topn_stream(stmt)
-        if topn is not None:
-            return topn
-        dedup = self._window_dedup_stream(stmt)
-        if dedup is not None:
-            return dedup
+        ranked = self._rank_stream(stmt)
+        if ranked is not None:
+            return ranked
         over = self._over_agg_stream(stmt, watermarked)
         if over is not None:
             return over
-        plain_dedup = self._dedup_stream(stmt)
-        if plain_dedup is not None:
-            return plain_dedup
         streaming_session = rewrite_session_tvf_streaming(stmt)
         if streaming_session is not None:
             stmt = streaming_session
@@ -168,147 +159,189 @@ class Engine:
         rewritten = self.router._rewrite_dialect(stmt)
         return self.spark.sql(rewritten)
 
-    def _window_topn_stream(self, stmt: str) -> DataFrame | None:
-        """Lower Flink's Window Top-N statement for CONTINUOUS execution.
+    def _rank_stream(self, stmt: str) -> DataFrame | None:
+        """Lower Flink's ROW_NUMBER filter statements — Top-N,
+        Deduplication, Window Top-N and Window Deduplication — for
+        CONTINUOUS execution. All four have one form:
 
-        The canonical shape (windowing-TVF chapter):
-
-            SELECT ... FROM (
+            SELECT <outer> FROM (
               SELECT *, ROW_NUMBER() OVER (
-                  PARTITION BY window_start, window_end [, keys]
-                  ORDER BY <col> DESC) AS rn
-              FROM (<TUMBLE/HOP TVF aggregate>)
-            ) WHERE rn <= N
+                  PARTITION BY <keys>
+                  ORDER BY <col> [ASC|DESC] [, <col> [ASC|DESC]]) AS rn
+              FROM <src>
+            ) WHERE rn = 1 | rn <= N
 
-        Structured Streaming rejects the ROW_NUMBER window function, so
-        the rank filter is re-expressed with streaming-legal operators:
-        the inner TVF aggregate takes the native-window rewrite (its
-        ``window`` struct keeps event-time metadata), a CHAINED
-        aggregation per window collects the (neg-order, values) structs
-        (Spark 3.4+ multiple-stateful-operator support), and
-        ``array_sort`` + ``slice`` + ``posexplode`` emit the top N rows
-        with their ranks — append mode, exactly once per closed window,
-        identical ordering to ROW_NUMBER (order DESC, remaining columns
-        ASC as the deterministic tiebreak). Returns None when the
-        statement is not this shape. 100 TB: the inner aggregate is the
-        only data-sized shuffle; the re-aggregation moves one scalar
-        row per (window, key) and its state is bounded by the rank-key
-        domain."""
+        The statement is WINDOWED when <keys> hold window_start and
+        window_end: <src> is then a TUMBLE/HOP TVF (its rows) or a
+        subquery aggregating one (the native-window rewrite), and the
+        rank groups by the native window struct ``__w`` plus the other
+        keys — event-time metadata intact, so each closed window emits
+        once (append mode). Otherwise <src> is a table and the result is
+        an update-mode upsert stream keyed by <keys>.
+
+        Structured Streaming rejects ROW_NUMBER, so the rank filter is
+        one aggregate over struct(order cols, remaining cols): N = 1 is
+        ``min`` (ASC) / ``max`` (DESC), O(1) state per group; windowed
+        N > 1 keeps the first N of the group's ``array_sort``-ed structs
+        (reversed for DESC); unwindowed N > 1 runs the stateful top-N
+        operator (streaming/stateful.topn_stream). Spark orders a NULL
+        struct field first, which is batch ROW_NUMBER's ASC NULLS FIRST
+        / DESC NULLS LAST; ties rank in struct order (ROW_NUMBER breaks
+        them arbitrarily). Mixed directions, explicit NULLS FIRST/LAST
+        and every other shape return None (the loud Catalyst error).
+        100 TB: one shuffle on the group keys (after the inner aggregate
+        for an aggregate source); windowed N > 1 holds the group's rows
+        until its window closes."""
         import re as _re
 
         from pyspark.sql import functions as F
 
         from .plans.router import (
             _WINDOW_TVF_RE,
+            native_window,
             rewrite_session_tvf_streaming,
         )
 
-        om = _re.match(
-            r"^\s*SELECT\s+(?P<outer>.+?)\s+FROM\s*\(", stmt,
-            _re.IGNORECASE | _re.DOTALL,
-        )
+        flags = _re.IGNORECASE | _re.DOTALL
+        alias = r"\s*(?:(?:AS\s+)?\w+\s*)?"
+
+        def parens(s: str, i: int) -> tuple[str, str]:
+            """(inside, after) of the balanced parentheses open at s[i]."""
+            depth = 0
+            for j in range(i, len(s)):
+                depth += {"(": 1, ")": -1}.get(s[j], 0)
+                if depth == 0:
+                    return s[i + 1 : j], s[j + 1 :]
+            return "", ""
+
+        om = _re.match(r"\s*SELECT\s+(?P<outer>.+?)\s+FROM\s*\(", stmt, flags)
         if om is None:
             return None
-
-        def balanced_close(s: str, open_idx: int) -> int:
-            depth = 0
-            for i in range(open_idx, len(s)):
-                if s[i] == "(":
-                    depth += 1
-                elif s[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        return i
-            return -1
-
-        mid_open = om.end() - 1
-        mid_close = balanced_close(stmt, mid_open)
-        if mid_close < 0:
-            return None
-        mid = stmt[mid_open + 1 : mid_close].strip()
+        mid, tail = parens(stmt, om.end() - 1)
         rm = _re.match(
-            r"^SELECT\s+\*\s*,\s*ROW_NUMBER\s*\(\s*\)\s+OVER\s*\(\s*"
-            r"PARTITION\s+BY\s+(?P<pby>.+?)\s+"
-            r"ORDER\s+BY\s+(?P<ocol>`?\w+`?)\s+DESC\s*\)\s+"
-            r"AS\s+(?P<rn>\w+)\s+FROM\s*\(",
-            mid,
-            _re.IGNORECASE | _re.DOTALL,
+            r"\s*SELECT\s+\*\s*,\s*ROW_NUMBER\s*\(\s*\)\s+OVER\s*\(", mid, flags
         )
         if rm is None:
             return None
-        inner_open = rm.end() - 1
-        inner_close = balanced_close(mid, inner_open)
-        if inner_close < 0:
-            return None
-        inner = mid[inner_open + 1 : inner_close].strip()
-        if _re.match(r"^\s*(?:AS\s+)?\w*\s*$", mid[inner_close + 1 :]) is None:
-            return None
-        rn = rm.group("rn")
-        wm = _re.match(
-            r"^\s*(?:AS\s+\w+\s+)?WHERE\s+`?" + _re.escape(rn)
-            + r"`?\s*<=\s*(?P<n>\d+)\s*$",
-            stmt[mid_close + 1 :],
-            _re.IGNORECASE,
+        over, after = parens(mid, rm.end() - 1)
+        wm = _re.fullmatch(
+            r"\s*PARTITION\s+BY\s+(?P<pby>.+?)\s+ORDER\s+BY\s+(?P<oby>.+?)\s*",
+            over, flags,
         )
-        if wm is None:
-            return None
-        n = int(wm.group("n"))
-
-        tvf = _WINDOW_TVF_RE.search(inner)
-        if tvf is None or tvf.group("kind").upper() not in ("TUMBLE", "HOP"):
-            return None  # SESSION merges / CUMULATE has no native struct
-        inner_sql = rewrite_session_tvf_streaming(inner)
-        if inner_sql is None:
-            return None
-        # also project the GROUPING struct itself — the chained
-        # aggregation groups on it to keep event-time metadata
-        inner_sql = _re.sub(
-            r"^\s*SELECT\s+", "SELECT window AS __w, ", inner_sql,
-            count=1, flags=_re.IGNORECASE,
+        fm = _re.fullmatch(
+            r"\s*AS\s+(?P<rn>\w+)\s+FROM\s+(?P<src>.+?)\s*", after, flags
         )
-        inner_df = self.spark.sql(self.router._rewrite_dialect(inner_sql))
-
-        pby = [
-            k.strip().strip("`").lower()
-            for k in rm.group("pby").split(",")
-            if k.strip()
+        if wm is None or fm is None:
+            return None
+        rn, src = fm.group("rn"), fm.group("src")
+        nm = _re.fullmatch(
+            alias + r"WHERE\s+`?" + _re.escape(rn)
+            + r"`?\s*(?:=\s*1|<=\s*(?P<n>\d+))\s*",
+            tail, flags,
+        )
+        keys = [k.strip() for k in wm.group("pby").split(",")]
+        items = [
+            _re.fullmatch(r"`?(\w+)`?(?:\s+(ASC|DESC))?", i.strip(), flags)
+            for i in wm.group("oby").split(",")
         ]
-        extras = [k for k in pby if k not in ("window_start", "window_end")]
-        ocol = rm.group("ocol").strip("`")
-        inner_cols = [c for c in inner_df.columns if c != "__w"]
-        val_cols = [
-            c
-            for c in inner_cols
-            if c not in ("window_start", "window_end") and c not in extras
-        ]
-        # sort struct: negated rank column first (DESC), remaining value
-        # columns in select order as the deterministic tiebreak
-        fields = [F.negate(F.col(ocol)).alias("__neg")] + [
-            F.col(c) for c in val_cols if c != ocol
-        ] + [F.col(ocol)]
-        per_w = inner_df.groupBy("__w", *extras).agg(
-            F.collect_list(F.struct(*fields)).alias("__xs")
-        )
-        exploded = per_w.select(
-            "__w",
-            *extras,
-            F.posexplode(F.slice(F.array_sort("__xs"), 1, n)).alias(
-                "__pos", "__x"
-            ),
-        )
-        select = []
-        for c in inner_cols:
-            if c == "window_start":
-                select.append(F.col("__w.start").alias(c))
-            elif c == "window_end":
-                select.append(F.col("__w.end").alias(c))
-            elif c in extras:
-                select.append(F.col(c))
+        if nm is None or None in items or not all(
+            _re.fullmatch(r"`?\w+`?", k) for k in keys
+        ):
+            return None
+        keys = [k.strip("`") for k in keys]
+        order = [i.group(1) for i in items]
+        directions = {(i.group(2) or "ASC").upper() for i in items}
+        if len(directions) != 1:
+            return None
+        desc = directions == {"DESC"}
+        n = int(nm.group("n") or 1)
+
+        windowed = {"window_start", "window_end"} <= {k.lower() for k in keys}
+        derived = {}
+        if windowed:
+            tvf = _WINDOW_TVF_RE.search(src)
+            if tvf is None or tvf.group("kind").upper() not in ("TUMBLE", "HOP"):
+                return None
+            derived = {
+                "window_start": F.col("__w.start"),
+                "window_end": F.col("__w.end"),
+                "window_time": F.col("__w.end")
+                - F.expr("INTERVAL 1 MILLISECOND"),
+            }
+            if tvf.start() == 0:  # the TVF's rows
+                if not _re.fullmatch(alias, src[tvf.end() :]):
+                    return None
+                rows = self.spark.table(tvf.group("tbl")).select(
+                    "*", F.expr(native_window(tvf)).alias("__w")
+                )
+                rows = rows.select(
+                    "*", *[e.alias(c) for c, e in derived.items()]
+                )
+            else:  # a subquery aggregating the TVF
+                inner, rest = parens(src, 0) if src[0] == "(" else ("", "")
+                inner_sql = rewrite_session_tvf_streaming(inner)
+                if inner_sql is None or not _re.fullmatch(alias, rest):
+                    return None
+                rows = self.spark.sql(
+                    self.router._rewrite_dialect(
+                        _re.sub(
+                            r"^\s*SELECT\s+", "SELECT window AS __w, ",
+                            inner_sql, count=1, flags=flags,
+                        )
+                    )
+                )
+        else:
+            tm = _re.fullmatch(r"(?P<tbl>[\w.`]+)" + alias, src)
+            if tm is None:
+                return None
+            rows = self.spark.table(tm.group("tbl").strip("`"))
+        cols = [c for c in rows.columns if c != "__w"]
+        names = {c.lower(): c for c in cols}
+        keys = [names.get(k.lower()) for k in keys]
+        order = [names.get(o.lower()) for o in order]
+        if None in keys or not set(order) <= set(rows.columns) - set(derived):
+            return None
+
+        if n > 1 and not windowed:
+            if n > 1000:
+                return None  # unbounded-ish rank: loud fallback
+            from .streaming.stateful import topn_stream
+
+            ranked = topn_stream(rows, keys, order, descending=desc, n=n)
+            ranked = ranked.withColumnRenamed("rn", rn)
+        else:
+            group = [k for k in keys if k not in derived]
+            if windowed:
+                group.insert(0, "__w")
+            vals = [c for c in cols if c not in group and c not in derived]
+            row = F.struct(
+                *[F.col(o).alias(f"__o{i}") for i, o in enumerate(order)],
+                *vals,
+            )
+            per_group = rows.groupBy(*group)
+            if n == 1:
+                pick = F.max if desc else F.min
+                ranked = per_group.agg(pick(row).alias("__x")).withColumn(
+                    "__pos", F.lit(0)
+                )
             else:
-                select.append(F.col(f"__x.{c}").alias(c))
-        select.append((F.col("__pos") + 1).cast("int").alias(rn))
-        view = f"__wtopn_stream_{abs(hash(stmt)) % 10_000_000}"
-        exploded.select(*select).createOrReplaceTempView(view)
+                xs = F.array_sort(F.collect_list(row))
+                xs = F.reverse(xs) if desc else xs
+                ranked = per_group.agg(xs.alias("__xs")).select(
+                    *group,
+                    F.posexplode(F.slice("__xs", 1, n)).alias("__pos", "__x"),
+                )
+            ranked = ranked.select(
+                *[
+                    derived[c].alias(c) if c in derived
+                    else F.col(c) if c in group
+                    else F.col("__x").getField(c).alias(c)
+                    for c in cols
+                ],
+                (F.col("__pos") + 1).cast("int").alias(rn),
+            )
+        view = f"__rank_stream_{abs(hash(stmt)) % 10_000_000}"
+        ranked.createOrReplaceTempView(view)
         return self.spark.sql(
             self.router._rewrite_dialect(
                 f"SELECT {om.group('outer')} FROM {view}"
@@ -959,211 +992,6 @@ class Engine:
         return over_agg_stream(
             sdf, key, ts_col, frame, aggs, passthrough
         ).select(*out_order)
-
-    def _window_dedup_stream(self, stmt: str) -> DataFrame | None:
-        """Lower Flink's Window Deduplication statement for CONTINUOUS
-        execution.
-
-        The canonical shape (windowing-TVF chapter):
-
-            SELECT ... FROM (
-              SELECT *, ROW_NUMBER() OVER (
-                  PARTITION BY window_start, window_end [, keys]
-                  ORDER BY <col> [ASC] [, <col> [ASC]]) AS rn
-              FROM TABLE(TUMBLE/HOP(TABLE t, DESCRIPTOR(ts), ...))
-            ) WHERE rn = 1
-
-        ROW_NUMBER is streaming-illegal; the first-row-per-(window, key)
-        semantics re-express as ONE windowed ``min_by`` aggregation
-        keyed by the order-column struct — merged incrementally across
-        micro-batches, emitted once on window close (append mode).
-        Returns None when the statement is not this shape. 100 TB: one
-        data-sized shuffle, O(1) state per (window, key)."""
-        import re as _re
-
-        from pyspark.sql import functions as F
-
-        from .plans.router import _WINDOW_TVF_RE, _durations
-
-        om = _re.match(
-            r"^\s*SELECT\s+(?P<outer>.+?)\s+FROM\s*\(\s*"
-            r"SELECT\s+\*\s*,\s*ROW_NUMBER\s*\(\s*\)\s+OVER\s*\(\s*"
-            r"PARTITION\s+BY\s+(?P<pby>.+?)\s+"
-            r"ORDER\s+BY\s+(?P<oby>[^)]+?)\s*\)\s+AS\s+(?P<rn>\w+)\s+"
-            r"FROM\s+(?P<tvf>TABLE\s*\()",
-            stmt,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if om is None:
-            return None
-        tvf = _WINDOW_TVF_RE.search(stmt, om.start("tvf"))
-        if tvf is None or tvf.group("kind").upper() not in ("TUMBLE", "HOP"):
-            return None
-        rn = om.group("rn")
-        tail = _re.match(
-            r"^\s*(?:AS\s+\w+\s+)?\)\s*(?:AS\s+\w+\s+)?"
-            r"WHERE\s+`?" + _re.escape(rn) + r"`?\s*(?:=\s*1|<=\s*1)\s*$",
-            stmt[tvf.end() :],
-            _re.IGNORECASE,
-        )
-        if tail is None:
-            return None
-        order_cols = []
-        for item in om.group("oby").split(","):
-            c = item.strip().strip("`")
-            dm = _re.match(r"^(.*?)\s+(ASC|DESC)$", c, _re.IGNORECASE)
-            if dm:
-                if dm.group(2).upper() == "DESC":
-                    return None  # last-row dedup: keep the loud fallback
-                c = dm.group(1).strip().strip("`")
-            order_cols.append(c)
-        pby = [
-            k.strip().strip("`").lower()
-            for k in om.group("pby").split(",")
-            if k.strip()
-        ]
-        extras = [k for k in pby if k not in ("window_start", "window_end")]
-
-        ts_col = tvf.group("ts")
-        durs = _durations(tvf.group("args"))
-        if tvf.group("kind").upper() == "TUMBLE":
-            if len(durs) == 2:  # optional OFFSET -> startTime (r9)
-                (size, _), (off, _) = durs
-                win = F.window(ts_col, size, size, off)
-            else:
-                (size, _), = durs
-                win = F.window(ts_col, size)
-        else:
-            # Flink arg order: slide, size [, offset]
-            if len(durs) == 3:
-                (slide, _), (size, _), (off, _) = durs
-                win = F.window(ts_col, size, slide, off)
-            else:
-                (slide, _), (size, _) = durs
-                win = F.window(ts_col, size, slide)
-        src = self.spark.table(tvf.group("tbl"))
-        cols = src.columns
-        order = F.struct(*[F.col(c) for c in order_cols])
-        first = src.groupBy(win.alias("__w"), *extras).agg(
-            F.min_by(F.struct(*cols), order).alias("__r")
-        )
-        select = [
-            F.col(c) if c in extras else F.col(f"__r.{c}").alias(c)
-            for c in cols
-        ]
-        select += [
-            F.col("__w.start").alias("window_start"),
-            F.col("__w.end").alias("window_end"),
-            F.lit(1).cast("int").alias(rn),
-        ]
-        view = f"__wdedup_stream_{abs(hash(stmt)) % 10_000_000}"
-        first.select(*select).createOrReplaceTempView(view)
-        return self.spark.sql(
-            self.router._rewrite_dialect(
-                f"SELECT {om.group('outer')} FROM {view}"
-            )
-        )
-
-    def _dedup_stream(self, stmt: str) -> DataFrame | None:
-        """Lower Flink's (unwindowed) Deduplication statement for
-        CONTINUOUS execution.
-
-        The canonical shape (Flink "Deduplication" chapter):
-
-            SELECT ... FROM (
-              SELECT *, ROW_NUMBER() OVER (
-                  PARTITION BY <keys>
-                  ORDER BY <col> [ASC|DESC] [, ...]) AS rn
-              FROM t
-            ) WHERE rn = 1
-
-        ORDER BY ASC keeps the FIRST row per key, DESC the LAST —
-        Flink maintains exactly one row of state per key and emits
-        changelog updates when a better row arrives. ROW_NUMBER is
-        streaming-illegal in Spark, so the same semantics re-express
-        as one ``min_by``/``max_by`` aggregation keyed by the order
-        struct — an UPDATE-mode upsert stream (exact against the batch
-        plan under ANY arrival order, including late rows that beat
-        the current first/last). Mixed ASC/DESC falls through to the
-        loud Catalyst error. Returns None when the statement is not
-        this shape. 100 TB: one shuffle on the keys, O(1) state per
-        key — the identical contract as Flink's Deduplication
-        operator."""
-        import re as _re
-
-        from pyspark.sql import functions as F
-
-        om = _re.match(
-            r"^\s*SELECT\s+(?P<outer>.+?)\s+FROM\s*\(\s*"
-            r"SELECT\s+\*\s*,\s*ROW_NUMBER\s*\(\s*\)\s+OVER\s*\(\s*"
-            r"PARTITION\s+BY\s+(?P<pby>.+?)\s+"
-            r"ORDER\s+BY\s+(?P<oby>[^)]+?)\s*\)\s+AS\s+(?P<rn>\w+)\s+"
-            r"FROM\s+(?P<tbl>[\w.`]+)\s*"
-            r"\)\s*(?:AS\s+\w+\s+)?"
-            r"WHERE\s+`?(?P=rn)`?\s*(?:=\s*1|<=\s*(?P<topn>\d+))\s*$",
-            stmt,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if om is None:
-            return None
-        order_cols, directions = [], set()
-        for item in om.group("oby").split(","):
-            c = item.strip().strip("`")
-            dm = _re.match(r"^(.*?)\s+(ASC|DESC)$", c, _re.IGNORECASE)
-            if dm:
-                directions.add(dm.group(2).upper())
-                c = dm.group(1).strip().strip("`")
-            else:
-                directions.add("ASC")
-            order_cols.append(c)
-        if len(directions) != 1:
-            return None  # mixed directions: loud fallback
-        keys = [
-            k.strip().strip("`")
-            for k in om.group("pby").split(",")
-            if k.strip()
-        ]
-        if "window_start" in [k.lower() for k in keys]:
-            return None  # the Window Deduplication route owns that shape
-        src = self.spark.table(om.group("tbl").strip("`"))
-        cols = src.columns
-        n = int(om.group("topn")) if om.group("topn") else 1
-        if n > 1:
-            # Flink's continuous Top-N operator: O(keys x N) state,
-            # update changelog re-emitting a key's top-N when it changes
-            from .streaming.stateful import topn_stream
-
-            if n > 1000:
-                return None  # unbounded-ish rank: loud fallback
-            ranked = topn_stream(
-                src, keys, order_cols,
-                descending=directions == {"DESC"}, n=n,
-            )
-            view = f"__topn_plain_stream_{abs(hash(stmt)) % 10_000_000}"
-            ranked.withColumnRenamed(
-                "rn", om.group("rn")
-            ).createOrReplaceTempView(view)
-            return self.spark.sql(
-                self.router._rewrite_dialect(
-                    f"SELECT {om.group('outer')} FROM {view}"
-                )
-            )
-        order = F.struct(*[F.col(c) for c in order_cols])
-        pick = F.min_by if directions == {"ASC"} else F.max_by
-        best = src.groupBy(*keys).agg(
-            pick(F.struct(*cols), order).alias("__r")
-        )
-        select = [
-            F.col(c) if c in keys else F.col(f"__r.{c}").alias(c)
-            for c in cols
-        ] + [F.lit(1).cast("int").alias(om.group("rn"))]
-        view = f"__dedup_stream_{abs(hash(stmt)) % 10_000_000}"
-        best.select(*select).createOrReplaceTempView(view)
-        return self.spark.sql(
-            self.router._rewrite_dialect(
-                f"SELECT {om.group('outer')} FROM {view}"
-            )
-        )
 
     def table(self, name: str) -> DataFrame:
         """Read a table by (possibly namespaced) name. Keyed tables are

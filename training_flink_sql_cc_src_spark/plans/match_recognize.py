@@ -2366,11 +2366,19 @@ def _lower_nfa(spark: SparkSession, spec: MatchRecognizeSpec) -> DataFrame:
     finder — a depth-first search whose (position, row) memo is shared
     across starts, O(positions x rows) per key. Cross-variable DEFINE
     parts, the skip walk and the measure emission are the core's too.
-    WITHIN bounds every matched row against the start row."""
+    WITHIN bounds every matched row against the start row. A spec
+    still carrying ``spec.plus`` (the A+ B fast-path shape) raises:
+    the run must move into ``spec.unbounded`` first."""
     import numpy as np
 
     from . import cep_core
 
+    if spec.plus is not None:
+        raise ValueError(
+            f"_lower_nfa: spec.plus={spec.plus!r} is set — move the run "
+            "into spec.unbounded (and clear spec.plus) before lowering "
+            "on the NFA; the NFA does not read spec.plus"
+        )
     df = spark.table(spec.table)
     cols = df.columns
     local, checks, cross_cols = cep_core.split_defines(spec, cols)

@@ -110,6 +110,20 @@ def _durations(arg_text: str) -> list[tuple[str, int]]:
     return out
 
 
+def native_window(m: re.Match) -> str:
+    """Spark's native ``window(ts, size[, slide[, offset]])`` SQL for a
+    TUMBLE/HOP ``_WINDOW_TVF_RE`` match. Flink's argument order is
+    TUMBLE(size [, offset]) and HOP(slide, size [, offset]); a TUMBLE
+    offset (Spark's startTime) needs the slide spelled out as the size."""
+    durs = [d for d, _ in _durations(m.group("args"))]
+    if m.group("kind").upper() == "HOP":
+        durs[:2] = durs[1::-1]
+    elif len(durs) == 2:
+        durs.insert(1, durs[0])
+    args = ", ".join(f"'{d}'" for d in durs)
+    return f"window(`{m.group('ts')}`, {args})"
+
+
 def rewrite_window_tvfs(sql: str) -> str:
     """Replace Flink window-TVF calls with Spark-SQL derived tables.
 
@@ -151,28 +165,8 @@ def rewrite_window_tvfs(sql: str) -> str:
                 f"unix_micros(`{ts}`) - unix_micros({lag}) >= {gap_us} "
                 f"THEN 1 ELSE 0 END AS __new FROM {tbl} __u) __m) __n)"
             )
-        if kind == "TUMBLE":
-            # optional trailing OFFSET arg (Flink 1.19: TUMBLE(..., size
-            # [, offset])) → Spark window()'s startTime parameter
-            if len(durs) == 2:
-                (size, _), (off, _) = durs
-                w = f"window(`{ts}`, '{size}', '{size}', '{off}')"
-            else:
-                (size, _), = durs
-                w = f"window(`{ts}`, '{size}')"
-            return (
-                f"(SELECT __s.*, {w}.start AS window_start, "
-                f"{w}.end AS window_end, {w}.end - INTERVAL 1 "
-                f"MILLISECOND AS window_time FROM {tbl} __s)"
-            )
-        if kind == "HOP":
-            # Flink arg order: slide, size [, offset]
-            if len(durs) == 3:
-                (slide, _), (size, _), (off, _) = durs
-                w = f"window(`{ts}`, '{size}', '{slide}', '{off}')"
-            else:
-                (slide, _), (size, _) = durs
-                w = f"window(`{ts}`, '{size}', '{slide}')"
+        if kind in ("TUMBLE", "HOP"):
+            w = native_window(m)
             return (
                 f"(SELECT __s.*, {w}.start AS window_start, "
                 f"{w}.end AS window_end, {w}.end - INTERVAL 1 "
@@ -247,27 +241,12 @@ def rewrite_session_tvf_streaming(sql: str) -> str | None:
         return None
     kind = m.group("kind").upper()
     tbl, ts = m.group("tbl"), m.group("ts")
-    durs = _durations(m.group("args"))
     if kind == "SESSION":
-        (gap, _), = durs
+        (gap, _), = _durations(m.group("args"))
         sw = f"session_window(`{ts}`, '{gap}')"
         struct = "session_window"
-    elif kind == "TUMBLE":
-        if len(durs) == 2:  # optional OFFSET -> native startTime (r9)
-            (size, _), (off, _) = durs
-            sw = f"window(`{ts}`, '{size}', '{size}', '{off}')"
-        else:
-            (size, _), = durs
-            sw = f"window(`{ts}`, '{size}')"
-        struct = "window"
-    elif kind == "HOP":
-        # Flink arg order: slide, size [, offset]
-        if len(durs) == 3:
-            (slide, _), (size, _), (off, _) = durs
-            sw = f"window(`{ts}`, '{size}', '{slide}', '{off}')"
-        else:
-            (slide, _), (size, _) = durs
-            sw = f"window(`{ts}`, '{size}', '{slide}')"
+    elif kind in ("TUMBLE", "HOP"):
+        sw = native_window(m)
         struct = "window"
     else:  # CUMULATE: the explode-based batch rewrite streams as-is
         # (update/complete modes; the expansion is stateless row fan-out)

@@ -3,9 +3,10 @@
 The reference's Schema Registry auto-exposes Kafka topics as Flink tables
 (e.g. ``shoe_customers`` is readable with no in-repo CREATE —
 terraform/lab-aggregations/main.tf:431 vs connector :248-278). Our analog:
-every parquet fixture under a scale-factor dir is registered as a temp view
-at session start, so queries address tables by bare name exactly as the lab
-statements do.
+every parquet fixture under a scale-factor dir (the ``TABLES`` below) is
+registered as a temp view by ``sources.fixtures.register_fixture_views``
+(``Engine(sf_dir=...)`` calls it), so queries address tables by bare name
+exactly as the lab statements do.
 
 Scale notes: session defaults are tuned for local[32] testing but the knobs
 that matter at 100 TB (AQE, skew-join handling, partition sizing, broadcast
@@ -17,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 #: The ten fixture tables (TESTDATA.md) — stand-ins for the lab topics per
 #: FIXTURES.md §3 (shoe_orders→orders, shoe_customers→customer,
@@ -114,24 +115,3 @@ def ensure_package_shipped(spark: SparkSession) -> None:
                     z.write(full, os.path.relpath(full, root))
     sc.addPyFile(zpath)
     sc._spark_graft_pkg_shipped = True
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every fixture parquet under ``sf_dir`` as a DataFrame."""
-    from .sources.fixtures import load_fixture
-
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = load_fixture(spark, sf_dir, name)
-    return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view (the Schema-Registry
-    auto-table analog). Returns the DataFrames keyed by table name."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -1,107 +1,22 @@
-"""Streaming legs for Flink's Window Top-N, Window Deduplication and
-Window Join
-(reference course scope: the windowing-TVF chapter's rank/dedup
-compositions; the lab statements S1-S10 stream every query, so the
-window-rank operators need a continuous form too).
+"""Streaming Window Join (Flink's WINDOW JOIN over two window TVFs).
 
-The batch lowerings (queries/time_windows.py ``window_topn`` /
-``window_dedup_first``) use ROW_NUMBER over a (window, key) partition —
-Structured Streaming rejects non-time window functions, so the
-continuous legs re-express the rank semantics with streaming-legal
-aggregates, append-on-window-close mode (the production sink mode):
+``Engine.sql_stream`` has no lowering for a statement joining two window
+TVFs, so this module composes the continuous form directly: two
+windowed aggregates over one stream, joined on identical event-time
+window structs, append mode on window close. Window Top-N and Window
+Deduplication statements stream through ``Engine.sql_stream``
+(``Engine._rank_stream``, one rank aggregate for every ROW_NUMBER
+filter statement).
 
-* **Window Top-N** — two chained event-time aggregations (supported
-  since Spark 3.4's multiple-stateful-operator work): the per-(window,
-  key) count, then a per-window ``collect_list`` re-aggregation grouped
-  on the SAME window struct (event-time metadata intact, so the
-  watermark closes both). The rank filter becomes
-  ``array_sort`` + ``slice`` + ``posexplode`` over the collected
-  (neg-count, key, count) structs — identical ordering to the batch
-  ROW_NUMBER (count DESC, key ASC), exactly once per closed window.
-
-* **Window Deduplication** — a single aggregation with ``min_by`` keyed
-  by the (order, tiebreak) struct: the first row per (window, key),
-  merged incrementally across micro-batches, emitted on window close.
-
-100 TB design: the first aggregation is the only data-sized shuffle
-(map-side partial aggregation applies); the Top-N re-aggregation
-shuffles one scalar row per (window, key) — aggregate-sized, not
-data-sized. The per-window ``collect_list`` state is bounded by the
-rank-key domain (event types here); for an unbounded key domain keep
-the batch path or pre-filter with an approximate heavy-hitters pass
-(operators/heavy_hitters.py).
+100 TB design: each side's aggregate is its only data-sized shuffle
+(map-side partial aggregation applies); the join moves one scalar row
+per (window, side).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Column
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def window_topn_stream(
-    sdf: DataFrame,
-    ts_col: str = "ts",
-    size: str = "1 hour",
-    key_col: str = "event_type",
-    n: int = 3,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Continuous Window Top-N: top ``n`` ``key_col`` values per tumbling
-    ``size`` window by event count, append mode, one emission per closed
-    window. Schema matches the batch ``window_topn`` registry query:
-    (window_start long, <key_col>, n_events, rnk)."""
-    agg = (
-        sdf.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.window(ts_col, size).alias("w"), key_col)
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    # Chained event-time aggregation: grouping on the window struct column
-    # keeps its event-time metadata, so append mode closes it with the
-    # same watermark. collect_list state = one struct per distinct key.
-    per_window = agg.groupBy("w").agg(
-        F.collect_list(
-            F.struct(
-                F.negate(F.col("n_events")).alias("neg"),
-                F.col(key_col),
-                F.col("n_events"),
-            )
-        ).alias("xs")
-    )
-    return per_window.select(
-        F.col("w"),
-        F.posexplode(F.slice(F.array_sort("xs"), 1, n)).alias("pos", "x"),
-    ).select(
-        F.col("w.start").cast("long").alias("window_start"),
-        F.col(f"x.{key_col}").alias(key_col),
-        F.col("x.n_events").alias("n_events"),
-        (F.col("pos") + 1).cast("long").alias("rnk"),
-    )
-
-
-def window_dedup_stream(
-    sdf: DataFrame,
-    ts_col: str = "ts",
-    size: str = "1 hour",
-    key_col: str = "user_id",
-    tiebreak_col: str = "event_id",
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Continuous Window Deduplication: the FIRST row per (tumbling
-    window, key) ordered by (ts, tiebreak), append mode. Schema matches
-    the batch ``window_dedup_first`` registry query: (window_start long,
-    <key_col>, first_ts_epoch long, first_event_id)."""
-    order: Column = F.struct(F.col(ts_col), F.col(tiebreak_col))
-    return (
-        sdf.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.window(ts_col, size).alias("w"), key_col)
-        .agg(F.min_by(order, order).alias("first"))
-        .select(
-            F.col("w.start").cast("long").alias("window_start"),
-            key_col,
-            F.col(f"first.{ts_col}").cast("long").alias("first_ts_epoch"),
-            F.col(f"first.{tiebreak_col}").alias("first_event_id"),
-        )
-    )
 
 
 def window_join_stream(
